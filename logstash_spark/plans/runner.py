@@ -3,13 +3,22 @@
 The Logstash hot loop (SURVEY.md §3.2: queue → filter datasets →
 output delegators) becomes ONE lazily-planned DataFrame:
 
-    read → parse/enrich columns → route flags → persist → per-sink
-    filter + write (+ aggregate, metrics, lineage side tables)
+    read → parse/enrich columns → route flags → persist → ONE
+    explode(routes) + partitioned write shared by the plain sinks, each
+    partition committed into its own table (DLQ / codec / partition_by /
+    drop_columns sinks write on their own) + aggregate, metrics, lineage
+    side tables
 
 Deliberate physical choices (SURVEY.md §4/§7.3 — the only places Spark
 needs a human decision):
   * `persist()` exactly once before fan-out — Spark does not share work
     across write actions, and the parse stage is the expensive part;
+  * one write job for every sink on the default SinkSpec instead of one
+    filtered write per sink: at batch sizes the driver's per-job cost,
+    not rows, dominates a run, and Logstash likewise hands each batch to
+    all output delegators in one pass;
+  * per-sink totals observed (`DataFrame.observe`) on the
+    `_sink_lineage` write that already runs, not read back;
   * per-sink aggregates computed from ONE `explode(routes)` frame so all
     sinks share a single shuffle instead of K groupBy jobs;
   * lineage rows derived via `spark_partition_id()` at read time;
@@ -22,17 +31,23 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from logstash_spark.operators import OPS
 from logstash_spark.operators.common import METADATA
 from logstash_spark.operators.route import ROUTES, add_routes, route_filter
-from logstash_spark.plans.spec import PipelineSpec
-from logstash_spark.sources.tableio import open_table
+from logstash_spark.plans.spec import PipelineSpec, SinkSpec
+from logstash_spark.sources.tableio import (
+    IcebergTable,
+    SnapshotTable,
+    iceberg_available,
+    open_table,
+)
 
 # operator modules register themselves in OPS on import
 import logstash_spark.operators.parse  # noqa: F401, E402
@@ -41,6 +56,14 @@ import logstash_spark.operators.enrich  # noqa: F401, E402
 import logstash_spark.operators.aggregate  # noqa: F401, E402
 import logstash_spark.operators.multiplicity  # noqa: F401, E402
 import logstash_spark.functions  # noqa: F401, E402
+
+#: under `sinks_root`: uncommitted partitions of the shared sink write,
+#: one subdirectory per run_id, removed once every table has committed
+STAGING_DIR = "_fanout_staging"
+#: partition column of the shared write (the sink's 1-based index among
+#: the shared sinks); underscores are prepended while a user column
+#: already has the name
+FANOUT_COL = "_fanout_sink"
 
 
 @dataclass
@@ -230,6 +253,9 @@ def run_pipeline(
     frame stays alive until every downstream pipeline consuming this
     pipeline's address frames has run."""
     run_id = _input_fingerprint(input_df, spec)
+    if table_format == "auto":
+        # one classpath probe per run, not one per table
+        table_format = "iceberg" if iceberg_available(spark) else "snapshot"
 
     def _mk(name: str):
         # Iceberg on equipped clusters, parquet snapshot layout here
@@ -243,11 +269,13 @@ def run_pipeline(
     routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
 
     result = RunResult(run_id=run_id)
+    sink_names = spec.sink_names()
 
     # ---- per-(sink, input-partition) lineage: written DISTRIBUTED ------
-    # One job writes the (sink, partition, rows) table; only the K-row
-    # per-sink totals come back to the driver. Never O(K*P) driver rows —
-    # at 10^6 input partitions x 6 sinks the detail stays in the table.
+    # One job writes the (sink, partition, rows) table; the K per-sink
+    # totals ride along as observed metrics of that same job. Never
+    # O(K*P) driver rows — at 10^6 input partitions x 6 sinks the detail
+    # stays in the table.
     sink_lineage_df = (
         routed.select(F.explode(ROUTES).alias("sink"), "_in_part")
         .groupBy("sink", "_in_part")
@@ -258,41 +286,44 @@ def run_pipeline(
     sl_table = _mk("_sink_lineage")
     latest_sl = sl_table.latest()
     if not (resume and latest_sl and latest_sl.lineage.get("run_id") == run_id):
-        sl_table.append(sink_lineage_df, lineage={"run_id": run_id})
-    totals = {
-        r["sink"]: (int(r["rows"]), int(r["n_parts"]))
-        for r in sl_table.read(spark)
-        .where(F.col("run_id") == run_id)
-        .dropDuplicates(["sink", "partition_id"])  # replays write identical rows
-        .groupBy("sink")
-        .agg(F.sum("rows").alias("rows"), F.count("*").alias("n_parts"))
-        .collect()  # K rows (one per sink) — bounded
-    }
+        obs = Observation()
+        per_sink = []
+        for i, s in enumerate(sink_names):
+            hit = F.col("sink") == s
+            per_sink += [
+                F.sum(F.when(hit, F.col("rows"))).alias(f"rows_{i}"),
+                F.count(F.when(hit, True)).alias(f"parts_{i}"),
+            ]
+        sl_table.append(
+            sink_lineage_df.observe(obs, *per_sink) if per_sink else sink_lineage_df,
+            lineage={"run_id": run_id},
+        )
+        m = obs.get if per_sink else {}
+        totals = {
+            s: (int(m[f"rows_{i}"]), int(m[f"parts_{i}"]))
+            for i, s in enumerate(sink_names)
+            if m[f"parts_{i}"]
+        }
+    else:
+        # resume: the lineage write is skipped, so read its totals back
+        totals = {
+            r["sink"]: (int(r["rows"]), int(r["n_parts"]))
+            for r in sl_table.read(spark)
+            .where(F.col("run_id") == run_id)
+            .dropDuplicates(["sink", "partition_id"])  # replays write identical rows
+            .groupBy("sink")
+            .agg(F.sum("rows").alias("rows"), F.count("*").alias("n_parts"))
+            .collect()  # K rows (one per sink) — bounded
+        }
 
-    # ---- per-sink writes (idempotent via run_id in snapshot lineage) ----
-    virtual = spec.virtual_sends()
-    sink_specs = {s.name: s for s in spec.sinks}
-    for sink in spec.sink_names():
-        if sink in virtual:
-            # pipeline-to-pipeline send: no table, just the frame; counts
-            # still come from the shared explode(routes) lineage job
-            result.address_frames[virtual[sink]] = route_filter(
-                routed, sink
-            ).drop(ROUTES, "_in_part")
-            result.sink_counts[sink] = totals.get(sink, (0, 0))[0]
-            continue
-        table = _mk(sink)
-        latest = table.latest()
-        if resume and latest and latest.lineage.get("run_id") == run_id:
-            result.skipped_sinks.append(sink)
-            continue
+    def sink_frame(sink: str, sspec: SinkSpec | None) -> DataFrame:
+        """The rows one table receives, shaped for that table."""
         out = route_filter(routed, sink).drop(ROUTES, "_in_part", *drop_before_write)
         if sink != spec.dlq_sink:
             # [@metadata] is pipeline-scratch, never serialized
             # (Event.java §getMetadata); the DLQ keeps it — the
             # reference DLQ stores the full event for the replay reader
             out = out.drop(METADATA)
-        sspec = sink_specs.get(sink)
         if sspec is not None:
             if sspec.drop_columns:
                 out = out.drop(*sspec.drop_columns)
@@ -306,27 +337,100 @@ def run_pipeline(
             # (org.logstash DLQWriter stores the event + reason): the
             # failure tags that routed the event here.
             out = out.withColumn("_dlq_reason", F.concat_ws(",", F.col("tags")))
-        rows, n_parts = totals.get(sink, (0, 0))
-        table.append(
-            out,
-            lineage={
-                "run_id": run_id,
-                "rows": rows,
-                "n_partitions": n_parts,
-                # per-partition detail lives in the _sink_lineage table,
-                # keyed by (run_id, sink) — unbounded detail never enters
-                # the driver-side manifest
-                "detail_table": "_sink_lineage",
-            },
-            meta={"pipeline": spec.name, "sink": sink},
-            partition_by=(sspec.partition_by or None) if sspec else None,
+        return out
+
+    # ---- which sinks to write (idempotent via run_id in lineage) -------
+    virtual = spec.virtual_sends()
+    sink_specs = {s.name: s for s in spec.sinks}
+    pending: list[tuple[str, SnapshotTable | IcebergTable, SinkSpec | None]] = []
+    for sink in sink_names:
+        if sink in virtual:
+            # pipeline-to-pipeline send: no table, just the frame; counts
+            # still come from the shared explode(routes) lineage job
+            result.address_frames[virtual[sink]] = route_filter(
+                routed, sink
+            ).drop(ROUTES, "_in_part")
+            result.sink_counts[sink] = totals.get(sink, (0, 0))[0]
+            continue
+        table = _mk(sink)
+        latest = table.latest()
+        if resume and latest and latest.lineage.get("run_id") == run_id:
+            result.skipped_sinks.append(sink)
+            continue
+        pending.append((sink, table, sink_specs.get(sink)))
+
+    # ---- ONE partitioned write for every plain-schema sink -------------
+    # Sinks on the default SinkSpec share one explode(routes) and one
+    # write job, partitioned by the sink's integer index into a staging
+    # dir; each partition dir is then renamed into its table. The DLQ
+    # (_dlq_reason, keeps [@metadata]), codec / partition_by /
+    # drop_columns sinks and Iceberg tables write on their own below, and
+    # so does a sink that routed no rows: it gets no partition dir, and
+    # its own (empty) write still commits a file carrying the schema.
+    shared = [
+        sink for sink, table, sspec in pending
+        if sink != spec.dlq_sink
+        and isinstance(table, SnapshotTable)
+        and not (sspec and (sspec.codec or sspec.partition_by or sspec.drop_columns))
+        and totals.get(sink, (0, 0))[0] > 0
+    ]
+    staging = os.path.join(sinks_root, STAGING_DIR, run_id)
+    staged: dict[str, str] = {}
+    if shared:
+        taken = {c.lower() for c in routed.columns}
+        part_col = FANOUT_COL
+        while part_col in taken:  # never collide with a user column
+            part_col = "_" + part_col
+        idx = F.array_position(F.array(*[F.lit(s) for s in shared]), F.col(part_col))
+        (
+            routed.select("*", F.explode(ROUTES).alias(part_col))
+            .withColumn(part_col, idx)  # 1-based; 0 = not a shared sink
+            .where(F.col(part_col) > 0)
+            .drop(ROUTES, "_in_part", *drop_before_write, METADATA)
+            # overwrite also clears what a crashed run with this
+            # run_id left staged but never committed
+            .write.mode("overwrite")
+            .partitionBy(part_col)
+            .parquet(staging)
         )
+        staged = {
+            s: os.path.join(staging, f"{part_col}={i}")
+            for i, s in enumerate(shared, start=1)
+        }
+
+    # ---- commit every table in spec order ------------------------------
+    for sink, table, sspec in pending:
+        rows, n_parts = totals.get(sink, (0, 0))
+        lineage = {
+            "run_id": run_id,
+            "rows": rows,
+            "n_partitions": n_parts,
+            # per-partition detail lives in the _sink_lineage table,
+            # keyed by (run_id, sink) — unbounded detail never enters
+            # the driver-side manifest
+            "detail_table": "_sink_lineage",
+        }
+        meta = {"pipeline": spec.name, "sink": sink}
+        if sink in staged:
+            table.commit_dir(staged[sink], lineage=lineage, meta=meta)
+        else:
+            table.append(
+                sink_frame(sink, sspec),
+                lineage=lineage,
+                meta=meta,
+                partition_by=(sspec.partition_by or None) if sspec else None,
+            )
         result.sink_counts[sink] = rows
         if fail_after_sink == sink:
             routed.unpersist()
             for p in persisted:
                 p.unpersist()
             raise RuntimeError(f"injected failure after sink {sink}")
+    shutil.rmtree(staging, ignore_errors=True)
+    try:
+        os.rmdir(os.path.dirname(staging))  # only if no other run stages
+    except OSError:
+        pass
 
     # ---- aggregates: ONE shuffle for all sinks via explode(routes) ----
     dims = [d for d in spec.aggregate_dims if d in routed.columns]

@@ -61,8 +61,8 @@ def fold(name: str, parts: list[tuple[str, str, list[str]]], doc: str) -> None:
     """Replace the sub-gates in QUERIES/ORACLES with one combined gate.
 
     parts: (sub_gate_name, column_prefix, expected_columns). The
-    expected column list is asserted against the live sub-result at run
-    time (a drifted sub schema fails loudly, not as a silent
+    expected column list is checked against the live sub-result at run
+    time (a drifted sub schema raises ValueError, not a silent
     misalignment) and drives the identical ORDER BY on both engines.
     """
     subs = []
@@ -75,7 +75,12 @@ def fold(name: str, parts: list[tuple[str, str, list[str]]], doc: str) -> None:
         out = None
         for sub, fn, _sql, pfx, cols in _subs:
             df = fn(spark, sf_dir)
-            assert set(df.columns) == set(cols), (sub, df.columns, cols)
+            if set(df.columns) != set(cols):
+                # a real check, not `assert`: `python -O` strips asserts
+                raise ValueError(
+                    f"fold {name}: sub-gate {sub} returned columns "
+                    f"{sorted(df.columns)}, expected {sorted(cols)}"
+                )
             part = _indexed(df, cols, pfx)
             out = part if out is None else out.join(part, "seq", "full_outer")
         return out
@@ -90,7 +95,7 @@ def fold(name: str, parts: list[tuple[str, str, list[str]]], doc: str) -> None:
 
 # ---------------------------------------------------------------------------
 # Fold definitions. Column lists mirror each sub-gate's registered output
-# schema (asserted at run time). Grouping is by operator family.
+# schema (checked at run time). Grouping is by operator family.
 # ---------------------------------------------------------------------------
 
 fold(

@@ -93,14 +93,35 @@ class SnapshotTable:
         partition_by: list[str] | None = None,
     ) -> Snapshot:
         """Write df as a new snapshot = previous live files + new dir."""
+
+        def write(out: str) -> None:
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(out)
+
+        return self._commit(write, lineage, meta)
+
+    def commit_dir(
+        self,
+        src: str,
+        *,
+        lineage: dict[str, Any] | None = None,
+        meta: dict[str, Any] | None = None,
+    ) -> Snapshot:
+        """Adopt an already-written parquet directory as a new snapshot:
+        `src` is renamed to `data/snap-NNNNNN-*` (same filesystem) and
+        published exactly like an `append`. Lets one partitioned write
+        feed several tables without a write job per table."""
+        return self._commit(lambda out: os.rename(src, out), lineage, meta)
+
+    def _commit(self, place, lineage, meta) -> Snapshot:
+        """Materialize the new data dir via `place(abs_path)`, then
+        publish the manifest that makes it visible."""
         prev = self.latest()
         sid = (prev.snapshot_id + 1) if prev else 1
         data_dir = os.path.join("data", f"snap-{sid:06d}-{_uuid.uuid4().hex[:8]}")
-        out = os.path.join(self.root, data_dir)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(out)
+        place(os.path.join(self.root, data_dir))
 
         new_files = [data_dir]
         # Optimistic-concurrency publish (Iceberg's commit loop in

@@ -1,0 +1,158 @@
+"""The batch runner's shared sink write: every plain-schema sink of a
+`run_pipeline` call lands through ONE partitioned write that is then
+committed table by table. Pins the Spark job count of a flagship run
+and the edge cases of that write: empty sinks, sink names Spark escapes
+in partition paths, a user column named like the partition column, and
+the sinks that must keep writing on their own (DLQ, `partition_by`,
+`codec`)."""
+
+from __future__ import annotations
+
+import os
+
+from pyspark.sql import functions as F
+
+from logstash_spark.operators.common import METADATA
+from logstash_spark.plans.flagship import GROK_PATTERN, run_flagship
+from logstash_spark.plans.runner import FANOUT_COL, STAGING_DIR, run_pipeline
+from logstash_spark.plans.spec import FilterSpec, PipelineSpec, SinkSpec
+from logstash_spark.sources.gen import input_sequences
+from logstash_spark.sources.tableio import SnapshotTable
+
+# Spark jobs of one flagship `run_pipeline` on the test session
+# (local[4], 8 shuffle partitions): the _sink_lineage write with
+# observed per-sink totals, the shared sink write, the DLQ write and the
+# _aggregates / _metrics / _lineage side tables. One filtered write per
+# sink plus a read-back of the per-sink totals took 19.
+FLAGSHIP_JOBS = 12
+
+
+def _read(spark, root, sink):
+    return SnapshotTable(os.path.join(root, sink)).read(spark)
+
+
+def _schema(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+def test_flagship_run_job_count_is_pinned(spark, tmp_path):
+    sc = spark.sparkContext
+    df = input_sequences(spark, 2000)
+    group = "test_flagship_run_job_count"
+    sc.setJobGroup(group, "flagship run_pipeline")
+    try:
+        res = run_flagship(spark, df, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == FLAGSHIP_JOBS, sorted(jobs)
+    assert sum(res.sink_counts.values()) > 2000
+    # the staging area of the shared write is gone once all committed
+    assert STAGING_DIR not in os.listdir(tmp_path)
+
+
+def test_empty_shared_sink_commits_readable_snapshot(spark, tmp_path):
+    df = input_sequences(spark, 200)
+    spec = PipelineSpec(
+        name="empty",
+        filters=[],
+        routes={"sink_web": '[source] == "web"', "sink_none": '[source] == "nope"'},
+    )
+    root = str(tmp_path)
+    res = run_pipeline(spark, df, spec, root)
+    assert res.sink_counts["sink_none"] == 0
+    none = SnapshotTable(os.path.join(root, "sink_none"))
+    assert none.latest().lineage["rows"] == 0
+    empty = none.read(spark)
+    assert empty.count() == 0
+    web = _read(spark, root, "sink_web")
+    assert web.count() == res.sink_counts["sink_web"] > 0
+    # the per-sink write's schema: input columns minus routes/_in_part
+    assert _schema(empty) == _schema(web) == _schema(df)
+
+
+def test_sink_name_escaped_in_partition_paths_lands_in_its_table(spark, tmp_path):
+    df = input_sequences(spark, 300)
+    odd = "sink=a:b%c#d"
+    spec = PipelineSpec(
+        name="odd",
+        filters=[],
+        routes={odd: '[source] == "web"', "sink_app": '[source] == "app"'},
+    )
+    root = str(tmp_path)
+    res = run_pipeline(spark, df, spec, root)
+    for sink, source in ((odd, "web"), ("sink_app", "app")):
+        want = sorted(
+            r[0] for r in df.where(F.col("source") == source).select("doc_id").collect()
+        )
+        got = sorted(r[0] for r in _read(spark, root, sink).select("doc_id").collect())
+        assert got == want, sink
+        assert res.sink_counts[sink] == len(want)
+
+
+def test_user_column_named_like_partition_column(spark, tmp_path):
+    df = input_sequences(spark, 300).withColumn(FANOUT_COL, F.col("doc_id") * 10)
+    spec = PipelineSpec(
+        name="clash",
+        filters=[],
+        routes={"sink_web": '[source] == "web"', "sink_all": "true"},
+    )
+    root = str(tmp_path)
+    run_pipeline(spark, df, spec, root)
+    for sink, n in (("sink_web", df.where(F.col("source") == "web").count()),
+                    ("sink_all", 300)):
+        out = _read(spark, root, sink)
+        assert _schema(out) == _schema(df), sink
+        assert out.count() == n, sink
+        # the user column kept its own values
+        assert out.where(F.col(FANOUT_COL) != F.col("doc_id") * 10).count() == 0
+
+
+def test_dlq_partition_by_and_codec_sinks_write_separately(spark, tmp_path):
+    df = input_sequences(spark, 500)
+    spec = PipelineSpec(
+        name="mixed",
+        filters=[
+            FilterSpec("grok", {"field": "raw", "match": GROK_PATTERN}),
+            FilterSpec("mutate", {"add_field": {"[@metadata][team]": "t-%{source}"}}),
+        ],
+        routes={
+            "plain": "true",
+            "by_source": "true",
+            "encoded": '[source] == "web"',
+            "dlq": '"_grokparsefailure" in [tags]',
+        },
+        sinks=[
+            SinkSpec("by_source", partition_by=["source"]),
+            SinkSpec("encoded", codec="json_lines"),
+        ],
+    )
+    root = str(tmp_path)
+    res = run_pipeline(spark, df, spec, root)
+    n_web = df.where(F.col("source") == "web").count()
+    assert res.sink_counts == {
+        "plain": 500, "by_source": 500, "encoded": n_web,
+        "dlq": len([i for i in range(500) if i % 211 == 0]),
+    }
+
+    plain = _read(spark, root, "plain")
+    dlq = _read(spark, root, "dlq")
+    by_source = _read(spark, root, "by_source")
+    encoded = _read(spark, root, "encoded")
+    # only the DLQ carries the failure reason and [@metadata]
+    assert "_dlq_reason" in dlq.columns and METADATA in dlq.columns
+    for other in (plain, by_source):
+        assert "_dlq_reason" not in other.columns
+        assert METADATA not in other.columns
+    assert dlq.count() == res.sink_counts["dlq"]
+    # the partition_by sink keeps its own hive layout
+    snap_dir = os.path.join(
+        root, "by_source", SnapshotTable(os.path.join(root, "by_source")).latest().files[0]
+    )
+    assert {d.split("=", 1)[0] for d in os.listdir(snap_dir) if "=" in d} == {"source"}
+    assert sorted(by_source.columns) == sorted(plain.columns)
+    assert by_source.count() == 500
+    # the codec sink holds the encoded wire form only
+    assert encoded.columns == ["message"]
+    assert encoded.count() == n_web

@@ -85,9 +85,37 @@ def test_fold_schema_drift_fails_loudly(spark):
              ("_drift_probe2", "b_", ["id"])],
             "test",
         )
-        with pytest.raises(AssertionError):
+        with pytest.raises(ValueError, match="_drift_probe.*wrong_col"):
             QUERIES["_drift_fold"](spark, SF)
     finally:
         for k in ("_drift_fold", "_drift_probe", "_drift_probe2"):
             QUERIES.pop(k, None)
             ORACLES.pop(k, None)
+
+
+def test_fold_schema_guard_survives_optimize_flag():
+    """`python -O` strips `assert`; the drift guard must still raise.
+    The sub-gates return stand-in frames (only `.columns` is read before
+    the guard), so the child process needs no Spark session."""
+    import subprocess
+    import sys
+
+    probe = """
+import types
+from logstash_spark.queries import ORACLES, QUERIES
+from logstash_spark.queries_folds import fold
+for sub, cols in (("_o_a", ["id", "extra"]), ("_o_b", ["id"])):
+    QUERIES[sub] = lambda s, d, _c=cols: types.SimpleNamespace(columns=_c)
+    ORACLES[sub] = "SELECT 1 AS id"
+fold("_o_fold", [("_o_a", "a_", ["id"]), ("_o_b", "b_", ["id"])], "probe")
+try:
+    QUERIES["_o_fold"](None, "")
+except ValueError as e:
+    print("guarded:", e)
+"""
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", probe],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "guarded:" in out.stdout and "_o_a" in out.stdout, out.stdout

@@ -168,6 +168,35 @@ def test_resume_skips_committed_sinks_no_duplicates(spark, tmp_path):
         assert t.select("doc_id").distinct().count() == t.count(), f"dups in {sink}"
 
 
+def test_resume_after_crash_between_shared_sink_commits(spark, tmp_path):
+    """Crash after the SECOND table committed from the shared sink write:
+    the staged partitions of the sinks not yet committed stay out of
+    every table, the rerun clears that stale staging area, and every
+    sink ends with exactly one copy of its rows."""
+    from logstash_spark.plans.runner import STAGING_DIR
+
+    root = str(tmp_path)
+    df = input_sequences(spark, 500)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_flagship(spark, df, root, fail_after_sink="sink_edge")
+    staging = os.path.join(root, STAGING_DIR)
+    assert os.listdir(staging), "a crash leaves its staged partitions behind"
+    exp = _expected(500)
+    assert SnapshotTable(os.path.join(root, "sink_errors")).read(spark).count() == exp["sink_errors"]
+    assert SnapshotTable(os.path.join(root, "sink_edge")).read(spark).count() == exp["sink_edge"]
+    for sink in ("sink_service", "sink_rest", "dlq"):
+        with pytest.raises(FileNotFoundError):  # staged, never committed
+            SnapshotTable(os.path.join(root, sink)).read(spark)
+
+    res = run_flagship(spark, df, root)  # restart, same input
+    assert sorted(res.skipped_sinks) == ["sink_edge", "sink_errors"]
+    assert not os.path.exists(staging)
+    for sink, want in exp.items():
+        t = SnapshotTable(os.path.join(root, sink)).read(spark)
+        assert t.count() == want, sink
+        assert t.select("doc_id").distinct().count() == t.count(), f"dups in {sink}"
+
+
 def test_rerun_is_fully_idempotent(spark, tmp_path):
     root = str(tmp_path)
     df = input_sequences(spark, 300)
@@ -247,6 +276,30 @@ class TestTableFactory:
             open_table(str(tmp_path / "t"), None, "iceberg")
         with pytest.raises(ValueError, match="unknown table format"):
             open_table(str(tmp_path / "t"), spark, "delta")
+
+    def test_run_pipeline_probes_classpath_once(self, spark, tmp_path, monkeypatch):
+        # table_format="auto" is resolved once per run, not per table
+        import logstash_spark.plans.runner as runner
+        import logstash_spark.sources.tableio as tableio
+        from logstash_spark.plans.spec import PipelineSpec
+
+        probes = []
+
+        def counting(s):
+            probes.append(s)
+            return False
+
+        monkeypatch.setattr(tableio, "iceberg_available", counting)
+        monkeypatch.setattr(runner, "iceberg_available", counting)
+        df = spark.createDataFrame(
+            [(i, "app" if i % 2 else "web") for i in range(10)], ["id", "source"]
+        )
+        spec = PipelineSpec(
+            name="t", filters=[], routes={"sink_app": '[source] == "app"'}
+        )
+        res = runner.run_pipeline(spark, df, spec, str(tmp_path / "sinks"))
+        assert res.sink_counts == {"sink_app": 5}
+        assert len(probes) == 1
 
     def test_run_pipeline_explicit_snapshot_format(self, spark, tmp_path):
         # table_format="snapshot" pins the fallback explicitly — same
