@@ -126,9 +126,9 @@ def result(p: subprocess.Popen, tag: str = "solo", required: bool = True):
     if required:
         raise RuntimeError(f"no result line ({tag}); stderr tail: {tail!r}")
     # a concurrent child can die on transient executor loss under full
-    # box contention; the probe stays honest by dropping it (aggregate
-    # and the 4x denominator both shrink to the surviving children —
-    # retrying it ALONE would measure a solo epoch and inflate the sum)
+    # box contention; main() then reports no efficiency: the survivors
+    # ran on a less loaded box, so their sum is biased up (and retrying
+    # the child ALONE would measure a solo epoch)
     sys.stderr.write(f"concurrent child {tag} died; stderr tail: {tail!r}\n")
     return None
 
@@ -163,7 +163,10 @@ def main() -> None:
         "concurrent_each": [round(r["rows_per_sec"]) for r in ok],
         "concurrent_children_died": len(rs) - len(ok),
         "concurrent_aggregate_rows_per_sec": round(agg),
-        "eff_box_vs_nx_solo": round(agg / (max(len(ok), 1) * solo_best), 3),
+        # null when any child died: no survivor-biased efficiency
+        "eff_box_vs_nx_solo": (
+            round(agg / (len(rs) * solo_best), 3) if len(ok) == len(rs) else None
+        ),
         "wall_concurrent_sec": round(time.time() - t0, 1),
     }))
 

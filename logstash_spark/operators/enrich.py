@@ -4,6 +4,13 @@ Reference (SURVEY.md §2.5): Logstash has no general join; every enrich
 filter is a per-event lookup against a side table — which is exactly a
 broadcast hash join in Spark. At 100 TB the fact side never shuffles for
 these: the dictionary ships to every executor once.
+
+Dictionaries that arrive as Python rows (a translate `Mapping`, a
+`dictionary_path` file, the flagship's source table, geoip blocks) are
+built by `static_lookup_df` as Arrow-backed `LocalRelation`s, not as
+`createDataFrame(list)` RDDs: the rows then sit in the plan itself, so
+the broadcast collects them on the driver with no Python worker and no
+RDD job — a cost every batch run and every micro-batch used to pay.
 """
 
 from __future__ import annotations
@@ -54,9 +61,8 @@ def translate(
         return df.withColumn(target, expr)
 
     if isinstance(dictionary, Mapping):
-        spark = df.sparkSession
-        dict_df = spark.createDataFrame(
-            [(k, v) for k, v in dictionary.items()], schema=[source, target]
+        dict_df = static_lookup_df(
+            df.sparkSession, list(dictionary.items()), [source, target]
         )
     else:
         dict_df = dictionary.toDF(source, target)
@@ -176,7 +182,7 @@ def geoip_blocks(spark, entries) -> DataFrame:
         rows.append(
             (lo, hi) + tuple(attrs.get(f) for f in GEOIP_FIELDS)
         )
-    return spark.createDataFrame(rows, _GEOIP_SCHEMA)
+    return static_lookup_df(spark, rows, _GEOIP_SCHEMA)
 
 
 @op("geoip")
@@ -226,10 +232,55 @@ def cidr(
 
 
 def static_lookup_df(
-    spark: SparkSession, rows: Sequence[tuple], schema: Sequence[str]
+    spark: SparkSession,
+    rows: Sequence[tuple],
+    schema: Sequence[str] | str,
 ) -> DataFrame:
-    """Helper to build small dictionary DataFrames for broadcast joins."""
-    return spark.createDataFrame(list(rows), schema=list(schema))
+    """Small driver-side dictionary frame for broadcast joins.
+
+    Same schema and rows as `spark.createDataFrame(list(rows), schema)`:
+    column names (`schema` as a name list) get their types from PySpark's
+    own list inference; a DDL string is used as given, and the rows are
+    verified against it the same way. Only the carrier differs.
+    `createDataFrame(list)` parallelizes the rows into a Python RDD, so
+    every broadcast of the dictionary runs a Spark job in Python workers
+    to collect them again. Here the rows become a `pyarrow.Table` that
+    Spark plans as a `LocalRelation`: the broadcast reads the rows out of
+    the plan on the driver, with no Python worker and no RDD.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        _create_converter,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        struct = _parse_datatype_string(schema)
+        verify = _make_type_verifier(struct)
+        for r in rows:
+            verify(r)
+    else:
+        names = list(schema)
+        # a copy: inference extends the list when rows have more columns
+        struct = spark._inferSchemaFromList(rows, names=list(names))
+        for i, name in enumerate(names):  # as createDataFrame renames
+            struct.fields[i].name = name
+            struct.names[i] = name
+    # toInternal is the conversion createDataFrame applies before its RDD
+    # (dicts/Rows → tuples, timestamps → epoch µs, dates → epoch days),
+    # so Arrow receives exactly the values Spark would have stored
+    to_tuple = _create_converter(struct)
+    internal = [struct.toInternal(to_tuple(r)) for r in rows]
+    arrow_schema = to_arrow_schema(struct)
+    columns = [
+        pa.array([r[i] for r in internal], type=arrow_schema.field(i).type)
+        for i in range(len(struct.fields))
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def asof_join(

@@ -22,17 +22,20 @@ needs a human decision):
   * per-sink aggregates computed from ONE `explode(routes)` frame so all
     sinks share a single shuffle instead of K groupBy jobs;
   * lineage rows derived via `spark_partition_id()` at read time;
-  * resume: a deterministic `run_id` is recorded in each sink's snapshot
-    lineage; a rerun skips sinks whose latest snapshot already carries
-    the run_id (idempotent commit, FIXTURES.md F6).
+  * resume: a deterministic `run_id` is recorded in each table's snapshot
+    lineage; a rerun skips every sink and side table whose latest
+    snapshot already carries the run_id (idempotent commit, FIXTURES.md
+    F6).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import re
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -191,17 +194,43 @@ def build_plan(
     return add_routes(df, spec.routes, else_sink=spec.else_sink)
 
 
+def _spec_basis(spec: PipelineSpec) -> str:
+    """The spec's filter chain and sink settings as deterministic text:
+    a changed grok pattern or sink codec must change the run_id, or a
+    rerun over the same files would resume against stale sinks. Keys are
+    sorted; values JSON cannot hold become their `repr` (sets sorted,
+    memory addresses stripped, so the text is the same in every
+    process)."""
+    def stable(o):
+        if isinstance(o, (set, frozenset)):
+            return sorted(map(stable, o))
+        return re.sub(r" at 0x[0-9a-fA-F]+", "", repr(o))
+
+    return json.dumps(
+        {
+            "filters": [
+                {"op": f.op, "conf": f.conf, "when": f.when} for f in spec.filters
+            ],
+            "sinks": [asdict(s) for s in spec.sinks],
+        },
+        sort_keys=True,
+        default=stable,
+    )
+
+
 def _input_fingerprint(df: DataFrame, spec: PipelineSpec) -> str:
-    """Deterministic run id from the input's files/plan + spec shape, so a
-    restarted identical job maps to the same run (resume key).
+    """Deterministic run id from the input's files/plan + spec (routes,
+    filter chain, sink settings), so a restarted identical job maps to
+    the same run (resume key).
 
     File-less inputs (generator / in-memory frames) have no inputFiles,
     which would make the id content-free — a changed `generator count`
     would silently resume against stale sinks. For those, the
     CANONICALIZED analyzed plan joins the basis (exprIds normalized by
     Spark itself, literals preserved): stable for an identical plan, a
-    differing plan changes the id. Limit: an RDD-backed in-memory
-    relation (createDataFrame) canonicalizes without its DATA, so two
+    differing plan changes the id. Limit: in-memory relations — an RDD
+    from `createDataFrame(list)`, a `LocalRelation` from an Arrow table
+    or `static_lookup_df` — canonicalize without their DATA, so two
     same-schema frames with different local rows share a plan — warned
     below; use file-backed inputs when resume must key on content."""
     try:
@@ -216,19 +245,20 @@ def _input_fingerprint(df: DataFrame, spec: PipelineSpec) -> str:
             )
         except Exception:
             plan_part = ""  # e.g. Spark Connect: no _jdf — schema+routes only
-        if "LogicalRDD" in plan_part:
+        if "LogicalRDD" in plan_part or "LocalRelation" in plan_part:
             import warnings
 
             warnings.warn(
                 "resume run_id cannot see the DATA of in-memory "
-                "(createDataFrame) inputs — identical-schema reruns with "
-                "different rows map to the same run; use file-backed "
-                "inputs when resume must key on content",
+                "(createDataFrame / LocalRelation) inputs — identical-schema "
+                "reruns with different rows map to the same run; use "
+                "file-backed inputs when resume must key on content",
                 stacklevel=2,
             )
     basis = (
         "|".join(files) + "||" + plan_part + "||"
         + df.schema.simpleString() + "||" + str(spec.routes)
+        + "||" + _spec_basis(spec)
     )
     return hashlib.sha256(basis.encode()).hexdigest()[:16]
 
@@ -261,6 +291,16 @@ def run_pipeline(
         # Iceberg on equipped clusters, parquet snapshot layout here
         return open_table(os.path.join(sinks_root, name), spark, table_format)
 
+    def _committed(table) -> bool:
+        """resume: this run already committed `table` (idempotent rerun)"""
+        latest = table.latest()
+        return resume and latest is not None and latest.lineage.get("run_id") == run_id
+
+    def _append_side_table(name: str, frame: DataFrame) -> None:
+        table = _mk(name)
+        if not _committed(table):
+            table.append(frame, lineage={"run_id": run_id})
+
     # per-partition lineage must be stamped BEFORE any repartitioning
     input_df = input_df.withColumn("_in_part", F.spark_partition_id())
 
@@ -284,8 +324,7 @@ def run_pipeline(
         .withColumn("run_id", F.lit(run_id))
     )
     sl_table = _mk("_sink_lineage")
-    latest_sl = sl_table.latest()
-    if not (resume and latest_sl and latest_sl.lineage.get("run_id") == run_id):
+    if not _committed(sl_table):
         obs = Observation()
         per_sink = []
         for i, s in enumerate(sink_names):
@@ -353,8 +392,7 @@ def run_pipeline(
             result.sink_counts[sink] = totals.get(sink, (0, 0))[0]
             continue
         table = _mk(sink)
-        latest = table.latest()
-        if resume and latest and latest.lineage.get("run_id") == run_id:
+        if _committed(table):
             result.skipped_sinks.append(sink)
             continue
         pending.append((sink, table, sink_specs.get(sink)))
@@ -445,9 +483,7 @@ def run_pipeline(
     if "doc_id" in routed.columns:
         aggs.append(F.approx_count_distinct("doc_id").alias("approx_docs"))
     agg_df = exploded.rollup("sink", *dims).agg(*aggs)
-    _mk("_aggregates").append(
-        agg_df, lineage={"run_id": run_id}
-    )
+    _append_side_table("_aggregates", agg_df)
     result.aggregates = agg_df
 
     # ---- metrics side table ----
@@ -457,9 +493,7 @@ def run_pipeline(
         m = metrics_op(
             routed, spec.metrics_ts, dims, window_duration=spec.metrics_window
         )
-        _mk("_metrics").append(
-            m, lineage={"run_id": run_id}
-        )
+        _append_side_table("_metrics", m)
         result.metrics = m
 
     # ---- lineage side table: one row per input partition ----
@@ -472,9 +506,7 @@ def run_pipeline(
         .withColumnRenamed("_in_part", "partition_id")
         .withColumn("run_id", F.lit(run_id))
     )
-    _mk("_lineage").append(
-        lineage_df, lineage={"run_id": run_id}
-    )
+    _append_side_table("_lineage", lineage_df)
     result.lineage = lineage_df
 
     if persist_tracker is not None:

@@ -197,12 +197,47 @@ def test_resume_after_crash_between_shared_sink_commits(spark, tmp_path):
         assert t.select("doc_id").distinct().count() == t.count(), f"dups in {sink}"
 
 
+SIDE_TABLES = ("_sink_lineage", "_aggregates", "_metrics", "_lineage")
+
+
 def test_rerun_is_fully_idempotent(spark, tmp_path):
+    """A rerun of a finished run writes nothing: every sink is skipped,
+    and every side table keeps its one snapshot and its row count."""
     root = str(tmp_path)
     df = input_sequences(spark, 300)
     run_flagship(spark, df, root)
+    tables = {t: SnapshotTable(os.path.join(root, t)) for t in SIDE_TABLES}
+    rows = {t: tbl.read(spark).count() for t, tbl in tables.items()}
     res2 = run_flagship(spark, df, root)
     assert sorted(res2.skipped_sinks) == sorted(_expected(300).keys())
+    for t, tbl in tables.items():
+        assert len(tbl.snapshots()) == 1, t
+        assert tbl.read(spark).count() == rows[t], t
+
+
+def test_changed_filter_chain_gets_new_run_id(spark, tmp_path):
+    """The run_id keys on the filter chain, not only on the input files:
+    the same files under another grok pattern are a different run, so
+    resume skips no sink."""
+    from logstash_spark.plans.flagship import enrich_sources, flagship_spec
+    from logstash_spark.plans.runner import run_pipeline
+
+    src = str(tmp_path / "in")
+    input_sequences(spark, 300).write.parquet(src)
+    df = enrich_sources(spark.read.parquet(src))
+    root = str(tmp_path / "sinks")
+    spec = flagship_spec()
+    first = run_pipeline(spark, df, spec, root)
+    again = run_pipeline(spark, df, spec, root)
+    assert again.run_id == first.run_id
+    assert sorted(again.skipped_sinks) == sorted(spec.sink_names())
+
+    changed = flagship_spec()
+    grok = changed.filters[0].conf
+    grok["match"] = grok["match"].replace("msg=%{WORD:msg}", "msg=%{NOTSPACE:msg}")
+    res = run_pipeline(spark, df, changed, root)
+    assert res.run_id != first.run_id
+    assert res.skipped_sinks == []
 
 
 def test_dlq_replay_loop_closes(spark, run):

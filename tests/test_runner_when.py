@@ -5,6 +5,7 @@ scan), multiplicity ops fall back to filter+union over a persisted input.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from logstash_spark.plans.runner import apply_filters
@@ -130,6 +131,29 @@ def test_fileless_input_run_id_tracks_content(spark):
     b = _input_fingerprint(input_sequences(spark, 200), spec)
     assert a1 == a2
     assert a1 != b
+
+
+@pytest.mark.parametrize("build", ["static_lookup_df", "arrow_table"])
+def test_fileless_input_joined_to_local_lookup_warns(spark, build):
+    """A LocalRelation canonicalizes without its rows, like an RDD of
+    local rows: a file-less input joined to a `static_lookup_df`
+    dictionary (or any Arrow-built frame) still warns that resume cannot
+    see that data."""
+    import pyarrow as pa
+
+    from logstash_spark.operators.enrich import static_lookup_df
+    from logstash_spark.plans.runner import _input_fingerprint
+
+    rows, names = [("0", "even"), ("1", "odd")], ["k", "parity"]
+    if build == "static_lookup_df":
+        lookup = static_lookup_df(spark, rows, names)
+    else:
+        lookup = spark.createDataFrame(pa.Table.from_pylist(
+            [dict(zip(names, r)) for r in rows]
+        ))
+    ids = spark.range(10).withColumn("k", (F.col("id") % 2).cast("string"))
+    with pytest.warns(UserWarning, match="cannot see the DATA"):
+        _input_fingerprint(ids.join(lookup, "k"), _spec([]))
 
 
 def test_gated_type_changing_op_falls_back_to_split(spark):
