@@ -95,18 +95,19 @@ def _force(df) -> int:
     return 0
 
 
-def _time_best(make_df, spark, reps: int = 0) -> float:
+def _time_best(make_df, spark, reps: int = 0, *, action=_force) -> float:
     """Warm-up + best-of-N wall time: the sandbox VM has noisy neighbors,
     so a single run can be 5-10x off; one untimed warm-up pays codegen /
     broadcast / page-cache costs, then min over reps approximates true
-    plan cost."""
+    plan cost. `make_df` builds the input untimed; only `action` on it
+    (default: a noop-sink write) is timed."""
     reps = reps or BENCH_REPS
-    _force(make_df())  # warm-up, untimed
+    action(make_df())  # warm-up, untimed
     best = float("inf")
     for _ in range(reps):
         df = make_df()
         t0 = time.perf_counter()
-        _force(df)
+        action(df)
         best = min(best, time.perf_counter() - t0)
     return best
 
@@ -183,7 +184,7 @@ def bench_dedupe_scale(spark) -> float:
 
     docs = synthetic_docs(spark, DEDUP_DOCS)
 
-    def run() -> None:
+    def run(docs) -> None:
         sig = shingle_sig_table(docs, "doc_id", "text", n=3, k=8).persist()
         try:
             pairs = minhash_lsh_pairs(
@@ -193,26 +194,15 @@ def bench_dedupe_scale(spark) -> float:
         finally:
             sig.unpersist()
 
-    run()  # warm-up, untimed
-    best = float("inf")
-    for _ in range(BENCH_REPS):
-        t0 = time.perf_counter()
-        run()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    return _time_best(lambda: docs, spark, action=run)
 
 
-def bench_dedupe_degenerate(spark) -> float:
-    """Adversarial dup-heavy corpus: 30% of DEDUP_DOCS are IDENTICAL
-    copies of ~64 distinct texts, so every band hashes those into ~64
-    huge buckets. The max_bucket star guard keeps candidates O(B) per
-    bucket instead of O(B^2) — without it this bench would generate
-    ~(0.3*N/64)^2*64 pairs and never finish at scale."""
+def degenerate_docs(spark, n: int):
+    """Dup-heavy adversarial corpus: 70% `synthetic_docs` plus 30%
+    IDENTICAL copies of 64 distinct texts, which collapse every band into
+    ~64 giant buckets."""
     from pyspark.sql import functions as F
 
-    from logstash_spark.operators.dataprep import minhash_lsh_pairs
-
-    n = DEDUP_DOCS
     base = synthetic_docs(spark, int(n * 0.7))
     i = F.col("id")
     words = F.transform(
@@ -224,10 +214,20 @@ def bench_dedupe_degenerate(spark) -> float:
     clones = spark.range(0, int(n * 0.3), 1, CPUS * 4).select(
         (i + 10_000_000).alias("doc_id"), F.concat_ws(" ", words).alias("text")
     )
-    docs = base.unionByName(clones)
-    from logstash_spark.operators.dataprep import shingle_sig_table
+    return base.unionByName(clones)
 
-    def run() -> None:
+
+def bench_dedupe_degenerate(spark) -> float:
+    """Adversarial dup-heavy corpus: 30% of DEDUP_DOCS are IDENTICAL
+    copies of ~64 distinct texts, so every band hashes those into ~64
+    huge buckets. The max_bucket star guard keeps candidates O(B) per
+    bucket instead of O(B^2) — without it this bench would generate
+    ~(0.3*N/64)^2*64 pairs and never finish at scale."""
+    from logstash_spark.operators.dataprep import minhash_lsh_pairs, shingle_sig_table
+
+    docs = degenerate_docs(spark, DEDUP_DOCS)
+
+    def run(docs) -> None:
         sig = shingle_sig_table(docs, "doc_id", "text", n=3, k=8).persist()
         try:
             pairs = minhash_lsh_pairs(
@@ -238,13 +238,7 @@ def bench_dedupe_degenerate(spark) -> float:
         finally:
             sig.unpersist()
 
-    run()  # warm-up, untimed
-    best = float("inf")
-    for _ in range(BENCH_REPS):
-        t0 = time.perf_counter()
-        run()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    return _time_best(lambda: docs, spark, action=run)
 
 
 def bench_ann_scale(spark) -> float:
@@ -384,25 +378,11 @@ def bench_simhash_degenerate(spark) -> float:
     handful of giant buckets. simhash_pairs' star guard caps candidates
     at O(B) per hot bucket; unguarded the band equi-join would be
     O(B^2) ≈ 10^7+ pairs here and unbounded at scale."""
-    from pyspark.sql import functions as F
-
     from logstash_spark.operators.dataprep import simhash_pairs, simhash_table
 
-    n = DEDUP_DOCS
-    base = synthetic_docs(spark, int(n * 0.7))
-    i = F.col("id")
-    words = F.transform(
-        F.sequence(F.lit(0), F.lit(30)),
-        lambda j: F.format_string(
-            "d%03d", F.pmod(F.xxhash64((i % 64) * F.lit(7919) + j.cast("long")), F.lit(512))
-        ),
-    )
-    clones = spark.range(0, int(n * 0.3), 1, CPUS * 4).select(
-        (i + 10_000_000).alias("doc_id"), F.concat_ws(" ", words).alias("text")
-    )
-    docs = base.unionByName(clones)
+    docs = degenerate_docs(spark, DEDUP_DOCS)
 
-    def run() -> None:
+    def run(docs) -> None:
         fp = simhash_table(docs, "doc_id", "text").persist()
         try:
             pairs = simhash_pairs(
@@ -412,13 +392,7 @@ def bench_simhash_degenerate(spark) -> float:
         finally:
             fp.unpersist()
 
-    run()  # warm-up, untimed
-    best = float("inf")
-    for _ in range(BENCH_REPS):
-        t0 = time.perf_counter()
-        run()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    return _time_best(lambda: docs, spark, action=run)
 
 
 def bench_dsir_scale(spark) -> float:
@@ -720,7 +694,7 @@ def bench_normalize_scale(spark) -> float:
     return _time_best(lambda: out, spark)
 
 
-def bench_streaming_flagship(spark, layout: str = "per-sink") -> float:
+def bench_streaming_flagship(spark) -> float:
     """The RESUMABLE shape of the flagship: the same
     parse→enrich→route→aggregate transform driven by Structured
     Streaming (file source → foreachBatch fan-out with exactly-once
@@ -729,10 +703,8 @@ def bench_streaming_flagship(spark, layout: str = "per-sink") -> float:
     end-to-end per drain with a FRESH checkpoint each rep (best-of-2;
     a warm drain would be a no-op). Measures what the batch flagship
     number cannot: per-micro-batch planning overhead, checkpoint I/O,
-    and real parquet sink writes. Run for BOTH sink layouts: `per-sink`
-    (K filtered write jobs per batch — independent per-output tables)
-    vs `unified` (one explode + one (sink,_batch_id)-partitioned write
-    per batch — scheduling overhead independent of sink count)."""
+    and real parquet sink writes (one explode + one
+    (sink,_batch_id)-partitioned write per batch)."""
     import shutil
     import tempfile
 
@@ -766,7 +738,6 @@ def bench_streaming_flagship(spark, layout: str = "per-sink") -> float:
             sinks_root,
             ckpt,
             drop_before_write=("raw",),
-            layout=layout,
         )
         q.awaitTermination()
         best = min(best, time.perf_counter() - t0)
@@ -808,10 +779,7 @@ def main() -> None:
     timings["packing_scale"] = round(bench_packing_scale(spark), 3)
     timings["pack_nfd_scale"] = round(bench_pack_nfd_scale(spark), 3)
     timings["normalize_scale"] = round(bench_normalize_scale(spark), 3)
-    timings["streaming_flagship"] = round(bench_streaming_flagship(spark), 3)
-    timings["streaming_flagship_unified"] = round(
-        bench_streaming_flagship(spark, layout="unified"), 3
-    )
+    timings["streaming_flagship_unified"] = round(bench_streaming_flagship(spark), 3)
 
     for name in BENCH_QUERIES:
         fn = QUERIES.get(name)

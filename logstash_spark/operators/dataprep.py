@@ -373,9 +373,9 @@ def ngram_jaccard_pairs(
     short_doc: str = "drop",
     sig_table: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard pairs at scale via an inverted index — the
-    sub-quadratic replacement for the all-pairs-per-block fallback
-    (`queries_dataprep.ngram_jaccard_blocked`). Output:
+    """Exact n-gram Jaccard pairs at scale via an inverted index, the
+    one n-gram Jaccard implementation (gate:
+    `queries_dataprep.ngram_jaccard_inverted`). Output:
     (doc_a, doc_b, jaccard) with exact Jaccard ≥ threshold.
 
     Scale topology:

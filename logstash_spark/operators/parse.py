@@ -5,21 +5,26 @@ string column; on failure it tags the row (`_grokparsefailure`,
 `_dissectfailure`, `_dateparsefailure`, ...) and passes it through —
 failure is data, never an exception.
 
-Execution strategy:
-  * `method='native'` — per-capture `regexp_extract` Column expressions.
-    Pure Catalyst/codegen, zero Python; the regex is evaluated once per
-    capture (JIT-friendly, fine for <~6 captures).
-  * `method='pandas'` — one Arrow-vectorized pandas UDF doing
-    `Series.str.extract` (single regex pass for ALL captures). This is
-    the sanctioned escape hatch per BASELINE.json input_hint ("vectorized
-    pandas/Arrow UDFs, no per-row Python"); cf. PAPERS.md "Accelerating
-    Python UDFs in Vectorized Query Execution" (CIDR 2022).
-  * `method='auto'` — native for few captures, pandas for many.
+Grok has one execution path: per (field, pattern) pair, ONE
+`regexp_replace` rewrites the line into a sentinel-packed list of its
+capture values, and `split`/`element_at` fan the pack out into columns.
+Pure Catalyst/codegen, zero Python, one regex evaluation per pair per
+row. It replaced an Arrow-vectorized pandas UDF (`Series.str.extract`),
+which was 2-3x slower even on 12-capture patterns (COMBINEDAPACHELOG
+0.94 s vs 1.82 s, SYSLOGLINE 0.38 s vs 1.21 s; local[4], 200k rows,
+noop sink): every batch paid the Arrow/Python boundary that PAPERS.md
+"Accelerating Python UDFs in Vectorized Query Execution" (CIDR 2022)
+sets out to cut.
 
-Scale note: the UDF path is an optimization barrier for Catalyst, so the
-UDF projection carries ONLY the source string column; wide columns (the
-token arrays) never cross the Arrow boundary (SURVEY.md §4 "manual
-column pruning" rule).
+Sentinel rule: the pack uses `\\x02` (match marker) and `\\x01` (value
+separator), which a source may itself contain. The pack is then wrong
+in exactly two ways, both visible without scanning the line again: a
+match whose values hold `\\x01` splits into too many pieces, and an
+unmatched source that starts with `\\x02` fakes the marker. Such rows
+take an exact branch: `rlike` for the match flag plus one
+`regexp_extract` per capture. (Scanning every source for either
+character with `instr` instead cost 17-20% of grok time on
+COMBINEDAPACHELOG and SYSLOGLINE: local[4], 200k rows, noop sink.)
 """
 
 from __future__ import annotations
@@ -52,7 +57,6 @@ def grok(
     tag_on_failure: str = "_grokparsefailure",
     break_on_match: bool = True,
     overwrite: bool = True,
-    method: str = "auto",
     max_input_length: int | None = None,
     tag_on_timeout: str = "_groktimeout",
 ) -> DataFrame:
@@ -81,7 +85,6 @@ def grok(
     compiled_pairs = [
         (f, grok_lib.compile_pattern(p, pattern_definitions)) for f, p in pairs
     ]
-    use_pandas = method == "pandas"
 
     df = ensure_tags(df)
 
@@ -94,11 +97,6 @@ def grok(
                 seen.add(cap.name)
                 out_fields.append((cap.name, cap.cast))
 
-    if use_pandas:
-        return _grok_pandas(
-            df, compiled_pairs, out_fields, tag_on_failure,
-            break_on_match, max_input_length, tag_on_timeout,
-        )
     return _grok_native(
         df, compiled_pairs, out_fields, tag_on_failure,
         break_on_match, max_input_length, tag_on_timeout,
@@ -122,9 +120,8 @@ def _match_pairs(
     return [(field, p) for p in pats]
 
 
-# Pack/split sentinels for the single-pass native path. \x01/\x02 cannot
-# occur in well-formed log text; a capture value containing them would
-# mis-split (use method='pandas' for such data).
+# Pack/split sentinels for the single-pass path. A source holding either
+# one is extracted capture by capture instead (see _grok_native).
 _SEP = "\x01"
 _SENT = "\x02"
 
@@ -143,8 +140,11 @@ def _grok_native(
     split/element_at fans the pack out into columns. One regex evaluation
     per pair per row (instead of one per capture), and the wide payload
     columns (token arrays) cross only one extra projection. Pure
-    Catalyst/codegen."""
+    Catalyst/codegen. A row whose pack cannot be trusted (see
+    `suspect`) builds the same list exactly: SENT plus one
+    regexp_extract per capture if the pattern matches, else null."""
     tmp_cols: dict[str, Column] = {}
+    checked: dict[str, Column] = {}
     over_limit: Column | None = None
     for pi, (src_field, c) in enumerate(compiled_pairs):
         src = F.col(src_field)
@@ -157,10 +157,30 @@ def _grok_native(
         # pack; unmatched rows pass through unchanged (no leading SENT).
         # DOTALL is scoped to the wrapper's .* only — the user pattern keeps
         # default '.' semantics (multi-line values: GREEDYDATA must not
-        # cross newlines, matching Oniguruma's default and the pandas path).
+        # cross newlines, matching Oniguruma's default and Python `re`).
         wrapped = "^(?s:.*?)(?:" + c.regex + ")(?s:.*)$"
-        tmp_cols[f"_gk{pi}"] = F.split(F.regexp_replace(src, wrapped, repl), _SEP)
-    df = df.withColumns(tmp_cols)
+        tmp = f"_gk{pi}"
+        tmp_cols[tmp] = F.split(F.regexp_replace(src, wrapped, repl), _SEP)
+        # The pack is wrong only if a captured value holds SEP (a match that
+        # splits into more pieces than repl has) or an unmatched source
+        # starts with SENT (a fake match marker). Both show in the pack and
+        # the source's first character, so clean rows pay no extra scan.
+        parts = F.col(tmp)
+        suspect = src.startswith(_SENT) | (
+            (F.element_at(parts, 1) == _SENT)
+            & (F.size(parts) != 1 + max(len(c.captures), 1))
+        )
+        exact = F.when(
+            src.rlike(c.regex),
+            F.array(
+                F.lit(_SENT),
+                *[F.regexp_extract(src, c.regex, cap.index) for cap in c.captures],
+            ),
+        )
+        checked[tmp] = F.when(suspect, exact).otherwise(parts)
+    # two projections: `checked` reads each pack three times, and Spark
+    # keeps a non-cheap column it reads more than once in its own project
+    df = df.withColumns(tmp_cols).withColumns(checked)
     if max_input_length is not None and over_limit is not None:
         # materialize BEFORE captures may overwrite the source field —
         # a stale reference would read the (nulled) capture instead
@@ -216,148 +236,6 @@ def _grok_native(
         return df.drop("_grok_any", "_grok_to", *tmp_cols.keys())
     df = add_tag_when(df, ~F.col("_grok_any"), tag_on_failure)
     return df.drop("_grok_any", *tmp_cols.keys())
-
-
-def _make_extract_udf(out_type, pat_py, caps_per_pat, names, casts, break_):
-    @F.pandas_udf(out_type)
-    def extract(s: pd.Series) -> pd.DataFrame:
-        out = pd.DataFrame(index=s.index, columns=names, dtype=object)
-        present = s.notna()
-        remaining = present.copy()
-        matched = pd.Series(False, index=s.index)
-        for rx, groups in zip(pat_py, caps_per_pat):
-            active = remaining if break_ else present
-            if not active.any():
-                continue
-            sub = s[active]
-            ext = sub.str.extract(rx)  # one vectorized pass, all groups
-            hit = ext.notna().any(axis=1)
-            hit_idx = sub.index[hit]
-            for fname, gnames in groups.items():
-                cols = [g for g in gnames if g in ext.columns]
-                if not cols:
-                    continue
-                # duplicate-name captures (alternation branches): first
-                # non-null across the branch groups, Oniguruma-style
-                vals = (
-                    ext[cols[0]]
-                    if len(cols) == 1
-                    else ext[cols].bfill(axis=1).iloc[:, 0]
-                )
-                if break_:
-                    out.loc[hit_idx, fname] = vals.loc[hit_idx]
-                else:
-                    # accumulate mode: later patterns fill holes only
-                    holes = out.loc[hit_idx, fname].isna()
-                    idx2 = hit_idx[holes.values]
-                    out.loc[idx2, fname] = vals.loc[idx2]
-            matched.loc[hit_idx] = True
-            remaining.loc[hit_idx] = False
-        for fname in names:
-            if casts[fname] == "int":
-                out[fname] = pd.to_numeric(out[fname], errors="coerce").astype("Int64")
-            elif casts[fname] == "float":
-                out[fname] = pd.to_numeric(out[fname], errors="coerce").astype("float64")
-        out["_grok_any"] = matched
-        return out
-
-    return extract
-
-
-def _grok_pandas(
-    df: DataFrame,
-    compiled_pairs: list[tuple[str, grok_lib.CompiledGrok]],
-    out_fields: list[tuple[str, str | None]],
-    tag_on_failure: str,
-    break_on_match: bool,
-    max_input_length: int | None,
-    tag_on_timeout: str,
-) -> DataFrame:
-    """Single-pass multi-group extraction via Series.str.extract, one
-    Arrow UDF per SOURCE FIELD (patterns for the same field share a UDF;
-    contiguous grouping preserves pair order). Cross-field merge follows
-    the same strict-break / accumulate column logic as the native path."""
-    groups: list[tuple[str, list[grok_lib.CompiledGrok]]] = []
-    for f, c in compiled_pairs:
-        if groups and groups[-1][0] == f:
-            groups[-1][1].append(c)
-        else:
-            groups.append((f, [c]))
-
-    casts = {name: cast for name, cast in out_fields}
-    over_limit: Column | None = None
-    struct_cols: dict[str, Column] = {}
-    group_caps: list[list[str]] = []
-    for gi, (f, comps) in enumerate(groups):
-        names_g: list[str] = []
-        for c in comps:
-            for cap in c.captures:
-                if cap.name not in names_g:
-                    names_g.append(cap.name)
-        group_caps.append(names_g)
-        struct_fields = [
-            T.StructField(n, _cast_type(casts[n]), True) for n in names_g
-        ]
-        struct_fields.append(T.StructField("_grok_any", T.BooleanType(), True))
-        caps_per_pat: list[dict[str, list[str]]] = []
-        for c in comps:
-            m: dict[str, list[str]] = {}
-            for cap in c.captures:
-                m.setdefault(cap.name, []).append(cap.group)
-            caps_per_pat.append(m)
-        udf = _make_extract_udf(
-            T.StructType(struct_fields),
-            [grok_lib.to_python_regex(c) for c in comps],
-            caps_per_pat,
-            names_g,
-            casts,
-            break_on_match,
-        )
-        src = F.col(f)
-        if max_input_length is not None:
-            guard = F.length(src) > max_input_length
-            over_limit = guard if over_limit is None else (over_limit | guard)
-            src = F.when(~F.coalesce(guard, F.lit(False)), src)
-        struct_cols[f"_gs{gi}"] = udf(src)
-    df = df.withColumns(struct_cols)
-    if max_input_length is not None and over_limit is not None:
-        # materialize before captures may overwrite a source field
-        df = df.withColumn("_grok_to", F.coalesce(over_limit, F.lit(False)))
-
-    flags = [
-        F.coalesce(F.col(f"_gs{gi}").getField("_grok_any"), F.lit(False))
-        for gi in range(len(groups))
-    ]
-    if break_on_match:
-        effective: list[Column] = []
-        prev_any: Column = F.lit(False)
-        for flag in flags:
-            effective.append(flag & ~prev_any)
-            prev_any = prev_any | flag
-    else:
-        effective = flags
-
-    new_cols: dict[str, Column] = {}
-    for name, cast in out_fields:
-        attempts = [
-            F.when(effective[gi], F.col(f"_gs{gi}").getField(name))
-            for gi in range(len(groups))
-            if name in group_caps[gi]
-        ]
-        new_cols[name] = (
-            F.coalesce(*attempts) if attempts else F.lit(None).cast(_cast_type(cast))
-        )
-    any_match = F.lit(False)
-    for flag in flags:
-        any_match = any_match | flag
-    new_cols["_grok_any"] = any_match
-    df = df.withColumns(new_cols)
-    if max_input_length is not None and over_limit is not None:
-        df = add_tag_when(df, F.col("_grok_to"), tag_on_timeout)
-        df = add_tag_when(df, ~F.col("_grok_any") & ~F.col("_grok_to"), tag_on_failure)
-        return df.drop("_grok_any", "_grok_to", *struct_cols.keys())
-    df = add_tag_when(df, ~F.col("_grok_any"), tag_on_failure)
-    return df.drop("_grok_any", *struct_cols.keys())
 
 
 @op("script_field")

@@ -50,11 +50,11 @@ ROUTES = {
 }
 
 
-def flagship_spec(*, grok_method: str = "auto") -> PipelineSpec:
+def flagship_spec() -> PipelineSpec:
     return PipelineSpec(
         name="flagship",
         filters=[
-            FilterSpec("grok", {"field": "raw", "match": GROK_PATTERN, "method": grok_method}),
+            FilterSpec("grok", {"field": "raw", "match": GROK_PATTERN}),
             FilterSpec("date", {"field": "ts_str", "formats": ["ISO8601"], "target": "event_ts"}),
         ],
         routes=ROUTES,
@@ -74,12 +74,12 @@ def enrich_sources(df: DataFrame) -> DataFrame:
     return translate_multi(df, "source", dict_df, "source", fallbacks=FALLBACKS)
 
 
-def build_flagship(df: DataFrame, *, grok_method: str = "auto") -> DataFrame:
+def build_flagship(df: DataFrame) -> DataFrame:
     """Full plan, no actions: parse → enrich → routes column."""
     from logstash_spark.plans.runner import apply_filters
     from logstash_spark.operators.route import add_routes
 
-    spec = flagship_spec(grok_method=grok_method)
+    spec = flagship_spec()
     df = apply_filters(df, spec)
     df = enrich_sources(df)
     return add_routes(df, spec.routes, else_sink=spec.else_sink)
@@ -90,13 +90,12 @@ def run_flagship(
     input_df: DataFrame,
     sinks_root: str,
     *,
-    grok_method: str = "auto",
     resume: bool = True,
     fail_after_sink: str | None = None,
 ):
     from logstash_spark.plans.runner import run_pipeline
 
-    spec = flagship_spec(grok_method=grok_method)
+    spec = flagship_spec()
     enriched = enrich_sources(input_df)
     return run_pipeline(
         spark,

@@ -56,7 +56,7 @@ _GROK_RX = r"^(\w+)\[(\d+)\]: event=(\d+) value=(\w+)$"
 @query(
     "grok_parse",
     f"""
-    SELECT mth.method, event_id,
+    SELECT event_id,
            regexp_extract(m, '{_GROK_RX}', 1) AS verb,
            CAST(regexp_extract(m, '{_GROK_RX}', 2) AS BIGINT) AS uid,
            CAST(regexp_extract(m, '{_GROK_RX}', 3) AS BIGINT) AS eid,
@@ -64,15 +64,12 @@ _GROK_RX = r"^(\w+)\[(\d+)\]: event=(\d+) value=(\w+)$"
     FROM (SELECT event_id,
                  event_type || '[' || CAST(user_id AS VARCHAR) || ']: event='
                  || CAST(event_id AS VARCHAR) || ' value=ok' AS m
-          FROM events),
-         (SELECT unnest(['native', 'pandas']) AS method) mth
+          FROM events)
     """,
 )
 def grok_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """logstash-filter-grok over a log line synthesized from `events`,
-    run through BOTH execution paths (native single-pass regexp_replace
-    pack/split AND the Arrow-vectorized pandas-UDF path) and unioned with
-    a `method` label — one gate covers both implementations."""
+    """logstash-filter-grok over a log line synthesized from `events`
+    (single-pass regexp_replace pack/split, pure codegen)."""
     ev = _t(spark, sf_dir, "events")
     msg = F.concat(
         F.col("event_type"), F.lit("["), F.col("user_id").cast("string"),
@@ -80,12 +77,7 @@ def grok_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = ev.withColumn("message", msg)
     pat = r"^%{WORD:verb}\[%{NONNEGINT:uid:int}\]: event=%{NONNEGINT:eid:int} value=%{WORD:status}$"
-    parts = [
-        grok(df, "message", pat, method=m)
-        .select(F.lit(m).alias("method"), "event_id", "verb", "uid", "eid", "status")
-        for m in ("native", "pandas")
-    ]
-    return parts[0].unionByName(parts[1])
+    return grok(df, "message", pat).select("event_id", "verb", "uid", "eid", "status")
 
 
 @query(

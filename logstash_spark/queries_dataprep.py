@@ -203,49 +203,6 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "ngram_jaccard_blocked",
-    f"""
-    WITH corpus AS ({_DUP_CORPUS_SQL}),
-    sh AS (
-      SELECT c.doc_id, c.source, c.lang, s.sh
-      FROM corpus c JOIN ({_SHINGLES_SQL}) s
-        ON c.doc_id = s.doc_id
-    ),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             round(CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-                   / (len(a.sh) + len(b.sh)
-                      - len(list_filter(a.sh, x -> list_contains(b.sh, x)))), 4) AS jaccard
-      FROM sh a JOIN sh b
-        ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5
-    """,
-)
-def ngram_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact blocked n-gram Jaccard dedup: all pairs within a
-    (source, lang) block — the exact-fallback path for small blocks
-    (O(B^2) per block; MinHash-LSH is the scale path)."""
-    corpus = _dup_corpus(_docs(spark, sf_dir))
-    corpus = corpus.where(F.size(F.split(F.col("text"), " ")) >= 3)
-    sh = D.shingle_sig_table(
-        corpus, "doc_id", "text", extra_cols=("source", "lang"), n=3, k=None
-    ).select(F.col("_id").alias("doc_id"), "source", "lang", F.col("_sh").alias("sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.source") == F.col("b.source"))
-        & (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(D.jaccard(F.col("a.sh"), F.col("b.sh")), 4).alias("jaccard"),
-    )
-    return pairs.where(F.col("jaccard") >= 0.5)
-
-
-@query(
     "embed_dup_quantized",
     """
     WITH corpus AS (

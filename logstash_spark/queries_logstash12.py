@@ -135,8 +135,8 @@ def streaming_enrich_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-sink aggregate path (the north rule's pipeline shape, incremental
     form): events replayed through a real readStream file source, each
     micro-batch translate-enriched (broadcast dict join) and conditionally
-    routed by LSCL condition strings, written through the unified fan-out
-    layout (ONE explode + ONE partitioned write per micro-batch, dynamic
+    routed by LSCL condition strings, written through the streaming fan-out
+    (ONE explode + ONE partitioned write per micro-batch, dynamic
     `_batch_id` partition overwrite = exactly-once), then per-sink counts
     + exact integer value sums read back from the sink table. The oracle
     recomputes all three sinks from the batch table — incremental must
@@ -171,7 +171,6 @@ def streaming_enrich_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
             sinks=["s_alert", "s_money", "s_rest"],
             sinks_root=f"{work}/sinks",
             checkpoint_dir=f"{work}/ckpt",
-            layout="unified",
         )
         q.awaitTermination()
         written = spark.read.parquet(f"{work}/sinks")

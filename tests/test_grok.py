@@ -1,7 +1,8 @@
 """Golden grok tests, ported behaviors from logstash-filter-grok's spec
 suite (grok_spec.rb — SURVEY.md §5.1): apache combined log, syslog line,
-failure tagging, break_on_match, type casts. Both execution paths
-(native regexp_extract and pandas-UDF single-pass) must agree.
+failure tagging, break_on_match, type casts. The single-pass native path
+is checked against Python `re` over the same compiled pattern, including
+sources that hold the path's own pack sentinels.
 """
 
 from __future__ import annotations
@@ -18,10 +19,9 @@ APACHE = (
 SYSLOG = "Mar 16 00:01:25 evita postfix/smtpd[1713]: connect from camomile.cloud9.net[168.100.1.3]"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_combined_apache_log(spark, method):
+def test_combined_apache_log(spark):
     df = spark.createDataFrame([Row(message=APACHE)])
-    out = grok(df, "message", "%{COMBINEDAPACHELOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{COMBINEDAPACHELOG}").collect()[0]
     assert out["clientip"] == "127.0.0.1"
     assert out["auth"] == "frank"
     assert out["verb"] == "GET"
@@ -32,10 +32,9 @@ def test_combined_apache_log(spark, method):
     assert out["tags"] == []
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_syslog_line(spark, method):
+def test_syslog_line(spark):
     df = spark.createDataFrame([Row(message=SYSLOG)])
-    out = grok(df, "message", "%{SYSLOGLINE}", method=method).collect()[0]
+    out = grok(df, "message", "%{SYSLOGLINE}").collect()[0]
     assert out["logsource"] == "evita"
     assert out["program"] == "postfix/smtpd"
     assert out["pid"] == 1713
@@ -44,16 +43,14 @@ def test_syslog_line(spark, method):
     assert out["message"] == "connect from camomile.cloud9.net[168.100.1.3]"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_grok_failure_tag(spark, method):
+def test_grok_failure_tag(spark):
     df = spark.createDataFrame([Row(message="not an ip at all")])
-    out = grok(df, "message", "%{IP:ip} %{WORD:w}", method=method).collect()[0]
+    out = grok(df, "message", "%{IP:ip} %{WORD:w}").collect()[0]
     assert out["ip"] is None
     assert out["tags"] == ["_grokparsefailure"]
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_break_on_match_first_wins(spark, method):
+def test_break_on_match_first_wins(spark):
     df = spark.createDataFrame(
         [Row(message="code=42"), Row(message="name=bob"), Row(message="???")]
     )
@@ -63,7 +60,6 @@ def test_break_on_match_first_wins(spark, method):
             df,
             "message",
             [r"code=%{INT:code:int}", r"name=%{WORD:name}"],
-            method=method,
         ).collect()
     }
     assert out["code=42"]["code"] == 42 and out["code=42"]["name"] is None
@@ -72,49 +68,119 @@ def test_break_on_match_first_wins(spark, method):
     assert out["code=42"]["tags"] == []
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_custom_pattern_definitions(spark, method):
+def test_custom_pattern_definitions(spark):
     df = spark.createDataFrame([Row(message="order ab-123 shipped")])
     out = grok(
         df,
         "message",
         "order %{ORDERID:oid} shipped",
         pattern_definitions={"ORDERID": r"[a-z]{2}-\d+"},
-        method=method,
     ).collect()[0]
     assert out["oid"] == "ab-123"
 
 
 def test_paths_agree_on_fixture(spark):
-    from logstash_spark.sources.gen import input_sequences
+    """The native path equals Python `re` over the same compiled pattern
+    (`to_python_regex`) on the 500-row flagship fixture: every capture,
+    the :int casts and the failure tag, row by row."""
+    import re
+
+    from logstash_spark.grok import compile_pattern, to_python_regex
     from logstash_spark.plans.flagship import GROK_PATTERN
+    from logstash_spark.sources.gen import input_sequences
+
+    c = compile_pattern(GROK_PATTERN)
+    rx = re.compile(to_python_regex(c))
+
+    def cast(v, to):
+        if v in (None, ""):
+            return None
+        return int(v) if to == "int" else v
 
     df = input_sequences(spark, 500)
-    a = grok(df, "raw", GROK_PATTERN, method="native")
-    b = grok(df, "raw", GROK_PATTERN, method="pandas")
-    cols = ["doc_id", "ts_str", "host", "src", "pid", "level", "msg", "tags"]
-    assert sorted(map(tuple, a.select(cols).collect())) == sorted(
-        map(tuple, b.select(cols).collect())
-    )
+    names = [cap.name for cap in c.captures]
+    got = grok(df, "raw", GROK_PATTERN).select("raw", *names, "tags").collect()
+    assert len(got) == 500
+    n_fail = 0
+    for r in got:
+        m = rx.search(r["raw"]) if r["raw"] is not None else None
+        want = {
+            cap.name: cast(m.group(cap.group), cap.cast) if m else None
+            for cap in c.captures
+        }
+        assert {n: r[n] for n in names} == want, r["raw"]
+        assert r["tags"] == ([] if m else ["_grokparsefailure"]), r["raw"]
+        n_fail += m is None
+    assert 0 < n_fail < 500  # the fixture holds both outcomes
 
 
 def test_dotall_scoped_to_wrapper_only(spark):
     """GREEDYDATA/DATA must not cross embedded newlines (Oniguruma default
-    '.' semantics) — only the native path's wrapper is DOTALL. Both
-    methods must agree on multi-line input (e.g. multiline-codec output)."""
+    '.' semantics) — only the wrapper is DOTALL. Multi-line input (e.g.
+    multiline-codec output) stops at the newline on the pack path and on
+    the exact path a sentinel character sends a row to."""
     df = spark.createDataFrame(
-        [("lvl=ERROR msg=first line\nsecond line",)], ["message"]
+        [("lvl=ERROR msg=first line\nsecond line",),
+         ("lvl=ERROR msg=first line\x01\nsecond line",)],
+        ["message"],
     )
-    for method in ("native", "pandas"):
-        out = grok(
-            df, "message", r"lvl=%{WORD:lvl} msg=%{GREEDYDATA:msg}", method=method
-        ).collect()[0]
-        assert out["lvl"] == "ERROR", method
-        assert out["msg"] == "first line", method
+    out = grok(df, "message", r"lvl=%{WORD:lvl} msg=%{GREEDYDATA:msg}").collect()
+    assert sorted((r["lvl"], r["msg"]) for r in out) == [
+        ("ERROR", "first line"), ("ERROR", "first line\x01"),
+    ]
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_match_map_multi_field(spark, method):
+def test_sentinel_chars_in_source_do_not_mis_split(spark):
+    """The pack/split path joins captures with \\x01 behind a \\x02 match
+    marker. A source holding either character must still parse exactly
+    as Python `re` does: no mis-split capture, no invented match."""
+    df = spark.createDataFrame(
+        [(1, "k=a\x01b v=1"), (2, "\x02\x01x\x01y"), (3, "junk\x01 k=z v=3")],
+        "id int, m string",
+    )
+    out = {
+        r["id"]: (r["k"], r["v"], r["tags"])
+        for r in grok(df, "m", r"k=%{NOTSPACE:k} v=%{INT:v:int}").collect()
+    }
+    assert out == {
+        1: ("a\x01b", 1, []),
+        2: (None, None, ["_grokparsefailure"]),
+        3: ("z", 3, []),
+    }
+    lone = spark.createDataFrame([("\x02",)], "m string")
+    r = grok(lone, "m", r"^%{INT:n}$").collect()[0]
+    assert (r["n"], r["tags"]) == (None, ["_grokparsefailure"])
+
+
+def test_sentinel_chars_match_python_re_on_random_lines(spark):
+    """Random short lines over an alphabet rich in \\x01/\\x02 and in
+    pattern fragments: captures, casts and the failure tag equal Python
+    `re` for capture-less, anchored and multi-capture patterns."""
+    import random
+    import re
+
+    from logstash_spark.grok import compile_pattern, to_python_regex
+
+    rnd = random.Random(7)
+    alphabet = ["a", "=", " ", "1", "2", "\x01", "\x02", "k=", " v="]
+    lines = ["".join(rnd.choice(alphabet) for _ in range(rnd.randint(0, 12)))
+             for _ in range(400)]
+    df = spark.createDataFrame(list(enumerate(lines)), "id int, m string")
+    for pat in (r"k=%{NOTSPACE:k} v=%{INT:v:int}", r"^%{INT:n}$", r"%{INT}",
+                r"%{WORD:w}=%{DATA:d}"):
+        c = compile_pattern(pat)
+        rx = re.compile(to_python_regex(c))
+        for r in grok(df, "m", pat).collect():
+            m = rx.search(lines[r["id"]])
+            for cap in c.captures:
+                v = m.group(cap.group) if m else None
+                v = None if not v else int(v) if cap.cast == "int" else v
+                assert r[cap.name] == v, (pat, lines[r["id"]], cap.name)
+            want_tags = [] if m else ["_grokparsefailure"]
+            assert r["tags"] == want_tags, (pat, lines[r["id"]])
+
+
+def test_match_map_multi_field(spark):
     """match => {fieldA => pat, fieldB => pat}: strict break semantics —
     the first matching (field, pattern) pair binds, later pairs stay
     null (logstash-filter-grok multi-field golden case)."""
@@ -129,7 +195,6 @@ def test_match_map_multi_field(spark, method):
     out = grok(
         df,
         match={"fa": r"verb=%{WORD:verb}", "fb": r"status=%{NONNEGINT:status:int}"},
-        method=method,
     ).collect()
     r0, r1, r2 = out
     assert r0["verb"] == "GET" and r0["status"] is None
@@ -139,8 +204,7 @@ def test_match_map_multi_field(spark, method):
     assert "_grokparsefailure" not in (r0["tags"] or [])
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_break_on_match_false_accumulates(spark, method):
+def test_break_on_match_false_accumulates(spark):
     """break_on_match=false applies EVERY pattern; captures accumulate
     (later patterns fill holes, never overwrite)."""
     df = spark.createDataFrame(
@@ -151,33 +215,29 @@ def test_break_on_match_false_accumulates(spark, method):
         "message",
         [r"lvl=%{WORD:lvl}", r"code=%{NONNEGINT:code:int}", r"lvl=%{WORD:lvl}"],
         break_on_match=False,
-        method=method,
     ).collect()[0]
     assert out["lvl"] == "INFO"  # first binding wins, not overwritten
     assert out["code"] == 7      # second pattern also applied
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_break_on_match_false_multi_field(spark, method):
+def test_break_on_match_false_multi_field(spark):
     df = spark.createDataFrame([("verb=GET", "status=200")], ["fa", "fb"])
     out = grok(
         df,
         match={"fa": r"verb=%{WORD:verb}", "fb": r"status=%{NONNEGINT:status:int}"},
         break_on_match=False,
-        method=method,
     ).collect()[0]
     assert out["verb"] == "GET" and out["status"] == 200
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_max_input_length_timeout_tag(spark, method):
+def test_max_input_length_timeout_tag(spark):
     """Bounded-work analog of timeout_millis: oversized lines are never
     fed to the regex and get _groktimeout, not _grokparsefailure."""
     df = spark.createDataFrame(
         [("verb=GET",), ("verb=" + "A" * 500,), ("zilch",)], ["message"]
     )
     out = grok(
-        df, "message", r"verb=%{WORD:verb}", max_input_length=100, method=method
+        df, "message", r"verb=%{WORD:verb}", max_input_length=100
     ).collect()
     ok, big, bad = out
     assert ok["verb"] == "GET" and not ok["tags"]
@@ -186,30 +246,27 @@ def test_max_input_length_timeout_tag(spark, method):
     assert "_grokparsefailure" in bad["tags"]
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_timeout_tag_when_capture_overwrites_source(spark, method):
+def test_timeout_tag_when_capture_overwrites_source(spark):
     """The over-limit check must read the PRE-capture source even when a
     capture overwrites the source field itself."""
     df = spark.createDataFrame([("ok",), ("A" * 500,)], ["message"])
     out = grok(
-        df, "message", r"%{GREEDYDATA:message}", max_input_length=100, method=method
+        df, "message", r"%{GREEDYDATA:message}", max_input_length=100
     ).collect()
     ok, big = out
     assert ok["message"] == "ok" and not ok["tags"]
     assert "_groktimeout" in big["tags"] and "_grokparsefailure" not in big["tags"]
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_time_pattern_zero_width_guards(spark, method):
+def test_time_pattern_zero_width_guards(spark):
     """%{TIME} must not swallow an adjacent non-digit char into the
     capture (upstream uses zero-width guards, not consuming ones)."""
     df = spark.createDataFrame([("T14:30:00",)], ["message"])
-    out = grok(df, "message", r"%{TIME:t}", method=method).collect()[0]
+    out = grok(df, "message", r"%{TIME:t}").collect()[0]
     assert out["t"] == "14:30:00"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_httpd_errorlog_alternation_duplicate_names(spark, method):
+def test_httpd_errorlog_alternation_duplicate_names(spark):
     """%{HTTPD_ERRORLOG} is a 2.4|2.0 alternation whose branches reuse
     the same semantic names (timestamp/loglevel/message) — the op must
     bind each name from whichever branch matched (Oniguruma duplicate-
@@ -220,7 +277,7 @@ def test_httpd_errorlog_alternation_duplicate_names(spark, method):
     )
     l20 = "[Fri Oct 06 10:11:12 2023] [error] [client 10.0.0.9] denied by rule"
     df = spark.createDataFrame([(l24,), (l20,)], ["message"])
-    out = grok(df, "message", r"%{HTTPD_ERRORLOG}", method=method).collect()
+    out = grok(df, "message", r"%{HTTPD_ERRORLOG}").collect()
     r24, r20 = out
     assert r24["loglevel"] == "error" and r24["module"] == "core"
     assert r24["pid"] == 1234 and r24["tid"] == 5678
@@ -232,8 +289,7 @@ def test_httpd_errorlog_alternation_duplicate_names(spark, method):
     assert not r24["tags"] and not r20["tags"]
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_java_stacktrace_and_mac(spark, method):
+def test_java_stacktrace_and_mac(spark):
     df = spark.createDataFrame(
         [
             ("    at org.example.Foo$Bar.doWork(Foo.java:42)", "00:1a:2b:3c:4d:5e"),
@@ -247,7 +303,6 @@ def test_java_stacktrace_and_mac(spark, method):
             "trace": r"%{JAVASTACKTRACEPART}",
             "hw": r"^%{MAC:mac}$",
         },
-        method=method,
         break_on_match=False,
     ).collect()
     a, b = out
@@ -278,45 +333,41 @@ CISCO = (
 )
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_redis_patterns(spark, method):
+def test_redis_patterns(spark):
     df = spark.createDataFrame([Row(message=REDIS)])
-    out = grok(df, "message", "%{REDISLOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{REDISLOG}").collect()[0]
     assert out["pid"] == "4018" and out["timestamp"] == "14 Nov 07:01:22.119"
     df = spark.createDataFrame([Row(message=REDISMON)])
-    out = grok(df, "message", "%{REDISMONLOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{REDISMONLOG}").collect()[0]
     assert (out["database"], out["client"], out["command"]) == ("0", "127.0.0.1", "SET")
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_mongo3_log(spark, method):
+def test_mongo3_log(spark):
     df = spark.createDataFrame([Row(message=MONGO3)])
-    out = grok(df, "message", "%{MONGO3_LOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{MONGO3_LOG}").collect()[0]
     assert out["severity"] == "I"
     assert out["component"] == "NETWORK"
     assert out["context"] == "initandlisten"
     assert out["message"] == "waiting for connections on port 27017"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_catalina_and_tomcat_logs(spark, method):
+def test_catalina_and_tomcat_logs(spark):
     df = spark.createDataFrame([Row(message=CATALINA)])
-    out = grok(df, "message", "%{CATALINALOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{CATALINALOG}").collect()[0]
     assert out["timestamp"] == "Jan 09, 2014 7:13:13 AM"
     assert out["class"] == "org.apache.catalina.startup.Catalina"
     assert out["method"] == "start"
     assert out["message"] == "INFO: Server startup in 2017 ms"
     df = spark.createDataFrame([Row(message=TOMCAT)])
-    out = grok(df, "message", "%{TOMCATLOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{TOMCATLOG}").collect()[0]
     assert out["timestamp"] == "2014-01-09 20:03:28,269 -0800"
     assert out["level"] == "ERROR"
     assert out["class"] == "com.example.service.ExampleService"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_cisco_tagged_syslog(spark, method):
+def test_cisco_tagged_syslog(spark):
     df = spark.createDataFrame([Row(message=CISCO)])
-    out = grok(df, "message", "%{CISCO_TAGGED_SYSLOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{CISCO_TAGGED_SYSLOG}").collect()[0]
     assert out["syslog_pri"] == "164"
     assert out["timestamp"] == "Jun 21 2016 14:02:19"
     assert out["sysloghost"] == "ASA-FW"
@@ -343,10 +394,9 @@ SQUID = (
 )
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_elb_access_log(spark, method):
+def test_elb_access_log(spark):
     df = spark.createDataFrame([Row(message=ELB)])
-    out = grok(df, "message", "%{ELB_ACCESS_LOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{ELB_ACCESS_LOG}").collect()[0]
     assert out["elb"] == "my-loadbalancer"
     assert out["clientip"] == "192.168.131.39" and out["clientport"] == 2817
     assert out["backendip"] == "10.0.0.1" and out["backendport"] == 80
@@ -355,10 +405,9 @@ def test_elb_access_log(spark, method):
     assert out["verb"] == "GET" and out["urihost"] == "www.example.com:80"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_s3_access_log(spark, method):
+def test_s3_access_log(spark):
     df = spark.createDataFrame([Row(message=S3)])
-    out = grok(df, "message", "%{S3_ACCESS_LOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{S3_ACCESS_LOG}").collect()[0]
     assert out["bucket"] == "awsexamplebucket1"
     assert out["clientip"] == "192.0.2.3"
     assert out["operation"] == "REST.GET.VERSIONING"
@@ -367,25 +416,23 @@ def test_s3_access_log(spark, method):
     assert out["agent"] == '"S3Console/0.4"'
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_ruby_logger_line(spark, method):
+def test_ruby_logger_line(spark):
     df = spark.createDataFrame([Row(message=RUBY)])
-    out = grok(df, "message", "%{RUBY_LOGGER}", method=method).collect()[0]
+    out = grok(df, "message", "%{RUBY_LOGGER}").collect()[0]
     assert out["pid"] == 11116
     assert out["loglevel"] == "INFO"
     assert out["progname"] == "app"
     assert out["log_message"] == "hello world"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_postgresql_and_squid(spark, method):
+def test_postgresql_and_squid(spark):
     df = spark.createDataFrame([Row(message=PG)])
-    out = grok(df, "message", "%{POSTGRESQL}", method=method).collect()[0]
+    out = grok(df, "message", "%{POSTGRESQL}").collect()[0]
     assert out["tz"] == "EST" and out["pid"] == 9876
     assert out["user_id"] == "alice"
 
     df2 = spark.createDataFrame([Row(message=SQUID)])
-    out2 = grok(df2, "message", "%{SQUID3}", method=method).collect()[0]
+    out2 = grok(df2, "message", "%{SQUID3}").collect()[0]
     assert out2["cache_result"] == "TCP_MISS" and out2["status_code"] == 200
     assert out2["squid_bytes"] == 1015
     assert out2["request_method"] == "GET"
@@ -407,13 +454,12 @@ CISCO_DENY = (
 )
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_ciscofw_built_teardown(spark, method):
+def test_ciscofw_built_teardown(spark):
     df = spark.createDataFrame(
         [Row(message=CISCO_BUILT), Row(message=CISCO_TEARDOWN)]
     )
     rows = grok(
-        df, "message", "%{CISCOFW302013_302014_302015_302016}", method=method
+        df, "message", "%{CISCOFW302013_302014_302015_302016}"
     ).orderBy("action").collect()
     built, down = rows
     assert built["action"] == "Built" and built["direction"] == "inbound"
@@ -425,10 +471,9 @@ def test_ciscofw_built_teardown(spark, method):
     assert down["duration"] == "0:00:30" and down["bytes"] == 12345
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_ciscofw_deny_acl(spark, method):
+def test_ciscofw_deny_acl(spark):
     df = spark.createDataFrame([Row(message=CISCO_DENY)])
-    out = grok(df, "message", "%{CISCOFW106023}", method=method).collect()[0]
+    out = grok(df, "message", "%{CISCOFW106023}").collect()[0]
     assert out["action"] == "Deny" and out["protocol"] == "tcp"
     assert out["src_interface"] == "outside" and out["src_port"] == 53638
     assert out["dst_ip"] == "10.0.0.187" and out["dst_port"] == 8080
@@ -436,13 +481,12 @@ def test_ciscofw_deny_acl(spark, method):
     assert out["hashcode1"] == "0x5063b82f"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_mongo_lines(spark, method):
+def test_mongo_lines(spark):
     df = spark.createDataFrame(
         [Row(message="Aug 17 10:00:01 [initandlisten] connection accepted "
                      "from 127.0.0.1:52049")]
     )
-    out = grok(df, "message", "%{MONGO_LOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{MONGO_LOG}").collect()[0]
     assert out["component"] == "initandlisten"
 
     slow = (
@@ -451,7 +495,7 @@ def test_mongo_lines(spark, method):
         "reslen:127 120ms"
     )
     df2 = spark.createDataFrame([Row(message=slow)])
-    out2 = grok(df2, "message", "%{MONGO_SLOWQUERY}", method=method).collect()[0]
+    out2 = grok(df2, "message", "%{MONGO_SLOWQUERY}").collect()[0]
     # backtracking balances the nested braces up to the ' ntoreturn:' anchor
     assert out2["query"] == "{ a: { b: 1 } }"
     assert out2["database"] == "testdb" and out2["collection"] == "users"
@@ -459,15 +503,14 @@ def test_mongo_lines(spark, method):
     assert out2["duration"] == 120
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_nagios_alternation(spark, method):
+def test_nagios_alternation(spark):
     lines = [
         "[1472121300] SERVICE ALERT: myhost;http;CRITICAL;HARD;3;refused",
         "[1472121301] CURRENT HOST STATE: myhost;UP;HARD;1;PING OK",
         "[1472121302] SERVICE NOTIFICATION: admin;h2;disk;WARNING;by-email;85%",
     ]
     df = spark.createDataFrame([Row(message=m) for m in lines])
-    rows = grok(df, "message", "%{NAGIOSLOGLINE}", method=method) \
+    rows = grok(df, "message", "%{NAGIOSLOGLINE}") \
         .orderBy("nagios_epoch").collect()
     alert, state, notif = rows
     assert alert["nagios_state"] == "CRITICAL" and alert["nagios_attempt"] == 3
@@ -478,13 +521,12 @@ def test_nagios_alternation(spark, method):
     assert "_grokparsefailure" not in (alert["tags"] or [])
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_cron_and_pam_session(spark, method):
+def test_cron_and_pam_session(spark):
     df = spark.createDataFrame(
         [Row(message="Aug 17 10:00:01 web-1 CRON[1234]: (root) CMD "
                      "(/usr/bin/backup --daily)")]
     )
-    out = grok(df, "message", "%{CRONLOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{CRONLOG}").collect()[0]
     assert out["user"] == "root" and out["action"] == "CMD"
     assert out["command"] == "/usr/bin/backup --daily"
 
@@ -494,15 +536,14 @@ def test_cron_and_pam_session(spark, method):
          Row(message="Aug 17 10:00:02 web-1 sshd[999]: pam_unix(sshd:session): "
                      "session closed for user alice")]
     )
-    rows = grok(df2, "message", "%{SYSLOGPAMSESSION}", method=method) \
+    rows = grok(df2, "message", "%{SYSLOGPAMSESSION}") \
         .orderBy("timestamp").collect()
     assert rows[0]["pam_session_state"] == "opened"
     assert rows[0]["username"] == "alice" and rows[0]["pam_by"] == "(uid=0)"
     assert rows[1]["pam_session_state"] == "closed" and rows[1]["pam_by"] is None
 
 
-@pytest.mark.parametrize("method", ["native", "pandas"])
-def test_netscreen_session(spark, method):
+def test_netscreen_session(spark):
     line = (
         "Jun  2 14:53:31 fire00 aka1: NetScreen device_id=aka1  "
         "[Root]system-notification-00257(traffic): "
@@ -512,7 +553,7 @@ def test_netscreen_session(spark, method):
         "src_port=53 dst_port=17210"
     )
     df = spark.createDataFrame([Row(message=line)])
-    out = grok(df, "message", "%{NETSCREENSESSIONLOG}", method=method).collect()[0]
+    out = grok(df, "message", "%{NETSCREENSESSIONLOG}").collect()[0]
     assert out["device_id"] == "aka1" and out["policy_id"] == 120
     assert out["severity"] == "notification" and out["event_type"] == 257
     assert out["src_zone"] == "Trust" and out["action"] == "Deny"

@@ -73,20 +73,9 @@ def test_native_grok_has_no_python(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
         "m", F.concat(F.col("event_type"), F.lit(" x"))
     )
-    g = grok(ev, "m", r"^%{WORD:verb} %{WORD:tail}$", method="native")
+    g = grok(ev, "m", r"^%{WORD:verb} %{WORD:tail}$")
     plan = plan_of(g)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_pandas_grok_single_arrow_node(spark):
-    from logstash_spark.operators.parse import grok
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
-        "m", F.concat(F.col("event_type"), F.lit(" x"))
-    )
-    g = grok(ev, "m", r"^%{WORD:verb} %{WORD:tail}$", method="pandas")
-    # one Arrow exchange, not one per extracted field
-    assert plan_of(g).count("ArrowEvalPython") == 1
 
 
 def test_flagship_agg_prunes_token_payload(spark):
