@@ -2,14 +2,19 @@
 suite (grok_spec.rb — SURVEY.md §5.1): apache combined log, syslog line,
 failure tagging, break_on_match, type casts. The single-pass native path
 is checked against Python `re` over the same compiled pattern, including
-sources that hold the path's own pack sentinels.
+sources that hold the path's own pack sentinels. Each golden case runs
+twice: `native` checks the golden values, `pandas` also checks every
+capture and the tags, row by row, against a pandas `Series.str.extract`
+reference over the same compiled patterns.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import Row
 
+from logstash_spark.grok import compile_pattern, to_python_regex
 from logstash_spark.operators.parse import grok
 
 APACHE = (
@@ -19,9 +24,83 @@ APACHE = (
 SYSLOG = "Mar 16 00:01:25 evita postfix/smtpd[1713]: connect from camomile.cloud9.net[168.100.1.3]"
 
 
-def test_combined_apache_log(spark):
+def _pandas_reference(
+    pdf: pd.DataFrame,
+    field=None,
+    match=None,
+    *,
+    pattern_definitions=None,
+    break_on_match=True,
+    max_input_length=None,
+    tag_on_failure="_grokparsefailure",
+    tag_on_timeout="_groktimeout",
+):
+    """Grok over a pandas frame: a search-anchored `str.match` for the
+    match flag and one `str.extract` per (field, pattern) pair. A capture takes the
+    first non-empty value, in pair then group order, from the pairs that
+    bind it: the first matching pair under break_on_match, every
+    matching pair otherwise. Returns ({capture: values}, tags)."""
+    if isinstance(match, dict):
+        pairs = [
+            (f, p) for f, ps in match.items()
+            for p in ([ps] if isinstance(ps, str) else ps)
+        ]
+    else:
+        pairs = [(field, p) for p in ([match] if isinstance(match, str) else match)]
+    caps: dict[str, pd.Series] = {}
+    casts: dict[str, str | None] = {}
+    any_hit = pd.Series(False, index=pdf.index)
+    over = pd.Series(False, index=pdf.index)
+    for f, pat in pairs:
+        c = compile_pattern(pat, pattern_definitions)
+        rx = to_python_regex(c)
+        src = pdf[f]
+        if max_input_length is not None:
+            big = src.str.len() > max_input_length
+            over |= big
+            src = src.where(~big)
+        hit = src.str.match(f"(?s:.*?)(?:{rx})", na=False)
+        bind = hit & ~any_hit if break_on_match else hit
+        ext = src.str.extract(rx) if c.captures else None
+        for cap in c.captures:
+            col = caps.setdefault(cap.name, pd.Series(None, index=pdf.index, dtype=object))
+            casts.setdefault(cap.name, cap.cast)
+            vals = ext[cap.group].where(ext[cap.group] != "")
+            fill = bind & col.isna() & vals.notna()
+            col[fill] = vals[fill]
+        any_hit |= hit
+    tags = []
+    for i in pdf.index:
+        t = list(pdf.at[i, "tags"]) if "tags" in pdf and pdf.at[i, "tags"] is not None else []
+        if over[i]:
+            t.append(tag_on_timeout)
+        elif not any_hit[i]:
+            t.append(tag_on_failure)
+        tags.append(list(dict.fromkeys(t)))
+    to = {"int": int, "float": float}
+    return {
+        n: [None if pd.isna(v) else to.get(casts[n], str)(v) for v in col]
+        for n, col in caps.items()
+    }, tags
+
+
+def _grok(method, df, field=None, match=None, **kw):
+    """grok(df, ...); under `pandas` its captures and tags must also
+    equal `_pandas_reference` on the same rows."""
+    out = grok(df, field, match, **kw)
+    if method == "pandas":
+        want, want_tags = _pandas_reference(df.toPandas(), field, match, **kw)
+        rows = out.collect()
+        assert [list(r["tags"]) for r in rows] == want_tags
+        for name, vals in want.items():
+            assert [r[name] for r in rows] == vals, name
+    return out
+
+
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_combined_apache_log(spark, method):
     df = spark.createDataFrame([Row(message=APACHE)])
-    out = grok(df, "message", "%{COMBINEDAPACHELOG}").collect()[0]
+    out = _grok(method, df, "message", "%{COMBINEDAPACHELOG}").collect()[0]
     assert out["clientip"] == "127.0.0.1"
     assert out["auth"] == "frank"
     assert out["verb"] == "GET"
@@ -32,9 +111,10 @@ def test_combined_apache_log(spark):
     assert out["tags"] == []
 
 
-def test_syslog_line(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_syslog_line(spark, method):
     df = spark.createDataFrame([Row(message=SYSLOG)])
-    out = grok(df, "message", "%{SYSLOGLINE}").collect()[0]
+    out = _grok(method, df, "message", "%{SYSLOGLINE}").collect()[0]
     assert out["logsource"] == "evita"
     assert out["program"] == "postfix/smtpd"
     assert out["pid"] == 1713
@@ -43,20 +123,23 @@ def test_syslog_line(spark):
     assert out["message"] == "connect from camomile.cloud9.net[168.100.1.3]"
 
 
-def test_grok_failure_tag(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_grok_failure_tag(spark, method):
     df = spark.createDataFrame([Row(message="not an ip at all")])
-    out = grok(df, "message", "%{IP:ip} %{WORD:w}").collect()[0]
+    out = _grok(method, df, "message", "%{IP:ip} %{WORD:w}").collect()[0]
     assert out["ip"] is None
     assert out["tags"] == ["_grokparsefailure"]
 
 
-def test_break_on_match_first_wins(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_break_on_match_first_wins(spark, method):
     df = spark.createDataFrame(
         [Row(message="code=42"), Row(message="name=bob"), Row(message="???")]
     )
     out = {
         r["message"]: r
-        for r in grok(
+        for r in _grok(
+            method,
             df,
             "message",
             [r"code=%{INT:code:int}", r"name=%{WORD:name}"],
@@ -68,9 +151,11 @@ def test_break_on_match_first_wins(spark):
     assert out["code=42"]["tags"] == []
 
 
-def test_custom_pattern_definitions(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_custom_pattern_definitions(spark, method):
     df = spark.createDataFrame([Row(message="order ab-123 shipped")])
-    out = grok(
+    out = _grok(
+        method,
         df,
         "message",
         "order %{ORDERID:oid} shipped",
@@ -180,7 +265,8 @@ def test_sentinel_chars_match_python_re_on_random_lines(spark):
             assert r["tags"] == want_tags, (pat, lines[r["id"]])
 
 
-def test_match_map_multi_field(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_match_map_multi_field(spark, method):
     """match => {fieldA => pat, fieldB => pat}: strict break semantics —
     the first matching (field, pattern) pair binds, later pairs stay
     null (logstash-filter-grok multi-field golden case)."""
@@ -192,7 +278,8 @@ def test_match_map_multi_field(spark):
         ],
         ["fa", "fb"],
     )
-    out = grok(
+    out = _grok(
+        method,
         df,
         match={"fa": r"verb=%{WORD:verb}", "fb": r"status=%{NONNEGINT:status:int}"},
     ).collect()
@@ -204,13 +291,15 @@ def test_match_map_multi_field(spark):
     assert "_grokparsefailure" not in (r0["tags"] or [])
 
 
-def test_break_on_match_false_accumulates(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_break_on_match_false_accumulates(spark, method):
     """break_on_match=false applies EVERY pattern; captures accumulate
     (later patterns fill holes, never overwrite)."""
     df = spark.createDataFrame(
         [("lvl=INFO code=7 lvl=WRONG",)], ["message"]
     )
-    out = grok(
+    out = _grok(
+        method,
         df,
         "message",
         [r"lvl=%{WORD:lvl}", r"code=%{NONNEGINT:code:int}", r"lvl=%{WORD:lvl}"],
@@ -220,9 +309,11 @@ def test_break_on_match_false_accumulates(spark):
     assert out["code"] == 7      # second pattern also applied
 
 
-def test_break_on_match_false_multi_field(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_break_on_match_false_multi_field(spark, method):
     df = spark.createDataFrame([("verb=GET", "status=200")], ["fa", "fb"])
-    out = grok(
+    out = _grok(
+        method,
         df,
         match={"fa": r"verb=%{WORD:verb}", "fb": r"status=%{NONNEGINT:status:int}"},
         break_on_match=False,
@@ -230,13 +321,15 @@ def test_break_on_match_false_multi_field(spark):
     assert out["verb"] == "GET" and out["status"] == 200
 
 
-def test_max_input_length_timeout_tag(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_max_input_length_timeout_tag(spark, method):
     """Bounded-work analog of timeout_millis: oversized lines are never
     fed to the regex and get _groktimeout, not _grokparsefailure."""
     df = spark.createDataFrame(
         [("verb=GET",), ("verb=" + "A" * 500,), ("zilch",)], ["message"]
     )
-    out = grok(
+    out = _grok(
+        method,
         df, "message", r"verb=%{WORD:verb}", max_input_length=100
     ).collect()
     ok, big, bad = out
@@ -246,11 +339,13 @@ def test_max_input_length_timeout_tag(spark):
     assert "_grokparsefailure" in bad["tags"]
 
 
-def test_timeout_tag_when_capture_overwrites_source(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_timeout_tag_when_capture_overwrites_source(spark, method):
     """The over-limit check must read the PRE-capture source even when a
     capture overwrites the source field itself."""
     df = spark.createDataFrame([("ok",), ("A" * 500,)], ["message"])
-    out = grok(
+    out = _grok(
+        method,
         df, "message", r"%{GREEDYDATA:message}", max_input_length=100
     ).collect()
     ok, big = out
@@ -258,15 +353,17 @@ def test_timeout_tag_when_capture_overwrites_source(spark):
     assert "_groktimeout" in big["tags"] and "_grokparsefailure" not in big["tags"]
 
 
-def test_time_pattern_zero_width_guards(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_time_pattern_zero_width_guards(spark, method):
     """%{TIME} must not swallow an adjacent non-digit char into the
     capture (upstream uses zero-width guards, not consuming ones)."""
     df = spark.createDataFrame([("T14:30:00",)], ["message"])
-    out = grok(df, "message", r"%{TIME:t}").collect()[0]
+    out = _grok(method, df, "message", r"%{TIME:t}").collect()[0]
     assert out["t"] == "14:30:00"
 
 
-def test_httpd_errorlog_alternation_duplicate_names(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_httpd_errorlog_alternation_duplicate_names(spark, method):
     """%{HTTPD_ERRORLOG} is a 2.4|2.0 alternation whose branches reuse
     the same semantic names (timestamp/loglevel/message) — the op must
     bind each name from whichever branch matched (Oniguruma duplicate-
@@ -277,7 +374,7 @@ def test_httpd_errorlog_alternation_duplicate_names(spark):
     )
     l20 = "[Fri Oct 06 10:11:12 2023] [error] [client 10.0.0.9] denied by rule"
     df = spark.createDataFrame([(l24,), (l20,)], ["message"])
-    out = grok(df, "message", r"%{HTTPD_ERRORLOG}").collect()
+    out = _grok(method, df, "message", r"%{HTTPD_ERRORLOG}").collect()
     r24, r20 = out
     assert r24["loglevel"] == "error" and r24["module"] == "core"
     assert r24["pid"] == 1234 and r24["tid"] == 5678
@@ -289,7 +386,8 @@ def test_httpd_errorlog_alternation_duplicate_names(spark):
     assert not r24["tags"] and not r20["tags"]
 
 
-def test_java_stacktrace_and_mac(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_java_stacktrace_and_mac(spark, method):
     df = spark.createDataFrame(
         [
             ("    at org.example.Foo$Bar.doWork(Foo.java:42)", "00:1a:2b:3c:4d:5e"),
@@ -297,7 +395,8 @@ def test_java_stacktrace_and_mac(spark):
         ],
         ["trace", "hw"],
     )
-    out = grok(
+    out = _grok(
+        method,
         df,
         match={
             "trace": r"%{JAVASTACKTRACEPART}",
@@ -333,41 +432,45 @@ CISCO = (
 )
 
 
-def test_redis_patterns(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_redis_patterns(spark, method):
     df = spark.createDataFrame([Row(message=REDIS)])
-    out = grok(df, "message", "%{REDISLOG}").collect()[0]
+    out = _grok(method, df, "message", "%{REDISLOG}").collect()[0]
     assert out["pid"] == "4018" and out["timestamp"] == "14 Nov 07:01:22.119"
     df = spark.createDataFrame([Row(message=REDISMON)])
-    out = grok(df, "message", "%{REDISMONLOG}").collect()[0]
+    out = _grok(method, df, "message", "%{REDISMONLOG}").collect()[0]
     assert (out["database"], out["client"], out["command"]) == ("0", "127.0.0.1", "SET")
 
 
-def test_mongo3_log(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_mongo3_log(spark, method):
     df = spark.createDataFrame([Row(message=MONGO3)])
-    out = grok(df, "message", "%{MONGO3_LOG}").collect()[0]
+    out = _grok(method, df, "message", "%{MONGO3_LOG}").collect()[0]
     assert out["severity"] == "I"
     assert out["component"] == "NETWORK"
     assert out["context"] == "initandlisten"
     assert out["message"] == "waiting for connections on port 27017"
 
 
-def test_catalina_and_tomcat_logs(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_catalina_and_tomcat_logs(spark, method):
     df = spark.createDataFrame([Row(message=CATALINA)])
-    out = grok(df, "message", "%{CATALINALOG}").collect()[0]
+    out = _grok(method, df, "message", "%{CATALINALOG}").collect()[0]
     assert out["timestamp"] == "Jan 09, 2014 7:13:13 AM"
     assert out["class"] == "org.apache.catalina.startup.Catalina"
     assert out["method"] == "start"
     assert out["message"] == "INFO: Server startup in 2017 ms"
     df = spark.createDataFrame([Row(message=TOMCAT)])
-    out = grok(df, "message", "%{TOMCATLOG}").collect()[0]
+    out = _grok(method, df, "message", "%{TOMCATLOG}").collect()[0]
     assert out["timestamp"] == "2014-01-09 20:03:28,269 -0800"
     assert out["level"] == "ERROR"
     assert out["class"] == "com.example.service.ExampleService"
 
 
-def test_cisco_tagged_syslog(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_cisco_tagged_syslog(spark, method):
     df = spark.createDataFrame([Row(message=CISCO)])
-    out = grok(df, "message", "%{CISCO_TAGGED_SYSLOG}").collect()[0]
+    out = _grok(method, df, "message", "%{CISCO_TAGGED_SYSLOG}").collect()[0]
     assert out["syslog_pri"] == "164"
     assert out["timestamp"] == "Jun 21 2016 14:02:19"
     assert out["sysloghost"] == "ASA-FW"
@@ -394,9 +497,10 @@ SQUID = (
 )
 
 
-def test_elb_access_log(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_elb_access_log(spark, method):
     df = spark.createDataFrame([Row(message=ELB)])
-    out = grok(df, "message", "%{ELB_ACCESS_LOG}").collect()[0]
+    out = _grok(method, df, "message", "%{ELB_ACCESS_LOG}").collect()[0]
     assert out["elb"] == "my-loadbalancer"
     assert out["clientip"] == "192.168.131.39" and out["clientport"] == 2817
     assert out["backendip"] == "10.0.0.1" and out["backendport"] == 80
@@ -405,9 +509,10 @@ def test_elb_access_log(spark):
     assert out["verb"] == "GET" and out["urihost"] == "www.example.com:80"
 
 
-def test_s3_access_log(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_s3_access_log(spark, method):
     df = spark.createDataFrame([Row(message=S3)])
-    out = grok(df, "message", "%{S3_ACCESS_LOG}").collect()[0]
+    out = _grok(method, df, "message", "%{S3_ACCESS_LOG}").collect()[0]
     assert out["bucket"] == "awsexamplebucket1"
     assert out["clientip"] == "192.0.2.3"
     assert out["operation"] == "REST.GET.VERSIONING"
@@ -416,23 +521,25 @@ def test_s3_access_log(spark):
     assert out["agent"] == '"S3Console/0.4"'
 
 
-def test_ruby_logger_line(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_ruby_logger_line(spark, method):
     df = spark.createDataFrame([Row(message=RUBY)])
-    out = grok(df, "message", "%{RUBY_LOGGER}").collect()[0]
+    out = _grok(method, df, "message", "%{RUBY_LOGGER}").collect()[0]
     assert out["pid"] == 11116
     assert out["loglevel"] == "INFO"
     assert out["progname"] == "app"
     assert out["log_message"] == "hello world"
 
 
-def test_postgresql_and_squid(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_postgresql_and_squid(spark, method):
     df = spark.createDataFrame([Row(message=PG)])
-    out = grok(df, "message", "%{POSTGRESQL}").collect()[0]
+    out = _grok(method, df, "message", "%{POSTGRESQL}").collect()[0]
     assert out["tz"] == "EST" and out["pid"] == 9876
     assert out["user_id"] == "alice"
 
     df2 = spark.createDataFrame([Row(message=SQUID)])
-    out2 = grok(df2, "message", "%{SQUID3}").collect()[0]
+    out2 = _grok(method, df2, "message", "%{SQUID3}").collect()[0]
     assert out2["cache_result"] == "TCP_MISS" and out2["status_code"] == 200
     assert out2["squid_bytes"] == 1015
     assert out2["request_method"] == "GET"
@@ -454,11 +561,13 @@ CISCO_DENY = (
 )
 
 
-def test_ciscofw_built_teardown(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_ciscofw_built_teardown(spark, method):
     df = spark.createDataFrame(
         [Row(message=CISCO_BUILT), Row(message=CISCO_TEARDOWN)]
     )
-    rows = grok(
+    rows = _grok(
+        method,
         df, "message", "%{CISCOFW302013_302014_302015_302016}"
     ).orderBy("action").collect()
     built, down = rows
@@ -471,9 +580,10 @@ def test_ciscofw_built_teardown(spark):
     assert down["duration"] == "0:00:30" and down["bytes"] == 12345
 
 
-def test_ciscofw_deny_acl(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_ciscofw_deny_acl(spark, method):
     df = spark.createDataFrame([Row(message=CISCO_DENY)])
-    out = grok(df, "message", "%{CISCOFW106023}").collect()[0]
+    out = _grok(method, df, "message", "%{CISCOFW106023}").collect()[0]
     assert out["action"] == "Deny" and out["protocol"] == "tcp"
     assert out["src_interface"] == "outside" and out["src_port"] == 53638
     assert out["dst_ip"] == "10.0.0.187" and out["dst_port"] == 8080
@@ -481,12 +591,13 @@ def test_ciscofw_deny_acl(spark):
     assert out["hashcode1"] == "0x5063b82f"
 
 
-def test_mongo_lines(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_mongo_lines(spark, method):
     df = spark.createDataFrame(
         [Row(message="Aug 17 10:00:01 [initandlisten] connection accepted "
                      "from 127.0.0.1:52049")]
     )
-    out = grok(df, "message", "%{MONGO_LOG}").collect()[0]
+    out = _grok(method, df, "message", "%{MONGO_LOG}").collect()[0]
     assert out["component"] == "initandlisten"
 
     slow = (
@@ -495,7 +606,7 @@ def test_mongo_lines(spark):
         "reslen:127 120ms"
     )
     df2 = spark.createDataFrame([Row(message=slow)])
-    out2 = grok(df2, "message", "%{MONGO_SLOWQUERY}").collect()[0]
+    out2 = _grok(method, df2, "message", "%{MONGO_SLOWQUERY}").collect()[0]
     # backtracking balances the nested braces up to the ' ntoreturn:' anchor
     assert out2["query"] == "{ a: { b: 1 } }"
     assert out2["database"] == "testdb" and out2["collection"] == "users"
@@ -503,14 +614,15 @@ def test_mongo_lines(spark):
     assert out2["duration"] == 120
 
 
-def test_nagios_alternation(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_nagios_alternation(spark, method):
     lines = [
         "[1472121300] SERVICE ALERT: myhost;http;CRITICAL;HARD;3;refused",
         "[1472121301] CURRENT HOST STATE: myhost;UP;HARD;1;PING OK",
         "[1472121302] SERVICE NOTIFICATION: admin;h2;disk;WARNING;by-email;85%",
     ]
     df = spark.createDataFrame([Row(message=m) for m in lines])
-    rows = grok(df, "message", "%{NAGIOSLOGLINE}") \
+    rows = _grok(method, df, "message", "%{NAGIOSLOGLINE}") \
         .orderBy("nagios_epoch").collect()
     alert, state, notif = rows
     assert alert["nagios_state"] == "CRITICAL" and alert["nagios_attempt"] == 3
@@ -521,12 +633,13 @@ def test_nagios_alternation(spark):
     assert "_grokparsefailure" not in (alert["tags"] or [])
 
 
-def test_cron_and_pam_session(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_cron_and_pam_session(spark, method):
     df = spark.createDataFrame(
         [Row(message="Aug 17 10:00:01 web-1 CRON[1234]: (root) CMD "
                      "(/usr/bin/backup --daily)")]
     )
-    out = grok(df, "message", "%{CRONLOG}").collect()[0]
+    out = _grok(method, df, "message", "%{CRONLOG}").collect()[0]
     assert out["user"] == "root" and out["action"] == "CMD"
     assert out["command"] == "/usr/bin/backup --daily"
 
@@ -536,14 +649,15 @@ def test_cron_and_pam_session(spark):
          Row(message="Aug 17 10:00:02 web-1 sshd[999]: pam_unix(sshd:session): "
                      "session closed for user alice")]
     )
-    rows = grok(df2, "message", "%{SYSLOGPAMSESSION}") \
+    rows = _grok(method, df2, "message", "%{SYSLOGPAMSESSION}") \
         .orderBy("timestamp").collect()
     assert rows[0]["pam_session_state"] == "opened"
     assert rows[0]["username"] == "alice" and rows[0]["pam_by"] == "(uid=0)"
     assert rows[1]["pam_session_state"] == "closed" and rows[1]["pam_by"] is None
 
 
-def test_netscreen_session(spark):
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_netscreen_session(spark, method):
     line = (
         "Jun  2 14:53:31 fire00 aka1: NetScreen device_id=aka1  "
         "[Root]system-notification-00257(traffic): "
@@ -553,7 +667,7 @@ def test_netscreen_session(spark):
         "src_port=53 dst_port=17210"
     )
     df = spark.createDataFrame([Row(message=line)])
-    out = grok(df, "message", "%{NETSCREENSESSIONLOG}").collect()[0]
+    out = _grok(method, df, "message", "%{NETSCREENSESSIONLOG}").collect()[0]
     assert out["device_id"] == "aka1" and out["policy_id"] == 120
     assert out["severity"] == "notification" and out["event_type"] == 257
     assert out["src_zone"] == "Trust" and out["action"] == "Deny"

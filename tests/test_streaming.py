@@ -39,40 +39,90 @@ def landing(spark, tmp_path_factory):
     return str(out), df.schema
 
 
-def test_streaming_fanout_unified_layout(spark, landing, tmp_path):
-    """One explode + one (sink,_batch_id)-partitioned write per
-    micro-batch. Per-sink counts equal the batch plan's after the first
-    drain AND after the same input is replayed through a FRESH checkpoint
-    into the written sinks (the crash-replay analog: same batch ids
-    re-delivered, dynamic overwrite replaces their partitions instead of
-    appending duplicates). Token arrays survive byte-identical."""
-    path, schema = landing
-    sinks_root = str(tmp_path / "sinks")
+def _drain_fanout(spark, path, schema, sinks_root, ckpt):
+    stream = file_stream_source(spark, path, schema, max_files_per_trigger=3)
+    assert stream.isStreaming
+    q = run_streaming_fanout(
+        stream,
+        build_flagship,
+        SINKS,
+        sinks_root,
+        ckpt,
+        drop_before_write=("raw",),
+    )
+    q.awaitTermination(120)
+
+
+def _batch_counts(spark, path, schema):
     batch_routed = build_flagship(spark.read.schema(schema).parquet(path))
-    expected = {
+    return {
         sink: batch_routed.where(F.array_contains("routes", sink)).count()
         for sink in SINKS
     }
-    for ckpt in ("ckpt_a", "ckpt_b"):
-        stream = file_stream_source(spark, path, schema, max_files_per_trigger=3)
-        assert stream.isStreaming
-        q = run_streaming_fanout(
-            stream,
-            build_flagship,
-            SINKS,
-            sinks_root,
-            str(tmp_path / ckpt),
-            drop_before_write=("raw",),
-        )
-        q.awaitTermination(120)
-        out = spark.read.parquet(sinks_root)
-        counts = dict(out.groupBy("sink").count().collect())
-        got = {sink: counts.get(sink, 0) for sink in SINKS}
-        assert got == expected, f"after {ckpt}: streaming {got} != batch {expected}"
 
+
+def _sink_counts(spark, sinks_root):
+    counts = dict(spark.read.parquet(sinks_root).groupBy("sink").count().collect())
+    return {sink: counts.get(sink, 0) for sink in SINKS}
+
+
+def test_streaming_fanout_matches_batch(spark, landing, tmp_path):
+    path, schema = landing
+    sinks_root = str(tmp_path / "sinks")
+    _drain_fanout(spark, path, schema, sinks_root, str(tmp_path / "ckpt"))
+
+    # batch reference on identical input
+    got = _sink_counts(spark, sinks_root)
+    expected = _batch_counts(spark, path, schema)
+    assert got == expected, f"streaming {got} != batch {expected}"
+
+    # token arrays survive byte-identical: anti-join on (doc_id, tokens)
     src = spark.read.schema(schema).parquet(path).select("doc_id", "tokens")
-    edge = out.where(F.col("sink") == "sink_edge").select("doc_id", "tokens")
+    edge = (
+        spark.read.parquet(sinks_root)
+        .where(F.col("sink") == "sink_edge")
+        .select("doc_id", "tokens")
+    )
     assert edge.join(src, ["doc_id", "tokens"], "left_anti").count() == 0
+
+
+def test_streaming_fanout_replay_is_exactly_once(spark, landing, tmp_path):
+    """A batch replayed after a mid-fan-out crash must overwrite its own
+    _batch_id partitions, not append duplicates. Simulated by running the
+    same input through a FRESH checkpoint (same batch ids re-delivered
+    into already-written sinks)."""
+    path, schema = landing
+    sinks_root = str(tmp_path / "sinks")
+    expected = _batch_counts(spark, path, schema)
+    for ckpt in ("ckpt_a", "ckpt_b"):
+        _drain_fanout(spark, path, schema, sinks_root, str(tmp_path / ckpt))
+        got = _sink_counts(spark, sinks_root)
+        assert got == expected, f"after {ckpt}: replay {got} != batch {expected}"
+
+
+def test_streaming_fanout_unified_layout(spark, landing, tmp_path):
+    """One explode + one (sink,_batch_id)-partitioned write per
+    micro-batch: the root holds only `sink={name}` partitions, each
+    split by `_batch_id`, and each sink reads back on its own from
+    `{root}/sink={name}` with the batch plan's row count."""
+    import os
+
+    path, schema = landing
+    sinks_root = tmp_path / "sinks"
+    _drain_fanout(spark, path, schema, str(sinks_root), str(tmp_path / "ckpt"))
+
+    expected = _batch_counts(spark, path, schema)
+    tops = {e for e in os.listdir(sinks_root) if not e.startswith(("_", "."))}
+    assert tops == {f"sink={s}" for s, n in expected.items() if n}
+    n_files = len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    n_batches = -(-n_files // 3)  # max_files_per_trigger=3
+    for top in tops:
+        sink = top.split("=", 1)[1]
+        parts = [e for e in os.listdir(sinks_root / top) if not e.startswith(".")]
+        assert parts and all(p.startswith("_batch_id=") for p in parts), parts
+        assert {int(p.split("=", 1)[1]) for p in parts} <= set(range(n_batches))
+        got = spark.read.parquet(str(sinks_root / top)).count()
+        assert got == expected[sink], f"{sink}: {got} != {expected[sink]}"
 
 
 def test_streaming_metrics_incremental(spark, landing, tmp_path):
