@@ -11,20 +11,18 @@ except the explicitly-stubbed multimodal decode (mapInPandas, Arrow).
 
 Scale design notes
 ------------------
-* MinHash/SimHash candidate generation is a self-equi-join on a band key:
-  shuffle is hash-partitioned on (band_idx, band_key), so work per reducer
-  is bounded by bucket size, never O(N²). Pathologically hot buckets (all-
-  identical docs) are star-paired against the bucket representative when
-  they exceed `max_bucket` — O(B) pairs instead of O(B²) — so a dup-heavy
-  crawl shard cannot blow up candidate generation (see minhash_lsh_pairs).
-* The band self-join carries ONLY (id, band, key) — shingle sets are
-  re-joined once per side AFTER candidate dedup, so shuffle bytes scale
-  with the candidate count, not candidates × shingle-set size.
+* The MinHash, SimHash, embedding-cosine and SemDeDup detectors share one
+  candidate design, the partitioned band-key set join of HERO (SIGMOD
+  2024): ids explode into (id, band, key) rows, `_star_pairs` self-joins
+  them on the key, and `_verify_join` re-joins each side's payload for
+  the exact check. `_star_pairs` states the rules that keep it
+  sub-quadratic at any duplicate rate.
 * Brute-force ANN broadcasts the (small) query set — zero shuffle on the
   corpus side; the LSH-bucketed variant shuffles once on the bucket id.
+  Every ANN variant ranks through `_top_k`.
 * Every hash is derived from md5 (`portable_hash32`) so DuckDB oracles can
-  reproduce results bit-for-bit; at production scale swap `xxhash64` in
-  via `hash_fn` for ~3x cheaper hashing (same topology).
+  reproduce results bit-for-bit; at production scale `xxhash64` would
+  hash ~3x cheaper (same topology).
 """
 
 from __future__ import annotations
@@ -33,6 +31,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 # Prime > 2^32 for minhash universal hashing; (a, b) pairs are fixed small
 # constants so any engine can reproduce the signature.
@@ -64,16 +63,6 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(grams, portable_hash32))
 
 
-def minhash_signature(sh: Column, k: int = 8) -> Column:
-    """k-wide MinHash signature over a shingle-hash array."""
-    def _minfn(a: int, b: int):
-        # closure (not default args: Spark counts defaults in lambda arity)
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    sigs = [F.array_min(F.transform(sh, _minfn(a, b))) for a, b in MINHASH_AB[:k]]
-    return F.array(*sigs)
-
-
 def lsh_band_keys(sig: Column, bands: int, rows: int) -> Column:
     """Split a signature into `bands` keys of `rows` values each.
 
@@ -95,6 +84,86 @@ def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
+
+
+def _band_width(width: int, bands: int, name: str) -> int:
+    """Values per band. bands > width would leave empty bands (every doc
+    collides in every band, O(N²)); width % bands != 0 would silently
+    drop trailing values (hidden recall loss); bands=0 divides by zero."""
+    if not (1 <= bands <= width) or width % bands != 0:
+        raise ValueError(
+            f"bands must divide {name} with 1 <= bands <= {name} "
+            f"(got {name}={width}, bands={bands})"
+        )
+    return width // bands
+
+
+def _band_rows(base: DataFrame, keys: Column) -> DataFrame:
+    """One (_id, _band, _key) row per entry of an array<struct<band, key>>."""
+    return base.select("_id", F.explode(keys).alias("_bk")).select(
+        "_id", F.col("_bk.band").alias("_band"), F.col("_bk.key").alias("_key")
+    )
+
+
+def _bucket_stats(banded: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Add each row's bucket size `_bn` and min-id representative `_rep`."""
+    w = Window.partitionBy(*keys)
+    return banded.withColumn("_bn", F.count(F.lit(1)).over(w)).withColumn(
+        "_rep", F.min("_id").over(w)
+    )
+
+
+def _star_pairs(
+    banded: DataFrame, keys: Sequence[str], max_bucket: int
+) -> tuple[DataFrame, DataFrame]:
+    """Candidate (_a < _b) id pairs that share a bucket key.
+
+    `banded` holds one `_id` row per bucket the id falls in. The rules
+    that keep this sub-quadratic at any duplicate rate:
+      * the self-join carries ids only — payloads re-join once per side
+        AFTER the candidate dedup (`_verify_join`), so shuffle bytes
+        scale with the candidate count, not candidates × payload;
+      * buckets of at most `max_bucket` rows join all-pairs; bigger ones
+        (a dup-heavy shard under one key) STAR-pair: every member pairs
+        with the bucket's min-id representative only — O(B) candidates
+        instead of O(B²), and identical docs still all link through it;
+      * bucket sizes come from a window over `keys` — the same hash
+        partitioning the self-join uses, so AQE reuses the exchange.
+
+    Returns (`banded` with `_bn`/`_rep`, deduped candidates).
+    """
+    banded = _bucket_stats(banded, keys)
+    normal = banded.where(F.col("_bn") <= max_bucket)
+    left, right = normal.alias("l"), normal.alias("r")
+    pairs_normal = left.join(
+        right,
+        [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        + [F.col("l._id") < F.col("r._id")],
+    ).select(F.col("l._id").alias("_a"), F.col("r._id").alias("_b"))
+    pairs_hot = banded.where(
+        (F.col("_bn") > max_bucket) & (F.col("_id") != F.col("_rep"))
+    ).select(F.col("_rep").alias("_a"), F.col("_id").alias("_b"))
+    cand = pairs_normal.unionByName(pairs_hot).dropDuplicates(["_a", "_b"])
+    return banded, cand
+
+
+def _verify_join(
+    cand: DataFrame,
+    a_side: DataFrame,
+    b_side: DataFrame,
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """Join each side's `_id`-keyed payload onto the deduped (_a, _b)
+    candidates. The ids come back named `a` / `b`, payload columns
+    suffixed `a` / `b` (`_sh` → `_sha`, `_shb`)."""
+
+    def side(payload: DataFrame, id_name: str, sfx: str) -> DataFrame:
+        renames = {c: c + sfx for c in payload.columns if c != "_id"}
+        return payload.withColumnsRenamed({"_id": id_name, **renames})
+
+    cand = cand.withColumnsRenamed({"_a": a, "_b": b})
+    return cand.join(side(a_side, a, "a"), a).join(side(b_side, b, "b"), b)
 
 
 def shingle_sig_table(
@@ -123,8 +192,6 @@ def shingle_sig_table(
     Output columns: _id, *extra_cols, _sh (array<long>, distinct),
     _sig (array<long>).
     """
-    from pyspark.sql.window import Window
-
     ex = df.select(
         F.col(id_col).alias("_id"),
         *[F.col(c) for c in extra_cols],
@@ -173,8 +240,11 @@ def shingle_sig_table(
 
 
 def simhash_table(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
-    """Relational SimHash: explode words → hash → 32 bit-count aggregates
-    in one groupBy (codegen'd; ~12x the array-HOF column form). Returns
+    """Charikar SimHash: explode words → hash → one bit-count aggregate per
+    bit in one groupBy, then a majority vote per bit. Codegen'd, ~12x
+    faster than folding the word hashes with array higher-order
+    functions. Bit extraction is floor(h / 2^j) % 2 with j ≤ 31, exact in
+    double precision and portable to any SQL engine. Returns
     (id_col, simhash)."""
     h = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("_w")
@@ -206,70 +276,28 @@ def minhash_lsh_pairs(
     """Near-duplicate pairs via MinHash + banded LSH, verified with exact
     Jaccard ≥ threshold. Output: (doc_a, doc_b, jaccard).
 
-    Scale topology (the three rules that keep this sub-quadratic at any
-    duplicate rate):
-      * the band self-join carries ONLY (id, band, key) — shingle arrays
-        are re-joined per side AFTER `dropDuplicates`, so the candidate
-        shuffle moves O(pairs) ids, not O(pairs × shingle-set) longs;
-      * buckets larger than `max_bucket` (a dup-heavy shard hashing to
-        one band key) are STAR-paired: every member pairs with the
-        bucket's min-id representative only — O(B) candidates instead of
-        O(B²), and identical docs still all link through the
-        representative. Normal buckets do the exact all-pairs join;
-      * bucket sizes come from a window over (band, key) — the same hash
-        partitioning the self-join uses, so AQE reuses the exchange.
+    Candidates come from `_star_pairs` over (band, key) rows; shingle
+    sets re-join per side after the candidate dedup, and buckets above
+    `max_bucket` star-pair against their min-id representative.
 
     `sig_table` lets callers pass a persisted `shingle_sig_table` output
     (columns _id/_sh/_sig) so the signature aggregation is computed once,
     not re-derived for banding + both verify joins.
     """
-    from pyspark.sql.window import Window
-
-    if not (1 <= bands <= k) or k % bands != 0:
-        # bands > k would make rows=0 → every band key md5("") → all docs
-        # collide in every band (O(N^2)); k % bands != 0 silently drops
-        # trailing signature values (hidden recall loss)
-        raise ValueError(
-            f"bands must divide k with 1 <= bands <= k (got k={k}, bands={bands})"
-        )
-    rows = k // bands
+    rows = _band_width(k, bands, "k")
     base = (
         sig_table
         if sig_table is not None
         else shingle_sig_table(df, id_col, text_col, n=n, k=k, short_doc=short_doc)
     )
-    banded = base.select(
-        "_id", F.explode(lsh_band_keys(F.col("_sig"), bands, rows)).alias("_bk")
-    ).select("_id", F.col("_bk.band").alias("_band"), F.col("_bk.key").alias("_key"))
-
-    w = Window.partitionBy("_band", "_key")
-    banded = banded.withColumn("_bn", F.count(F.lit(1)).over(w)).withColumn(
-        "_rep", F.min("_id").over(w)
-    )
-
-    normal = banded.where(F.col("_bn") <= max_bucket)
-    left = normal.alias("l")
-    right = normal.alias("r")
-    pairs_normal = left.join(
-        right,
-        (F.col("l._band") == F.col("r._band"))
-        & (F.col("l._key") == F.col("r._key"))
-        & (F.col("l._id") < F.col("r._id")),
-    ).select(F.col("l._id").alias("doc_a"), F.col("r._id").alias("doc_b"))
-    pairs_hot = banded.where(
-        (F.col("_bn") > max_bucket) & (F.col("_id") != F.col("_rep"))
-    ).select(F.col("_rep").alias("doc_a"), F.col("_id").alias("doc_b"))
-
-    cand = pairs_normal.unionByName(pairs_hot).dropDuplicates(["doc_a", "doc_b"])
+    banded = _band_rows(base, lsh_band_keys(F.col("_sig"), bands, rows))
+    _, cand = _star_pairs(banded, ("_band", "_key"), max_bucket)
     sh = base.select("_id", "_sh")
-    scored = (
-        cand.join(sh.withColumnsRenamed({"_id": "doc_a", "_sh": "_sha"}), "doc_a")
-        .join(sh.withColumnsRenamed({"_id": "doc_b", "_sh": "_shb"}), "doc_b")
-        .withColumn("jaccard", F.round(jaccard(F.col("_sha"), F.col("_shb")), 4))
+    scored = _verify_join(cand, sh, sh).withColumn(
+        "jaccard", F.round(jaccard(F.col("_sha"), F.col("_shb")), 4)
     )
-    return (
-        scored.where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    return scored.where(F.col("jaccard") >= threshold).select(
+        "doc_a", "doc_b", "jaccard"
     )
 
 
@@ -299,42 +327,25 @@ def minhash_lsh_pairs_cross(
     existing corpus is only ever read, never re-shingled and never
     re-shuffled against itself.
 
-    Scale topology (mirrors `minhash_lsh_pairs`'s three rules):
-      * the band join carries ids only; shingle sets re-join per side
-        AFTER candidate dedup;
-      * hot CORPUS buckets (> `max_bucket` members under one band key)
-        are collapsed to their min-id representative BEFORE the join, so
-        one boilerplate band key costs each new doc O(1) candidates,
-        not O(bucket). New docs colliding with a hot bucket link through
-        the representative (same contract as the self-join star guard);
-      * corpus bucket sizes come from a window over (band, key) — the
-        same hash partitioning the join uses. At production scale the
-        banded+counted corpus table is ALSO a persisted artifact,
-        amortized across every shard admission.
+    The band join carries ids only and shingle sets re-join per side
+    after the candidate dedup, as in `_star_pairs`. Hot CORPUS buckets
+    (> `max_bucket` members under one band key) are collapsed to their
+    min-id representative BEFORE the join, so one boilerplate band key
+    costs each new doc O(1) candidates, not O(bucket); new docs that
+    collide with a hot bucket link through the representative. At
+    production scale the banded+counted corpus table is ALSO a persisted
+    artifact, amortized across every shard admission.
     """
+    rows = _band_width(k, bands, "k")
     base_new = (
         new_sig
         if new_sig is not None
         else shingle_sig_table(new_df, id_col, text_col, n=n, k=k, short_doc=short_doc)
     )
-    rows = k // bands
-    if not (1 <= bands <= k) or k % bands != 0:
-        raise ValueError(
-            f"bands must divide k with 1 <= bands <= k (got k={k}, bands={bands})"
-        )
-
-    def _banded(sig: DataFrame) -> DataFrame:
-        return sig.select(
-            "_id", F.explode(lsh_band_keys(F.col("_sig"), bands, rows)).alias("_bk")
-        ).select("_id", F.col("_bk.band").alias("_band"), F.col("_bk.key").alias("_key"))
-
-    from pyspark.sql.window import Window
-
-    nb = _banded(base_new)
-    cb = _banded(corpus_sig)
-    w = Window.partitionBy("_band", "_key")
-    cb = cb.withColumn("_bn", F.count(F.lit(1)).over(w)).withColumn(
-        "_rep", F.min("_id").over(w)
+    nb = _band_rows(base_new, lsh_band_keys(F.col("_sig"), bands, rows))
+    cb = _bucket_stats(
+        _band_rows(corpus_sig, lsh_band_keys(F.col("_sig"), bands, rows)),
+        ("_band", "_key"),
     )
     # hot corpus buckets shrink to one representative row pre-join
     cb = cb.where((F.col("_bn") <= max_bucket) | (F.col("_id") == F.col("_rep")))
@@ -345,18 +356,16 @@ def minhash_lsh_pairs_cross(
             cb.alias("r"),
             (F.col("l._band") == F.col("r._band")) & (F.col("l._key") == F.col("r._key")),
         )
-        .select(F.col("l._id").alias("new_id"), F.col("r._id").alias("corpus_id"))
-        .dropDuplicates(["new_id", "corpus_id"])
+        .select(F.col("l._id").alias("_a"), F.col("r._id").alias("_b"))
+        .dropDuplicates(["_a", "_b"])
     )
-    sh_new = base_new.select(F.col("_id").alias("new_id"), F.col("_sh").alias("_sha"))
-    sh_corp = corpus_sig.select(
-        F.col("_id").alias("corpus_id"), F.col("_sh").alias("_shb")
-    )
-    scored = (
-        cand.join(sh_new, "new_id")
-        .join(sh_corp, "corpus_id")
-        .withColumn("jaccard", F.round(jaccard(F.col("_sha"), F.col("_shb")), 4))
-    )
+    scored = _verify_join(
+        cand,
+        base_new.select("_id", "_sh"),
+        corpus_sig.select("_id", "_sh"),
+        "new_id",
+        "corpus_id",
+    ).withColumn("jaccard", F.round(jaccard(F.col("_sha"), F.col("_shb")), 4))
     return scored.where(F.col("jaccard") >= threshold).select(
         "new_id", "corpus_id", "jaccard"
     )
@@ -401,8 +410,6 @@ def ngram_jaccard_pairs(
     is fine — only `_sh` is used) to share the shingle aggregation with
     other dedup passes over the same corpus.
     """
-    from pyspark.sql.window import Window
-
     base = (
         sig_table
         if sig_table is not None
@@ -562,8 +569,6 @@ def dedupe_cluster_canonical(
     shuffle entirely (they are their own canonical by construction and
     union back in).
     """
-    from pyspark.sql.window import Window
-
     cc = connected_components(pairs, src, dst)
     in_cluster = docs.join(
         cc, docs[id_col] == cc["node"], "inner"
@@ -652,30 +657,6 @@ def decontaminate(
 SIMHASH_BITS = 32
 
 
-def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Charikar SimHash over word hashes: majority vote per bit.
-
-    Bit extraction uses floor(h / 2^j) % 2 with j ≤ 31 so the arithmetic is
-    exact in double precision and portable to any SQL engine.
-    """
-    hashes = F.transform(words_of(text), portable_hash32)
-    n_words = F.size(hashes)
-    bitvec = lambda h: F.transform(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        lambda j: (F.floor(h / F.pow(F.lit(2.0), j)).cast("long") % 2).cast("int"),
-    )
-    zero = F.array_repeat(F.lit(0), bits)
-    counts = F.aggregate(
-        hashes, zero, lambda acc, h: F.zip_with(acc, bitvec(h), lambda x, y: x + y)
-    )
-    fp_terms = F.zip_with(
-        counts,
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        lambda c, j: F.when(c * 2 > n_words, F.pow(F.lit(2.0), j).cast("long")).otherwise(F.lit(0)),
-    )
-    return F.aggregate(fp_terms, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 def simhash_band(fp: Column, band: int, band_bits: int = 8) -> Column:
     """band-th `band_bits`-bit slice of a simhash fingerprint (double-safe)."""
     return (F.floor(fp / F.pow(F.lit(2.0), F.lit(band * band_bits))).cast("long")) % (
@@ -696,25 +677,13 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via SimHash banding, verified by exact Hamming
     distance (bit_count(xor) ≤ max_hamming). Output: (doc_a, doc_b, hamming).
-
-    Same scale topology as `minhash_lsh_pairs` (the star-guard pattern the
-    band-equality join needs to stay sub-quadratic on dup-heavy shards):
-      * the band self-join carries ONLY (id, band, key);
-      * buckets larger than `max_bucket` STAR-pair against the bucket's
-        min-id representative — O(B) candidates, identical docs still all
-        link through the representative; normal buckets all-pairs join;
-      * bucket sizes come from a window over (band, key), the same hash
-        partitioning the self-join uses (AQE reuses the exchange).
+    Candidates come from `_star_pairs` over (band, bit-slice) rows.
 
     `fp_table` lets callers pass a persisted `simhash_table` output
     (id_col, simhash) so the fingerprint aggregation runs once for
     banding + both verify joins.
     """
-    from pyspark.sql.window import Window
-
-    if bits % bands != 0:
-        raise ValueError(f"bands must divide bits (got bits={bits}, bands={bands})")
-    band_bits = bits // bands
+    band_bits = _band_width(bits, bands, "bits")
     base = (
         fp_table
         if fp_table is not None
@@ -730,33 +699,9 @@ def simhash_pairs(
             for b in range(bands)
         ]
     )
-    banded = base.select("_id", F.explode(slices).alias("_bk")).select(
-        "_id", F.col("_bk.band").alias("_band"), F.col("_bk.key").alias("_key")
-    )
-    w = Window.partitionBy("_band", "_key")
-    banded = banded.withColumn("_bn", F.count(F.lit(1)).over(w)).withColumn(
-        "_rep", F.min("_id").over(w)
-    )
-    normal = banded.where(F.col("_bn") <= max_bucket)
-    left, right = normal.alias("l"), normal.alias("r")
-    pairs_normal = left.join(
-        right,
-        (F.col("l._band") == F.col("r._band"))
-        & (F.col("l._key") == F.col("r._key"))
-        & (F.col("l._id") < F.col("r._id")),
-    ).select(F.col("l._id").alias("doc_a"), F.col("r._id").alias("doc_b"))
-    pairs_hot = banded.where(
-        (F.col("_bn") > max_bucket) & (F.col("_id") != F.col("_rep"))
-    ).select(F.col("_rep").alias("doc_a"), F.col("_id").alias("doc_b"))
-
-    cand = pairs_normal.unionByName(pairs_hot).dropDuplicates(["doc_a", "doc_b"])
-    scored = (
-        cand.join(base.withColumnsRenamed({"_id": "doc_a", "_fp": "_fa"}), "doc_a")
-        .join(base.withColumnsRenamed({"_id": "doc_b", "_fp": "_fb"}), "doc_b")
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))).cast("int"),
-        )
+    _, cand = _star_pairs(_band_rows(base, slices), ("_band", "_key"), max_bucket)
+    scored = _verify_join(cand, base, base).withColumn(
+        "hamming", F.bit_count(F.col("_fpa").bitwiseXOR(F.col("_fpb"))).cast("int")
     )
     return scored.where(F.col("hamming") <= max_hamming).select(
         "doc_a", "doc_b", "hamming"
@@ -795,6 +740,33 @@ def cosine(a: Column, b: Column) -> Column:
 # expression tree, so oracle hashes are unchanged.
 
 
+def _cos6(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of vector columns `a`, `b` from their precomputed norms,
+    rounded to 6 dp (the rounding every cosine gate's oracle applies)."""
+    return F.round(dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _cosine_verified(cand: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, cos) candidates whose exact cosine ≥ threshold;
+    `vecs` is (_id, _v)."""
+    nv = vecs.withColumn("_n", l2norm(F.col("_v")))
+    scored = _verify_join(cand, nv, nv).withColumn(
+        "cos", _cos6("_va", "_vb", "_na", "_nb")
+    )
+    return scored.where(F.col("cos") >= threshold).select("doc_a", "doc_b", "cos")
+
+
+def _top_k(scored: DataFrame, score_col: str, k: int, *cols: str) -> DataFrame:
+    """Each q_id's `k` best rows by `score_col` desc, ties broken by c_id
+    asc. Output: (*cols, score_col, rank)."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score_col).desc(), F.col("c_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(*cols, score_col, "rank")
+    )
+
+
 def ann_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -814,8 +786,6 @@ def ann_topk_bruteforce(
     corpus rows (self-search/dedup); pass False when the two tables are
     distinct but share an id space, or same-id candidates silently vanish.
     """
-    from pyspark.sql.window import Window
-
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     ).withColumn("_qn", l2norm(F.col("q_vec")))
@@ -826,17 +796,9 @@ def ann_topk_bruteforce(
         F.col("q_id") != F.col("c_id") if exclude_self else F.lit(True)
     )
     scored = c.join(F.broadcast(q), join_cond).withColumn(
-        "cos",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("_qn") * F.col("_cn")), 6
-        ),
+        "cos", _cos6("q_vec", "c_vec", "_qn", "_cn")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "cos", "rank")
-    )
+    return _top_k(scored, "cos", k, "q_id", "c_id")
 
 
 def hyperplane_sign_bucket(
@@ -890,8 +852,6 @@ def ann_lsh_bucketed(
     pass False when queries ~ corpus (self-dedup) so BOTH sides shuffle
     on the bucket key instead of broadcasting a corpus-sized table.
     """
-    from pyspark.sql.window import Window
-
     cb = corpus.select(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
@@ -905,18 +865,8 @@ def ann_lsh_bucketed(
     scored = cb.join(F.broadcast(qb) if broadcast_queries else qb, "bucket")
     if exclude_self:
         scored = scored.where(F.col("q_id") != F.col("c_id"))
-    scored = scored.withColumn(
-        "cos",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("_qn") * F.col("_cn")), 6
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "bucket", "c_id", "cos", "rank")
-    )
+    scored = scored.withColumn("cos", _cos6("q_vec", "c_vec", "_qn", "_cn"))
+    return _top_k(scored, "cos", k, "q_id", "bucket", "c_id")
 
 
 
@@ -962,21 +912,12 @@ def ivf_assign(
     centroids) always last. Pass `vec_norm="col"` to also emit the
     already-computed ||v|| so downstream scoring joins don't refold it.
     """
-    from pyspark.sql.window import Window
-
     c = centroids.select(
         F.col(id_col).alias("_cent_id"), F.col(vec_col).alias("_cent_vec")
     ).withColumn("_cent_n", l2norm(F.col("_cent_vec")))
     scored = df.withColumn("_vnorm", l2norm(F.col(vec_col))).join(
         F.broadcast(c)
-    ).withColumn(
-        "_ccos",
-        F.round(
-            dot(F.col(vec_col), F.col("_cent_vec"))
-            / (F.col("_vnorm") * F.col("_cent_n")),
-            6,
-        ),
-    )
+    ).withColumn("_ccos", _cos6(vec_col, "_cent_vec", "_vnorm", "_cent_n"))
     # sort key: (0.0 - cos) normalizes -0.0; coalesce sends a NULL
     # cosine (null embedding element) LAST like the original desc
     # ordering, and +-NaN (zero-norm vector) also sorts last under
@@ -1034,8 +975,6 @@ def ann_ivf(
     `broadcast_queries=True` only when the query set is known
     dictionary-sized; a hard-coded broadcast here would be a scale-killer
     the day queries = corpus."""
-    from pyspark.sql.window import Window
-
     cb = ivf_assign(
         corpus, centroids, id_col=id_col, vec_col=vec_col, nprobe=1,
         vec_norm="_cn",
@@ -1049,18 +988,8 @@ def ann_ivf(
     scored = cb.join(F.broadcast(qb) if broadcast_queries else qb, "bucket")
     if exclude_self:
         scored = scored.where(F.col("q_id") != F.col("c_id"))
-    scored = scored.withColumn(
-        "cos",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("_qn") * F.col("_cn")), 6
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "cos", "rank")
-    )
+    scored = scored.withColumn("cos", _cos6("q_vec", "c_vec", "_qn", "_cn"))
+    return _top_k(scored, "cos", k, "q_id", "c_id")
 
 
 def embedding_dup_pairs(
@@ -1075,31 +1004,23 @@ def embedding_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: multi-table hyperplane-LSH
     candidate generation verified by exact cosine ≥ threshold. Output:
-    (doc_a, doc_b, cos). The embedding analog of `minhash_lsh_pairs` —
-    same three scale rules:
-
-      * each of `tables` independent hash tables buckets a vector by
-        `n_planes` sign bits (table t reuses the deterministic plane
-        formula at plane_offset t*n_planes); a pair is a candidate if it
-        collides in ANY table (recall grows with `tables`, bucket size
-        shrinks with `n_planes`);
-      * the (table, key) self-join carries ONLY ids — vectors re-join
-        once per side AFTER candidate dedup, so shuffle bytes scale with
-        the candidate count, not candidates × dimension;
-      * buckets above `max_bucket` (an embedding-identical shard) STAR-
-        pair against the bucket's min-id representative — O(B) not
-        O(B²); identical vectors still all link through it.
+    (doc_a, doc_b, cos). The embedding analog of `minhash_lsh_pairs`:
+    each of `tables` independent hash tables buckets a vector by
+    `n_planes` sign bits (table t reuses the deterministic plane formula
+    at plane_offset t*n_planes), and a pair is a candidate if it
+    collides in ANY table (recall grows with `tables`, bucket size
+    shrinks with `n_planes`). Candidates come from `_star_pairs` over
+    (table, key) rows, so an embedding-identical shard above
+    `max_bucket` star-pairs against its min-id representative.
 
     Matches the reference's dedup intent (fingerprint + dropDuplicates,
     logstash-filter-fingerprint §filter) lifted to vector space.
     """
-    from pyspark.sql.window import Window
-
     base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     keys = F.array(
         *[
             F.struct(
-                F.lit(t).alias("tbl"),
+                F.lit(t).alias("band"),
                 hyperplane_sign_bucket(
                     F.col("_v"), n_planes, plane_offset=t * n_planes
                 ).alias("key"),
@@ -1107,43 +1028,8 @@ def embedding_dup_pairs(
             for t in range(tables)
         ]
     )
-    banded = base.select("_id", F.explode(keys).alias("_bk")).select(
-        "_id", F.col("_bk.tbl").alias("_tbl"), F.col("_bk.key").alias("_key")
-    )
-    w = Window.partitionBy("_tbl", "_key")
-    banded = banded.withColumn("_bn", F.count(F.lit(1)).over(w)).withColumn(
-        "_rep", F.min("_id").over(w)
-    )
-    normal = banded.where(F.col("_bn") <= max_bucket)
-    left, right = normal.alias("l"), normal.alias("r")
-    pairs_normal = left.join(
-        right,
-        (F.col("l._tbl") == F.col("r._tbl"))
-        & (F.col("l._key") == F.col("r._key"))
-        & (F.col("l._id") < F.col("r._id")),
-    ).select(F.col("l._id").alias("doc_a"), F.col("r._id").alias("doc_b"))
-    pairs_hot = banded.where(
-        (F.col("_bn") > max_bucket) & (F.col("_id") != F.col("_rep"))
-    ).select(F.col("_rep").alias("doc_a"), F.col("_id").alias("doc_b"))
-    cand = pairs_normal.unionByName(pairs_hot).dropDuplicates(["doc_a", "doc_b"])
-    nbase = base.withColumn("_n", l2norm(F.col("_v")))
-    scored = (
-        cand.join(
-            nbase.withColumnsRenamed({"_id": "doc_a", "_v": "_va", "_n": "_na"}),
-            "doc_a",
-        )
-        .join(
-            nbase.withColumnsRenamed({"_id": "doc_b", "_v": "_vb", "_n": "_nb"}),
-            "doc_b",
-        )
-        .withColumn(
-            "cos",
-            F.round(
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6
-            ),
-        )
-    )
-    return scored.where(F.col("cos") >= threshold).select("doc_a", "doc_b", "cos")
+    _, cand = _star_pairs(_band_rows(base, keys), ("_band", "_key"), max_bucket)
+    return _cosine_verified(cand, base, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1376,8 +1262,6 @@ def token_budget_mix(
     dropped doc orders after every kept one, survivors' cumsums are
     unchanged. Pinned against the single-pass plan by a unit test.
     """
-    from pyspark.sql.window import Window
-
     feats = quality_features(F.col(text_col))
     toks = token_counts(F.col(text_col))
     base = df.select(
@@ -1510,8 +1394,6 @@ def pack_concat_chunks(
     exact packed sequences. Output: (group_col, seq_id bigint,
     tokens array, n_tok int).
     """
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy(group_col).orderBy(id_col)
     toks = F.col(tokens_col)
     off = (F.sum(n_tok_col).over(w) - F.col(n_tok_col)).cast("long")
@@ -1822,8 +1704,6 @@ def vocab_stats(
     Ties broken by token id for determinism.
     Output: (token, cnt, n_docs, rank, cum_share_ppm).
     """
-    from pyspark.sql.window import Window
-
     tok = (
         df.select(F.col(id_col), F.explode(tokens_col).alias("token"))
         .groupBy("token")
@@ -2123,8 +2003,6 @@ def bigram_vocab_logp(
     hash-partitioned compatibly AQE-side, and the window repartitions by
     w1 only once); the vocab cut is a global top-K
     (TakeOrderedAndProject, never a full sort)."""
-    from pyspark.sql.window import Window
-
     bg = _doc_bigrams(df.select(F.lit(1).alias("_one"), text_col), "_one", text_col)
     counts = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt"))
     wp = Window.partitionBy("w1")
@@ -2214,59 +2092,23 @@ def semantic_dedup(
     Scale topology (the whole point of clustering first):
       * centroid assignment is a broadcast scan (`ivf_assign`) — the
         corpus never shuffles to be clustered;
-      * the pairwise check is confined WITHIN clusters: one equi-join on
-        `bucket`, so work per reducer is O(cluster²) with clusters sized
-        ~N/sqrt(N) at production centroid counts, never O(N²) global;
-      * the within-cluster self-join carries ONLY ids; vectors re-join
-        AFTER the candidate pairs are deduped (shuffle bytes ∝ pairs,
-        not pairs × dimension);
-      * clusters above `max_bucket` (an embedding-identical shard) are
-        star-compared against the cluster's min-id representative only —
-        O(B) not O(B²); identical vectors still all drop to the rep.
+      * the pairwise check is confined WITHIN clusters: `_star_pairs`
+        over the cluster id, so work per reducer is O(cluster²) with
+        clusters sized ~N/sqrt(N) at production centroid counts, never
+        O(N²) global; clusters above `max_bucket` star-pair against
+        their min-id representative, so identical vectors all drop to it.
 
     mode='flag' returns df + (cluster, semantic_dup); mode='drop' keeps
     survivors only, original columns.
     """
-    from pyspark.sql.window import Window
-
     if mode not in ("flag", "drop"):
         raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
     assign = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col, nprobe=1)
     ids = assign.select(F.col(id_col).alias("_id"), "bucket")
-    w = Window.partitionBy("bucket")
-    banded = ids.withColumn("_bn", F.count(F.lit(1)).over(w)).withColumn(
-        "_rep", F.min("_id").over(w)
-    )
-    normal = banded.where(F.col("_bn") <= max_bucket)
-    left, right = normal.alias("l"), normal.alias("r")
-    # candidate (smaller id, larger id) pairs, ids only
-    pairs_normal = left.join(
-        right,
-        (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l._id") < F.col("r._id")),
-    ).select(F.col("l._id").alias("_a"), F.col("r._id").alias("_b"))
-    pairs_hot = banded.where(
-        (F.col("_bn") > max_bucket) & (F.col("_id") != F.col("_rep"))
-    ).select(F.col("_rep").alias("_a"), F.col("_id").alias("_b"))
-    cand = pairs_normal.unionByName(pairs_hot).dropDuplicates(["_a", "_b"])
-    vecs = df.select(
-        F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v")
-    ).withColumn("_n", l2norm(F.col("_v")))
-    scored = (
-        cand.join(
-            vecs.withColumnsRenamed({"_vid": "_a", "_v": "_va", "_n": "_na"}), "_a"
-        )
-        .join(
-            vecs.withColumnsRenamed({"_vid": "_b", "_v": "_vb", "_n": "_nb"}), "_b"
-        )
-        .withColumn(
-            "_cos",
-            F.round(
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6
-            ),
-        )
-    )
-    dup_ids = scored.where(F.col("_cos") >= threshold).select(
-        F.col("_b").alias("_dup_id")
+    banded, cand = _star_pairs(ids, ("bucket",), max_bucket)
+    vecs = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    dup_ids = _cosine_verified(cand, vecs, threshold).select(
+        F.col("doc_b").alias("_dup_id")
     )
     if mode == "drop":
         # drop mode discards the cluster column, so the corpus never
@@ -2486,8 +2328,6 @@ def ann_ivf_pq(
         raise ValueError("dim must divide evenly into m_sub subspaces")
     sub_dim = dim // m_sub
     cb = pq_codebook(m_sub, k_codes, sub_dim)
-    from pyspark.sql.window import Window
-
     # encode directly on the assignment output (vec rides its exchange
     # anyway) — one corpus scan and ZERO corpus-side join, instead of
     # joining two separate derivations of the same scan back on id
@@ -2526,13 +2366,7 @@ def ann_ivf_pq(
             )
         )
     score = F.round(sum(terms[1:], terms[0]), 6)
-    scored = scored.withColumn("score_pq", score)
-    w = Window.partitionBy("q_id").orderBy(F.col("score_pq").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "score_pq", F.col("rank").cast("int").alias("rank"))
-    )
+    return _top_k(scored.withColumn("score_pq", score), "score_pq", k, "q_id", "c_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2656,8 +2490,6 @@ def shard_assign(
     (logstash-output-elasticsearch §routing), generalized to shard files
     for training-data loaders that need reshuffle-free, reproducible
     epoch order."""
-    from pyspark.sql.window import Window
-
     key = F.col(key_col).cast("string")
     h = portable_hash32(F.concat(key, F.lit(":" + seed)))
     out = df.withColumn("shard", F.pmod(h, F.lit(n_shards)).cast("int")).withColumn(
@@ -3001,8 +2833,6 @@ def reservoir_sample_k(
     pure hash predicates. Reference intent: logstash-filter-drop
     §percentage / logstash-filter-sample, made exact-count per stratum.
     """
-    from pyspark.sql.window import Window
-
     h = portable_hash32(
         F.concat(F.col(key_col).cast("string"), F.lit(":" + seed))
     )
@@ -3591,8 +3421,6 @@ def dpo_pairs(
     bounded; no skew risk at 10^12 candidates. The struct max() trick
     avoids a chosen-vs-rejected self-join entirely.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     # a null score (failed reward-model call) must not hijack the
     # rejected slot (NULLs sort first ascending) and null the margin —
     # unscored candidates simply don't compete
@@ -3649,8 +3477,6 @@ def hard_negatives(
     query. Candidate lists are top-K-bounded upstream, so window state
     is O(K) per query; no skew risk.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     g = gold.select(query_col, doc_col)
     if broadcast_gold:
         g = F.broadcast(g)
@@ -3697,8 +3523,6 @@ def incontext_pack(
     10^12 docs. Token assembly reuses `pack_concat_chunks` downstream;
     this operator owns the ORDER, which is the ICP contribution.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     n = F.col(n_tok_col).cast("long")
     w = Window.partitionBy(cluster_col).orderBy(id_col)
     run = Window.partitionBy(cluster_col).orderBy(id_col).rowsBetween(
@@ -3798,8 +3622,6 @@ def length_bucket_batches(
     reproducible under ANY cluster size while parallelism scales to
     buckets x n_shards. Empty/zero-length rows land in bucket 0.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     n = F.col(n_tok_col).cast("long")
     bucket = (
         F.when(n <= 0, F.lit(0))
@@ -3877,8 +3699,6 @@ def skew_report(
     )
     top = counts.orderBy(F.col("cnt").desc(), F.col("key").asc()).limit(top_k)
     out = top.crossJoin(F.broadcast(total))
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     w = Window.orderBy(F.col("cnt").desc(), F.col("key").asc())
     return out.select(
         F.row_number().over(w).cast("int").alias("rank"),
@@ -3940,8 +3760,6 @@ def bitext_mine(
     s_id): each window family reuses its predecessor's partitioning
     (rank + conditional top-k sum share one sort per key).
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     s = src.select(
         F.col(id_col).alias("s_id"), F.col(vec_col).alias("s_vec")
     ).withColumn("_sn", l2norm(F.col("s_vec")))
@@ -5146,8 +4964,6 @@ def ann_topk_int8(
     sides, the query side broadcasts with its codes, the corpus never
     shuffles; only per-query top-k rows move.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     def prep(df: DataFrame, prefix: str) -> DataFrame:
         qz = quantize_embedding_int8(F.col(vec_col))["q"]
         out = df.select(
@@ -5178,14 +4994,7 @@ def ann_topk_int8(
             dot / F.sqrt((F.col("q_n2") * F.col("c_n2")).cast("double")), 6
         ),
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_q6").desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "cos_q6", F.col("rank").cast("int"))
-    )
+    return _top_k(scored, "cos_q6", k, "q_id", "c_id")
 
 
 # ---------------------------------------------------------------------------
@@ -5315,8 +5124,6 @@ def mmr_topk(
     query row: O(k · shortlist · dim) integer ops. Output: (q_id, rank,
     c_id, rel_u).
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     if not (0 <= lambda_ppm <= 1_000_000):
         raise ValueError(f"lambda_ppm must be in [0, 1e6], got {lambda_ppm}")
 
@@ -5527,8 +5334,6 @@ def auc_binary(
     row: (n_pos, n_neg, auc_ppm); degenerate inputs (single class)
     yield auc_ppm null.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     s = F.col(score_col).cast("long")
     pos = F.col(label_col).cast("long")
     g = df.groupBy(s.alias("_s")).agg(
@@ -5577,8 +5382,6 @@ def negative_sampling_table(
     total, engine-replayable layout. The table is vocab-sized (bounded)
     and broadcasts.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     c = F.col(count_col).cast("double")
     wgt = F.floor(F.sqrt(F.floor(F.sqrt(c * c * c)))).cast("long")
     t = vocab.select(
@@ -5649,8 +5452,6 @@ def pr_curve(
     counts, pure integer arithmetic out. One row per distinct score =
     one candidate threshold.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     s = F.col(score_col).cast("long")
     pos = F.col(label_col).cast("long")
     g = df.groupBy(s.alias("threshold")).agg(
@@ -6532,8 +6333,6 @@ def mad_outliers(
     set, not a serialized window over raw rows. Integer arithmetic
     throughout (k·MAD in int64).
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     def _grid_median(src: DataFrame, vcol: str) -> DataFrame:
         g = src.groupBy(group_col, vcol).agg(F.count("*").cast("long").alias("_c"))
         w = Window.partitionBy(group_col).orderBy(vcol)
@@ -6716,8 +6515,6 @@ def weighted_sample_k(
     integers; rows with null/smaller-than-1 weights are clamped to 1
     rather than dropped (a sampling pass must not silently lose rows).
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     u_ppm = portable_hash32(
         F.concat(F.col(key_col).cast("string"), F.lit(":" + seed))
     ) % 1_000_000 + 1
@@ -7011,8 +6808,6 @@ def waterfill_budget(
     by monotonicity; ties impossible since validity intervals
     partition). Output: (group, n_avail, alloc, water_level).
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     w = Window.orderBy(F.col("_n").asc(), F.col("_g").asc())
     base = counts.select(
         F.col(group_col).alias("_g"), F.col(avail_col).cast("long").alias("_n")
@@ -7106,8 +6901,6 @@ def quantile_normalize(
     10¹² rows the grid is |distinct values|-sized and the corpus
     shuffles exactly once.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     v = F.col(value_col).cast("long")
     wg = Window.partitionBy(group_col).orderBy(
         F.col("_v").asc(), F.col(id_col).asc()
@@ -7185,8 +6978,6 @@ def rank_correlation(
     fine for candidate-list-sized n; a merge-sort inversion count in a
     Pandas UDF is the same seam if n grows).
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     wa = Window.partitionBy(group_col).orderBy(
         F.col(score_a_col).desc(), F.col(item_col).asc()
     )
@@ -7371,8 +7162,6 @@ def winsorize(
     Output adds `lo`, `hi`, `clipped` (the clamped value) and
     `was_clipped`.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     def _grid_pct(src: DataFrame, vcol: str, q_ppm: int, name: str) -> DataFrame:
         g = src.groupBy(group_col, vcol).agg(F.count("*").cast("long").alias("_c"))
         w = Window.partitionBy(group_col).orderBy(vcol)

@@ -63,6 +63,27 @@ def toposort_pipelines(specs: list[PipelineSpec]) -> list[PipelineSpec]:
     return ordered
 
 
+def _pipeline_input(
+    spec: PipelineSpec,
+    inputs: dict[str, DataFrame],
+    address_frames: dict[str, list[DataFrame]],
+) -> DataFrame:
+    """A pipeline's input: its physical input ∪ every frame sent to its
+    listen addresses (union by name)."""
+    frames = [inputs[spec.name]] if spec.name in inputs else []
+    for addr in spec.listen:
+        frames.extend(address_frames.get(addr, []))
+    if not frames:
+        raise ValueError(
+            f"pipeline {spec.name!r} has no input (no physical input "
+            "bound and nothing sent to its addresses)"
+        )
+    df = frames[0]
+    for f_ in frames[1:]:
+        df = df.unionByName(f_, allowMissingColumns=True)
+    return df
+
+
 def compose_pipelines(
     inputs: dict[str, DataFrame],
     specs: list[PipelineSpec],
@@ -78,20 +99,9 @@ def compose_pipelines(
     address_frames: dict[str, list[DataFrame]] = {}
     routed_by_name: dict[str, DataFrame] = {}
     for spec in toposort_pipelines(specs):
-        frames = []
-        if spec.name in inputs:
-            frames.append(inputs[spec.name])
-        for addr in spec.listen:
-            frames.extend(address_frames.get(addr, []))
-        if not frames:
-            raise ValueError(
-                f"pipeline {spec.name!r} has no input (no physical input "
-                "bound and nothing sent to its addresses)"
-            )
-        df = frames[0]
-        for f_ in frames[1:]:
-            df = df.unionByName(f_, allowMissingColumns=True)
-        routed = build_plan(df, spec, persist_tracker)
+        routed = build_plan(
+            _pipeline_input(spec, inputs, address_frames), spec, persist_tracker
+        )
         routed_by_name[spec.name] = routed
         for sink, addr in spec.virtual_sends().items():
             address_frames.setdefault(addr, []).append(
@@ -126,19 +136,9 @@ def run_pipelines(
     address_frames: dict[str, list[DataFrame]] = {}
     try:
         for spec in toposort_pipelines(specs):
-            frames = []
-            if spec.name in inputs:
-                frames.append(inputs[spec.name])
-            for addr in spec.listen:
-                frames.extend(address_frames.get(addr, []))
-            if not frames:
-                raise ValueError(f"pipeline {spec.name!r} has no input")
-            df = frames[0]
-            for f_ in frames[1:]:
-                df = df.unionByName(f_, allowMissingColumns=True)
             res = run_pipeline(
                 spark,
-                df,
+                _pipeline_input(spec, inputs, address_frames),
                 spec,
                 os.path.join(sinks_root, spec.name),
                 resume=resume,

@@ -786,10 +786,7 @@ from logstash_spark import queries_dataprep33 as _qdp33  # noqa: E402,F401
 from logstash_spark import queries_dataprep34 as _qdp34  # noqa: E402,F401
 from logstash_spark import queries_dataprep35 as _qdp35  # noqa: E402,F401
 from logstash_spark import queries_logstash13 as _ql13  # noqa: E402,F401
-
-# MUST be last: folds pop sub-gates registered by the modules above and
-# re-register them as combined driver gates (see queries_folds docstring).
-from logstash_spark import queries_folds as _qf  # noqa: E402,F401
+from logstash_spark import queries_folds as _qf  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # Registry ordering: the correctness driver samples a bounded prefix of the
@@ -1070,4 +1067,8 @@ def _reorder_registry() -> None:
         d.update(snap)
 
 
+# Folds pop sub-gates registered by the modules above and re-register them
+# as combined gates (see queries_folds docstring), then the registry is
+# ordered.
+_qf.register()
 _reorder_registry()

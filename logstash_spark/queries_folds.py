@@ -28,8 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from logstash_spark.queries import ORACLES, QUERIES
-
 
 def _indexed(df: DataFrame, cols: list[str], prefix: str) -> DataFrame:
     w = Window.orderBy(*[F.col(c).asc_nulls_first() for c in cols])
@@ -65,6 +63,9 @@ def fold(name: str, parts: list[tuple[str, str, list[str]]], doc: str) -> None:
     time (a drifted sub schema raises ValueError, not a silent
     misalignment) and drives the identical ORDER BY on both engines.
     """
+    # imported here: `queries` imports this module while still loading
+    from logstash_spark.queries import ORACLES, QUERIES
+
     subs = []
     for sub, pfx, cols in parts:
         fn = QUERIES.pop(sub)
@@ -93,474 +94,475 @@ def fold(name: str, parts: list[tuple[str, str, list[str]]], doc: str) -> None:
     )
 
 
-# ---------------------------------------------------------------------------
-# Fold definitions. Column lists mirror each sub-gate's registered output
-# schema (checked at run time). Grouping is by operator family.
-# ---------------------------------------------------------------------------
+def register() -> None:
+    """Fold the sub-gates into combined gates. `queries` calls this once,
+    after every query module has registered and before it orders the
+    registry, so the result does not depend on which module is imported
+    first. Column lists mirror each sub-gate's registered output schema
+    (checked at run time); grouping is by operator family."""
+    fold(
+        "image_pipeline",
+        [
+            ("image_header_meta", "hm_",
+             ["doc_id", "format", "width", "height", "n_bytes"]),
+            ("image_ahash_neardup", "ah_", ["doc_a", "doc_b", "hamming"]),
+            ("image_resize_dedup", "rz_", ["doc_a", "doc_b", "hamming"]),
+        ],
+        "Multimodal image path in one gate: container header metadata "
+        "parse (PNG/JPEG/GIF dims from binary columns, zero-UDF), aHash "
+        "near-duplicate pairs, and resize-invariant dedup pairs "
+        "(operators/multimodal.py).",
+    )
 
-fold(
-    "image_pipeline",
-    [
-        ("image_header_meta", "hm_",
-         ["doc_id", "format", "width", "height", "n_bytes"]),
-        ("image_ahash_neardup", "ah_", ["doc_a", "doc_b", "hamming"]),
-        ("image_resize_dedup", "rz_", ["doc_a", "doc_b", "hamming"]),
-    ],
-    "Multimodal image path in one gate: container header metadata "
-    "parse (PNG/JPEG/GIF dims from binary columns, zero-UDF), aHash "
-    "near-duplicate pairs, and resize-invariant dedup pairs "
-    "(operators/multimodal.py).",
-)
+    fold(
+        "av_frame_pipeline",
+        [
+            ("video_frame_sample", "vf_",
+             ["doc_id", "n_frames", "frame_size", "frame_idx", "frame_md5"]),
+            ("frame_block_features", "fb_", ["doc_id", "frame_idx", "feat_md5"]),
+            ("audio_pcm_stats", "au_",
+             ["doc_id", "audio_format", "channels", "sample_rate",
+              "bits_per_sample", "n_samples", "sum_val", "sum_abs", "peak",
+              "sum_sq"]),
+        ],
+        "Multimodal audio/video path in one gate: deterministic video "
+        "frame sampling, per-frame block features, and PCM/WAV sample "
+        "statistics over binary columns (operators/multimodal.py).",
+    )
 
-fold(
-    "av_frame_pipeline",
-    [
-        ("video_frame_sample", "vf_",
-         ["doc_id", "n_frames", "frame_size", "frame_idx", "frame_md5"]),
-        ("frame_block_features", "fb_", ["doc_id", "frame_idx", "feat_md5"]),
-        ("audio_pcm_stats", "au_",
-         ["doc_id", "audio_format", "channels", "sample_rate",
-          "bits_per_sample", "n_samples", "sum_val", "sum_abs", "peak",
-          "sum_sq"]),
-    ],
-    "Multimodal audio/video path in one gate: deterministic video "
-    "frame sampling, per-frame block features, and PCM/WAV sample "
-    "statistics over binary columns (operators/multimodal.py).",
-)
+    fold(
+        "html_clean_pipeline",
+        [
+            ("html_text_extract", "hx_",
+             ["doc_id", "title", "n_links", "markup_bp", "n_lines", "text_md5"]),
+            ("mojibake_fix", "mj_",
+             ["doc_id", "n_suspects", "fixed_md5", "repaired_ok"]),
+        ],
+        "Webtext extraction in one gate: HTML-to-text (title/links/markup "
+        "density) plus mojibake detection & repair (operators/webtext.py).",
+    )
 
-fold(
-    "html_clean_pipeline",
-    [
-        ("html_text_extract", "hx_",
-         ["doc_id", "title", "n_links", "markup_bp", "n_lines", "text_md5"]),
-        ("mojibake_fix", "mj_",
-         ["doc_id", "n_suspects", "fixed_md5", "repaired_ok"]),
-    ],
-    "Webtext extraction in one gate: HTML-to-text (title/links/markup "
-    "density) plus mojibake detection & repair (operators/webtext.py).",
-)
+    fold(
+        "crawl_policy_pipeline",
+        [
+            ("html_meta_policy", "mp_",
+             ["doc_id", "meta_robots", "noindex", "canonical_url",
+              "declared_lang"]),
+            ("robots_compliance", "rc_",
+             ["doc_id", "host", "path", "allowed", "matched_rule",
+              "matched_path"]),
+        ],
+        "Crawl-policy compliance in one gate: per-document meta-robots / "
+        "canonical / lang extraction plus robots.txt longest-match "
+        "allow/deny evaluation (operators/webtext.py).",
+    )
 
-fold(
-    "crawl_policy_pipeline",
-    [
-        ("html_meta_policy", "mp_",
-         ["doc_id", "meta_robots", "noindex", "canonical_url",
-          "declared_lang"]),
-        ("robots_compliance", "rc_",
-         ["doc_id", "host", "path", "allowed", "matched_rule",
-          "matched_path"]),
-    ],
-    "Crawl-policy compliance in one gate: per-document meta-robots / "
-    "canonical / lang extraction plus robots.txt longest-match "
-    "allow/deny evaluation (operators/webtext.py).",
-)
+    fold(
+        "crawl_graph_pipeline",
+        [
+            ("sitemap_discovery", "sm_",
+             ["doc_id", "is_index", "entry_no", "loc", "lastmod", "changefreq",
+              "priority_x10"]),
+            ("anchor_text_stats", "at_", ["href", "n_refs", "top_text"]),
+            ("host_pagerank", "pr_", ["node", "rank"]),
+        ],
+        "Crawl-graph analysis in one gate: sitemap/sitemap-index entry "
+        "expansion, anchor-text aggregation per target, and integer-exact "
+        "host-graph PageRank (operators/webtext.py).",
+    )
 
-fold(
-    "crawl_graph_pipeline",
-    [
-        ("sitemap_discovery", "sm_",
-         ["doc_id", "is_index", "entry_no", "loc", "lastmod", "changefreq",
-          "priority_x10"]),
-        ("anchor_text_stats", "at_", ["href", "n_refs", "top_text"]),
-        ("host_pagerank", "pr_", ["node", "rank"]),
-    ],
-    "Crawl-graph analysis in one gate: sitemap/sitemap-index entry "
-    "expansion, anchor-text aggregation per target, and integer-exact "
-    "host-graph PageRank (operators/webtext.py).",
-)
+    fold(
+        "classifier_eval_report",
+        [
+            ("auc_exact", "auc_", ["n_pos", "n_neg", "auc_ppm"]),
+            ("pr_threshold_sweep", "pr_",
+             ["threshold", "tp", "fp", "fn", "precision_ppm", "recall_ppm",
+              "f1_ppm"]),
+            ("annotator_kappa", "ka_", ["n_items", "agree_ppm", "kappa_ppm"]),
+        ],
+        "Classifier/annotator evaluation in one gate: exact rank-sum "
+        "ROC-AUC, full precision/recall threshold sweep, and Cohen's kappa "
+        "inter-annotator agreement (operators/dataprep.py).",
+    )
 
-fold(
-    "classifier_eval_report",
-    [
-        ("auc_exact", "auc_", ["n_pos", "n_neg", "auc_ppm"]),
-        ("pr_threshold_sweep", "pr_",
-         ["threshold", "tp", "fp", "fn", "precision_ppm", "recall_ppm",
-          "f1_ppm"]),
-        ("annotator_kappa", "ka_", ["n_items", "agree_ppm", "kappa_ppm"]),
-    ],
-    "Classifier/annotator evaluation in one gate: exact rank-sum "
-    "ROC-AUC, full precision/recall threshold sweep, and Cohen's kappa "
-    "inter-annotator agreement (operators/dataprep.py).",
-)
+    fold(
+        "sample_eval_report",
+        [
+            ("pass_at_k_estimator", "pk_",
+             ["problem_id", "n_samples", "n_correct", "k", "pass_ppm"]),
+            ("majority_vote_answers", "mv_",
+             ["prompt_id", "majority_answer", "majority_votes", "n_votes",
+              "n_distinct_answers", "share_ppm"]),
+            ("grpo_group_advantage", "ga_",
+             ["doc_id", "group_id", "reward", "n", "adv_mean_ppm", "adv_z_ppm"]),
+        ],
+        "Sampled-generation evaluation in one gate: unbiased pass@k, "
+        "majority-vote (self-consistency) answer selection, and GRPO "
+        "group-relative advantage normalization (operators/dataprep.py).",
+    )
 
-fold(
-    "sample_eval_report",
-    [
-        ("pass_at_k_estimator", "pk_",
-         ["problem_id", "n_samples", "n_correct", "k", "pass_ppm"]),
-        ("majority_vote_answers", "mv_",
-         ["prompt_id", "majority_answer", "majority_votes", "n_votes",
-          "n_distinct_answers", "share_ppm"]),
-        ("grpo_group_advantage", "ga_",
-         ["doc_id", "group_id", "reward", "n", "adv_mean_ppm", "adv_z_ppm"]),
-    ],
-    "Sampled-generation evaluation in one gate: unbiased pass@k, "
-    "majority-vote (self-consistency) answer selection, and GRPO "
-    "group-relative advantage normalization (operators/dataprep.py).",
-)
+    fold(
+        "model_battle_report",
+        [
+            ("pairwise_win_rates", "pw_",
+             ["model_lo", "model_hi", "wins_lo", "wins_hi", "ties", "games",
+              "lo_win_ppm"]),
+            ("bradley_terry_ratings", "bt_",
+             ["model", "rating_ppm", "n_battles", "wins2"]),
+        ],
+        "Preference-battle analytics in one gate: pairwise win/tie/loss "
+        "rates per model pair plus fixed-iteration Bradley-Terry ratings "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "model_battle_report",
-    [
-        ("pairwise_win_rates", "pw_",
-         ["model_lo", "model_hi", "wins_lo", "wins_hi", "ties", "games",
-          "lo_win_ppm"]),
-        ("bradley_terry_ratings", "bt_",
-         ["model", "rating_ppm", "n_battles", "wins2"]),
-    ],
-    "Preference-battle analytics in one gate: pairwise win/tie/loss "
-    "rates per model pair plus fixed-iteration Bradley-Terry ratings "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "calibration_pipeline",
+        [
+            ("calibration_report", "cr_",
+             ["bin", "n", "acc_ppm", "avg_conf_ppm", "gap_ppm", "ece_ppm",
+              "brier_ppm"]),
+            ("isotonic_calibration", "ic_", ["score", "n", "pos", "cal_ppm"]),
+        ],
+        "Confidence-calibration in one gate: reliability bins with "
+        "ECE/Brier plus PAV isotonic-regression calibration over the score "
+        "grid (operators/dataprep.py).",
+    )
 
-fold(
-    "calibration_pipeline",
-    [
-        ("calibration_report", "cr_",
-         ["bin", "n", "acc_ppm", "avg_conf_ppm", "gap_ppm", "ece_ppm",
-          "brier_ppm"]),
-        ("isotonic_calibration", "ic_", ["score", "n", "pos", "cal_ppm"]),
-    ],
-    "Confidence-calibration in one gate: reliability bins with "
-    "ECE/Brier plus PAV isotonic-regression calibration over the score "
-    "grid (operators/dataprep.py).",
-)
+    fold(
+        "rank_agreement_report",
+        [
+            ("rank_correlation", "rk_",
+             ["qid", "n", "sum_d2", "tau_ppm", "rho_ppm"]),
+            ("rbo_topk_overlap", "rb_", ["doc_id", "rbo_ppm"]),
+        ],
+        "Ranked-list agreement in one gate: Kendall tau / Spearman rho per "
+        "query plus rank-biased overlap of top-k lists "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "rank_agreement_report",
-    [
-        ("rank_correlation", "rk_",
-         ["qid", "n", "sum_d2", "tau_ppm", "rho_ppm"]),
-        ("rbo_topk_overlap", "rb_", ["doc_id", "rbo_ppm"]),
-    ],
-    "Ranked-list agreement in one gate: Kendall tau / Spearman rho per "
-    "query plus rank-biased overlap of top-k lists "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "text_overlap_eval",
+        [
+            ("eval_em_f1", "em_",
+             ["doc_id", "exact_match", "lev_sim_ppm", "token_f1_ppm"]),
+            ("rouge_l_eval", "rg_",
+             ["doc_id", "lcs", "np", "nr", "rouge_l_p_ppm", "rouge_l_r_ppm",
+              "rouge_l_f_ppm"]),
+        ],
+        "Reference-text overlap metrics in one gate: exact-match / "
+        "Levenshtein similarity / token F1 plus LCS-based ROUGE-L "
+        "precision/recall/F (operators/dataprep.py).",
+    )
 
-fold(
-    "text_overlap_eval",
-    [
-        ("eval_em_f1", "em_",
-         ["doc_id", "exact_match", "lev_sim_ppm", "token_f1_ppm"]),
-        ("rouge_l_eval", "rg_",
-         ["doc_id", "lcs", "np", "nr", "rouge_l_p_ppm", "rouge_l_r_ppm",
-          "rouge_l_f_ppm"]),
-    ],
-    "Reference-text overlap metrics in one gate: exact-match / "
-    "Levenshtein similarity / token F1 plus LCS-based ROUGE-L "
-    "precision/recall/F (operators/dataprep.py).",
-)
+    fold(
+        "retrieval_quality_report",
+        [
+            ("retrieval_ranking_metrics", "rr_",
+             ["q_id", "mrr_ppm", "recall_k_ppm", "ndcg_k_ppm", "n_rel"]),
+            ("mmr_diverse_topk", "mm_", ["q_id", "rank", "c_id", "rel_u"]),
+        ],
+        "Retrieval quality in one gate: MRR / recall@k / NDCG@k per query "
+        "plus maximal-marginal-relevance diversified top-k selection "
+        "(operators/retrieval.py, operators/dataprep.py).",
+    )
 
-fold(
-    "retrieval_quality_report",
-    [
-        ("retrieval_ranking_metrics", "rr_",
-         ["q_id", "mrr_ppm", "recall_k_ppm", "ndcg_k_ppm", "n_rel"]),
-        ("mmr_diverse_topk", "mm_", ["q_id", "rank", "c_id", "rel_u"]),
-    ],
-    "Retrieval quality in one gate: MRR / recall@k / NDCG@k per query "
-    "plus maximal-marginal-relevance diversified top-k selection "
-    "(operators/retrieval.py, operators/dataprep.py).",
-)
+    fold(
+        "preference_mining_pipeline",
+        [
+            ("kwise_pref_pairs", "kp_",
+             ["prompt_id", "chosen_id", "rejected_id", "chosen_score",
+              "rejected_score", "margin", "pair_rank", "n_candidates"]),
+            ("negative_sampling", "ns_", ["pair_id", "slot", "negative"]),
+        ],
+        "Preference-data construction in one gate: k-wise ranking to "
+        "chosen/rejected DPO pairs plus deterministic in-batch negative "
+        "sampling (operators/dataprep.py).",
+    )
 
-fold(
-    "preference_mining_pipeline",
-    [
-        ("kwise_pref_pairs", "kp_",
-         ["prompt_id", "chosen_id", "rejected_id", "chosen_score",
-          "rejected_score", "margin", "pair_rank", "n_candidates"]),
-        ("negative_sampling", "ns_", ["pair_id", "slot", "negative"]),
-    ],
-    "Preference-data construction in one gate: k-wise ranking to "
-    "chosen/rejected DPO pairs plus deterministic in-batch negative "
-    "sampling (operators/dataprep.py).",
-)
+    fold(
+        "sampling_policies",
+        [
+            ("weighted_sample_k", "ws_",
+             ["doc_id", "source", "n_chars", "wres_key_q", "sample_rank"]),
+            ("reservoir_sample_k", "rs_", ["doc_id", "lang", "sample_rank"]),
+            ("recency_sampling", "rc_", ["event_id", "_halvings", "_keep"]),
+        ],
+        "Deterministic sampling policies in one gate: A-ES weighted "
+        "reservoir top-k, per-stratum reservoir sample, and half-life "
+        "recency downsampling (operators/dataprep.py).",
+    )
 
-fold(
-    "sampling_policies",
-    [
-        ("weighted_sample_k", "ws_",
-         ["doc_id", "source", "n_chars", "wres_key_q", "sample_rank"]),
-        ("reservoir_sample_k", "rs_", ["doc_id", "lang", "sample_rank"]),
-        ("recency_sampling", "rc_", ["event_id", "_halvings", "_keep"]),
-    ],
-    "Deterministic sampling policies in one gate: A-ES weighted "
-    "reservoir top-k, per-stratum reservoir sample, and half-life "
-    "recency downsampling (operators/dataprep.py).",
-)
+    fold(
+        "mixture_design_pipeline",
+        [
+            ("waterfill_budget", "wf_",
+             ["source", "n_avail", "alloc", "water_level"]),
+            ("mix_divergence", "md_",
+             ["source", "n", "in_target", "kl_contrib_micro", "kl_micro_total"]),
+            ("mix_pipeline_e2e", "mx_",
+             ["source", "n_avail", "alloc", "water_level"]),
+        ],
+        "Data-mixture design in one gate: water-filling token budget "
+        "allocation, realized-vs-target KL divergence report, and the "
+        "end-to-end mix pipeline over sources (operators/dataprep.py).",
+    )
 
-fold(
-    "mixture_design_pipeline",
-    [
-        ("waterfill_budget", "wf_",
-         ["source", "n_avail", "alloc", "water_level"]),
-        ("mix_divergence", "md_",
-         ["source", "n", "in_target", "kl_contrib_micro", "kl_micro_total"]),
-        ("mix_pipeline_e2e", "mx_",
-         ["source", "n_avail", "alloc", "water_level"]),
-    ],
-    "Data-mixture design in one gate: water-filling token budget "
-    "allocation, realized-vs-target KL divergence report, and the "
-    "end-to-end mix pipeline over sources (operators/dataprep.py).",
-)
+    fold(
+        "robust_scaling_pipeline",
+        [
+            ("quantile_normalize", "qn_",
+             ["doc_id", "source", "n_chars", "q_ppm", "norm_value"]),
+            ("winsorize_clip", "wz_",
+             ["doc_id", "source", "n_chars", "lo", "hi", "clipped",
+              "was_clipped"]),
+        ],
+        "Robust per-source scaling in one gate: within-source quantile "
+        "normalization plus percentile winsorization clipping "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "robust_scaling_pipeline",
-    [
-        ("quantile_normalize", "qn_",
-         ["doc_id", "source", "n_chars", "q_ppm", "norm_value"]),
-        ("winsorize_clip", "wz_",
-         ["doc_id", "source", "n_chars", "lo", "hi", "clipped",
-          "was_clipped"]),
-    ],
-    "Robust per-source scaling in one gate: within-source quantile "
-    "normalization plus percentile winsorization clipping "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "outlier_quality_report",
+        [
+            ("mad_outlier_flags", "mo_",
+             ["doc_id", "source", "n_chars", "med", "abs_dev", "mad",
+              "is_outlier"]),
+            ("char_entropy_quality", "ce_",
+             ["doc_id", "n_sampled", "n_distinct_chars", "entropy_q",
+              "entropy_cb"]),
+        ],
+        "Distributional quality screens in one gate: per-source "
+        "median-absolute-deviation outlier flags plus character-entropy "
+        "gibberish scoring (operators/dataprep.py).",
+    )
 
-fold(
-    "outlier_quality_report",
-    [
-        ("mad_outlier_flags", "mo_",
-         ["doc_id", "source", "n_chars", "med", "abs_dev", "mad",
-          "is_outlier"]),
-        ("char_entropy_quality", "ce_",
-         ["doc_id", "n_sampled", "n_distinct_chars", "entropy_q",
-          "entropy_cb"]),
-    ],
-    "Distributional quality screens in one gate: per-source "
-    "median-absolute-deviation outlier flags plus character-entropy "
-    "gibberish scoring (operators/dataprep.py).",
-)
+    fold(
+        "text_canonicalize_pipeline",
+        [
+            ("text_clean_normalize", "tc_", ["doc_id", "clean_md5", "clean_len"]),
+            ("special_token_guard", "sg_",
+             ["doc_id", "scrubbed_md5", "n_special"]),
+            ("dedup_key_canonical", "dk_", ["doc_id", "key_md5", "base_id"]),
+        ],
+        "Text canonicalization in one gate: unicode/whitespace clean "
+        "normalization, special-token scrubbing (prompt-injection guard), "
+        "and canonical dedup-key derivation (operators/dataprep.py).",
+    )
 
-fold(
-    "text_canonicalize_pipeline",
-    [
-        ("text_clean_normalize", "tc_", ["doc_id", "clean_md5", "clean_len"]),
-        ("special_token_guard", "sg_",
-         ["doc_id", "scrubbed_md5", "n_special"]),
-        ("dedup_key_canonical", "dk_", ["doc_id", "key_md5", "base_id"]),
-    ],
-    "Text canonicalization in one gate: unicode/whitespace clean "
-    "normalization, special-token scrubbing (prompt-injection guard), "
-    "and canonical dedup-key derivation (operators/dataprep.py).",
-)
+    fold(
+        "doc_profile_report",
+        [
+            ("readability_metrics", "rd_",
+             ["doc_id", "n_words", "n_sentences", "n_syllables", "fk_grade_cb",
+              "digit_ratio_bp"]),
+            ("taxonomy_tagging", "tx_",
+             ["doc_id", "tax_commerce", "tax_geo", "tax_tech", "tax_dominant",
+              "tax_total"]),
+        ],
+        "Per-document profiling in one gate: Flesch-Kincaid readability "
+        "metrics plus keyword-taxonomy topic tagging "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "doc_profile_report",
-    [
-        ("readability_metrics", "rd_",
-         ["doc_id", "n_words", "n_sentences", "n_syllables", "fk_grade_cb",
-          "digit_ratio_bp"]),
-        ("taxonomy_tagging", "tx_",
-         ["doc_id", "tax_commerce", "tax_geo", "tax_tech", "tax_dominant",
-          "tax_total"]),
-    ],
-    "Per-document profiling in one gate: Flesch-Kincaid readability "
-    "metrics plus keyword-taxonomy topic tagging "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "chat_assembly_pipeline",
+        [
+            ("chat_template_render", "ct_",
+             ["doc_id", "chatml_md5", "chatml_len", "colon_gen_md5"]),
+            ("sft_pipeline_e2e", "sf_", ["doc_id", "rendered_md5", "re_tokens"]),
+            ("conversation_tree_sft", "cv_",
+             ["conv_id", "msg_id", "depth", "truncated", "context"]),
+        ],
+        "SFT conversation assembly in one gate: chat-template rendering "
+        "(ChatML + colon styles), the end-to-end SFT prep pipeline, and "
+        "conversation-tree path expansion with truncation "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "chat_assembly_pipeline",
-    [
-        ("chat_template_render", "ct_",
-         ["doc_id", "chatml_md5", "chatml_len", "colon_gen_md5"]),
-        ("sft_pipeline_e2e", "sf_", ["doc_id", "rendered_md5", "re_tokens"]),
-        ("conversation_tree_sft", "cv_",
-         ["conv_id", "msg_id", "depth", "truncated", "context"]),
-    ],
-    "SFT conversation assembly in one gate: chat-template rendering "
-    "(ChatML + colon styles), the end-to-end SFT prep pipeline, and "
-    "conversation-tree path expansion with truncation "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "chunk_align_pipeline",
+        [
+            ("sentence_chunking", "sc_",
+             ["doc_id", "chunk_id", "chunk_md5", "n_sentences", "n_chars"]),
+            ("span_token_alignment", "sa_",
+             ["doc_id", "span_start", "span_end", "tok_start", "tok_end",
+              "n_tokens"]),
+        ],
+        "Text segmentation in one gate: sentence-boundary chunking with "
+        "size targets plus char-span to token-span alignment "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "chunk_align_pipeline",
-    [
-        ("sentence_chunking", "sc_",
-         ["doc_id", "chunk_id", "chunk_md5", "n_sentences", "n_chars"]),
-        ("span_token_alignment", "sa_",
-         ["doc_id", "span_start", "span_end", "tok_start", "tok_end",
-          "n_tokens"]),
-    ],
-    "Text segmentation in one gate: sentence-boundary chunking with "
-    "size targets plus char-span to token-span alignment "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "weak_label_pipeline",
+        [
+            ("ngram_overlap_score", "no_",
+             ["doc_id", "n_grams_a", "n_grams_b", "n_overlap", "precision_bp",
+              "recall_bp", "f1_bp"]),
+            ("nb_classifier_train", "nb_",
+             ["doc_id", "n_tok", "nb_score_pos_q", "nb_score_neg_q",
+              "nb_label"]),
+        ],
+        "Weak labeling in one gate: n-gram overlap precision/recall/F1 "
+        "between paired fields plus Naive-Bayes quality-classifier "
+        "training + scoring (operators/dataprep.py).",
+    )
 
-fold(
-    "weak_label_pipeline",
-    [
-        ("ngram_overlap_score", "no_",
-         ["doc_id", "n_grams_a", "n_grams_b", "n_overlap", "precision_bp",
-          "recall_bp", "f1_bp"]),
-        ("nb_classifier_train", "nb_",
-         ["doc_id", "n_tok", "nb_score_pos_q", "nb_score_neg_q",
-          "nb_label"]),
-    ],
-    "Weak labeling in one gate: n-gram overlap precision/recall/F1 "
-    "between paired fields plus Naive-Bayes quality-classifier "
-    "training + scoring (operators/dataprep.py).",
-)
+    fold(
+        "shard_coverage_report",
+        [
+            ("rendezvous_sharding", "rv_", ["doc_id", "shard"]),
+            ("field_coverage", "fc_",
+             ["col", "n_rows", "n_null", "n_blank", "n_distinct",
+              "coverage_ppm"]),
+        ],
+        "Dataset plumbing in one gate: rendezvous (HRW) shard assignment "
+        "plus per-column null/blank/distinct coverage profiling "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "shard_coverage_report",
-    [
-        ("rendezvous_sharding", "rv_", ["doc_id", "shard"]),
-        ("field_coverage", "fc_",
-         ["col", "n_rows", "n_null", "n_blank", "n_distinct",
-          "coverage_ppm"]),
-    ],
-    "Dataset plumbing in one gate: rendezvous (HRW) shard assignment "
-    "plus per-column null/blank/distinct coverage profiling "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "lexical_retrieval_pipeline",
+        [
+            ("bm25_topk", "bm_", ["query_id", "doc", "score_scaled", "rank"]),
+            ("tfidf_topk_terms", "tf_",
+             ["doc", "term", "tf", "tfidf_scaled", "term_rank"]),
+        ],
+        "Lexical retrieval in one gate: BM25 top-k document scoring plus "
+        "per-document TF-IDF top-terms extraction "
+        "(operators/retrieval.py).",
+    )
 
-fold(
-    "lexical_retrieval_pipeline",
-    [
-        ("bm25_topk", "bm_", ["query_id", "doc", "score_scaled", "rank"]),
-        ("tfidf_topk_terms", "tf_",
-         ["doc", "term", "tf", "tfidf_scaled", "term_rank"]),
-    ],
-    "Lexical retrieval in one gate: BM25 top-k document scoring plus "
-    "per-document TF-IDF top-terms extraction "
-    "(operators/retrieval.py).",
-)
+    fold(
+        "sketch_observability_report",
+        [
+            ("quantile_sketch", "qs_",
+             ["event_type", "q_label", "est_lb", "est_ub", "n", "exact_v",
+              "in_bounds"]),
+            ("skew_report_hitters", "sk_",
+             ["rank", "key", "cnt", "ppm", "total", "n_keys"]),
+        ],
+        "Sketch-based observability in one gate: mergeable quantile-sketch "
+        "estimates with exactness bounds plus heavy-hitter key-skew "
+        "reporting (operators/sketch.py, operators/dataprep.py).",
+    )
 
-fold(
-    "sketch_observability_report",
-    [
-        ("quantile_sketch", "qs_",
-         ["event_type", "q_label", "est_lb", "est_ub", "n", "exact_v",
-          "in_bounds"]),
-        ("skew_report_hitters", "sk_",
-         ["rank", "key", "cnt", "ppm", "total", "n_keys"]),
-    ],
-    "Sketch-based observability in one gate: mergeable quantile-sketch "
-    "estimates with exactness bounds plus heavy-hitter key-skew "
-    "reporting (operators/sketch.py, operators/dataprep.py).",
-)
+    fold(
+        "clustering_pipeline",
+        [
+            ("kmeans_lloyd", "km_", ["vec_id", "cluster", "dist"]),
+            ("kcenter_coreset", "kc_", ["id", "sel_order", "dist_sq"]),
+        ],
+        "Embedding clustering in one gate: Lloyd k-means assignment over "
+        "the int-grid plus greedy k-center (farthest-point) coreset "
+        "selection (operators/dataprep.py).",
+    )
 
-fold(
-    "clustering_pipeline",
-    [
-        ("kmeans_lloyd", "km_", ["vec_id", "cluster", "dist"]),
-        ("kcenter_coreset", "kc_", ["id", "sel_order", "dist_sq"]),
-    ],
-    "Embedding clustering in one gate: Lloyd k-means assignment over "
-    "the int-grid plus greedy k-center (farthest-point) coreset "
-    "selection (operators/dataprep.py).",
-)
+    fold(
+        "int8_ann_pipeline",
+        [
+            ("embedding_int8_quant", "iq_",
+             ["vec_id", "q_md5", "q_min", "q_max", "scale_r6", "n_dim"]),
+            ("ann_cosine_topk_int8", "ia_", ["q_id", "c_id", "cos_q6", "rank"]),
+        ],
+        "Quantized ANN path in one gate: symmetric int8 embedding "
+        "quantization plus cosine top-k over the quantized codes "
+        "(operators/dataprep.py ann_* family).",
+    )
 
-fold(
-    "int8_ann_pipeline",
-    [
-        ("embedding_int8_quant", "iq_",
-         ["vec_id", "q_md5", "q_min", "q_max", "scale_r6", "n_dim"]),
-        ("ann_cosine_topk_int8", "ia_", ["q_id", "c_id", "cos_q6", "rank"]),
-    ],
-    "Quantized ANN path in one gate: symmetric int8 embedding "
-    "quantization plus cosine top-k over the quantized codes "
-    "(operators/dataprep.py ann_* family).",
-)
+    fold(
+        "split_hygiene_report",
+        [
+            ("leakage_safe_split", "ls_",
+             ["cluster", "split", "n_docs", "splits_in_cluster"]),
+            ("url_lang_pairing", "ul_",
+             ["canon", "lang_a", "doc_a", "lang_b", "doc_b"]),
+        ],
+        "Split hygiene in one gate: cluster-respecting train/val/test "
+        "splits (no near-dup straddles a split) plus URL-canonicalized "
+        "cross-language document pairing (operators/dataprep.py).",
+    )
 
-fold(
-    "split_hygiene_report",
-    [
-        ("leakage_safe_split", "ls_",
-         ["cluster", "split", "n_docs", "splits_in_cluster"]),
-        ("url_lang_pairing", "ul_",
-         ["canon", "lang_a", "doc_a", "lang_b", "doc_b"]),
-    ],
-    "Split hygiene in one gate: cluster-respecting train/val/test "
-    "splits (no near-dup straddles a split) plus URL-canonicalized "
-    "cross-language document pairing (operators/dataprep.py).",
-)
+    fold(
+        "corpus_probe_report",
+        [
+            ("canary_extraction", "cx_", ["canary", "n_hits", "extracted"]),
+            ("json_key_census", "jk_",
+             ["key", "n_docs_with_key", "coverage_ppm"]),
+        ],
+        "Corpus probes in one gate: planted-canary (secret-sharer style) "
+        "extraction counting plus JSON key census with coverage ratios "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "corpus_probe_report",
-    [
-        ("canary_extraction", "cx_", ["canary", "n_hits", "extracted"]),
-        ("json_key_census", "jk_",
-         ["key", "n_docs_with_key", "coverage_ppm"]),
-    ],
-    "Corpus probes in one gate: planted-canary (secret-sharer style) "
-    "extraction counting plus JSON key census with coverage ratios "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "dedup_forensics_pipeline",
+        [
+            ("paragraph_dedup_global", "pg_",
+             ["doc_id", "text_md5", "n_paras", "n_kept"]),
+            ("dedup_audit_histogram", "da_",
+             ["cluster_size", "n_clusters", "n_docs", "n_dup_docs",
+              "chars_dup"]),
+            ("edit_distance_join", "ed_", ["id_a", "id_b", "dist"]),
+        ],
+        "Dedup forensics in one gate: corpus-global paragraph dedup, the "
+        "pre-dedup cluster-size/bytes audit histogram, and banded "
+        "edit-distance near-pair join (operators/dataprep.py).",
+    )
 
-fold(
-    "dedup_forensics_pipeline",
-    [
-        ("paragraph_dedup_global", "pg_",
-         ["doc_id", "text_md5", "n_paras", "n_kept"]),
-        ("dedup_audit_histogram", "da_",
-         ["cluster_size", "n_clusters", "n_docs", "n_dup_docs",
-          "chars_dup"]),
-        ("edit_distance_join", "ed_", ["id_a", "id_b", "dist"]),
-    ],
-    "Dedup forensics in one gate: corpus-global paragraph dedup, the "
-    "pre-dedup cluster-size/bytes audit histogram, and banded "
-    "edit-distance near-pair join (operators/dataprep.py).",
-)
+    fold(
+        "corpus_release_report",
+        [
+            ("vocab_drift_js", "vd_",
+             ["types_a", "types_b", "types_common", "types_new", "types_lost",
+              "tokens_a", "tokens_b", "js_micro", "tv_ppm"]),
+            ("corpus_data_card", "cc_",
+             ["n_docs", "n_unique_docs", "n_dups", "total_words", "total_chars",
+              "n_langs", "top_lang", "n_sources"]),
+        ],
+        "Corpus release gate in one row-set: version-over-version "
+        "vocabulary drift (quantized JS + exact-ppm TV) plus the one-row "
+        "corpus data card (operators/dataprep.py).",
+    )
 
-fold(
-    "corpus_release_report",
-    [
-        ("vocab_drift_js", "vd_",
-         ["types_a", "types_b", "types_common", "types_new", "types_lost",
-          "tokens_a", "tokens_b", "js_micro", "tv_ppm"]),
-        ("corpus_data_card", "cc_",
-         ["n_docs", "n_unique_docs", "n_dups", "total_words", "total_chars",
-          "n_langs", "top_lang", "n_sources"]),
-    ],
-    "Corpus release gate in one row-set: version-over-version "
-    "vocabulary drift (quantized JS + exact-ppm TV) plus the one-row "
-    "corpus data card (operators/dataprep.py).",
-)
+    fold(
+        "vocab_scaling_laws",
+        [
+            ("zipf_head_fit", "zf_",
+             ["n_types", "total_tokens", "n_head", "slope_micro",
+              "intercept_micro"]),
+            ("heaps_vocab_growth", "hp_",
+             ["checkpoint_docs", "tokens_cum", "types_cum",
+              "types_ppm_of_tokens"]),
+        ],
+        "Corpus-statistics scaling laws in one gate: Zipf log-log head "
+        "slope fit plus the Heaps-law vocabulary growth curve "
+        "(operators/dataprep.py).",
+    )
 
-fold(
-    "vocab_scaling_laws",
-    [
-        ("zipf_head_fit", "zf_",
-         ["n_types", "total_tokens", "n_head", "slope_micro",
-          "intercept_micro"]),
-        ("heaps_vocab_growth", "hp_",
-         ["checkpoint_docs", "tokens_cum", "types_cum",
-          "types_ppm_of_tokens"]),
-    ],
-    "Corpus-statistics scaling laws in one gate: Zipf log-log head "
-    "slope fit plus the Heaps-law vocabulary growth curve "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "packing_layout_report",
+        [
+            ("length_bucket_batching", "lb_",
+             ["bucket", "lb_shard", "batch_id", "n_docs", "max_tok", "sum_tok",
+              "pad_waste"]),
+            ("pack_next_fit_bins", "pf_",
+             ["shard", "bin", "n_docs", "sum_len", "slack"]),
+        ],
+        "Sequence-packing layouts in one gate: length-bucketed batch "
+        "assembly with pad-waste accounting plus boundary-preserving "
+        "next-fit-decreasing bin packing (operators/dataprep.py pack_*).",
+    )
 
-fold(
-    "packing_layout_report",
-    [
-        ("length_bucket_batching", "lb_",
-         ["bucket", "lb_shard", "batch_id", "n_docs", "max_tok", "sum_tok",
-          "pad_waste"]),
-        ("pack_next_fit_bins", "pf_",
-         ["shard", "bin", "n_docs", "sum_len", "slack"]),
-    ],
-    "Sequence-packing layouts in one gate: length-bucketed batch "
-    "assembly with pad-waste accounting plus boundary-preserving "
-    "next-fit-decreasing bin packing (operators/dataprep.py pack_*).",
-)
-
-fold(
-    "bitext_align_pipeline",
-    [
-        ("bitext_mining", "bx_",
-         ["s_id", "t_id", "sim_u", "margin_ppm", "mutual"]),
-        ("gale_church_align", "gc_",
-         ["doc_id", "op", "si", "ti", "align_cost", "n_src", "n_tgt"]),
-    ],
-    "Bilingual alignment in one gate: margin-based bitext sentence "
-    "mining (mutual top-1) plus Gale-Church length-based DP alignment "
-    "(operators/dataprep.py).",
-)
+    fold(
+        "bitext_align_pipeline",
+        [
+            ("bitext_mining", "bx_",
+             ["s_id", "t_id", "sim_u", "margin_ppm", "mutual"]),
+            ("gale_church_align", "gc_",
+             ["doc_id", "op", "si", "ti", "align_cost", "n_src", "n_tgt"]),
+        ],
+        "Bilingual alignment in one gate: margin-based bitext sentence "
+        "mining (mutual top-1) plus Gale-Church length-based DP alignment "
+        "(operators/dataprep.py).",
+    )

@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from logstash_spark.operators.common import METADATA
+from logstash_spark.operators.route import ROUTES
+
 
 def file_stream_source(
     spark: SparkSession,
@@ -155,7 +158,6 @@ def run_streaming_fanout(
     sinks_root: str,
     checkpoint_dir: str,
     *,
-    routes_col: str = "routes",
     available_now: bool = True,
     drop_before_write: Sequence[str] = (),
 ):
@@ -171,6 +173,9 @@ def run_streaming_fanout(
     (persist, then one filtered write per sink directory) in every
     measured round (BENCH r03-r05: 10.1/14.7/12.6 s vs 14.2/16.8/19.1 s).
 
+    Column rules match batch's plain sinks: `routes` and `[@metadata]`
+    (pipeline scratch, never serialized) are dropped before the write.
+
     Exactly-once: the write uses DYNAMIC partition overwrite, so a batch
     replayed after a crash mid-write overwrites its own `_batch_id`
     partitions instead of appending duplicates (foreachBatch alone is
@@ -180,9 +185,9 @@ def run_streaming_fanout(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
             transform(batch_df)
-            .select("*", F.explode(F.col(routes_col)).alias("sink"))
+            .select("*", F.explode(ROUTES).alias("sink"))
             .where(F.col("sink").isin(list(sinks)))
-            .drop(routes_col, *drop_before_write)
+            .drop(ROUTES, METADATA, *drop_before_write)
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -92,11 +92,12 @@ def test_jaccard_exact(spark):
 
 
 def test_simhash_deterministic_and_locality(spark, tiny_docs):
-    fps = {r.doc_id: r.fp for r in tiny_docs.select("doc_id", D.simhash(F.col("text")).alias("fp")).collect()}
+    fps = {r.doc_id: r.simhash for r in D.simhash_table(tiny_docs, "doc_id", "text").collect()}
+    assert set(fps) == {1, 2, 3, 4}
     assert all(0 <= v < 2**32 for v in fps.values())
     # identical text -> identical fingerprint
-    again = tiny_docs.select("doc_id", D.simhash(F.col("text")).alias("fp")).collect()
-    assert {r.doc_id: r.fp for r in again} == fps
+    again = D.simhash_table(tiny_docs, "doc_id", "text").collect()
+    assert {r.doc_id: r.simhash for r in again} == fps
 
     def ham(a, b):
         return bin(a ^ b).count("1")
@@ -228,6 +229,11 @@ def test_minhash_rejects_bad_band_config(spark, tiny_docs):
         D.minhash_lsh_pairs(tiny_docs, "doc_id", "text", k=8, bands=16)
     with pytest.raises(ValueError, match="bands must divide k"):
         D.minhash_lsh_pairs(tiny_docs, "doc_id", "text", k=8, bands=3)
+    # the cross-corpus variant applies the same check, bands=0 included
+    sig = D.shingle_sig_table(tiny_docs, "doc_id", "text")
+    for bands in (0, 3, 16):
+        with pytest.raises(ValueError, match="bands must divide k"):
+            D.minhash_lsh_pairs_cross(tiny_docs, sig, "doc_id", "text", k=8, bands=bands)
 
 
 def test_ann_exclude_self_flag(spark):
@@ -319,8 +325,9 @@ def test_simhash_pairs_star_guard_and_verify(spark):
 
 def test_simhash_pairs_rejects_bad_band_config(spark):
     docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        D.simhash_pairs(docs, "doc_id", "text", bands=5)
+    for bands in (0, 5, 64):
+        with pytest.raises(ValueError, match="bands must divide bits"):
+            D.simhash_pairs(docs, "doc_id", "text", bands=bands)
 
 
 def test_embedding_dup_pairs_star_guard_and_verify(spark):

@@ -52,10 +52,13 @@ def test_toposort_rejects_unheard_address():
         toposort_pipelines([a])
 
 
-def test_compose_requires_an_input(spark):
+def test_compose_requires_an_input(spark, tmp_path):
     a = _spec("a", routes={"out": "true"})
-    with pytest.raises(ValueError, match="no input"):
+    msg = "pipeline 'a' has no input .no physical input bound"
+    with pytest.raises(ValueError, match=msg):
         compose_pipelines({}, [a])
+    with pytest.raises(ValueError, match=msg):
+        run_pipelines(spark, {}, [a], str(tmp_path))
 
 
 # ---------------------------------------------------------------------------

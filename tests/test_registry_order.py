@@ -67,3 +67,44 @@ class TestRegistryOrder:
     def test_queries_and_oracles_share_order(self):
         assert list(Q.QUERIES) == [n for n in Q.QUERIES if n in Q.ORACLES]
         assert list(Q.ORACLES) == list(Q.QUERIES)
+
+
+
+def test_registry_order_independent_of_import_order(tmp_path):
+    """Importing queries_folds before queries must give the same
+    registry: the folds register by an explicit call inside `queries`,
+    so the ordering pass always sees them. The package runs from a copy
+    whose only CORRECTNESS record says fold gate `image_pipeline` failed;
+    it must lead the registry whichever module is imported first."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    shutil.copytree(
+        os.path.dirname(Q.__file__),
+        tmp_path / "logstash_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"image_pipeline": {"err": "boom"}})
+    )
+
+    def registry(first: str) -> list[str]:
+        probe = (
+            f"import {first}\n"
+            "from logstash_spark.queries import ORACLES, QUERIES\n"
+            "assert list(ORACLES) == list(QUERIES)\n"
+            "print('\\n'.join(QUERIES))\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", probe],
+            cwd=tmp_path, capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        return out.stdout.split()
+
+    via_queries = registry("logstash_spark.queries")
+    assert via_queries[0] == "image_pipeline"
+    assert "image_header_meta" not in via_queries  # folded into it
+    assert registry("logstash_spark.queries_folds") == via_queries

@@ -237,6 +237,32 @@ def test_streaming_dict_refresh_between_batches(spark, tmp_path):
     assert rows == {1: "v1", 2: "v2"}
 
 
+def test_streaming_fanout_drops_metadata(spark, tmp_path):
+    """[@metadata] is pipeline scratch: batch never writes it to a plain
+    sink, and neither does the streaming fan-out."""
+    from logstash_spark.operators.common import METADATA
+
+    landing = tmp_path / "in"
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, code string").coalesce(
+        1
+    ).write.parquet(str(landing))
+
+    def transform(df):
+        return df.withColumn(
+            METADATA, F.struct(F.col("code").alias("index"))
+        ).withColumn("routes", F.array(F.lit("all")))
+
+    sinks_root = str(tmp_path / "sinks")
+    q = run_streaming_fanout(
+        file_stream_source(spark, str(landing), "id long, code string"),
+        transform, ["all"], sinks_root, str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    out = spark.read.parquet(f"{sinks_root}/sink=all")
+    assert METADATA not in out.columns and "routes" not in out.columns
+    assert sorted(r["id"] for r in out.collect()) == [1, 2]
+
+
 def test_file_source_text_tail_with_path_field(spark, tmp_path):
     """logstash-input-file over raw log text: fmt='text' reads
     line-per-row, `path_field` carries the source file (the reference's
