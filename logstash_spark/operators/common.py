@@ -7,8 +7,10 @@ interpolation (org/logstash/StringInterpolation.java, Event.java §sprintf).
 
 from __future__ import annotations
 
+import functools
 import re
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -24,25 +26,86 @@ TAGS = "tags"
 METADATA = "@metadata"
 
 
+#: entries of the shared Column-builder cache: a flagship build uses a
+#: handful, a long `.conf` filter chain a few dozen
+_MEMO_SIZE = 256
+
+
+@functools.lru_cache(maxsize=_MEMO_SIZE)
+def _memo(builder, sc, args: tuple, kwargs: tuple):
+    return builder(*args, **dict(kwargs))
+
+
+def memo_columns(builder):
+    """Build `builder(*args)`'s Columns once per live SparkContext.
+
+    Logstash compiles a pipeline once (`ComputeStepSyntaxElement` caches
+    the generated compute classes by normalized source). Here every run
+    and every streaming micro-batch plans the chain again, and each
+    Column constructor is a py4j round trip. A Column is an unresolved
+    expression tree, valid on any frame whose columns resolve it, so a
+    builder must take every schema-dependent choice as an argument and
+    never a DataFrame. The key holds the active SparkContext: a
+    pandas-UDF Column can carry a broadcast of that context, so a stopped
+    context's entries are never handed out again. Unhashable arguments
+    (e.g. Column conditions) build uncached. Callers must not mutate
+    what a builder returns."""
+
+    @functools.wraps(builder)
+    def build(*args, **kwargs):
+        sc = SparkContext._active_spark_context
+        key = (builder, sc, args, tuple(kwargs.items()))
+        try:
+            hash(key)
+        except TypeError:
+            return builder(*args, **kwargs)
+        return _memo(*key)
+
+    return build
+
+
+@memo_columns
+def _tags_exprs() -> tuple[Column, Column]:
+    """(empty `tags`, `tags` with null made empty)."""
+    empty = F.array().cast(T.ArrayType(T.StringType()))
+    return empty, F.coalesce(F.col(TAGS), F.array().cast("array<string>"))
+
+
+@memo_columns
+def _tags_with(tag_values: tuple[str, ...]) -> Column:
+    return F.array_union(F.col(TAGS), F.array(*[F.lit(t) for t in tag_values]))
+
+
+@memo_columns
+def _tags_without(tag_values: tuple[str, ...]) -> Column:
+    return F.array_except(F.col(TAGS), F.array(*[F.lit(t) for t in tag_values]))
+
+
 def ensure_tags(df: DataFrame) -> DataFrame:
     """Guarantee a non-null `tags` array<string> column."""
-    if TAGS not in df.columns:
-        return df.withColumn(TAGS, F.array().cast(T.ArrayType(T.StringType())))
-    return df.withColumn(TAGS, F.coalesce(F.col(TAGS), F.array().cast("array<string>")))
+    empty, coalesced = _tags_exprs()
+    return df.withColumn(TAGS, coalesced if TAGS in df.columns else empty)
+
+
+def tag_when(cond: Column, *tag_values: str) -> Column:
+    """The `tags` value with `tag_values` appended where `cond` holds
+    (dedup like Event§tag), for a frame that already has `tags`."""
+    return F.when(cond, _tags_with(tag_values)).otherwise(F.col(TAGS))
 
 
 def add_tag_when(df: DataFrame, cond: Column, *tag_values: str) -> DataFrame:
     """Append tags where `cond` holds (dedup like Event§tag)."""
-    df = ensure_tags(df)
-    tagged = F.array_union(F.col(TAGS), F.array(*[F.lit(t) for t in tag_values]))
-    return df.withColumn(TAGS, F.when(cond, tagged).otherwise(F.col(TAGS)))
+    return ensure_tags(df).withColumn(TAGS, tag_when(cond, *tag_values))
+
+
+def retag(df: DataFrame, tags: Column) -> DataFrame:
+    """Set `tags` to a `tag_when` value on a frame that already has
+    `tags`: `add_tag_when` without its schema read, same projections."""
+    return df.withColumn(TAGS, _tags_exprs()[1]).withColumn(TAGS, tags)
 
 
 def remove_tag(df: DataFrame, *tag_values: str) -> DataFrame:
-    df = ensure_tags(df)
-    return df.withColumn(
-        TAGS, F.array_except(F.col(TAGS), F.array(*[F.lit(t) for t in tag_values]))
-    )
+    return ensure_tags(df).withColumn(TAGS, _tags_without(tag_values))
 
 
 def has_tag(tag: str) -> Column:

@@ -30,6 +30,7 @@ COMBINEDAPACHELOG and SYSLOGLINE: local[4], 200k rows, noop sink.)
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -38,7 +39,14 @@ from pyspark.sql import types as T
 
 from logstash_spark import grok as grok_lib
 from logstash_spark.operators import op
-from logstash_spark.operators.common import add_tag_when, ensure_tags
+from logstash_spark.operators.common import (
+    TAGS,
+    add_tag_when,
+    ensure_tags,
+    memo_columns,
+    retag,
+    tag_when,
+)
 
 _CAST_TYPES = {"int": T.LongType(), "float": T.DoubleType()}
 
@@ -81,26 +89,22 @@ def grok(
     are not matched at all and are tagged `tag_on_timeout` (instead of a
     task stalling on catastrophic backtracking over a multi-MB line).
     """
-    pairs = _match_pairs(field, match)
-    compiled_pairs = [
-        (f, grok_lib.compile_pattern(p, pattern_definitions)) for f, p in pairs
-    ]
-
-    df = ensure_tags(df)
-
-    # Union of capture field names across all pairs, preserving order.
-    out_fields: list[tuple[str, str | None]] = []
-    seen: set[str] = set()
-    for _, c in compiled_pairs:
-        for cap in c.captures:
-            if cap.name not in seen:
-                seen.add(cap.name)
-                out_fields.append((cap.name, cap.cast))
-
-    return _grok_native(
-        df, compiled_pairs, out_fields, tag_on_failure,
-        break_on_match, max_input_length, tag_on_timeout,
+    g = _grok_exprs(
+        tuple(_match_pairs(field, match)),
+        tuple(sorted(pattern_definitions.items())) if pattern_definitions else (),
+        tag_on_failure, break_on_match, max_input_length, tag_on_timeout,
     )
+    # two projections: `checked` reads each pack three times, and Spark
+    # keeps a non-cheap column it reads more than once in its own project
+    df = ensure_tags(df).withColumns(g.packs).withColumns(g.checked)
+    if g.timeout is not None:
+        # materialize BEFORE captures may overwrite the source field —
+        # a stale reference would read the (nulled) capture instead
+        df = df.withColumn("_grok_to", g.timeout)
+    df = df.withColumns(g.captures)
+    for tags in g.tags:
+        df = retag(df, tags)
+    return df.drop(*g.scratch)
 
 
 def _match_pairs(
@@ -121,20 +125,31 @@ def _match_pairs(
 
 
 # Pack/split sentinels for the single-pass path. A source holding either
-# one is extracted capture by capture instead (see _grok_native).
+# one is extracted capture by capture instead (see _grok_exprs).
 _SEP = "\x01"
 _SENT = "\x02"
 
 
-def _grok_native(
-    df: DataFrame,
-    compiled_pairs: list[tuple[str, grok_lib.CompiledGrok]],
-    out_fields: list[tuple[str, str | None]],
+class _GrokExprs(NamedTuple):
+    """One grok op's Columns, in the order `grok` projects them."""
+
+    packs: dict[str, Column]
+    checked: dict[str, Column]
+    timeout: Column | None
+    captures: dict[str, Column]
+    tags: tuple[Column, ...]
+    scratch: tuple[str, ...]
+
+
+@memo_columns
+def _grok_exprs(
+    pairs: tuple[tuple[str, str], ...],
+    pattern_definitions: tuple[tuple[str, str], ...],
     tag_on_failure: str,
     break_on_match: bool,
     max_input_length: int | None,
     tag_on_timeout: str,
-) -> DataFrame:
+) -> _GrokExprs:
     """Single-pass extraction: ONE regexp_replace per (field, pattern)
     pair rewrites the whole line into SENT + SEP-joined capture values;
     split/element_at fans the pack out into columns. One regex evaluation
@@ -143,6 +158,19 @@ def _grok_native(
     Catalyst/codegen. A row whose pack cannot be trusted (see
     `suspect`) builds the same list exactly: SENT plus one
     regexp_extract per capture if the pattern matches, else null."""
+    compiled_pairs = [
+        (f, grok_lib.compile_pattern(p, dict(pattern_definitions)))
+        for f, p in pairs
+    ]
+    # Union of capture field names across all pairs, preserving order.
+    out_fields: list[tuple[str, str | None]] = []
+    seen: set[str] = set()
+    for _, c in compiled_pairs:
+        for cap in c.captures:
+            if cap.name not in seen:
+                seen.add(cap.name)
+                out_fields.append((cap.name, cap.cast))
+
     tmp_cols: dict[str, Column] = {}
     checked: dict[str, Column] = {}
     over_limit: Column | None = None
@@ -178,13 +206,7 @@ def _grok_native(
             ),
         )
         checked[tmp] = F.when(suspect, exact).otherwise(parts)
-    # two projections: `checked` reads each pack three times, and Spark
-    # keeps a non-cheap column it reads more than once in its own project
-    df = df.withColumns(tmp_cols).withColumns(checked)
-    if max_input_length is not None and over_limit is not None:
-        # materialize BEFORE captures may overwrite the source field —
-        # a stale reference would read the (nulled) capture instead
-        df = df.withColumn("_grok_to", F.coalesce(over_limit, F.lit(False)))
+    timeout = None if over_limit is None else F.coalesce(over_limit, F.lit(False))
 
     flags = [
         F.coalesce(F.element_at(F.col(f"_gk{pi}"), 1) == F.lit(_SENT), F.lit(False))
@@ -229,13 +251,16 @@ def _grok_native(
     for flag in flags:
         any_match = any_match | flag
     new_cols["_grok_any"] = any_match
-    df = df.withColumns(new_cols)
-    if max_input_length is not None and over_limit is not None:
-        df = add_tag_when(df, F.col("_grok_to"), tag_on_timeout)
-        df = add_tag_when(df, ~F.col("_grok_any") & ~F.col("_grok_to"), tag_on_failure)
-        return df.drop("_grok_any", "_grok_to", *tmp_cols.keys())
-    df = add_tag_when(df, ~F.col("_grok_any"), tag_on_failure)
-    return df.drop("_grok_any", *tmp_cols.keys())
+    if timeout is None:
+        tags = (tag_when(~F.col("_grok_any"), tag_on_failure),)
+        scratch = ("_grok_any", *tmp_cols)
+    else:
+        tags = (
+            tag_when(F.col("_grok_to"), tag_on_timeout),
+            tag_when(~F.col("_grok_any") & ~F.col("_grok_to"), tag_on_failure),
+        )
+        scratch = ("_grok_any", "_grok_to", *tmp_cols)
+    return _GrokExprs(tmp_cols, checked, timeout, new_cols, tags, scratch)
 
 
 @op("script_field")
@@ -289,6 +314,15 @@ def dissect(
     delimiter suffix. Compiled to ONE anchored regex with non-greedy
     captures between literal delimiters — pure Catalyst when few fields.
     """
+    captures, tags = _dissect_exprs(field, mapping, tag_on_failure, append_separator)
+    return retag(ensure_tags(df).withColumns(captures), tags)
+
+
+@memo_columns
+def _dissect_exprs(
+    field: str, mapping: str, tag_on_failure: str, append_separator: str | None
+) -> tuple[dict[str, Column], Column]:
+    """(capture columns, `tags` value) of one dissect op."""
     tokens: list[tuple[str, str]] = []  # (kind, payload): ('lit', s) | ('key', spec)
     pos = 0
     for m in _DISSECT_TOKEN.finditer(mapping):
@@ -329,7 +363,6 @@ def dissect(
             captures.append((spec, gidx, False, ""))
     regex = "".join(regex_parts)
 
-    df = ensure_tags(df)
     src = F.col(field)
     matched = src.rlike(regex)
 
@@ -340,10 +373,13 @@ def dissect(
             merged[name] = F.concat(merged[name], F.lit(sep), raw)
         else:
             merged[name] = raw
-    df = df.withColumns(
-        {n: F.when(matched, c).otherwise(F.lit(None).cast("string")) for n, c in merged.items()}
+    return (
+        {
+            n: F.when(matched, c).otherwise(F.lit(None).cast("string"))
+            for n, c in merged.items()
+        },
+        tag_when(~F.coalesce(matched, F.lit(False)), tag_on_failure),
     )
-    return add_tag_when(df, ~F.coalesce(matched, F.lit(False)), tag_on_failure)
 
 
 # ---------------------------------------------------------------------------
@@ -461,19 +497,27 @@ def _joda_to_strptime(fmt: str) -> str:
     return "".join(out)
 
 
-def _strptime_parse(src: Column, strptime_fmt: str) -> Column:
+def _strptime_only(fmt: str) -> bool:
+    """Does `fmt` need the pandas fallback (Spark's parser rejects it)?"""
+    return fmt not in ("UNIX", "UNIX_MS", "ISO8601") and _spark_unparseable(
+        _translate_joda(fmt)
+    )
+
+
+def _session_tz() -> str:
+    from pyspark.sql import SparkSession
+
+    sess = SparkSession.getActiveSession()
+    return sess.conf.get("spark.sql.session.timeZone", "UTC") if sess else "UTC"
+
+
+def _strptime_parse(src: Column, strptime_fmt: str, session_tz: str) -> Column:
     """Vectorized pandas fallback for formats Spark's parser rejects
     (day-of-week / ISO-week-date fields). Arrow-batched, never per-row
     Python. Arrow hands a tz-NAIVE series back to Spark, which interprets
     it in `spark.sql.session.timeZone` — so tz-aware inputs are converted
     to the SESSION zone (captured at plan time) before dropping tzinfo,
     matching the native try_to_timestamp path in non-UTC sessions too."""
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    session_tz = (
-        sess.conf.get("spark.sql.session.timeZone", "UTC") if sess else "UTC"
-    )
 
     @F.pandas_udf(T.TimestampType())
     def parse(s: pd.Series) -> pd.Series:
@@ -499,6 +543,31 @@ def date(
     Joda patterns translated to JDK DateTimeFormatter (Spark native).
     Failure → `_dateparsefailure` tag, target untouched/null.
     """
+    formats = tuple(formats)
+    failed, parsed, tags = _date_exprs(
+        field, formats, target, timezone, tag_on_failure,
+        target in (*df.columns, TAGS),
+        _session_tz() if any(map(_strptime_only, formats)) else None,
+    )
+    # materialize the failure flag BEFORE target may overwrite `field`
+    # (a stale reference would re-parse the already-parsed timestamp)
+    df = ensure_tags(df).withColumn("_date_failed", failed)
+    return retag(df.withColumn(target, parsed), tags).drop("_date_failed")
+
+
+@memo_columns
+def _date_exprs(
+    field: str,
+    formats: tuple[str, ...],
+    target: str,
+    timezone: str | None,
+    tag_on_failure: str,
+    target_exists: bool,
+    session_tz: str | None,
+) -> tuple[Column, Column, Column]:
+    """(failure flag, new `target`, `tags` value) of one date op;
+    `session_tz` is the session zone when a format needs the pandas
+    fallback, else None."""
     src = F.col(field)
     attempts: list[Column] = []
     for fmt in formats:
@@ -514,12 +583,10 @@ def date(
             attempts.append(
                 F.try_to_timestamp(src, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX"))
             )
+        elif _strptime_only(fmt):
+            attempts.append(_strptime_parse(src, _joda_to_strptime(fmt), session_tz))
         else:
-            jdk = _translate_joda(fmt)
-            if _spark_unparseable(jdk):
-                attempts.append(_strptime_parse(src, _joda_to_strptime(fmt)))
-            else:
-                attempts.append(F.try_to_timestamp(src, F.lit(jdk)))
+            attempts.append(F.try_to_timestamp(src, F.lit(_translate_joda(fmt))))
     parsed = F.coalesce(*attempts) if attempts else F.lit(None).cast("timestamp")
     if timezone:
         if "%{" in timezone:
@@ -530,21 +597,19 @@ def date(
             parsed = F.to_utc_timestamp(parsed, sprintf(timezone))
         else:
             parsed = F.to_utc_timestamp(parsed, timezone)
-    df = ensure_tags(df)
     # try_cast, not cast: when target == field (or holds strings), the
     # coalesce fallback must not ANSI-throw on unparseable rows —
     # failure is data (tag), never an exception
     prev = (
         F.col(target).try_cast("timestamp")
-        if target in df.columns
+        if target_exists
         else F.lit(None).cast("timestamp")
     )
-    # materialize the failure flag BEFORE target may overwrite `field`
-    # (a stale reference would re-parse the already-parsed timestamp)
-    df = df.withColumn("_date_failed", parsed.isNull() & src.isNotNull())
-    df = df.withColumn(target, F.coalesce(parsed, prev))
-    df = add_tag_when(df, F.col("_date_failed"), tag_on_failure)
-    return df.drop("_date_failed")
+    return (
+        parsed.isNull() & src.isNotNull(),
+        F.coalesce(parsed, prev),
+        tag_when(F.col("_date_failed"), tag_on_failure),
+    )
 
 
 # ---------------------------------------------------------------------------

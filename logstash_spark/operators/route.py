@@ -25,7 +25,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logstash_spark.operators.common import field_ref_to_col
+from logstash_spark.operators.common import field_ref_to_col, memo_columns
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -249,8 +249,12 @@ def _unquote(s: str) -> str:
 
 def compile_condition(expr: str, df: DataFrame | None = None) -> Column:
     """LSCL condition string → Catalyst Column predicate."""
-    dtypes = dict(df.dtypes) if df is not None else {}
-    return _Parser(_tokenize(expr), dtypes).parse()
+    return _compile_condition(expr, tuple(df.dtypes) if df is not None else ())
+
+
+@memo_columns
+def _compile_condition(expr: str, dtypes: tuple[tuple[str, str], ...]) -> Column:
+    return _Parser(_tokenize(expr), dict(dtypes)).parse()
 
 
 # ---------------------------------------------------------------------------
@@ -272,16 +276,27 @@ def add_routes(
     optional `else_sink` receives rows matching NONE of the named routes
     — the `else` branch of the conditional output section.
     """
+    return df.withColumn(
+        ROUTES, _routes_expr(tuple(routes.items()), else_sink, tuple(df.dtypes))
+    )
+
+
+@memo_columns
+def _routes_expr(
+    items: tuple[tuple[str, str | Column], ...],
+    else_sink: str | None,
+    dtypes: tuple[tuple[str, str], ...],
+) -> Column:
     conds: dict[str, Column] = {}
-    for sink, cond in routes.items():
-        c = compile_condition(cond, df) if isinstance(cond, str) else cond
+    for sink, cond in items:
+        c = _compile_condition(cond, dtypes) if isinstance(cond, str) else cond
         conds[sink] = F.coalesce(c, F.lit(False))
     entries = [F.when(c, F.lit(sink)) for sink, c in conds.items()]
     arr = F.array_compact(F.array(*entries))
     if else_sink is not None:
         none_matched = F.size(arr) == 0
         arr = F.when(none_matched, F.array(F.lit(else_sink))).otherwise(arr)
-    return df.withColumn(ROUTES, arr)
+    return arr
 
 
 def route_filter(df: DataFrame, sink: str) -> DataFrame:

@@ -133,27 +133,115 @@ def test_fileless_input_run_id_tracks_content(spark):
     assert a1 != b
 
 
-@pytest.mark.parametrize("build", ["static_lookup_df", "arrow_table"])
-def test_fileless_input_joined_to_local_lookup_warns(spark, build):
-    """A LocalRelation canonicalizes without its rows, like an RDD of
-    local rows: a file-less input joined to a `static_lookup_df`
-    dictionary (or any Arrow-built frame) still warns that resume cannot
-    see that data."""
+def _lookup(spark, build, rows, names):
     import pyarrow as pa
 
     from logstash_spark.operators.enrich import static_lookup_df
+
+    if build == "static_lookup_df":
+        return static_lookup_df(spark, rows, names)
+    if build == "arrow_table":
+        return spark.createDataFrame(
+            pa.Table.from_pylist([dict(zip(names, r)) for r in rows])
+        )
+    return spark.createDataFrame(rows, names)  # a parallelized LogicalRDD
+
+
+_EVEN_ODD = [("0", "even"), ("1", "odd")]
+
+
+@pytest.mark.parametrize("build", ["static_lookup_df", "arrow_table", "rdd"])
+def test_fileless_input_joined_to_local_lookup_warns(spark, build):
+    """A LocalRelation canonicalizes without its rows, so the run_id
+    hashes each LocalRelation's rows: a file-less input joined to a
+    `static_lookup_df` dictionary (or any Arrow-built frame) gets an id
+    that follows the dictionary's contents, with no warning. An RDD of
+    local rows exposes no rows to hash, so that case still warns that
+    resume cannot see its data."""
+    import warnings
+
     from logstash_spark.plans.runner import _input_fingerprint
 
-    rows, names = [("0", "even"), ("1", "odd")], ["k", "parity"]
-    if build == "static_lookup_df":
-        lookup = static_lookup_df(spark, rows, names)
-    else:
-        lookup = spark.createDataFrame(pa.Table.from_pylist(
-            [dict(zip(names, r)) for r in rows]
-        ))
+    names = ["k", "parity"]
     ids = spark.range(10).withColumn("k", (F.col("id") % 2).cast("string"))
-    with pytest.warns(UserWarning, match="cannot see the DATA"):
-        _input_fingerprint(ids.join(lookup, "k"), _spec([]))
+
+    def run_id(rows):
+        return _input_fingerprint(
+            ids.join(_lookup(spark, build, rows, names), "k"), _spec([])
+        )
+
+    if build == "rdd":
+        with pytest.warns(UserWarning, match="cannot see the DATA"):
+            run_id(_EVEN_ODD)
+        return
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        a1, a2 = run_id(_EVEN_ODD), run_id(list(_EVEN_ODD))
+        b = run_id([("0", "even"), ("1", "ODD")])
+    assert a1 == a2
+    assert a1 != b
+
+
+def test_file_backed_input_run_id_keys_on_lookup_contents(spark, tmp_path):
+    """The flagship shape: file-backed events joined to an in-memory
+    dictionary before `run_pipeline`. A changed dictionary over the same
+    files must change the run_id, or a rerun resumes against sinks
+    written with the old mappings."""
+    from logstash_spark.plans.runner import _input_fingerprint
+
+    src = str(tmp_path / "events")
+    spark.range(10).withColumn(
+        "k", (F.col("id") % 2).cast("string")
+    ).write.parquet(src)
+
+    def run_id(rows):
+        events = spark.read.parquet(src)
+        lookup = _lookup(spark, "static_lookup_df", rows, ["k", "parity"])
+        return _input_fingerprint(events.join(lookup, "k"), _spec([]))
+
+    assert run_id(_EVEN_ODD) == run_id(list(_EVEN_ODD))
+    assert run_id(_EVEN_ODD) != run_id([("0", "even"), ("1", "ODD")])
+
+
+def test_gated_grok_skips_false_branch_rows(spark):
+    """Under a `when` gate the op reads `CASE WHEN gate THEN src END`, so
+    grok's regexp_replace sees null (and does no regex work) on rows the
+    gate rejects; the restore from the snapshots keeps results equal."""
+    import re
+
+    df = spark.createDataFrame(
+        [(1, "a", "GET /x 200"), (2, "b", "GET /y 404"), (3, "a", "junk")],
+        ["id", "type", "message"],
+    )
+    spec = _spec([
+        FilterSpec(
+            op="grok",
+            conf={"match": {"message": "%{WORD:verb} %{NOTSPACE:path} %{INT:code:int}"}},
+            when='[type] == "a"',
+        ),
+        FilterSpec(
+            op="dissect", conf={"field": "message", "mapping": "%{v} %{rest}"},
+            when='[type] == "b"',
+        ),
+    ])
+    out = apply_filters(df, spec)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    read = re.search(r"regexp_replace\((message#\d+),", plan).group(1)
+    assert re.search(
+        r"CASE WHEN _when_gate#\d+ THEN message#\d+ END AS " + read + r"\b", plan
+    ), plan
+    rows = {r["id"]: r.asDict() for r in out.collect()}
+    assert rows[1] == {
+        "id": 1, "type": "a", "message": "GET /x 200", "tags": [],
+        "verb": "GET", "path": "/x", "code": 200, "v": None, "rest": None,
+    }
+    assert rows[2] == {
+        "id": 2, "type": "b", "message": "GET /y 404", "tags": [],
+        "verb": None, "path": None, "code": None, "v": "GET", "rest": "/y 404",
+    }
+    assert rows[3]["message"] == "junk"
+    assert rows[3]["tags"] == ["_grokparsefailure"]
+    assert rows[3]["verb"] is None and rows[3]["v"] is None
 
 
 def test_gated_type_changing_op_falls_back_to_split(spark):
