@@ -9,8 +9,9 @@ first-match-wins across a pattern list (`break_on_match`), failure
 tagging `_grokparsefailure`.
 
 The compiled regex is emitted in a dialect valid for BOTH java.util.regex
-(Spark's native `regexp_extract`) and Python `re` (pandas-UDF fast path):
-no possessive quantifiers, no \\p{} unicode classes, no atomic groups.
+(Spark's `regexp_replace` / `regexp_extract`, which run it) and Python
+`re` (which reads its group indexes at compile time): no possessive
+quantifiers, no \\p{} unicode classes, no atomic groups.
 Stock patterns below are rewritten from scratch in that common subset —
 they are behavioral equivalents of the public grok-patterns file, not
 copies (several upstream patterns use Oniguruma-only syntax).

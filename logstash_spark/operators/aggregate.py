@@ -431,14 +431,3 @@ def sessionize(
     return df.withColumn(
         session_col, F.concat(F.col(key).cast("string"), F.lit("#"), sess_no)
     )
-
-
-def rollup_counts(
-    df: DataFrame, dims: Sequence[str], value_col: str | None = None
-) -> DataFrame:
-    """rollup(dim1, dim2) grand-total aggregation used for the per-sink
-    aggregate tables (FIXTURES.md F5)."""
-    aggs = [F.count("*").alias("cnt")]
-    if value_col:
-        aggs.append(F.sum(value_col).alias(f"sum_{value_col}"))
-    return df.rollup(*dims).agg(*aggs)

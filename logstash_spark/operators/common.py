@@ -108,10 +108,6 @@ def remove_tag(df: DataFrame, *tag_values: str) -> DataFrame:
     return ensure_tags(df).withColumn(TAGS, _tags_without(tag_values))
 
 
-def has_tag(tag: str) -> Column:
-    return F.coalesce(F.array_contains(F.col(TAGS), tag), F.lit(False))
-
-
 _FIELD_REF = re.compile(r"%\{(\+[^}]+|\[[^}]*\]|[A-Za-z0-9_.@-]+)\}")
 
 

@@ -5,16 +5,19 @@ string column; on failure it tags the row (`_grokparsefailure`,
 `_dissectfailure`, `_dateparsefailure`, ...) and passes it through —
 failure is data, never an exception.
 
-Grok has one execution path: per (field, pattern) pair, ONE
-`regexp_replace` rewrites the line into a sentinel-packed list of its
-capture values, and `split`/`element_at` fan the pack out into columns.
-Pure Catalyst/codegen, zero Python, one regex evaluation per pair per
-row. It replaced an Arrow-vectorized pandas UDF (`Series.str.extract`),
-which was 2-3x slower even on 12-capture patterns (COMBINEDAPACHELOG
-0.94 s vs 1.82 s, SYSLOGLINE 0.38 s vs 1.21 s; local[4], 200k rows,
-noop sink): every batch paid the Arrow/Python boundary that PAPERS.md
-"Accelerating Python UDFs in Vectorized Query Execution" (CIDR 2022)
-sets out to cut.
+Grok and dissect share one capture engine (`_capture_packs`): per
+(source field, regex) pair, ONE `regexp_replace` rewrites the line into
+a sentinel-packed list of its capture values, and `split`/`element_at`
+fan the pack out into columns. Pure Catalyst/codegen, zero Python, one
+regex evaluation per pair per row. It replaced an Arrow-vectorized
+pandas UDF (`Series.str.extract`), which was 2-3x slower even on
+12-capture patterns (COMBINEDAPACHELOG 0.94 s vs 1.82 s, SYSLOGLINE
+0.38 s vs 1.21 s; local[4], 200k rows, noop sink): every batch paid the
+Arrow/Python boundary that PAPERS.md "Accelerating Python UDFs in
+Vectorized Query Execution" (CIDR 2022) sets out to cut. The engine also
+owns the failure rule (`_kept`): the match flag is read from the pack,
+and on a row the pattern did not match every capture into an existing
+column keeps that column's value.
 
 Sentinel rule: the pack uses `\\x02` (match marker) and `\\x01` (value
 separator), which a source may itself contain. The pack is then wrong
@@ -29,6 +32,8 @@ COMBINEDAPACHELOG and SYSLOGLINE: local[4], 200k rows, noop sink.)
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Sequence
 from typing import NamedTuple
 
@@ -64,7 +69,6 @@ def grok(
     pattern_definitions: dict[str, str] | None = None,
     tag_on_failure: str = "_grokparsefailure",
     break_on_match: bool = True,
-    overwrite: bool = True,
     max_input_length: int | None = None,
     tag_on_timeout: str = "_groktimeout",
 ) -> DataFrame:
@@ -76,12 +80,16 @@ def grok(
     (source_field, pattern) pair list:
 
     * break_on_match=True — the FIRST matching pair wins; later pairs'
-      captures stay null even if they would match (strict reference
+      captures are not bound even if they would match (strict reference
       stop-after-success semantics).
     * break_on_match=False — every pair is attempted; a capture takes its
       value from the first matching pair that binds it (later pairs fill
       holes, never overwrite — the relational form of grok's accumulate
       mode).
+
+    A capture replaces a field of the same name on the rows where a pair
+    binding it matches; on the other rows the field keeps its value (a
+    capture new to the frame is null there).
 
     `max_input_length` is the bounded-work analog of the reference's
     timeout_millis watchdog: neither java.util.regex nor Python `re`
@@ -89,22 +97,13 @@ def grok(
     are not matched at all and are tagged `tag_on_timeout` (instead of a
     task stalling on catastrophic backtracking over a multi-MB line).
     """
-    g = _grok_exprs(
+    existing = frozenset(df.columns)
+    return _project(ensure_tags(df), _grok_exprs(
         tuple(_match_pairs(field, match)),
         tuple(sorted(pattern_definitions.items())) if pattern_definitions else (),
         tag_on_failure, break_on_match, max_input_length, tag_on_timeout,
-    )
-    # two projections: `checked` reads each pack three times, and Spark
-    # keeps a non-cheap column it reads more than once in its own project
-    df = ensure_tags(df).withColumns(g.packs).withColumns(g.checked)
-    if g.timeout is not None:
-        # materialize BEFORE captures may overwrite the source field —
-        # a stale reference would read the (nulled) capture instead
-        df = df.withColumn("_grok_to", g.timeout)
-    df = df.withColumns(g.captures)
-    for tags in g.tags:
-        df = retag(df, tags)
-    return df.drop(*g.scratch)
+        existing,
+    ))
 
 
 def _match_pairs(
@@ -124,21 +123,104 @@ def _match_pairs(
     return [(field, p) for p in pats]
 
 
-# Pack/split sentinels for the single-pass path. A source holding either
-# one is extracted capture by capture instead (see _grok_exprs).
+# ---------------------------------------------------------------------------
+# the capture engine shared by grok and dissect
+# ---------------------------------------------------------------------------
+
+# Pack/split sentinels of the single pass. A source holding either one is
+# extracted capture by capture instead (see _capture_packs).
 _SEP = "\x01"
 _SENT = "\x02"
+#: scratch column of an op's match flag, projected with its captures
+_HIT = "_cap_hit"
 
 
-class _GrokExprs(NamedTuple):
-    """One grok op's Columns, in the order `grok` projects them."""
+class _CaptureExprs(NamedTuple):
+    """One grok or dissect op's Columns, in the order `_project` applies
+    them."""
 
     packs: dict[str, Column]
     checked: dict[str, Column]
     timeout: Column | None
-    captures: dict[str, Column]
+    captures: dict[str, Column]  # and the `_HIT` flag
     tags: tuple[Column, ...]
     scratch: tuple[str, ...]
+
+
+def _project(df: DataFrame, x: _CaptureExprs) -> DataFrame:
+    """Apply one op's Columns to a frame that already has `tags`."""
+    # two projections: `checked` reads each pack three times, and Spark
+    # keeps a non-cheap column it reads more than once in its own project
+    df = df.withColumns(x.packs).withColumns(x.checked)
+    if x.timeout is not None:
+        # materialize BEFORE captures may overwrite the source field —
+        # a stale reference would read the (nulled) capture instead
+        df = df.withColumn("_grok_to", x.timeout)
+    df = df.withColumns(x.captures)
+    for tags in x.tags:
+        df = retag(df, tags)
+    return df.drop(*x.scratch)
+
+
+def _capture_packs(
+    specs: Sequence[tuple[Column, str, tuple[int, ...]]],
+) -> tuple[dict[str, Column], dict[str, Column], list[Column]]:
+    """(packs, checked packs, match flags) of (source, regex, group
+    indexes) specs. Spec i's pack is scratch column `_cap{i}`: ONE
+    regexp_replace rewrites the whole source into SENT + SEP-joined
+    values of the groups, split into [SENT, value, ...] on a match and
+    left as the split source otherwise. A row whose pack cannot be
+    trusted (see `suspect`) builds the same list exactly: SENT plus one
+    regexp_extract per group if the regex matches, else null. Flag i
+    reads the checked pack, never the source, so a capture that
+    overwrites the source cannot change it; `_capture(i, j)` reads group
+    j's value."""
+    packs: dict[str, Column] = {}
+    checked: dict[str, Column] = {}
+    flags: list[Column] = []
+    for i, (src, regex, groups) in enumerate(specs):
+        repl = _SENT + _SEP + _SEP.join(f"${g}" for g in groups)
+        # Consume the entire line so the replacement result is exactly the
+        # pack; unmatched rows pass through unchanged (no leading SENT).
+        # DOTALL is scoped to the wrapper's .* only — the user pattern keeps
+        # default '.' semantics (multi-line values: GREEDYDATA must not
+        # cross newlines, matching Oniguruma's default and Python `re`).
+        wrapped = "^(?s:.*?)(?:" + regex + ")(?s:.*)$"
+        tmp = f"_cap{i}"
+        packs[tmp] = F.split(F.regexp_replace(src, wrapped, repl), _SEP)
+        # The pack is wrong only if a captured value holds SEP (a match that
+        # splits into more pieces than repl has) or an unmatched source
+        # starts with SENT (a fake match marker). Both show in the pack and
+        # the source's first character, so clean rows pay no extra scan.
+        parts = F.col(tmp)
+        suspect = src.startswith(_SENT) | (
+            (F.element_at(parts, 1) == _SENT)
+            & (F.size(parts) != 1 + max(len(groups), 1))
+        )
+        exact = F.when(
+            src.rlike(regex),
+            F.array(F.lit(_SENT), *[F.regexp_extract(src, regex, g) for g in groups]),
+        )
+        checked[tmp] = F.when(suspect, exact).otherwise(parts)
+        flags.append(F.coalesce(F.element_at(parts, 1) == F.lit(_SENT), F.lit(False)))
+    return packs, checked, flags
+
+
+def _capture(i: int, j: int) -> Column:
+    """Group j's value in spec i's checked pack (valid where it matched)."""
+    return F.element_at(F.col(f"_cap{i}"), j + 2)
+
+
+def _kept(
+    value: Column, hit: Column, name: str, existing: frozenset[str], dtype: T.DataType
+) -> Column:
+    """The failure rule of grok and dissect: capture `name` is `value`
+    where its pattern matched (`hit`; `value` is null elsewhere). On the
+    other rows a column that already has the name keeps its value, so a
+    failed parse passes the event on untouched; a new column is null."""
+    if name not in existing:
+        return value
+    return F.when(hit, value).otherwise(F.col(name).try_cast(dtype))
 
 
 @memo_columns
@@ -149,69 +231,33 @@ def _grok_exprs(
     break_on_match: bool,
     max_input_length: int | None,
     tag_on_timeout: str,
-) -> _GrokExprs:
-    """Single-pass extraction: ONE regexp_replace per (field, pattern)
-    pair rewrites the whole line into SENT + SEP-joined capture values;
-    split/element_at fans the pack out into columns. One regex evaluation
-    per pair per row (instead of one per capture), and the wide payload
-    columns (token arrays) cross only one extra projection. Pure
-    Catalyst/codegen. A row whose pack cannot be trusted (see
-    `suspect`) builds the same list exactly: SENT plus one
-    regexp_extract per capture if the pattern matches, else null."""
+    existing: frozenset[str],
+) -> _CaptureExprs:
+    """Grok's assembly on the capture engine: compile each pattern, pack
+    its captures (one regex evaluation per pair per row), then cast,
+    coalesce duplicate names, apply `break_on_match` and the timeout."""
     compiled_pairs = [
         (f, grok_lib.compile_pattern(p, dict(pattern_definitions)))
         for f, p in pairs
     ]
     # Union of capture field names across all pairs, preserving order.
-    out_fields: list[tuple[str, str | None]] = []
-    seen: set[str] = set()
+    out_fields: dict[str, str | None] = {}
     for _, c in compiled_pairs:
         for cap in c.captures:
-            if cap.name not in seen:
-                seen.add(cap.name)
-                out_fields.append((cap.name, cap.cast))
+            out_fields.setdefault(cap.name, cap.cast)
 
-    tmp_cols: dict[str, Column] = {}
-    checked: dict[str, Column] = {}
+    specs: list[tuple[Column, str, tuple[int, ...]]] = []
     over_limit: Column | None = None
-    for pi, (src_field, c) in enumerate(compiled_pairs):
+    for src_field, c in compiled_pairs:
         src = F.col(src_field)
         if max_input_length is not None:
             guard = F.length(src) > max_input_length
             over_limit = guard if over_limit is None else (over_limit | guard)
             src = F.when(~F.coalesce(guard, F.lit(False)), src)
-        repl = _SENT + _SEP + _SEP.join(f"${cap.index}" for cap in c.captures)
-        # Consume the entire line so the replacement result is exactly the
-        # pack; unmatched rows pass through unchanged (no leading SENT).
-        # DOTALL is scoped to the wrapper's .* only — the user pattern keeps
-        # default '.' semantics (multi-line values: GREEDYDATA must not
-        # cross newlines, matching Oniguruma's default and Python `re`).
-        wrapped = "^(?s:.*?)(?:" + c.regex + ")(?s:.*)$"
-        tmp = f"_gk{pi}"
-        tmp_cols[tmp] = F.split(F.regexp_replace(src, wrapped, repl), _SEP)
-        # The pack is wrong only if a captured value holds SEP (a match that
-        # splits into more pieces than repl has) or an unmatched source
-        # starts with SENT (a fake match marker). Both show in the pack and
-        # the source's first character, so clean rows pay no extra scan.
-        parts = F.col(tmp)
-        suspect = src.startswith(_SENT) | (
-            (F.element_at(parts, 1) == _SENT)
-            & (F.size(parts) != 1 + max(len(c.captures), 1))
-        )
-        exact = F.when(
-            src.rlike(c.regex),
-            F.array(
-                F.lit(_SENT),
-                *[F.regexp_extract(src, c.regex, cap.index) for cap in c.captures],
-            ),
-        )
-        checked[tmp] = F.when(suspect, exact).otherwise(parts)
+        specs.append((src, c.regex, tuple(cap.index for cap in c.captures)))
+    packs, checked, flags = _capture_packs(specs)
     timeout = None if over_limit is None else F.coalesce(over_limit, F.lit(False))
 
-    flags = [
-        F.coalesce(F.element_at(F.col(f"_gk{pi}"), 1) == F.lit(_SENT), F.lit(False))
-        for pi in range(len(compiled_pairs))
-    ]
     # effective[pi]: does pair pi's match BIND captures for this row?
     # break mode: only if no earlier pair matched (strict stop-after-
     # success); accumulate mode: whenever the pair matched.
@@ -225,8 +271,9 @@ def _grok_exprs(
         effective = flags
 
     new_cols: dict[str, Column] = {}
-    for name, cast in out_fields:
+    for name, cast in out_fields.items():
         attempts: list[Column] = []
+        binders: list[Column] = []
         for pi, (_, c) in enumerate(compiled_pairs):
             # A name may appear in SEVERAL captures of one pattern
             # (alternation branches, e.g. HTTPD_ERRORLOG's 2.0|2.4 arms) —
@@ -235,32 +282,31 @@ def _grok_exprs(
             positions = [j for j, x in enumerate(c.captures) if x.name == name]
             if not positions:
                 continue
-            vals = [
-                F.nullif(F.element_at(F.col(f"_gk{pi}"), j + 2), F.lit(""))
-                for j in positions
-            ]
+            vals = [F.nullif(_capture(pi, j), F.lit("")) for j in positions]
             val = (vals[0] if len(vals) == 1 else F.coalesce(*vals)).cast(
                 _cast_type(cast)
             )
             attempts.append(F.when(effective[pi], val))
-        new_cols[name] = (
-            F.coalesce(*attempts) if attempts else F.lit(None).cast(_cast_type(cast))
+            binders.append(effective[pi])
+        new_cols[name] = _kept(
+            F.coalesce(*attempts), functools.reduce(operator.or_, binders),
+            name, existing, _cast_type(cast),
         )
 
     any_match = F.lit(False)
     for flag in flags:
         any_match = any_match | flag
-    new_cols["_grok_any"] = any_match
+    new_cols[_HIT] = any_match
     if timeout is None:
-        tags = (tag_when(~F.col("_grok_any"), tag_on_failure),)
-        scratch = ("_grok_any", *tmp_cols)
+        tags = (tag_when(~F.col(_HIT), tag_on_failure),)
+        scratch = (_HIT, *packs)
     else:
         tags = (
             tag_when(F.col("_grok_to"), tag_on_timeout),
-            tag_when(~F.col("_grok_any") & ~F.col("_grok_to"), tag_on_failure),
+            tag_when(~F.col(_HIT) & ~F.col("_grok_to"), tag_on_failure),
         )
-        scratch = ("_grok_any", "_grok_to", *tmp_cols)
-    return _GrokExprs(tmp_cols, checked, timeout, new_cols, tags, scratch)
+        scratch = (_HIT, "_grok_to", *packs)
+    return _CaptureExprs(packs, checked, timeout, new_cols, tags, scratch)
 
 
 @op("script_field")
@@ -312,17 +358,24 @@ def dissect(
     Supports %{name}, %{+name} (append, joined by the preceding delimiter
     or `append_separator`), %{?skip} / %{}, and the %{name->} repeated-
     delimiter suffix. Compiled to ONE anchored regex with non-greedy
-    captures between literal delimiters — pure Catalyst when few fields.
+    captures between literal delimiters, extracted by grok's capture
+    engine; a failed match leaves existing fields as they were.
     """
-    captures, tags = _dissect_exprs(field, mapping, tag_on_failure, append_separator)
-    return retag(ensure_tags(df).withColumns(captures), tags)
+    existing = frozenset(df.columns)
+    return _project(ensure_tags(df), _dissect_exprs(
+        field, mapping, tag_on_failure, append_separator, existing
+    ))
 
 
 @memo_columns
 def _dissect_exprs(
-    field: str, mapping: str, tag_on_failure: str, append_separator: str | None
-) -> tuple[dict[str, Column], Column]:
-    """(capture columns, `tags` value) of one dissect op."""
+    field: str,
+    mapping: str,
+    tag_on_failure: str,
+    append_separator: str | None,
+    existing: frozenset[str],
+) -> _CaptureExprs:
+    """Dissect's mapping → regex compiler on the capture engine."""
     tokens: list[tuple[str, str]] = []  # (kind, payload): ('lit', s) | ('key', spec)
     pos = 0
     for m in _DISSECT_TOKEN.finditer(mapping):
@@ -361,24 +414,25 @@ def _dissect_exprs(
             captures.append((spec[1:], gidx, True, append_separator or prev_delim))
         else:
             captures.append((spec, gidx, False, ""))
-    regex = "".join(regex_parts)
 
-    src = F.col(field)
-    matched = src.rlike(regex)
-
+    packs, checked, (hit,) = _capture_packs(
+        [(F.col(field), "".join(regex_parts), tuple(c[1] for c in captures))]
+    )
     merged: dict[str, Column] = {}
-    for name, idx, append, sep in captures:
-        raw = F.regexp_extract(src, regex, idx)
+    for j, (name, _, append, sep) in enumerate(captures):
+        raw = _capture(0, j)
         if name in merged and append:
             merged[name] = F.concat(merged[name], F.lit(sep), raw)
         else:
             merged[name] = raw
-    return (
-        {
-            n: F.when(matched, c).otherwise(F.lit(None).cast("string"))
-            for n, c in merged.items()
-        },
-        tag_when(~F.coalesce(matched, F.lit(False)), tag_on_failure),
+    new_cols = {
+        n: _kept(F.when(hit, c), hit, n, existing, T.StringType())
+        for n, c in merged.items()
+    }
+    new_cols[_HIT] = hit
+    return _CaptureExprs(
+        packs, checked, None, new_cols,
+        (tag_when(~F.col(_HIT), tag_on_failure),), (_HIT, *packs),
     )
 
 

@@ -415,7 +415,7 @@ def _adapt_grok(a: dict) -> dict:
     conf: dict[str, object] = {"match": match}
     if "tag_on_failure" in a:
         conf["tag_on_failure"] = _first(a["tag_on_failure"])
-    for k in ("break_on_match", "pattern_definitions", "overwrite"):
+    for k in ("break_on_match", "pattern_definitions"):
         if k in a:
             conf[k] = a[k]
     return conf

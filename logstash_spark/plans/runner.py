@@ -61,14 +61,6 @@ from logstash_spark.sources.tableio import (
     open_table,
 )
 
-# operator modules register themselves in OPS on import
-import logstash_spark.operators.parse  # noqa: F401, E402
-import logstash_spark.operators.mutate  # noqa: F401, E402
-import logstash_spark.operators.enrich  # noqa: F401, E402
-import logstash_spark.operators.aggregate  # noqa: F401, E402
-import logstash_spark.operators.multiplicity  # noqa: F401, E402
-import logstash_spark.functions  # noqa: F401, E402
-
 #: under `sinks_root`: uncommitted partitions of the shared sink write,
 #: one subdirectory per run_id, removed once every table has committed
 STAGING_DIR = "_fanout_staging"

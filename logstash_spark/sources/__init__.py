@@ -12,23 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(path)
-
-
-def read_lines(spark: SparkSession, path: str) -> DataFrame:
-    """input { file { codec => line } } — one row per line, `message` col
-    + file provenance. (No line offset: spark.read.text does not expose
-    one; ordered codecs like multiline need an explicit order column —
-    see operators/codec.py multiline.)"""
-    return (
-        spark.read.text(path)
-        .withColumn("message", F.col("value"))
-        .withColumn("path", F.input_file_name())
-        .drop("value")
-    )
-
-
 def generator(spark: SparkSession, count: int, message: str = "Hello world!") -> DataFrame:
     """logstash-input-generator (org/logstash/plugins/inputs/Generator.java):
     synthetic events at max rate — spark.range + column synthesis."""

@@ -88,17 +88,3 @@ def input_sequences(
         source.alias("source"),
         raw.alias("raw"),
     )
-
-
-def expected_source_counts(n: int) -> dict[str, int]:
-    """Closed-form oracle for the source distribution (pytest oracle)."""
-    counts: dict[str, int] = {}
-    for i in range(n):
-        m = i % 100
-        for threshold, name in _SOURCE_THRESHOLDS:
-            if m < threshold:
-                counts[name] = counts.get(name, 0) + 1
-                break
-        else:
-            counts["iot"] = counts.get("iot", 0) + 1
-    return counts

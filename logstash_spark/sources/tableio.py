@@ -167,6 +167,10 @@ class SnapshotTable:
         paths = [os.path.join(self.root, f) for f in snap.files]
         return spark.read.option("mergeSchema", "false").parquet(*paths)
 
+    def _sibling(self, name: str) -> SnapshotTable:
+        """The table `name` in this table's parent directory."""
+        return SnapshotTable(os.path.join(os.path.dirname(self.root.rstrip("/")), name))
+
     def processed_partitions(
         self, spark: SparkSession, *, run_id: str | None = None
     ) -> set[int]:
@@ -186,9 +190,8 @@ class SnapshotTable:
         if run_id is None or detail is None:
             return set()
         sink = snap.meta.get("sink", os.path.basename(self.root.rstrip("/")))
-        ltable = SnapshotTable(os.path.join(os.path.dirname(self.root.rstrip("/")), detail))
         try:
-            ldf = ltable.read(spark)
+            ldf = self._sibling(detail).read(spark)
         except FileNotFoundError:
             return set()
         from pyspark.sql import functions as F
@@ -407,35 +410,13 @@ class IcebergTable:
                 f"no committed snapshots in {self.root}"
             ) from e
 
-    def processed_partitions(
-        self, spark: SparkSession, *, run_id: str | None = None
-    ) -> set[int]:
-        snap = self.latest()
-        if not snap:
-            return set()
-        if run_id is None:
-            run_id = snap.lineage.get("run_id")
-        detail = snap.lineage.get("detail_table")
-        if run_id is None or detail is None:
-            return set()
-        sink = snap.meta.get("sink", os.path.basename(self.root.rstrip("/")))
-        ltable = IcebergTable(
-            os.path.join(os.path.dirname(self.root.rstrip("/")), detail),
-            self.spark,
+    def _sibling(self, name: str) -> IcebergTable:
+        """The table `name` in this table's parent directory."""
+        return IcebergTable(
+            os.path.join(os.path.dirname(self.root.rstrip("/")), name), self.spark
         )
-        try:
-            ldf = ltable.read(spark)
-        except FileNotFoundError:
-            return set()
-        from pyspark.sql import functions as F
 
-        rows = (
-            ldf.where((F.col("run_id") == run_id) & (F.col("sink") == sink))
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-        return {int(r["partition_id"]) for r in rows}
+    processed_partitions = SnapshotTable.processed_partitions
 
 
 def open_table(

@@ -142,15 +142,6 @@ def drain_available_now(
     return spark.table(sink)
 
 
-def rate_source(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """logstash-input-generator analog (benchmark source)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-
-
 def run_streaming_fanout(
     stream_df: DataFrame,
     transform: Callable[[DataFrame], DataFrame],

@@ -145,10 +145,12 @@ def main(argv: list[str] | None = None) -> int:
 
         schema = spark.read.parquet(args.input).schema
         stream = file_stream_source(spark, args.input, schema)
+        # `pipeline:` sends are virtual: the stream writes physical sinks only
+        virtual = spec.virtual_sends()
         q = run_streaming_fanout(
             stream,
             lambda df: build_plan(df, spec),
-            list(spec.sink_names()),
+            [n for n in spec.sink_names() if n not in virtual],
             args.sinks_root,
             f"{args.sinks_root}/_checkpoint",
             drop_before_write=drop,

@@ -39,7 +39,9 @@ def _pandas_reference(
     match flag and one `str.extract` per (field, pattern) pair. A capture takes the
     first non-empty value, in pair then group order, from the pairs that
     bind it: the first matching pair under break_on_match, every
-    matching pair otherwise. Returns ({capture: values}, tags)."""
+    matching pair otherwise; a capture that names an existing column
+    keeps the column's value on rows no pair binds it. Returns
+    ({capture: values}, tags)."""
     if isinstance(match, dict):
         pairs = [
             (f, p) for f, ps in match.items()
@@ -51,6 +53,7 @@ def _pandas_reference(
     casts: dict[str, str | None] = {}
     any_hit = pd.Series(False, index=pdf.index)
     over = pd.Series(False, index=pdf.index)
+    bound: dict[str, pd.Series] = {}
     for f, pat in pairs:
         c = compile_pattern(pat, pattern_definitions)
         rx = to_python_regex(c)
@@ -65,10 +68,14 @@ def _pandas_reference(
         for cap in c.captures:
             col = caps.setdefault(cap.name, pd.Series(None, index=pdf.index, dtype=object))
             casts.setdefault(cap.name, cap.cast)
+            bound[cap.name] = bound.get(cap.name, False) | bind
             vals = ext[cap.group].where(ext[cap.group] != "")
             fill = bind & col.isna() & vals.notna()
             col[fill] = vals[fill]
         any_hit |= hit
+    for n, col in caps.items():  # an existing field no match binds keeps its value
+        if n in pdf:
+            col[~bound[n]] = pdf[n][~bound[n]]
     tags = []
     for i in pdf.index:
         t = list(pdf.at[i, "tags"]) if "tags" in pdf and pdf.at[i, "tags"] is not None else []
@@ -672,3 +679,21 @@ def test_netscreen_session(spark, method):
     assert out["severity"] == "notification" and out["event_type"] == 257
     assert out["src_zone"] == "Trust" and out["action"] == "Deny"
     assert out["src_port"] == 53 and out["dst_port"] == 17210
+
+
+@pytest.mark.parametrize("method", ["native", "pandas"])
+def test_failed_match_keeps_existing_fields(spark, method):
+    """A failed grok passes the event on untouched: every column the
+    pattern captures into keeps its value (cast to the capture's type);
+    a capture new to the frame is null."""
+    df = spark.createDataFrame(
+        [("x 7 rest", "before", "1"), ("nospace", "before", "2")],
+        ["message", "a", "n"],
+    )
+    out = _grok(
+        method, df, "message", "%{WORD:a} %{INT:n:int} %{GREEDYDATA:message}"
+    ).collect()
+    assert [(r["message"], r["a"], r["n"]) for r in out] == [
+        ("rest", "x", 7), ("nospace", "before", 2),
+    ]
+    assert [r["tags"] for r in out] == [[], ["_grokparsefailure"]]

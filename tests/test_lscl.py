@@ -338,3 +338,48 @@ class TestGeneratorMessageLines:
         assert [r.raw for r in df.select("raw").distinct().collect()] == [
             "from-env"
         ]
+
+
+def test_fresh_interpreter_registry_holds_every_op():
+    """`OPS` is complete as soon as the operators package is imported: a
+    fresh interpreter that imports only the compiler and the runner
+    builds a `dns` filter (registered by `operators.lookup`), and every
+    `@op` in the package source is registered."""
+    import json
+    import os
+    import re
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        """
+        import json
+        from logstash_spark.plans.lscl import compile_conf
+        from logstash_spark.plans.runner import build_plan
+        from logstash_spark.session import get_spark
+
+        spec, _ = compile_conf('filter { dns { reverse => ["ip"] } }')
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        df = spark.createDataFrame([("10.0.0.1",)], ["ip"])
+        build_plan(df, spec)  # plans only: no lookup runs
+        spark.stop()
+        from logstash_spark.operators import OPS
+        print(json.dumps(sorted(OPS)))
+        """
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        cwd=repo, env=dict(os.environ, PYTHONPATH=repo), timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    registered = set(json.loads(r.stdout.strip().splitlines()[-1]))
+    declared: set[str] = set()
+    for root, _dirs, files in os.walk(os.path.join(repo, "logstash_spark")):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f)) as src:
+                    declared |= set(re.findall(r'^@op\("([^"]+)"\)', src.read(), re.M))
+    assert len(declared) == 64
+    assert registered == declared

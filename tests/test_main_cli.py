@@ -102,3 +102,34 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     assert out["sink_counts"]["sink_errors"] > 0
     assert out["master"] == "local[3]"
     assert (tmp_path / "sinks" / "_lineage").exists()
+
+
+def test_main_cli_streaming_writes_physical_sinks_only(spark, tmp_path, monkeypatch):
+    """`--streaming` writes the .conf's file outputs; a `pipeline`
+    send is a virtual sink and gets no partition."""
+    import logstash_spark.session
+    import main
+
+    spark.createDataFrame(
+        [("ERROR", "a"), ("INFO", "b"), ("ERROR", "c")], ["level", "message"]
+    ).write.parquet(str(tmp_path / "in"))
+    conf = tmp_path / "p.conf"
+    conf.write_text(
+        """
+        filter { mutate { add_field => { "seen" => "yes" } } }
+        output {
+          if [level] == "ERROR" { file { id => "errors" } }
+          pipeline { send_to => ["audit"] }
+        }
+        """
+    )
+    # the streaming run reuses the test session instead of building one
+    monkeypatch.setattr(logstash_spark.session, "get_spark", lambda **_: spark)
+    rc = main.main([
+        "--spec", str(conf), "--input", str(tmp_path / "in"),
+        "--sinks-root", str(tmp_path / "sinks"), "--streaming",
+    ])
+    assert rc == 0
+    parts = sorted(p.name for p in (tmp_path / "sinks").iterdir() if p.name.startswith("sink="))
+    assert parts == ["sink=errors"]
+    assert spark.read.parquet(str(tmp_path / "sinks" / "sink=errors")).count() == 2

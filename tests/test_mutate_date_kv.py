@@ -153,6 +153,27 @@ def test_dissect_skip_field(spark):
     assert out["keep"] == "y" and out["rest"] == "z"
 
 
+def test_dissect_into_its_source_is_not_tagged(spark):
+    """The match flag comes from the pack, read before the capture
+    overwrites the source field."""
+    df = spark.createDataFrame([Row(message="x y")])
+    out = dissect(df, "message", "%{a} %{message}").collect()[0]
+    assert (out["a"], out["message"], out["tags"]) == ("x", "y", [])
+
+
+def test_dissect_failure_keeps_existing_fields(spark):
+    """A failed dissect passes the event on untouched: every column it
+    captures into keeps its value; a capture new to the frame is null."""
+    df = spark.createDataFrame(
+        [Row(message="nospace", a="before"), Row(message=None, a="before")]
+    )
+    rows = dissect(df, "message", "%{a} %{message} %{new}").collect()
+    assert [(r["message"], r["a"], r["new"]) for r in rows] == [
+        ("nospace", "before", None), (None, "before", None),
+    ]
+    assert [r["tags"] for r in rows] == [["_dissectfailure"]] * 2
+
+
 # --- translate ----------------------------------------------------------------
 
 
