@@ -384,7 +384,7 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs at scale via an inverted index, the
     one n-gram Jaccard implementation (gate:
-    `queries_dataprep.ngram_jaccard_inverted`). Output:
+    `queries_dedup.ngram_jaccard_inverted`). Output:
     (doc_a, doc_b, jaccard) with exact Jaccard ≥ threshold.
 
     Scale topology:

@@ -16,10 +16,10 @@ away; a fold is exactly as strong as running its subs separately, at
 one sample-slot cost. Sub row counts are pinned too (they reappear as
 the null fringe of the outer join).
 
-The fold registration POPs the sub entries from QUERIES/ORACLES and
-registers the combined gate, so the driver registry shrinks while the
-sub-functions remain importable (and are still exercised, through the
-fold). Fold membership is grouped by operator family so a red driver
+`register` POPs the sub entries from the registry dicts `queries`
+passes in and adds the combined gate, so the driver registry shrinks
+while the sub-functions remain importable (and are still exercised,
+through the fold). Fold membership is grouped by operator family so a red driver
 row still localizes to one subsystem.
 """
 
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from logstash_spark.queries_common import QueryFn
 
 
 def _indexed(df: DataFrame, cols: list[str], prefix: str) -> DataFrame:
@@ -55,21 +57,24 @@ def _fold_sql(parts: list[tuple[str, list[str], str]]) -> str:
     return f"SELECT {', '.join(sel)} FROM {joins}"
 
 
-def fold(name: str, parts: list[tuple[str, str, list[str]]], doc: str) -> None:
-    """Replace the sub-gates in QUERIES/ORACLES with one combined gate.
+def fold(
+    queries: dict[str, QueryFn],
+    oracles: dict[str, str],
+    name: str,
+    parts: list[tuple[str, str, list[str]]],
+    doc: str,
+) -> None:
+    """Replace the sub-gates in `queries`/`oracles` with one combined gate.
 
     parts: (sub_gate_name, column_prefix, expected_columns). The
     expected column list is checked against the live sub-result at run
     time (a drifted sub schema raises ValueError, not a silent
     misalignment) and drives the identical ORDER BY on both engines.
     """
-    # imported here: `queries` imports this module while still loading
-    from logstash_spark.queries import ORACLES, QUERIES
-
     subs = []
     for sub, pfx, cols in parts:
-        fn = QUERIES.pop(sub)
-        sql = ORACLES.pop(sub)
+        fn = queries.pop(sub)
+        sql = oracles.pop(sub)
         subs.append((sub, fn, sql, pfx, cols))
 
     def run(spark: SparkSession, sf_dir: str, _subs=subs) -> DataFrame:
@@ -88,19 +93,17 @@ def fold(name: str, parts: list[tuple[str, str, list[str]]], doc: str) -> None:
 
     run.__name__ = name
     run.__doc__ = doc
-    QUERIES[name] = run
-    ORACLES[name] = _fold_sql(
+    queries[name] = run
+    oracles[name] = _fold_sql(
         [(sql, cols, pfx) for (_sub, _fn, sql, pfx, cols) in subs]
     )
 
 
-def register() -> None:
-    """Fold the sub-gates into combined gates. `queries` calls this once,
-    after every query module has registered and before it orders the
-    registry, so the result does not depend on which module is imported
-    first. Column lists mirror each sub-gate's registered output schema
-    (checked at run time); grouping is by operator family."""
-    fold(
+# (gate, [(sub_gate, column_prefix, columns)], doc): column lists mirror
+# each sub-gate's output schema (checked at run time); grouping is by
+# operator family, and each fold's sub-gates live in one gate module.
+FOLDS: list[tuple[str, list[tuple[str, str, list[str]]], str]] = [
+    (
         "image_pipeline",
         [
             ("image_header_meta", "hm_",
@@ -112,9 +115,8 @@ def register() -> None:
         "parse (PNG/JPEG/GIF dims from binary columns, zero-UDF), aHash "
         "near-duplicate pairs, and resize-invariant dedup pairs "
         "(operators/multimodal.py).",
-    )
-
-    fold(
+    ),
+    (
         "av_frame_pipeline",
         [
             ("video_frame_sample", "vf_",
@@ -128,9 +130,8 @@ def register() -> None:
         "Multimodal audio/video path in one gate: deterministic video "
         "frame sampling, per-frame block features, and PCM/WAV sample "
         "statistics over binary columns (operators/multimodal.py).",
-    )
-
-    fold(
+    ),
+    (
         "html_clean_pipeline",
         [
             ("html_text_extract", "hx_",
@@ -140,9 +141,8 @@ def register() -> None:
         ],
         "Webtext extraction in one gate: HTML-to-text (title/links/markup "
         "density) plus mojibake detection & repair (operators/webtext.py).",
-    )
-
-    fold(
+    ),
+    (
         "crawl_policy_pipeline",
         [
             ("html_meta_policy", "mp_",
@@ -155,9 +155,8 @@ def register() -> None:
         "Crawl-policy compliance in one gate: per-document meta-robots / "
         "canonical / lang extraction plus robots.txt longest-match "
         "allow/deny evaluation (operators/webtext.py).",
-    )
-
-    fold(
+    ),
+    (
         "crawl_graph_pipeline",
         [
             ("sitemap_discovery", "sm_",
@@ -169,9 +168,8 @@ def register() -> None:
         "Crawl-graph analysis in one gate: sitemap/sitemap-index entry "
         "expansion, anchor-text aggregation per target, and integer-exact "
         "host-graph PageRank (operators/webtext.py).",
-    )
-
-    fold(
+    ),
+    (
         "classifier_eval_report",
         [
             ("auc_exact", "auc_", ["n_pos", "n_neg", "auc_ppm"]),
@@ -183,9 +181,8 @@ def register() -> None:
         "Classifier/annotator evaluation in one gate: exact rank-sum "
         "ROC-AUC, full precision/recall threshold sweep, and Cohen's kappa "
         "inter-annotator agreement (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "sample_eval_report",
         [
             ("pass_at_k_estimator", "pk_",
@@ -199,9 +196,8 @@ def register() -> None:
         "Sampled-generation evaluation in one gate: unbiased pass@k, "
         "majority-vote (self-consistency) answer selection, and GRPO "
         "group-relative advantage normalization (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "model_battle_report",
         [
             ("pairwise_win_rates", "pw_",
@@ -213,9 +209,8 @@ def register() -> None:
         "Preference-battle analytics in one gate: pairwise win/tie/loss "
         "rates per model pair plus fixed-iteration Bradley-Terry ratings "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "calibration_pipeline",
         [
             ("calibration_report", "cr_",
@@ -226,9 +221,8 @@ def register() -> None:
         "Confidence-calibration in one gate: reliability bins with "
         "ECE/Brier plus PAV isotonic-regression calibration over the score "
         "grid (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "rank_agreement_report",
         [
             ("rank_correlation", "rk_",
@@ -238,9 +232,8 @@ def register() -> None:
         "Ranked-list agreement in one gate: Kendall tau / Spearman rho per "
         "query plus rank-biased overlap of top-k lists "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "text_overlap_eval",
         [
             ("eval_em_f1", "em_",
@@ -252,9 +245,8 @@ def register() -> None:
         "Reference-text overlap metrics in one gate: exact-match / "
         "Levenshtein similarity / token F1 plus LCS-based ROUGE-L "
         "precision/recall/F (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "retrieval_quality_report",
         [
             ("retrieval_ranking_metrics", "rr_",
@@ -264,9 +256,8 @@ def register() -> None:
         "Retrieval quality in one gate: MRR / recall@k / NDCG@k per query "
         "plus maximal-marginal-relevance diversified top-k selection "
         "(operators/retrieval.py, operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "preference_mining_pipeline",
         [
             ("kwise_pref_pairs", "kp_",
@@ -277,9 +268,8 @@ def register() -> None:
         "Preference-data construction in one gate: k-wise ranking to "
         "chosen/rejected DPO pairs plus deterministic in-batch negative "
         "sampling (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "sampling_policies",
         [
             ("weighted_sample_k", "ws_",
@@ -290,9 +280,8 @@ def register() -> None:
         "Deterministic sampling policies in one gate: A-ES weighted "
         "reservoir top-k, per-stratum reservoir sample, and half-life "
         "recency downsampling (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "mixture_design_pipeline",
         [
             ("waterfill_budget", "wf_",
@@ -305,9 +294,8 @@ def register() -> None:
         "Data-mixture design in one gate: water-filling token budget "
         "allocation, realized-vs-target KL divergence report, and the "
         "end-to-end mix pipeline over sources (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "robust_scaling_pipeline",
         [
             ("quantile_normalize", "qn_",
@@ -319,9 +307,8 @@ def register() -> None:
         "Robust per-source scaling in one gate: within-source quantile "
         "normalization plus percentile winsorization clipping "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "outlier_quality_report",
         [
             ("mad_outlier_flags", "mo_",
@@ -334,9 +321,8 @@ def register() -> None:
         "Distributional quality screens in one gate: per-source "
         "median-absolute-deviation outlier flags plus character-entropy "
         "gibberish scoring (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "text_canonicalize_pipeline",
         [
             ("text_clean_normalize", "tc_", ["doc_id", "clean_md5", "clean_len"]),
@@ -347,9 +333,8 @@ def register() -> None:
         "Text canonicalization in one gate: unicode/whitespace clean "
         "normalization, special-token scrubbing (prompt-injection guard), "
         "and canonical dedup-key derivation (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "doc_profile_report",
         [
             ("readability_metrics", "rd_",
@@ -362,9 +347,8 @@ def register() -> None:
         "Per-document profiling in one gate: Flesch-Kincaid readability "
         "metrics plus keyword-taxonomy topic tagging "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "chat_assembly_pipeline",
         [
             ("chat_template_render", "ct_",
@@ -377,9 +361,8 @@ def register() -> None:
         "(ChatML + colon styles), the end-to-end SFT prep pipeline, and "
         "conversation-tree path expansion with truncation "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "chunk_align_pipeline",
         [
             ("sentence_chunking", "sc_",
@@ -391,9 +374,8 @@ def register() -> None:
         "Text segmentation in one gate: sentence-boundary chunking with "
         "size targets plus char-span to token-span alignment "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "weak_label_pipeline",
         [
             ("ngram_overlap_score", "no_",
@@ -406,9 +388,8 @@ def register() -> None:
         "Weak labeling in one gate: n-gram overlap precision/recall/F1 "
         "between paired fields plus Naive-Bayes quality-classifier "
         "training + scoring (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "shard_coverage_report",
         [
             ("rendezvous_sharding", "rv_", ["doc_id", "shard"]),
@@ -419,9 +400,8 @@ def register() -> None:
         "Dataset plumbing in one gate: rendezvous (HRW) shard assignment "
         "plus per-column null/blank/distinct coverage profiling "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "lexical_retrieval_pipeline",
         [
             ("bm25_topk", "bm_", ["query_id", "doc", "score_scaled", "rank"]),
@@ -431,9 +411,8 @@ def register() -> None:
         "Lexical retrieval in one gate: BM25 top-k document scoring plus "
         "per-document TF-IDF top-terms extraction "
         "(operators/retrieval.py).",
-    )
-
-    fold(
+    ),
+    (
         "sketch_observability_report",
         [
             ("quantile_sketch", "qs_",
@@ -445,9 +424,8 @@ def register() -> None:
         "Sketch-based observability in one gate: mergeable quantile-sketch "
         "estimates with exactness bounds plus heavy-hitter key-skew "
         "reporting (operators/sketch.py, operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "clustering_pipeline",
         [
             ("kmeans_lloyd", "km_", ["vec_id", "cluster", "dist"]),
@@ -456,9 +434,8 @@ def register() -> None:
         "Embedding clustering in one gate: Lloyd k-means assignment over "
         "the int-grid plus greedy k-center (farthest-point) coreset "
         "selection (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "int8_ann_pipeline",
         [
             ("embedding_int8_quant", "iq_",
@@ -468,9 +445,8 @@ def register() -> None:
         "Quantized ANN path in one gate: symmetric int8 embedding "
         "quantization plus cosine top-k over the quantized codes "
         "(operators/dataprep.py ann_* family).",
-    )
-
-    fold(
+    ),
+    (
         "split_hygiene_report",
         [
             ("leakage_safe_split", "ls_",
@@ -481,9 +457,8 @@ def register() -> None:
         "Split hygiene in one gate: cluster-respecting train/val/test "
         "splits (no near-dup straddles a split) plus URL-canonicalized "
         "cross-language document pairing (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "corpus_probe_report",
         [
             ("canary_extraction", "cx_", ["canary", "n_hits", "extracted"]),
@@ -493,9 +468,8 @@ def register() -> None:
         "Corpus probes in one gate: planted-canary (secret-sharer style) "
         "extraction counting plus JSON key census with coverage ratios "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "dedup_forensics_pipeline",
         [
             ("paragraph_dedup_global", "pg_",
@@ -508,9 +482,8 @@ def register() -> None:
         "Dedup forensics in one gate: corpus-global paragraph dedup, the "
         "pre-dedup cluster-size/bytes audit histogram, and banded "
         "edit-distance near-pair join (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "corpus_release_report",
         [
             ("vocab_drift_js", "vd_",
@@ -523,9 +496,8 @@ def register() -> None:
         "Corpus release gate in one row-set: version-over-version "
         "vocabulary drift (quantized JS + exact-ppm TV) plus the one-row "
         "corpus data card (operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "vocab_scaling_laws",
         [
             ("zipf_head_fit", "zf_",
@@ -538,9 +510,8 @@ def register() -> None:
         "Corpus-statistics scaling laws in one gate: Zipf log-log head "
         "slope fit plus the Heaps-law vocabulary growth curve "
         "(operators/dataprep.py).",
-    )
-
-    fold(
+    ),
+    (
         "packing_layout_report",
         [
             ("length_bucket_batching", "lb_",
@@ -552,9 +523,8 @@ def register() -> None:
         "Sequence-packing layouts in one gate: length-bucketed batch "
         "assembly with pad-waste accounting plus boundary-preserving "
         "next-fit-decreasing bin packing (operators/dataprep.py pack_*).",
-    )
-
-    fold(
+    ),
+    (
         "bitext_align_pipeline",
         [
             ("bitext_mining", "bx_",
@@ -565,4 +535,13 @@ def register() -> None:
         "Bilingual alignment in one gate: margin-based bitext sentence "
         "mining (mutual top-1) plus Gale-Church length-based DP alignment "
         "(operators/dataprep.py).",
-    )
+    ),
+]
+
+
+def register(queries: dict[str, QueryFn], oracles: dict[str, str]) -> None:
+    """Fold the sub-gates of `queries`/`oracles` into the `FOLDS` gates.
+    `queries` calls this once, after collecting every gate module and
+    before it orders the registry."""
+    for name, parts, doc in FOLDS:
+        fold(queries, oracles, name, parts, doc)

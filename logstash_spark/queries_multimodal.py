@@ -1,13 +1,6 @@
-"""Correctness-gate queries for the multimodal binary layer
-(`operators/multimodal.py`): image header metadata, video frame
-sampling, per-frame feature extraction, PCM audio stats.
-
-Gate design: payloads are synthesized DETERMINISTICALLY from doc_id as
-hex strings and materialized to real `binary` columns with `unhex` — so
-the Spark side must round-trip build → binary → REAL header/container
-parse, while the DuckDB oracle states the expected values in closed form
-from doc_id (ground truth that never runs the parser — a parser bug
-cannot cancel out).
+"""Correctness gates for binary image, video and audio payloads. Each
+`@query` pairs a Spark query over the driver test tables with the DuckDB
+SQL that re-derives its result; `queries` collects them.
 """
 
 from __future__ import annotations
@@ -15,12 +8,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logstash_spark.operators import dataprep as D
 from logstash_spark.operators import multimodal as M
-from logstash_spark.queries import query
+from logstash_spark.queries_common import _t, query
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+@query(
+    "multimodal_meta",
+    """
+    SELECT doc_id,
+           CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
+           CAST(octet_length(encode(text)) % 640 AS INTEGER) AS width,
+           CAST((octet_length(encode(text)) * 7) % 480 AS INTEGER) AS height,
+           CAST(octet_length(encode(text)) % 16 AS INTEGER) AS n_frames
+    FROM documents
+    """,
+)
+def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-payload plumbing: text → binary column → Arrow-batched
+    mapInPandas 'decode' (stubbed deterministic fake; real impl would call
+    PIL/ffmpeg per batch). Exercises binary schema + batch iteration."""
+    docs = _t(spark, sf_dir, "documents").withColumn("payload", F.encode(F.col("text"), "utf-8"))
+    return D.binary_meta_decode(docs, "payload")
 
 
 def _hexpad(c, n):  # uppercase fixed-width hex of a column
@@ -38,10 +47,6 @@ def _le4(c):  # 4-byte little-endian hex
         x.substr(7, 2), x.substr(5, 2), x.substr(3, 2), x.substr(1, 2)
     )
 
-
-# ---------------------------------------------------------------------------
-# image_header_meta — PNG/GIF/BMP/JPEG dimension extraction
-# ---------------------------------------------------------------------------
 
 # header lengths by construction (bytes): png 29, gif 13, bmp 30, jpeg 33
 @query(
@@ -64,7 +69,7 @@ def image_header_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     as binary, then `multimodal.image_meta` parses format + dims back
     out of the bytes. The oracle states expectations in closed form —
     the parser is exercised only on the Spark side. Map-only plan."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     w = (16 + F.col("doc_id") % 624).cast("long")
     h = (16 + (F.col("doc_id") * 7) % 464).cast("long")
     png = F.concat(
@@ -95,10 +100,6 @@ def image_header_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "format", "width", "height", "n_bytes"
     )
 
-
-# ---------------------------------------------------------------------------
-# video_frame_sample — SVID container, every-2nd-frame slicing
-# ---------------------------------------------------------------------------
 
 _NF = "2 + doc_id % 9"
 _FS = "4 + doc_id % 5"
@@ -142,14 +143,10 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses the header, slices every 2nd frame out of the binary, and
     fingerprints each frame. Oracle derives the same frames in closed
     form. Map-only: one explode to sampled frames, zero shuffle."""
-    docs = _docs(spark, sf_dir).select("doc_id", _svid_payload().alias("payload"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", _svid_payload().alias("payload"))
     out = M.frame_sample(docs, "payload", every=2)
     return out.select("doc_id", "n_frames", "frame_size", "frame_idx", "frame_md5")
 
-
-# ---------------------------------------------------------------------------
-# frame_block_features — Arrow/numpy feature extraction per sampled frame
-# ---------------------------------------------------------------------------
 
 @query(
     "frame_block_features",
@@ -185,7 +182,7 @@ def frame_block_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy block means (`multimodal.frame_features`, n_blocks=2, exact
     integer division). The oracle replays the byte algebra relationally.
     This is the exact batch shape a vision embedder drops into."""
-    docs = _docs(spark, sf_dir).select("doc_id", _svid_payload().alias("payload"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", _svid_payload().alias("payload"))
     frames = M.frame_sample(docs, "payload", every=2)
     feats = M.frame_features(
         frames, "frame", n_blocks=2, id_cols=("doc_id", "frame_idx")
@@ -198,10 +195,6 @@ def frame_block_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-
-# ---------------------------------------------------------------------------
-# audio_pcm_stats — WAV header + exact bounded-prefix sample stats
-# ---------------------------------------------------------------------------
 
 _NS = "8 + doc_id % 57"  # 8..64 samples, all within max_samples=64
 
@@ -241,7 +234,7 @@ def audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer stats over the sample prefix — signed decode, sum/|sum|/peak/
     sum-of-squares, all int64. Oracle states the closed form. Zero
     shuffle; cost bounded by max_samples, not payload size."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     n = (8 + F.col("doc_id") % 57).cast("long")
     rate = (8000 + (F.col("doc_id") % 3) * 4000).cast("long")
     ch = (1 + F.col("doc_id") % 2).cast("long")
@@ -266,11 +259,6 @@ def audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     built = docs.select("doc_id", payload.alias("payload"))
     return M.pcm_stats(built, "payload", max_samples=64)
 
-
-# ---------------------------------------------------------------------------
-# image_ahash_neardup — perceptual-hash image dedup through the text
-# pipeline's banding machinery
-# ---------------------------------------------------------------------------
 
 @query(
     "image_ahash_neardup",
@@ -334,7 +322,7 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     division-free form — independent derivations must agree bit-for-bit."""
     from logstash_spark.operators import dataprep as D
 
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     g = (F.col("doc_id") % 40).cast("string")
     hx0 = F.upper(
         F.concat(
@@ -361,11 +349,6 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp_table=fp,
     )
 
-
-# ---------------------------------------------------------------------------
-# image_resize_dedup — resolution-invariant image dedup end-to-end:
-# decode(synth) → resize → ahash → banded pairs
-# ---------------------------------------------------------------------------
 
 @query(
     "image_resize_dedup",
@@ -427,7 +410,7 @@ def image_resize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair gates."""
     from logstash_spark.operators import dataprep as D
 
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     g = (F.col("doc_id") % 30).cast("string")
     hx0 = F.upper(
         F.concat(*[F.md5(F.concat(F.lit("rz"), g, F.lit(f"_{k}"))) for k in range(4)])

@@ -1,12 +1,7 @@
-"""Correctness-gate queries, batch 12 (round 3): the STREAMING runtime
-under the cross-engine oracle. Each gate replays a benchmark parquet
-table through a real `readStream` file source, runs a stateful
-Structured Streaming operator (session windows, watermark dedupe),
-drains with trigger(availableNow), and compares the incremental answer
-to a DuckDB batch recomputation. With the whole table available the
-watermark drops nothing, so incremental must equal batch — which is the
-invariant the reference's pipeline integration tests assert for its
-aggregate/fingerprint filters (SURVEY.md §2.7 streaming semantics).
+"""Correctness gates for Structured Streaming runs of the windowed, dedupe,
+enrich and join paths. Each `@query` pairs a Spark query over the driver
+test tables with the DuckDB SQL that re-derives its result; `queries`
+collects them.
 """
 
 from __future__ import annotations
@@ -14,7 +9,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logstash_spark.queries import query
+from logstash_spark.queries_common import query
+
+
+@query(
+    "streaming_metrics_windows",
+    """
+    SELECT strftime(make_timestamp(epoch_us(ts) // 300000000 * 300000000),
+                    '%Y-%m-%d %H:%M:%S') AS window_start,
+           strftime(make_timestamp(epoch_us(ts) // 300000000 * 300000000
+                                   + 300000000),
+                    '%Y-%m-%d %H:%M:%S') AS window_end,
+           event_type,
+           CAST(count(*) AS BIGINT) AS cnt
+    FROM events
+    GROUP BY 1, 2, 3
+    """,
+)
+def streaming_metrics_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STRUCTURED STREAMING gate: the events table replayed through a
+    real `readStream` file source into `streaming.streaming_metrics`
+    (watermarked 5-minute tumbling counts by event_type), drained with
+    trigger availableNow into a memory sink, returned as the batch
+    result. With the full table available the watermark drops nothing,
+    so the incremental answer must equal the batch GROUP BY — which is
+    exactly what the oracle computes (Spark window() aligns to the unix
+    epoch; the oracle mirrors it with integer epoch arithmetic). This
+    puts the streaming runtime itself — source, state store, window
+    eviction, sink — under the driver's cross-engine gate, not just
+    unit tests."""
+    from logstash_spark.streaming.pipeline import (  # noqa: PLC0415
+        drain_available_now,
+        replay_table_stream,
+        streaming_metrics,
+    )
+
+    src = replay_table_stream(spark, sf_dir, "events", ts_col="ts")
+    agg = streaming_metrics(
+        src, "ts", ["event_type"], window_duration="5 minutes",
+        watermark="10 minutes",
+    )
+    return drain_available_now(agg, output_mode="complete").select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+            "window_start"
+        ),
+        F.date_format("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
+        "event_type",
+        "cnt",
+    )
 
 
 @query(

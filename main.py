@@ -69,9 +69,25 @@ def example_spec() -> dict:
     }
 
 
+#: every key `spec_from_json` reads, plus `drop_before_write` (read by main)
+SPEC_KEYS = frozenset({
+    "name", "filters", "routes", "else_sink", "aggregate_dims",
+    "aggregate_sum", "metrics_ts", "metrics_window", "drop_before_write",
+})
+
+
 def spec_from_json(doc: dict):
+    """Build the PipelineSpec from a JSON spec. A key outside `SPEC_KEYS`
+    raises ValueError: a typo or an unsupported setting (`sinks`,
+    `dlq_sink`, `listen`) must not be dropped silently."""
     from logstash_spark.plans.spec import FilterSpec, PipelineSpec
 
+    unknown = sorted(set(doc) - SPEC_KEYS)
+    if unknown:
+        raise ValueError(
+            f"unsupported spec key(s) {unknown}; a JSON spec accepts "
+            f"{sorted(SPEC_KEYS)}"
+        )
     return PipelineSpec(
         name=doc.get("name", "pipeline"),
         filters=[
@@ -129,7 +145,10 @@ def main(argv: list[str] | None = None) -> int:
     else:
         with open(args.spec) as f:
             doc = json.load(f)
-        spec = spec_from_json(doc)
+        try:
+            spec = spec_from_json(doc)
+        except ValueError as e:
+            ap.error(f"{args.spec}: {e}")
         drop = tuple(doc.get("drop_before_write", ()))
 
     from logstash_spark.session import get_spark

@@ -1,6 +1,6 @@
 """Output-side codecs: csv / syslog (RFC3164) / statsd serialization.
 
-The driver gates (queries_logstash7) pin the common paths against
+The driver gates (queries_codec) pin the common paths against
 DuckDB; these unit goldens cover the option surface the gates omit —
 custom csv separator, pid-less syslog tag with a literal severity,
 statsd without sender or sample_rate, gauge type.

@@ -1,5 +1,5 @@
 """gzip_lines codec: deterministic deflate (gzip_encode, mtime=0) and the
-inflate+line-split decode path. The driver gate (queries_logstash10)
+inflate+line-split decode path. The driver gate (queries_codec)
 pins the round trip against DuckDB; these goldens cover what the gate
 can't — byte-level determinism of the encoder, corrupt/null blob
 handling, keep_empty, and a multi-line payload produced outside the

@@ -1,4 +1,4 @@
-"""Round-5 registry fold mechanism (logstash_spark/queries_folds.py):
+"""Registry fold mechanism (logstash_spark/queries_folds.py):
 index-join folds must be exactly as strong as running their sub-gates
 separately — every sub value appears in the fold output, alignment is
 deterministic, and a drifted sub schema fails loudly.
@@ -70,45 +70,62 @@ def test_fold_contains_exact_sub_values(spark):
         assert got == sub_rows, (name, _s)
 
 
+def test_register_folds_the_dicts_it_is_given():
+    """`register` works on the dicts passed in: a fresh collection of the
+    gate modules folds to the registry's names and oracle SQL, and the
+    global registry is left alone."""
+    from logstash_spark.queries import GATE_MODULES, collect
+    from logstash_spark.queries_folds import register
+
+    before = list(QUERIES)
+    queries, oracles = collect(GATE_MODULES)
+    assert "image_header_meta" in queries
+    register(queries, oracles)
+    assert set(queries) == set(QUERIES)
+    assert oracles == {n: ORACLES[n] for n in oracles}
+    assert list(QUERIES) == before
+
+
 def test_fold_schema_drift_fails_loudly(spark):
     from logstash_spark.queries_folds import fold
 
-    QUERIES["_drift_probe"] = lambda s, d: s.range(1)
-    ORACLES["_drift_probe"] = "SELECT 1 AS id"
-    QUERIES["_drift_probe2"] = lambda s, d: s.range(1)
-    ORACLES["_drift_probe2"] = "SELECT 1 AS id"
-    try:
-        fold(
-            "_drift_fold",
-            [("_drift_probe", "a_", ["wrong_col"]),
-             ("_drift_probe2", "b_", ["id"])],
-            "test",
-        )
-        with pytest.raises(ValueError, match="_drift_probe.*wrong_col"):
-            QUERIES["_drift_fold"](spark, SF)
-    finally:
-        for k in ("_drift_fold", "_drift_probe", "_drift_probe2"):
-            QUERIES.pop(k, None)
-            ORACLES.pop(k, None)
+    queries = {"_drift_probe": lambda s, d: s.range(1),
+               "_drift_probe2": lambda s, d: s.range(1)}
+    oracles = {"_drift_probe": "SELECT 1 AS id",
+               "_drift_probe2": "SELECT 1 AS id"}
+    fold(
+        queries, oracles,
+        "_drift_fold",
+        [("_drift_probe", "a_", ["wrong_col"]),
+         ("_drift_probe2", "b_", ["id"])],
+        "test",
+    )
+    assert list(queries) == list(oracles) == ["_drift_fold"]
+    with pytest.raises(ValueError, match="_drift_probe.*wrong_col"):
+        queries["_drift_fold"](spark, SF)
 
 
 def test_fold_schema_guard_survives_optimize_flag():
     """`python -O` strips `assert`; the drift guard must still raise.
     The sub-gates return stand-in frames (only `.columns` is read before
-    the guard), so the child process needs no Spark session."""
+    the guard), so the child process needs no Spark session, and it
+    imports `queries_folds` alone: `fold` needs no registry module."""
     import subprocess
     import sys
 
     probe = """
-import types
-from logstash_spark.queries import ORACLES, QUERIES
+import sys, types
 from logstash_spark.queries_folds import fold
+queries, oracles = {}, {}
 for sub, cols in (("_o_a", ["id", "extra"]), ("_o_b", ["id"])):
-    QUERIES[sub] = lambda s, d, _c=cols: types.SimpleNamespace(columns=_c)
-    ORACLES[sub] = "SELECT 1 AS id"
-fold("_o_fold", [("_o_a", "a_", ["id"]), ("_o_b", "b_", ["id"])], "probe")
+    queries[sub] = lambda s, d, _c=cols: types.SimpleNamespace(columns=_c)
+    oracles[sub] = "SELECT 1 AS id"
+fold(queries, oracles, "_o_fold",
+     [("_o_a", "a_", ["id"]), ("_o_b", "b_", ["id"])], "probe")
+if "logstash_spark.queries" in sys.modules:  # `assert` is stripped here
+    sys.exit("fold imported the registry")
 try:
-    QUERIES["_o_fold"](None, "")
+    queries["_o_fold"](None, "")
 except ValueError as e:
     print("guarded:", e)
 """

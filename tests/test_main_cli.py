@@ -133,3 +133,34 @@ def test_main_cli_streaming_writes_physical_sinks_only(spark, tmp_path, monkeypa
     parts = sorted(p.name for p in (tmp_path / "sinks").iterdir() if p.name.startswith("sink="))
     assert parts == ["sink=errors"]
     assert spark.read.parquet(str(tmp_path / "sinks" / "sink=errors")).count() == 2
+
+
+def test_main_cli_rejects_unknown_spec_keys(tmp_path, capsys):
+    """A JSON spec key main.py does not read is an error, not a silent
+    default: `dlq_sink`, `sinks`, `listen` and a typo all name
+    themselves in the message, and no Spark session starts."""
+    import pytest
+
+    import main
+
+    doc = main.example_spec()
+    doc.update({
+        "dlq_sink": "failures",
+        "sinks": [{"name": "sink_edge", "drop_columns": ["tokens"]}],
+        "listen": ["metrics"],
+        "else_snk": "sink_rest",
+    })
+    spec_path = tmp_path / "spec.json"
+    spec_path.write_text(json.dumps(doc))
+    with pytest.raises(SystemExit) as exc:
+        main.main([
+            "--spec", str(spec_path), "--input", str(tmp_path / "in"),
+            "--sinks-root", str(tmp_path / "sinks"),
+        ])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    for key in ("dlq_sink", "sinks", "listen", "else_snk"):
+        assert f"'{key}'" in err, err
+    assert not (tmp_path / "sinks").exists()
+    # the example spec itself stays valid
+    main.spec_from_json(main.example_spec())

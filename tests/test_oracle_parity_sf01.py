@@ -23,8 +23,9 @@ from tests.test_oracle_parity import TABLES, _rows_to_set
 
 SF01_DIR = "/root/testdata/sf0.1"
 
-# The ~40 newest gates (registry modules dataprep25+ / logstash11+),
-# plus the round-4 surface. gale_church_align was the sf0.1 pathfinder
+# The ~40 newest gates (the eval, mix, wire-codec and streaming gates
+# now in queries_eval / queries_sampling / queries_codec /
+# queries_streaming), plus the round-4 surface. gale_church_align was the sf0.1 pathfinder
 # (verified bit-exact both scales in round 3) and stays as the canary.
 # Round 5: the former individually-listed eval/mix/batch-34/35 gates now
 # ride inside their queries_folds combined gates (each fold re-runs every

@@ -1,5 +1,5 @@
 """Registry driver-sample ordering: the correctness driver samples a
-bounded prefix of the registry per round, so _reorder_registry must put
+bounded prefix of the registry per round, so `driver_order` must put
 the verification frontier (failed / never-sampled / stale-green queries)
 ahead of queries already green in the latest round. Pure-Python tests —
 no Spark session."""
@@ -40,7 +40,7 @@ class TestRegistryOrder:
         green in the most recent round, and never-sampled queries sort
         before stale greens."""
         hist = Q._driver_history()
-        if not hist:  # fresh checkout — static list governs, nothing to check
+        if not hist:  # no records: registration order, nothing to check
             return
         latest = max(rnd for rnd, _ in hist.values())
         names = list(Q.QUERIES)
@@ -64,33 +64,62 @@ class TestRegistryOrder:
             if red in pos and cls(red) == 0:
                 assert pos[red] < 5
 
+    def test_driver_order_four_classes(self):
+        """failed (newest failure first) < never sampled < stale green
+        (oldest round first) < green in the latest round; ties keep
+        registration order."""
+        names = ["g_new", "f_old", "s3", "n1", "f_new", "s1", "n2", "s1b",
+                 "f_new_b"]
+        hist = {
+            "g_new": (5, True),
+            "f_old": (2, False),
+            "s3": (3, True),
+            "f_new": (4, False),
+            "s1": (1, True),
+            "s1b": (1, True),
+            "f_new_b": (4, False),
+        }
+        assert Q.driver_order(names, hist) == [
+            "f_new", "f_new_b", "f_old",   # failures, most recent first
+            "n1", "n2",                    # never sampled
+            "s1", "s1b", "s3",             # stale greens, oldest round first
+            "g_new",                       # green in the latest round
+        ]
+
+    def test_driver_order_empty_history_is_registration_order(self):
+        names = ["c", "a", "b"]
+        assert Q.driver_order(names, {}) == names
+        # names absent from the registry do not matter
+        assert Q.driver_order(names, {"zz": (3, False)}) == names
+
     def test_queries_and_oracles_share_order(self):
         assert list(Q.QUERIES) == [n for n in Q.QUERIES if n in Q.ORACLES]
         assert list(Q.ORACLES) == list(Q.QUERIES)
 
 
-
 def test_registry_order_independent_of_import_order(tmp_path):
-    """Importing queries_folds before queries must give the same
-    registry: the folds register by an explicit call inside `queries`,
-    so the ordering pass always sees them. The package runs from a copy
-    whose only CORRECTNESS record says fold gate `image_pipeline` failed;
-    it must lead the registry whichever module is imported first."""
+    """Importing any `queries*` module first must give the same registry
+    as importing `queries`: the gate modules only mark their gates, and
+    `queries` assembles and orders them in one place. The package runs
+    from a copy whose only CORRECTNESS record says fold gate
+    `image_pipeline` failed; it must lead the registry whichever module
+    is imported first. One fresh interpreter per module."""
     import os
     import shutil
     import subprocess
     import sys
 
+    pkg = os.path.dirname(Q.__file__)
     shutil.copytree(
-        os.path.dirname(Q.__file__),
-        tmp_path / "logstash_spark",
+        pkg, tmp_path / "logstash_spark",
         ignore=shutil.ignore_patterns("__pycache__"),
     )
     (tmp_path / "CORRECTNESS_r01.json").write_text(
         json.dumps({"image_pipeline": {"err": "boom"}})
     )
 
-    def registry(first: str) -> list[str]:
+    def registry(first: str) -> list[str] | str:
+        """The registry after importing `first`, or the error tail."""
         probe = (
             f"import {first}\n"
             "from logstash_spark.queries import ORACLES, QUERIES\n"
@@ -101,10 +130,21 @@ def test_registry_order_independent_of_import_order(tmp_path):
             [sys.executable, "-c", probe],
             cwd=tmp_path, capture_output=True, text=True, timeout=300,
         )
-        assert out.returncode == 0, out.stderr[-2000:]
+        if out.returncode != 0:
+            return out.stderr.strip().splitlines()[-1]
         return out.stdout.split()
 
     via_queries = registry("logstash_spark.queries")
+    assert isinstance(via_queries, list), via_queries
     assert via_queries[0] == "image_pipeline"
     assert "image_header_meta" not in via_queries  # folded into it
-    assert registry("logstash_spark.queries_folds") == via_queries
+    modules = sorted(
+        f[:-3] for f in os.listdir(pkg) if f.startswith("queries") and f.endswith(".py")
+    )
+    assert "queries_folds" in modules and "queries_common" in modules
+    differ = {}
+    for mod in modules:
+        got = registry(f"logstash_spark.{mod}")
+        if got != via_queries:
+            differ[mod] = got if isinstance(got, str) else "another order"
+    assert not differ, differ

@@ -106,7 +106,7 @@ def test_webtext_plan_is_pure_catalyst(spark):
 def test_gate_repaired_ok_all_rows(spark):
     # mojibake_fix is driver-folded into html_clean_pipeline (round 5);
     # the sub-gate function remains the direct unit surface.
-    from logstash_spark.queries_dataprep8 import mojibake_fix
+    from logstash_spark.queries_text import mojibake_fix
 
     rows = mojibake_fix(spark, SF).agg(
         F.min("repaired_ok").alias("mn"), F.count("*").alias("c")
