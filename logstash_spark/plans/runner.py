@@ -3,11 +3,17 @@
 The Logstash hot loop (SURVEY.md §3.2: queue → filter datasets →
 output delegators) becomes ONE lazily-planned DataFrame:
 
-    read → parse/enrich columns → route flags → persist → ONE
-    explode(routes) + partitioned write shared by the plain sinks, each
-    partition committed into its own table (DLQ / codec / partition_by /
-    drop_columns sinks write on their own) + aggregate, metrics, lineage
-    side tables
+    read → parse/enrich columns → route flags → persist
+      → _sink_lineage write (materializes the persisted frame,
+        observes the per-sink totals)
+      → stage, all jobs at once, each into _fanout_staging/<run_id>/<k>:
+          ONE explode(routes) + partitioned write shared by the plain sinks
+          one write per DLQ / codec / partition_by / drop_columns /
+            zero-row sink
+          _aggregates, _metrics, _lineage side tables
+      → commit, one table at a time: the sinks in spec order (each
+        shared-write partition renamed into its own table), then
+        _aggregates, _metrics, _lineage
 
 Deliberate physical choices (SURVEY.md §4/§7.3 — the only places Spark
 needs a human decision):
@@ -19,6 +25,16 @@ needs a human decision):
     all output delegators in one pass;
   * per-sink totals observed (`DataFrame.observe`) on the
     `_sink_lineage` write that already runs, not read back;
+  * stage concurrently, commit serially: at batch sizes each write
+    costs ~0.2-0.3 s of driver and job latency even over a few dozen
+    rows, so every write after `_sink_lineage` runs at the same time
+    from one thread pool (sized to the writes, tasks wrapped by
+    `inheritable_thread_target` so their jobs stay in the caller's job
+    group), into its own staging dir; once every job has finished, the
+    tables publish one by one in spec order (Iceberg tables, which
+    cannot stage, write in that commit phase). Logstash likewise hands
+    a batch to every output delegator and acks it once all have it
+    (SURVEY.md §3.2). A failed write commits nothing;
   * per-sink aggregates computed from ONE `explode(routes)` frame so all
     sinks share a single shuffle instead of K groupBy jobs;
   * lineage rows derived via `spark_partition_id()` at read time;
@@ -44,8 +60,10 @@ import json
 import os
 import re
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -59,9 +77,10 @@ from logstash_spark.sources.tableio import (
     SnapshotTable,
     iceberg_available,
     open_table,
+    write_parquet,
 )
 
-#: under `sinks_root`: uncommitted partitions of the shared sink write,
+#: under `sinks_root`: the uncommitted output of every staged write,
 #: one subdirectory per run_id, removed once every table has committed
 STAGING_DIR = "_fanout_staging"
 #: partition column of the shared write (the sink's 1-based index among
@@ -305,6 +324,29 @@ def _input_fingerprint(df: DataFrame, spec: PipelineSpec) -> str:
     return hashlib.sha256(basis.encode()).hexdigest()[:16]
 
 
+def _write_at_once(
+    spark: SparkSession, jobs: list[tuple[DataFrame, str, list[str] | None]]
+) -> None:
+    """Run every staged `(frame, dir, partition_by)` write job at the
+    same time, one thread each. The task is wrapped on the calling
+    thread, so every job keeps the caller's job group, other local
+    properties and session tags. All jobs finish before the first
+    failure, if any, is raised."""
+    task = inheritable_thread_target(spark)(write_parquet)
+    with ThreadPoolExecutor(max_workers=max(1, len(jobs))) as pool:
+        futures = [pool.submit(task, *job) for job in jobs]
+    for f in futures:
+        f.result()
+
+
+def _clear_staging(staging: str) -> None:
+    shutil.rmtree(staging, ignore_errors=True)
+    try:
+        os.rmdir(os.path.dirname(staging))  # only if no other run stages
+    except OSError:
+        pass
+
+
 def run_pipeline(
     spark: SparkSession,
     input_df: DataFrame,
@@ -323,7 +365,11 @@ def run_pipeline(
     feed downstream. When `persist_tracker` is given, cached frames are
     appended to it instead of being unpersisted here, so the fan-out
     frame stays alive until every downstream pipeline consuming this
-    pipeline's address frames has run."""
+    pipeline's address frames has run.
+
+    `fail_after_sink` names a table (a sink, `_sink_lineage`,
+    `_aggregates`, `_metrics` or `_lineage`); the run raises right after
+    that table commits, as a crash at that point would stop it."""
     run_id = _input_fingerprint(input_df, spec)
     if table_format == "auto":
         # one classpath probe per run, not one per table
@@ -338,10 +384,9 @@ def run_pipeline(
         latest = table.latest()
         return resume and latest is not None and latest.lineage.get("run_id") == run_id
 
-    def _append_side_table(name: str, frame: DataFrame) -> None:
-        table = _mk(name)
-        if not _committed(table):
-            table.append(frame, lineage={"run_id": run_id})
+    def _crash_point(name: str) -> None:
+        if fail_after_sink == name:
+            raise RuntimeError(f"injected failure after {name}")
 
     # per-partition lineage must be stamped BEFORE any repartitioning
     input_df = input_df.withColumn("_in_part", F.spark_partition_id())
@@ -352,212 +397,233 @@ def run_pipeline(
 
     result = RunResult(run_id=run_id)
     sink_names = spec.sink_names()
-
-    # ---- per-(sink, input-partition) lineage: written DISTRIBUTED ------
-    # One job writes the (sink, partition, rows) table; the K per-sink
-    # totals ride along as observed metrics of that same job. Never
-    # O(K*P) driver rows — at 10^6 input partitions x 6 sinks the detail
-    # stays in the table.
-    sink_lineage_df = (
-        routed.select(F.explode(ROUTES).alias("sink"), "_in_part")
-        .groupBy("sink", "_in_part")
-        .agg(F.count("*").alias("rows"))
-        .withColumnRenamed("_in_part", "partition_id")
-        .withColumn("run_id", F.lit(run_id))
-    )
-    sl_table = _mk("_sink_lineage")
-    if not _committed(sl_table):
-        obs = Observation()
-        per_sink = []
-        for i, s in enumerate(sink_names):
-            hit = F.col("sink") == s
-            per_sink += [
-                F.sum(F.when(hit, F.col("rows"))).alias(f"rows_{i}"),
-                F.count(F.when(hit, True)).alias(f"parts_{i}"),
-            ]
-        sl_table.append(
-            sink_lineage_df.observe(obs, *per_sink) if per_sink else sink_lineage_df,
-            lineage={"run_id": run_id},
+    try:
+        # ---- per-(sink, input-partition) lineage: written DISTRIBUTED --
+        # One job writes the (sink, partition, rows) table; the K per-sink
+        # totals ride along as observed metrics of that same job. Never
+        # O(K*P) driver rows — at 10^6 input partitions x 6 sinks the
+        # detail stays in the table. It runs alone and first: it
+        # materializes `routed`, and the stage below needs its totals.
+        sink_lineage_df = (
+            routed.select(F.explode(ROUTES).alias("sink"), "_in_part")
+            .groupBy("sink", "_in_part")
+            .agg(F.count("*").alias("rows"))
+            .withColumnRenamed("_in_part", "partition_id")
+            .withColumn("run_id", F.lit(run_id))
         )
-        m = obs.get if per_sink else {}
-        totals = {
-            s: (int(m[f"rows_{i}"]), int(m[f"parts_{i}"]))
-            for i, s in enumerate(sink_names)
-            if m[f"parts_{i}"]
-        }
-    else:
-        # resume: the lineage write is skipped, so read its totals back
-        totals = {
-            r["sink"]: (int(r["rows"]), int(r["n_parts"]))
-            for r in sl_table.read(spark)
-            .where(F.col("run_id") == run_id)
-            .dropDuplicates(["sink", "partition_id"])  # replays write identical rows
-            .groupBy("sink")
-            .agg(F.sum("rows").alias("rows"), F.count("*").alias("n_parts"))
-            .collect()  # K rows (one per sink) — bounded
-        }
-
-    def sink_frame(sink: str, sspec: SinkSpec | None) -> DataFrame:
-        """The rows one table receives, shaped for that table."""
-        out = route_filter(routed, sink).drop(ROUTES, "_in_part", *drop_before_write)
-        if sink != spec.dlq_sink:
-            # [@metadata] is pipeline-scratch, never serialized
-            # (Event.java §getMetadata); the DLQ keeps it — the
-            # reference DLQ stores the full event for the replay reader
-            out = out.drop(METADATA)
-        if sspec is not None:
-            if sspec.drop_columns:
-                out = out.drop(*sspec.drop_columns)
-            if sspec.codec:
-                # output-side `codec => ...`: serialize before the write
-                from logstash_spark.plans.lscl import apply_encode_codec
-
-                out = apply_encode_codec(out, sspec.codec, sspec.codec_conf)
-        if sink == spec.dlq_sink and "tags" in out.columns:
-            # DLQ entries carry failure metadata like the reference's DLQ
-            # (org.logstash DLQWriter stores the event + reason): the
-            # failure tags that routed the event here.
-            out = out.withColumn("_dlq_reason", F.concat_ws(",", F.col("tags")))
-        return out
-
-    # ---- which sinks to write (idempotent via run_id in lineage) -------
-    virtual = spec.virtual_sends()
-    sink_specs = {s.name: s for s in spec.sinks}
-    pending: list[tuple[str, SnapshotTable | IcebergTable, SinkSpec | None]] = []
-    for sink in sink_names:
-        if sink in virtual:
-            # pipeline-to-pipeline send: no table, just the frame; counts
-            # still come from the shared explode(routes) lineage job
-            result.address_frames[virtual[sink]] = route_filter(
-                routed, sink
-            ).drop(ROUTES, "_in_part")
-            result.sink_counts[sink] = totals.get(sink, (0, 0))[0]
-            continue
-        table = _mk(sink)
-        if _committed(table):
-            result.skipped_sinks.append(sink)
-            continue
-        pending.append((sink, table, sink_specs.get(sink)))
-
-    # ---- ONE partitioned write for every plain-schema sink -------------
-    # Sinks on the default SinkSpec share one explode(routes) and one
-    # write job, partitioned by the sink's integer index into a staging
-    # dir; each partition dir is then renamed into its table. The DLQ
-    # (_dlq_reason, keeps [@metadata]), codec / partition_by /
-    # drop_columns sinks and Iceberg tables write on their own below, and
-    # so does a sink that routed no rows: it gets no partition dir, and
-    # its own (empty) write still commits a file carrying the schema.
-    shared = [
-        sink for sink, table, sspec in pending
-        if sink != spec.dlq_sink
-        and isinstance(table, SnapshotTable)
-        and not (sspec and (sspec.codec or sspec.partition_by or sspec.drop_columns))
-        and totals.get(sink, (0, 0))[0] > 0
-    ]
-    staging = os.path.join(sinks_root, STAGING_DIR, run_id)
-    staged: dict[str, str] = {}
-    if shared:
-        taken = {c.lower() for c in routed.columns}
-        part_col = FANOUT_COL
-        while part_col in taken:  # never collide with a user column
-            part_col = "_" + part_col
-        idx = F.array_position(F.array(*[F.lit(s) for s in shared]), F.col(part_col))
-        (
-            routed.select("*", F.explode(ROUTES).alias(part_col))
-            .withColumn(part_col, idx)  # 1-based; 0 = not a shared sink
-            .where(F.col(part_col) > 0)
-            .drop(ROUTES, "_in_part", *drop_before_write, METADATA)
-            # overwrite also clears what a crashed run with this
-            # run_id left staged but never committed
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(staging)
-        )
-        staged = {
-            s: os.path.join(staging, f"{part_col}={i}")
-            for i, s in enumerate(shared, start=1)
-        }
-
-    # ---- commit every table in spec order ------------------------------
-    for sink, table, sspec in pending:
-        rows, n_parts = totals.get(sink, (0, 0))
-        lineage = {
-            "run_id": run_id,
-            "rows": rows,
-            "n_partitions": n_parts,
-            # per-partition detail lives in the _sink_lineage table,
-            # keyed by (run_id, sink) — unbounded detail never enters
-            # the driver-side manifest
-            "detail_table": "_sink_lineage",
-        }
-        meta = {"pipeline": spec.name, "sink": sink}
-        if sink in staged:
-            table.commit_dir(staged[sink], lineage=lineage, meta=meta)
-        else:
-            table.append(
-                sink_frame(sink, sspec),
-                lineage=lineage,
-                meta=meta,
-                partition_by=(sspec.partition_by or None) if sspec else None,
+        sl_table = _mk("_sink_lineage")
+        if not _committed(sl_table):
+            obs = Observation()
+            per_sink = []
+            for i, s in enumerate(sink_names):
+                hit = F.col("sink") == s
+                per_sink += [
+                    F.sum(F.when(hit, F.col("rows"))).alias(f"rows_{i}"),
+                    F.count(F.when(hit, True)).alias(f"parts_{i}"),
+                ]
+            sl_table.append(
+                sink_lineage_df.observe(obs, *per_sink) if per_sink else sink_lineage_df,
+                lineage={"run_id": run_id},
             )
-        result.sink_counts[sink] = rows
-        if fail_after_sink == sink:
+            _crash_point("_sink_lineage")
+            m = obs.get if per_sink else {}
+            totals = {
+                s: (int(m[f"rows_{i}"]), int(m[f"parts_{i}"]))
+                for i, s in enumerate(sink_names)
+                if m[f"parts_{i}"]
+            }
+        else:
+            # resume: the lineage write is skipped, so read its totals back
+            totals = {
+                r["sink"]: (int(r["rows"]), int(r["n_parts"]))
+                for r in sl_table.read(spark)
+                .where(F.col("run_id") == run_id)
+                .dropDuplicates(["sink", "partition_id"])  # replays write identical rows
+                .groupBy("sink")
+                .agg(F.sum("rows").alias("rows"), F.count("*").alias("n_parts"))
+                .collect()  # K rows (one per sink) — bounded
+            }
+
+        def sink_frame(sink: str, sspec: SinkSpec | None) -> DataFrame:
+            """The rows one table receives, shaped for that table."""
+            out = route_filter(routed, sink).drop(ROUTES, "_in_part", *drop_before_write)
+            if sink != spec.dlq_sink:
+                # [@metadata] is pipeline-scratch, never serialized
+                # (Event.java §getMetadata); the DLQ keeps it — the
+                # reference DLQ stores the full event for the replay reader
+                out = out.drop(METADATA)
+            if sspec is not None:
+                if sspec.drop_columns:
+                    out = out.drop(*sspec.drop_columns)
+                if sspec.codec:
+                    # output-side `codec => ...`: serialize before the write
+                    from logstash_spark.plans.lscl import apply_encode_codec
+
+                    out = apply_encode_codec(out, sspec.codec, sspec.codec_conf)
+            if sink == spec.dlq_sink and "tags" in out.columns:
+                # DLQ entries carry failure metadata like the reference's
+                # DLQ (org.logstash DLQWriter stores the event + reason):
+                # the failure tags that routed the event here.
+                out = out.withColumn("_dlq_reason", F.concat_ws(",", F.col("tags")))
+            return out
+
+        # ---- stage: every remaining write, planned here, run at once ---
+        # Each write job lands in its own directory under the run's
+        # staging dir; the tables commit from there afterwards. Cleared
+        # first: a crashed run with this run_id may have left it.
+        staging = os.path.join(sinks_root, STAGING_DIR, run_id)
+        shutil.rmtree(staging, ignore_errors=True)
+        jobs: list[tuple[DataFrame, str, list[str] | None]] = []
+
+        def stage(frame: DataFrame, partition_by: list[str] | None = None) -> str:
+            out = os.path.join(staging, str(len(jobs)))
+            jobs.append((frame, out, partition_by))
+            return out
+
+        def source(table, frame: DataFrame, partition_by=None) -> DataFrame | str:
+            """What `table.append` commits: a staged directory, or, for an
+            Iceberg table, the frame itself, written in the commit phase."""
+            if isinstance(table, SnapshotTable):
+                return stage(frame, partition_by)
+            return frame
+
+        # ---- which sinks to write (idempotent via run_id in lineage) ---
+        virtual = spec.virtual_sends()
+        sink_specs = {s.name: s for s in spec.sinks}
+        pending: list[tuple[str, SnapshotTable | IcebergTable, SinkSpec | None]] = []
+        for sink in sink_names:
+            if sink in virtual:
+                # pipeline-to-pipeline send: no table, just the frame;
+                # counts still come from the shared explode(routes)
+                # lineage job
+                result.address_frames[virtual[sink]] = route_filter(
+                    routed, sink
+                ).drop(ROUTES, "_in_part")
+                result.sink_counts[sink] = totals.get(sink, (0, 0))[0]
+                continue
+            table = _mk(sink)
+            if _committed(table):
+                result.skipped_sinks.append(sink)
+                continue
+            pending.append((sink, table, sink_specs.get(sink)))
+
+        # ---- ONE partitioned write for every plain-schema sink ---------
+        # Sinks on the default SinkSpec share one explode(routes) and one
+        # write job, partitioned by the sink's integer index; each
+        # partition dir is then renamed into its table. The DLQ
+        # (_dlq_reason, keeps [@metadata]), codec / partition_by /
+        # drop_columns sinks and Iceberg tables write on their own, and
+        # so does a sink that routed no rows: it gets no partition dir,
+        # and its own (empty) write still commits a file carrying the
+        # schema.
+        shared = [
+            sink for sink, table, sspec in pending
+            if sink != spec.dlq_sink
+            and isinstance(table, SnapshotTable)
+            and not (sspec and (sspec.codec or sspec.partition_by or sspec.drop_columns))
+            and totals.get(sink, (0, 0))[0] > 0
+        ]
+        staged: dict[str, str] = {}
+        if shared:
+            taken = {c.lower() for c in routed.columns}
+            part_col = FANOUT_COL
+            while part_col in taken:  # never collide with a user column
+                part_col = "_" + part_col
+            idx = F.array_position(F.array(*[F.lit(s) for s in shared]), F.col(part_col))
+            out = stage(
+                routed.select("*", F.explode(ROUTES).alias(part_col))
+                .withColumn(part_col, idx)  # 1-based; 0 = not a shared sink
+                .where(F.col(part_col) > 0)
+                .drop(ROUTES, "_in_part", *drop_before_write, METADATA),
+                [part_col],
+            )
+            staged = {
+                s: os.path.join(out, f"{part_col}={i}")
+                for i, s in enumerate(shared, start=1)
+            }
+
+        # (table name, table, what it commits, lineage, meta, partition_by)
+        commits: list[tuple] = []
+        for sink, table, sspec in pending:
+            rows, n_parts = totals.get(sink, (0, 0))
+            lineage = {
+                "run_id": run_id,
+                "rows": rows,
+                "n_partitions": n_parts,
+                # per-partition detail lives in the _sink_lineage table,
+                # keyed by (run_id, sink) — unbounded detail never enters
+                # the driver-side manifest
+                "detail_table": "_sink_lineage",
+            }
+            partition_by = (sspec.partition_by or None) if sspec else None
+            data = staged.get(sink) or source(table, sink_frame(sink, sspec), partition_by)
+            meta = {"pipeline": spec.name, "sink": sink}
+            commits.append((sink, table, data, lineage, meta, partition_by))
+            result.sink_counts[sink] = rows
+
+        # ---- aggregates: ONE shuffle for all sinks via explode(routes) -
+        dims = [d for d in spec.aggregate_dims if d in routed.columns]
+        exploded = routed.select(
+            F.explode(ROUTES).alias("sink"), *dims,
+            *( [spec.aggregate_sum] if spec.aggregate_sum and spec.aggregate_sum in routed.columns else [] ),
+            *( ["doc_id"] if "doc_id" in routed.columns else [] ),
+        )
+        aggs = [F.count("*").alias("cnt")]
+        if spec.aggregate_sum and spec.aggregate_sum in routed.columns:
+            aggs.append(F.sum(spec.aggregate_sum).alias(f"sum_{spec.aggregate_sum}"))
+        if "doc_id" in routed.columns:
+            aggs.append(F.approx_count_distinct("doc_id").alias("approx_docs"))
+        result.aggregates = exploded.rollup("sink", *dims).agg(*aggs)
+        side = [("_aggregates", result.aggregates)]
+
+        # ---- metrics side table ----
+        if spec.metrics_ts and spec.metrics_ts in routed.columns:
+            from logstash_spark.operators.aggregate import metrics as metrics_op
+
+            result.metrics = metrics_op(
+                routed, spec.metrics_ts, dims, window_duration=spec.metrics_window
+            )
+            side.append(("_metrics", result.metrics))
+
+        # ---- lineage side table: one row per input partition ----
+        result.lineage = (
+            routed.groupBy("_in_part")
+            .agg(
+                F.count("*").alias("input_rows"),
+                F.sum(F.size(ROUTES)).alias("routed_rows"),
+            )
+            .withColumnRenamed("_in_part", "partition_id")
+            .withColumn("run_id", F.lit(run_id))
+        )
+        side.append(("_lineage", result.lineage))
+        for name, frame in side:
+            table = _mk(name)
+            if not _committed(table):
+                commits.append(
+                    (name, table, source(table, frame), {"run_id": run_id}, None, None)
+                )
+
+        # ---- run every staged write at once; a failure commits nothing
+        try:
+            _write_at_once(spark, jobs)
+        except BaseException:
+            _clear_staging(staging)
+            raise
+
+        # ---- commit every table one by one: sinks in spec order, then
+        # the side tables --------------------------------------------------
+        for name, table, data, lineage, meta, partition_by in commits:
+            table.append(data, lineage=lineage, meta=meta, partition_by=partition_by)
+            _crash_point(name)
+        _clear_staging(staging)
+        return result
+    finally:
+        if persist_tracker is not None:
+            # caller (plans.graph) owns cache lifetime — downstream
+            # pipelines still read this pipeline's address frames
+            persist_tracker.append(routed)
+            persist_tracker.extend(persisted)
+        else:
             routed.unpersist()
             for p in persisted:
                 p.unpersist()
-            raise RuntimeError(f"injected failure after sink {sink}")
-    shutil.rmtree(staging, ignore_errors=True)
-    try:
-        os.rmdir(os.path.dirname(staging))  # only if no other run stages
-    except OSError:
-        pass
-
-    # ---- aggregates: ONE shuffle for all sinks via explode(routes) ----
-    dims = [d for d in spec.aggregate_dims if d in routed.columns]
-    exploded = routed.select(
-        F.explode(ROUTES).alias("sink"), *dims,
-        *( [spec.aggregate_sum] if spec.aggregate_sum and spec.aggregate_sum in routed.columns else [] ),
-        *( ["doc_id"] if "doc_id" in routed.columns else [] ),
-    )
-    aggs = [F.count("*").alias("cnt")]
-    if spec.aggregate_sum and spec.aggregate_sum in routed.columns:
-        aggs.append(F.sum(spec.aggregate_sum).alias(f"sum_{spec.aggregate_sum}"))
-    if "doc_id" in routed.columns:
-        aggs.append(F.approx_count_distinct("doc_id").alias("approx_docs"))
-    agg_df = exploded.rollup("sink", *dims).agg(*aggs)
-    _append_side_table("_aggregates", agg_df)
-    result.aggregates = agg_df
-
-    # ---- metrics side table ----
-    if spec.metrics_ts and spec.metrics_ts in routed.columns:
-        from logstash_spark.operators.aggregate import metrics as metrics_op
-
-        m = metrics_op(
-            routed, spec.metrics_ts, dims, window_duration=spec.metrics_window
-        )
-        _append_side_table("_metrics", m)
-        result.metrics = m
-
-    # ---- lineage side table: one row per input partition ----
-    lineage_df = (
-        routed.groupBy("_in_part")
-        .agg(
-            F.count("*").alias("input_rows"),
-            F.sum(F.size(ROUTES)).alias("routed_rows"),
-        )
-        .withColumnRenamed("_in_part", "partition_id")
-        .withColumn("run_id", F.lit(run_id))
-    )
-    _append_side_table("_lineage", lineage_df)
-    result.lineage = lineage_df
-
-    if persist_tracker is not None:
-        # caller (plans.graph) owns cache lifetime — downstream pipelines
-        # still read this pipeline's address frames
-        persist_tracker.append(routed)
-        persist_tracker.extend(persisted)
-    else:
-        routed.unpersist()
-        for p in persisted:
-            p.unpersist()
-    return result

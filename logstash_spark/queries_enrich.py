@@ -5,6 +5,7 @@ re-derives its result; `queries` collects them.
 
 from __future__ import annotations
 
+import atexit
 import os
 import sqlite3
 import tempfile
@@ -872,15 +873,23 @@ def anonymize_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DB_PATH: str | None = None
 
 
+def _unlink_quietly(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
+
+
 def _geo_db() -> str:
-    """Deterministic sqlite lookup table, built once per process:
-    host-k → two rows (east/west) for k<20, one row (eu) for 20<=k<40,
-    no rows for k>=40."""
+    """Deterministic sqlite lookup table, built once per process and
+    unlinked at interpreter exit: host-k → two rows (east/west) for
+    k<20, one row (eu) for 20<=k<40, no rows for k>=40."""
     global _DB_PATH
     if _DB_PATH and os.path.exists(_DB_PATH):
         return _DB_PATH
     fd, path = tempfile.mkstemp(prefix="lookup_gate_", suffix=".db")
     os.close(fd)
+    atexit.register(_unlink_quietly, path)
     conn = sqlite3.connect(path)
     conn.execute("CREATE TABLE geo (host TEXT, code TEXT, region TEXT)")
     rows = []

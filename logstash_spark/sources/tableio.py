@@ -56,6 +56,16 @@ class Snapshot:
     meta: dict[str, Any]
 
 
+def write_parquet(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
+    """Write `df` as a parquet directory at `path`, replacing what is there."""
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
+
+
 class SnapshotTable:
     """Parquet-directory table with atomic JSON snapshot manifests."""
 
@@ -86,34 +96,23 @@ class SnapshotTable:
 
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | str,
         *,
         lineage: dict[str, Any] | None = None,
         meta: dict[str, Any] | None = None,
         partition_by: list[str] | None = None,
     ) -> Snapshot:
-        """Write df as a new snapshot = previous live files + new dir."""
+        """Publish a new snapshot = previous live files + one new dir.
 
-        def write(out: str) -> None:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(out)
-
-        return self._commit(write, lineage, meta)
-
-    def commit_dir(
-        self,
-        src: str,
-        *,
-        lineage: dict[str, Any] | None = None,
-        meta: dict[str, Any] | None = None,
-    ) -> Snapshot:
-        """Adopt an already-written parquet directory as a new snapshot:
-        `src` is renamed to `data/snap-NNNNNN-*` (same filesystem) and
-        published exactly like an `append`. Lets one partitioned write
-        feed several tables without a write job per table."""
-        return self._commit(lambda out: os.rename(src, out), lineage, meta)
+        `df` is either a frame, written here, or the path of a parquet
+        directory an earlier write staged on the same filesystem, which
+        is renamed to `data/snap-NNNNNN-*` (its layout is kept, so
+        `partition_by` does not apply). Staging lets one partitioned
+        write feed several tables, and lets several write jobs run at
+        once while their tables still commit one by one."""
+        if isinstance(df, str):
+            return self._commit(lambda out: os.rename(df, out), lineage, meta)
+        return self._commit(lambda out: write_parquet(df, out, partition_by), lineage, meta)
 
     def _commit(self, place, lineage, meta) -> Snapshot:
         """Materialize the new data dir via `place(abs_path)`, then

@@ -123,22 +123,28 @@ def drain_available_now(
     """Run a streaming DataFrame to completion with trigger(availableNow)
     into a memory sink and return the drained result as a batch frame.
     One-shot incremental execution: exactly what a resumable production
-    job does per deployment tick, minus the loop."""
+    job does per deployment tick, minus the loop. The query's scratch
+    checkpoint is removed once it has terminated; the drained rows live
+    in the driver-side memory table."""
+    import shutil
     import tempfile
     import uuid
 
     spark = result.sparkSession
     sink = f"drain_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="drain_ckpt_")
-    q = (
-        result.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            result.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(sink)
 
 

@@ -52,6 +52,47 @@ def test_flagship_run_job_count_is_pinned(spark, tmp_path):
     assert STAGING_DIR not in os.listdir(tmp_path)
 
 
+def test_staged_writes_run_at_once_in_the_callers_job_group(spark, tmp_path, monkeypatch):
+    """Every write after `_sink_lineage` (the shared sink write, the
+    DLQ and the three side tables) is in flight at the same time: each
+    waits at a barrier only all five together can pass. Each runs in
+    the caller's job group, and the tables still commit in spec order."""
+    import threading
+
+    import logstash_spark.plans.runner as runner
+
+    barrier = threading.Barrier(5, timeout=60)
+    write = runner.write_parquet
+    groups = []
+    sc = spark.sparkContext
+
+    def gated(frame, path, partition_by=None):
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        barrier.wait()
+        write(frame, path, partition_by)
+
+    commits = []
+    append = SnapshotTable.append
+
+    def recording(table, *args, **kwargs):
+        commits.append(os.path.basename(table.root))
+        return append(table, *args, **kwargs)
+
+    monkeypatch.setattr(runner, "write_parquet", gated)
+    monkeypatch.setattr(SnapshotTable, "append", recording)
+    sc.setJobGroup("test_staged_writes", "flagship run_pipeline")
+    try:
+        run_flagship(spark, input_sequences(spark, 300), str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert groups == ["test_staged_writes"] * 5
+    assert commits == [
+        "_sink_lineage", "sink_errors", "sink_edge", "sink_service", "sink_rest",
+        "dlq", "_aggregates", "_metrics", "_lineage",
+    ]
+
+
 def test_empty_shared_sink_commits_readable_snapshot(spark, tmp_path):
     df = input_sequences(spark, 200)
     spec = PipelineSpec(

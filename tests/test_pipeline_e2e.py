@@ -152,22 +152,6 @@ def test_processed_partitions_watermark(spark, run):
     assert t.processed_partitions(spark, run_id="nope") == set()
 
 
-def test_resume_skips_committed_sinks_no_duplicates(spark, tmp_path):
-    """FIXTURES.md F6: crash after first sink commit → restart → every sink
-    has exactly one copy of its rows."""
-    root = str(tmp_path)
-    df = input_sequences(spark, 500)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_flagship(spark, df, root, fail_after_sink="sink_errors")
-    res = run_flagship(spark, df, root)  # restart, same input
-    assert "sink_errors" in res.skipped_sinks
-    exp = _expected(500)
-    for sink, want in exp.items():
-        t = SnapshotTable(os.path.join(root, sink)).read(spark)
-        assert t.count() == want, sink
-        assert t.select("doc_id").distinct().count() == t.count(), f"dups in {sink}"
-
-
 def test_resume_after_crash_between_shared_sink_commits(spark, tmp_path):
     """Crash after the SECOND table committed from the shared sink write:
     the staged partitions of the sinks not yet committed stay out of
@@ -213,6 +197,96 @@ def test_rerun_is_fully_idempotent(spark, tmp_path):
     for t, tbl in tables.items():
         assert len(tbl.snapshots()) == 1, t
         assert tbl.read(spark).count() == rows[t], t
+
+
+def _commit_order() -> list[str]:
+    from logstash_spark.plans.flagship import flagship_spec
+
+    return ["_sink_lineage", *flagship_spec().sink_names(), *SIDE_TABLES[1:]]
+
+
+def _assert_one_clean_copy(spark, root: str, n: int) -> None:
+    """Every sink holds its rows once, every table has one snapshot, and
+    the staging area is gone."""
+    from logstash_spark.plans.runner import STAGING_DIR
+
+    for sink, want in _expected(n).items():
+        t = SnapshotTable(os.path.join(root, sink)).read(spark)
+        assert t.count() == want, sink
+        assert t.select("doc_id").distinct().count() == want, f"dups in {sink}"
+    for name in _commit_order():
+        assert len(SnapshotTable(os.path.join(root, name)).snapshots()) == 1, name
+    assert STAGING_DIR not in os.listdir(root)
+
+
+@pytest.mark.parametrize("crash_after", _commit_order())
+def test_crash_at_every_commit_point_resumes_exactly_once(spark, tmp_path, crash_after):
+    """FIXTURES.md F6 at every commit point: a crash right after any
+    table commits leaves every later table without a snapshot; the
+    restart on the same input commits each of those once and skips the
+    rest, so every sink holds exactly one copy of its rows."""
+    root = str(tmp_path)
+    df = input_sequences(spark, 300)
+    order = _commit_order()
+    with pytest.raises(RuntimeError, match=f"injected failure after {crash_after}"):
+        run_flagship(spark, df, root, fail_after_sink=crash_after)
+    done = order.index(crash_after) + 1
+    for name in order[:done]:
+        assert len(SnapshotTable(os.path.join(root, name)).snapshots()) == 1, name
+    for name in order[done:]:
+        assert SnapshotTable(os.path.join(root, name)).snapshots() == [], name
+
+    res = run_flagship(spark, df, root)
+    sinks = set(_expected(300))
+    assert sorted(res.skipped_sinks) == sorted(sinks & set(order[:done]))
+    _assert_one_clean_copy(spark, root, 300)
+
+
+def test_failed_staged_write_commits_nothing(spark, tmp_path, monkeypatch):
+    """One staged write fails while it runs (a UDF raises in the DLQ's
+    frame): the error surfaces only after the other staged writes have
+    finished, no table behind the stage commits, and a clean rerun
+    commits every table once."""
+    import logstash_spark.plans.runner as runner
+
+    root = str(tmp_path)
+    df = input_sequences(spark, 300)
+    route_filter = runner.route_filter
+    boom = F.udf(lambda x: 1 // 0, "int")
+
+    def failing(routed, sink):
+        out = route_filter(routed, sink)
+        return out.withColumn("boom", boom("doc_id")) if sink == "dlq" else out
+
+    started, finished = [], []
+    write = runner.write_parquet
+
+    def recording(frame, path, partition_by=None):
+        started.append(path)
+        try:
+            write(frame, path, partition_by)
+        finally:
+            finished.append(path)
+
+    monkeypatch.setattr(runner, "route_filter", failing)
+    monkeypatch.setattr(runner, "write_parquet", recording)
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        try:
+            run_flagship(spark, df, root)
+        finally:
+            done_at_raise = list(finished)
+    # shared sinks, DLQ and the three side tables: all ran to their end
+    assert len(started) == 5
+    assert sorted(done_at_raise) == sorted(started)
+    assert runner.STAGING_DIR not in os.listdir(root)
+    # only the lineage table, written before the stage, committed
+    for name in _commit_order():
+        want = 1 if name == "_sink_lineage" else 0
+        assert len(SnapshotTable(os.path.join(root, name)).snapshots()) == want, name
+    monkeypatch.undo()
+
+    run_flagship(spark, df, root)
+    _assert_one_clean_copy(spark, root, 300)
 
 
 def test_changed_filter_chain_gets_new_run_id(spark, tmp_path):

@@ -374,3 +374,20 @@ class TestStreamingIntervalJoin:
         got = drain_available_now(joined, output_mode="append").collect()
         assert len(got) == 1
         assert got[0].k == 1 and got[0].v == 10.0
+
+
+def test_drain_removes_its_checkpoint(spark, tmp_path):
+    """A drain leaves no `drain_ckpt_*` directory behind in the temp dir."""
+    import glob
+    import os
+    import tempfile
+
+    from logstash_spark.streaming.pipeline import drain_available_now
+
+    src = str(tmp_path / "in")
+    spark.range(5).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    pattern = os.path.join(tempfile.gettempdir(), "drain_ckpt_*")
+    before = len(glob.glob(pattern))
+    assert drain_available_now(stream).count() == 5
+    assert len(glob.glob(pattern)) == before
