@@ -7,9 +7,11 @@ output delegators) becomes ONE lazily-planned DataFrame:
       → _sink_lineage write (materializes the persisted frame,
         observes the per-sink totals)
       → stage, all jobs at once, each into _fanout_staging/<run_id>/<k>:
-          ONE explode(routes) + partitioned write shared by the plain sinks
-          one write per DLQ / codec / partition_by / drop_columns /
-            zero-row sink
+          ONE explode(routes) + rebalance(fan-out col) + partitioned
+            write shared by the plain sinks
+          one rebalanced write per DLQ / codec / partition_by /
+            drop_columns / zero-row sink (by its partition_by columns,
+            if any)
           _aggregates, _metrics, _lineage side tables
       → commit, one table at a time: the sinks in spec order (each
         shared-write partition renamed into its own table), then
@@ -35,6 +37,20 @@ needs a human decision):
     cannot stage, write in that commit phase). Logstash likewise hands
     a batch to every output delegator and acks it once all have it
     (SURVEY.md §3.2). A failed write commits nothing;
+  * files sized by AQE per table, not one per input task: every staged
+    sink write carries a `REBALANCE` hint by the table's partition
+    columns (the shared write's fan-out column, a sink's `partition_by`,
+    none for the other own writes), so AQE coalesces small partitions
+    and splits any above `advisoryPartitionSizeInBytes`. An
+    unrebalanced write makes one file per input task in every sink the
+    task routes to, each with its own dictionary pages and footer for
+    the `tokens` payload (~30 % of the flagship's sink bytes). Not
+    `repartition`: a plain hash exchange has no skew split, so one task
+    would write a whole sink. The cost is one shuffle of the payload per
+    rebalanced write, the same one Iceberg's
+    `write.distribution-mode=hash` pays; Iceberg tables keep their own
+    write distribution, and the side tables, small post-aggregate
+    frames, are left alone;
   * per-sink aggregates computed from ONE `explode(routes)` frame so all
     sinks share a single shuffle instead of K groupBy jobs;
   * lineage rows derived via `spark_partition_id()` at read time;
@@ -480,10 +496,17 @@ def run_pipeline(
             jobs.append((frame, out, partition_by))
             return out
 
-        def source(table, frame: DataFrame, partition_by=None) -> DataFrame | str:
+        def source(
+            table, frame: DataFrame, partition_by=None, *, rebalance: bool = False
+        ) -> DataFrame | str:
             """What `table.append` commits: a staged directory, or, for an
-            Iceberg table, the frame itself, written in the commit phase."""
+            Iceberg table, the frame itself, written in the commit phase
+            (Iceberg distributes its own writes). A `rebalance`d frame is
+            hash-distributed by its `partition_by` columns (round-robin
+            without), so AQE sizes its files by bytes, not by input task."""
             if isinstance(table, SnapshotTable):
+                if rebalance:
+                    frame = frame.hint("rebalance", *map(_q, partition_by or ()))
                 return stage(frame, partition_by)
             return frame
 
@@ -534,7 +557,8 @@ def run_pipeline(
                 routed.select("*", F.explode(ROUTES).alias(part_col))
                 .withColumn(part_col, idx)  # 1-based; 0 = not a shared sink
                 .where(F.col(part_col) > 0)
-                .drop(ROUTES, "_in_part", *drop_before_write, METADATA),
+                .drop(ROUTES, "_in_part", *drop_before_write, METADATA)
+                .hint("rebalance", F.col(part_col)),
                 [part_col],
             )
             staged = {
@@ -556,7 +580,9 @@ def run_pipeline(
                 "detail_table": "_sink_lineage",
             }
             partition_by = (sspec.partition_by or None) if sspec else None
-            data = staged.get(sink) or source(table, sink_frame(sink, sspec), partition_by)
+            data = staged.get(sink) or source(
+                table, sink_frame(sink, sspec), partition_by, rebalance=True
+            )
             meta = {"pipeline": spec.name, "sink": sink}
             commits.append((sink, table, data, lineage, meta, partition_by))
             result.sink_counts[sink] = rows

@@ -27,20 +27,31 @@ checkpoints plans, not events.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid as _uuid
 from dataclasses import dataclass
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "_snapshots"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
+    return _iceberg_on_classpath(spark.sparkContext)
+
+
+@functools.lru_cache(maxsize=8)
+def _iceberg_on_classpath(sc: SparkContext) -> bool:
+    """One py4j `Class.forName` probe per SparkContext: a JVM's classpath
+    is fixed once it runs, and a failed probe costs a raised
+    `ClassNotFoundException` round trip. Keyed on the context, like
+    `operators.common.memo_columns`, so a new session probes again."""
     try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
+        sc._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
             "org.apache.iceberg.spark.source.IcebergSource"
         )
         return True

@@ -1,10 +1,11 @@
 """The batch runner's shared sink write: every plain-schema sink of a
 `run_pipeline` call lands through ONE partitioned write that is then
-committed table by table. Pins the Spark job count of a flagship run
-and the edge cases of that write: empty sinks, sink names Spark escapes
-in partition paths, a user column named like the partition column, and
-the sinks that must keep writing on their own (DLQ, `partition_by`,
-`codec`)."""
+committed table by table. Pins the Spark job count of a flagship run,
+the file layout of the rebalanced sink writes (files sized per sink by
+AQE, not one per input task), and the edge cases of that write: empty
+sinks, sink names Spark escapes in partition paths, a user column named
+like the partition column, and the sinks that must keep writing on
+their own (DLQ, `partition_by`, `codec`)."""
 
 from __future__ import annotations
 
@@ -13,7 +14,8 @@ import os
 from pyspark.sql import functions as F
 
 from logstash_spark.operators.common import METADATA
-from logstash_spark.plans.flagship import GROK_PATTERN, run_flagship
+from logstash_spark.operators.route import route_filter
+from logstash_spark.plans.flagship import GROK_PATTERN, build_flagship, run_flagship
 from logstash_spark.plans.runner import FANOUT_COL, STAGING_DIR, run_pipeline
 from logstash_spark.plans.spec import FilterSpec, PipelineSpec, SinkSpec
 from logstash_spark.sources.gen import input_sequences
@@ -22,9 +24,14 @@ from logstash_spark.sources.tableio import SnapshotTable
 # Spark jobs of one flagship `run_pipeline` on the test session
 # (local[4], 8 shuffle partitions): the _sink_lineage write with
 # observed per-sink totals, the shared sink write, the DLQ write and the
-# _aggregates / _metrics / _lineage side tables. One filtered write per
-# sink plus a read-back of the per-sink totals took 19.
-FLAGSHIP_JOBS = 12
+# _aggregates / _metrics / _lineage side tables, plus one shuffle-map
+# job for each of the two rebalance stages: the shared write's
+# (by the fan-out partition column) and the DLQ write's (no columns).
+# One filtered write per sink plus a read-back of the per-sink totals
+# took 19; the writes without a rebalance took 12.
+FLAGSHIP_JOBS = 14
+SHARED_SINKS = ["sink_errors", "sink_edge", "sink_service", "sink_rest"]
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
 
 def _read(spark, root, sink):
@@ -33,6 +40,19 @@ def _read(spark, root, sink):
 
 def _schema(df):
     return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+def _data_files(root, sink):
+    """The parquet files of `sink`'s latest snapshot, by directory
+    relative to the snapshot's data dir ('' for unpartitioned files)."""
+    table = SnapshotTable(os.path.join(root, sink))
+    snap_dir = os.path.join(table.root, table.latest().files[-1])
+    return [
+        "" if d == snap_dir else os.path.relpath(d, snap_dir)
+        for d, _, names in os.walk(snap_dir)
+        for n in names
+        if n.endswith(".parquet")
+    ]
 
 
 def test_flagship_run_job_count_is_pinned(spark, tmp_path):
@@ -50,6 +70,55 @@ def test_flagship_run_job_count_is_pinned(spark, tmp_path):
     assert sum(res.sink_counts.values()) > 2000
     # the staging area of the shared write is gone once all committed
     assert STAGING_DIR not in os.listdir(tmp_path)
+
+
+def test_flagship_sinks_hold_one_file_each(spark, tmp_path):
+    """The rebalanced writes size files per sink, not per input task:
+    the 8-partition input lands as one file in every shared sink and
+    one in the DLQ."""
+    df = input_sequences(spark, 2000, partitions=8)
+    root = str(tmp_path)
+    res = run_flagship(spark, df, root)
+    for sink in [*SHARED_SINKS, "dlq"]:
+        assert res.sink_counts[sink] > 0, sink
+        assert _data_files(root, sink) == [""], sink
+
+
+def test_small_advisory_size_splits_the_biggest_sink(spark, tmp_path):
+    """Above `advisoryPartitionSizeInBytes` AQE splits a sink's
+    partition into several files, and the split loses and duplicates no
+    row."""
+    df = input_sequences(spark, 2000)
+    root = str(tmp_path)
+    before = spark.conf.get(ADVISORY, None)
+    spark.conf.set(ADVISORY, "16k")
+    try:
+        res = run_flagship(spark, df, root)
+    finally:
+        if before is None:
+            spark.conf.unset(ADVISORY)
+        else:
+            spark.conf.set(ADVISORY, before)
+    big = max(SHARED_SINKS, key=res.sink_counts.__getitem__)
+    assert len(_data_files(root, big)) > 1
+    got = _read(spark, root, big)
+    want = route_filter(build_flagship(df), big).select(*got.columns)
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+def test_partition_by_sink_holds_one_file_per_value(spark, tmp_path):
+    df = input_sequences(spark, 1000, partitions=8)
+    spec = PipelineSpec(
+        name="by_value",
+        filters=[],
+        routes={"by_source": "true"},
+        sinks=[SinkSpec("by_source", partition_by=["source"])],
+    )
+    root = str(tmp_path)
+    run_pipeline(spark, df, spec, root)
+    values = {r[0] for r in df.select("source").distinct().collect()}
+    files = _data_files(root, "by_source")
+    assert sorted(files) == sorted(f"source={v}" for v in values)
 
 
 def test_staged_writes_run_at_once_in_the_callers_job_group(spark, tmp_path, monkeypatch):

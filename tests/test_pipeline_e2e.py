@@ -410,6 +410,23 @@ class TestTableFactory:
         assert res.sink_counts == {"sink_app": 5}
         assert len(probes) == 1
 
+        # the py4j probe itself runs once per SparkContext: a second run
+        # on the same session asks the JVM nothing
+        monkeypatch.undo()
+        tableio._iceberg_on_classpath.cache_clear()  # as on a new session
+        client = spark.sparkContext._gateway._gateway_client
+        send, calls = client.send_command, []
+
+        def recording(command, *args, **kwargs):
+            calls.append("IcebergSource" in command)
+            return send(command, *args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", recording)
+        for run in ("a", "b"):
+            runner.run_pipeline(spark, df, spec, str(tmp_path / run))
+        monkeypatch.undo()
+        assert sum(calls) == 1
+
     def test_run_pipeline_explicit_snapshot_format(self, spark, tmp_path):
         # table_format="snapshot" pins the fallback explicitly — same
         # results as the default auto path in this sandbox
