@@ -20,12 +20,12 @@ compute all route flags in one projection and materialize a
 from __future__ import annotations
 
 import re
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logstash_spark.operators.common import field_ref_to_col, memo_columns
+from logstash_spark.operators.common import METADATA, field_ref_to_col, memo_columns
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -301,3 +301,22 @@ def _routes_expr(
 
 def route_filter(df: DataFrame, sink: str) -> DataFrame:
     return df.where(F.array_contains(F.col(ROUTES), sink))
+
+
+def fanout_rows(
+    df: DataFrame, sinks: Sequence[str], col: str, drop: Sequence[str] = ()
+) -> DataFrame:
+    """One row per (event, listed sink it routes to), the sink's name in
+    `col`: the rows a shared fan-out write partitions by `col`. The
+    pipeline's scratch columns (`routes`, the runner's `_in_part`, and
+    `[@metadata]`, never serialized: Event.java §getMetadata) and the
+    `drop` columns never reach a sink. `col` must be a new column name
+    (Spark resolves names case-insensitively), or the explode's output
+    would be ambiguous."""
+    if col.lower() in {c.lower() for c in df.columns}:
+        raise ValueError(f"fan-out column {col!r} is already an event field")
+    return (
+        df.select("*", F.explode(ROUTES).alias(col))
+        .where(F.col(col).isin(list(sinks)))
+        .drop(ROUTES, "_in_part", METADATA, *drop)
+    )

@@ -10,11 +10,14 @@ golden cases mirror `logstash-core/spec/logstash/compiler/compiler_spec.rb`
 shapes.
 
 Compilation model (axes with the reference):
-  * filter plugins inside conditionals get a `when` gate string —
-    `if c1 {...} else if c2 {...} else {...}` compiles each branch's
-    plugins with `(c1)`, `!(c1) and (c2)`, `!(c1) and !(c2)` — exactly
-    LSCL's Condition/Negation composition, and `plans/runner` turns each
-    gate into a single conditional projection (no per-branch re-scan).
+  * an `if c1 {...} else if c2 {...} else {...}` chain is decided once
+    per event, before any of its plugins runs: gated `mutate`s write the
+    number of the case that holds (`(c1)`, `!(c1) and (c2)`,
+    `!(c1) and !(c2)`, LSCL's Condition/Negation composition) into a
+    scratch `_lscl_case_<n>` column, each branch's plugins get the
+    `when` gate `[_lscl_case_<n>] == "<k>"`, and the filter chain ends
+    by removing the scratch columns. `plans/runner` turns each gate into
+    a single conditional projection (no per-branch re-scan).
   * output plugins become route-table entries (sink → condition, `true`
     for unconditional sinks) feeding `add_routes` graph fan-out.
   * input plugins are parsed and returned for completeness; the runner
@@ -514,23 +517,36 @@ def _gate(preds: list[str]) -> str | None:
     return " and ".join(preds) if preds else None
 
 
+#: prefix of the scratch columns holding each `if` chain's case number
+CASE_COL = "_lscl_case_"
+
+
 def _walk_filters(
-    nodes: list[object], preds: list[str], out: list[FilterSpec]
+    nodes: list[object], gate: str | None, out: list[FilterSpec], cases: list[str]
 ) -> None:
+    """Append `nodes`' filters to `out`, each gated by `gate`. An `if`
+    chain's case is decided ONCE per event, where the chain appears
+    (Logstash's SplitDataset): gated `mutate`s number the case that
+    holds (case k is `!(c1) and ... and (ck)`) in a new scratch column,
+    listed in `cases`, and each case's body is gated on that number, so
+    a body op that rewrites a tested field cannot move its event to
+    another case."""
     for node in nodes:
         if isinstance(node, Plugin):
             for conf in _adapt(node):
-                out.append(FilterSpec(op=node.name, conf=conf, when=_gate(preds)))
-        else:  # Branch: case k sees !(c1..ck-1) and (ck)
-            assert isinstance(node, Branch)
-            negations: list[str] = []
-            for cond, body in node.cases:
-                case_preds = preds + negations + (
-                    [f"({cond})"] if cond is not None else []
-                )
-                _walk_filters(body, case_preds, out)
-                if cond is not None:
-                    negations.append(f"!({cond})")
+                out.append(FilterSpec(op=node.name, conf=conf, when=gate))
+            continue
+        assert isinstance(node, Branch)
+        col = f"{CASE_COL}{len(cases)}"
+        cases.append(col)
+        preds = [gate] if gate else []
+        for k, (cond, _body) in enumerate(node.cases, start=1):
+            now = preds + ([f"({cond})"] if cond is not None else [])
+            out.append(FilterSpec("mutate", {"add_field": {col: str(k)}}, when=_gate(now)))
+            if cond is not None:
+                preds.append(f"!({cond})")
+        for k, (_cond, body) in enumerate(node.cases, start=1):
+            _walk_filters(body, f'[{col}] == "{k}"', out, cases)
 
 
 def _sink_name(plugin: Plugin, taken: set[str]) -> str:
@@ -882,7 +898,10 @@ def compile_conf(
     (no process-global environment reads)."""
     ast = parse_config(text, env=env)
     filters: list[FilterSpec] = []
-    _walk_filters(ast.filters, [], filters)
+    cases: list[str] = []
+    _walk_filters(ast.filters, None, filters, cases)
+    if cases:  # the case numbers are scratch: no sink sees them
+        filters.append(FilterSpec("mutate", {"remove_field": cases}))
     routes: dict[str, str] = {}
     sinks: dict[str, Plugin] = {}
     _walk_outputs(ast.outputs, [], routes, sinks, set())

@@ -4,18 +4,19 @@ The Logstash hot loop (SURVEY.md §3.2: queue → filter datasets →
 output delegators) becomes ONE lazily-planned DataFrame:
 
     read → parse/enrich columns → route flags → persist
-      → _sink_lineage write (materializes the persisted frame,
-        observes the per-sink totals)
-      → stage, all jobs at once, each into _fanout_staging/<run_id>/<k>:
-          ONE explode(routes) + rebalance(fan-out col) + partitioned
-            write shared by the plain sinks
-          one rebalanced write per DLQ / codec / partition_by /
-            drop_columns / zero-row sink (by its partition_by columns,
-            if any)
-          _aggregates, _metrics, _lineage side tables
-      → commit, one table at a time: the sinks in spec order (each
-        shared-write partition renamed into its own table), then
-        _aggregates, _metrics, _lineage
+      → stage, each write into _fanout_staging/<run_id>/<k>:
+          first and alone: the _sink_lineage write (materializes the
+            persisted frame, observes the per-sink totals)
+          then all jobs at once:
+            ONE fanout_rows + rebalance(fan-out col) + partitioned
+              write shared by the plain sinks
+            one rebalanced write per DLQ / codec / partition_by /
+              drop_columns / zero-row sink (by its partition_by
+              columns, if any)
+            _aggregates, _metrics, _lineage side tables
+      → commit, one table at a time: _sink_lineage, the sinks in spec
+        order (each shared-write partition renamed into its own table),
+        then _aggregates, _metrics, _lineage
 
 Deliberate physical choices (SURVEY.md §4/§7.3 — the only places Spark
 needs a human decision):
@@ -33,10 +34,13 @@ needs a human decision):
     from one thread pool (sized to the writes, tasks wrapped by
     `inheritable_thread_target` so their jobs stay in the caller's job
     group), into its own staging dir; once every job has finished, the
-    tables publish one by one in spec order (Iceberg tables, which
-    cannot stage, write in that commit phase). Logstash likewise hands
+    tables publish one by one, `_sink_lineage` first (Iceberg sinks and
+    side tables write in that commit phase). Logstash likewise hands
     a batch to every output delegator and acks it once all have it
-    (SURVEY.md §3.2). A failed write commits nothing;
+    (SURVEY.md §3.2). A failed write commits nothing. The lineage write
+    runs before the others, alone: it fills the persisted frame's
+    cache, which each write started beside it would fill again in its
+    own job (19 jobs per flagship run, not 14);
   * files sized by AQE per table, not one per input task: every staged
     sink write carries a `REBALANCE` hint by the table's partition
     columns (the shared write's fan-out column, a sink's `partition_by`,
@@ -66,7 +70,9 @@ needs a human decision):
   * resume: a deterministic `run_id` is recorded in each table's snapshot
     lineage; a rerun skips every sink and side table whose latest
     snapshot already carries the run_id (idempotent commit, FIXTURES.md
-    F6).
+    F6). The lineage write still runs while any table is left, for its
+    observed totals, and is committed only once; a rerun of a finished
+    run with no `pipeline:` send runs no Spark job.
 """
 
 from __future__ import annotations
@@ -86,7 +92,7 @@ from pyspark.storagelevel import StorageLevel
 
 from logstash_spark.operators import OPS
 from logstash_spark.operators.common import METADATA, memo_columns
-from logstash_spark.operators.route import ROUTES, add_routes, route_filter
+from logstash_spark.operators.route import ROUTES, add_routes, fanout_rows, route_filter
 from logstash_spark.plans.spec import PipelineSpec, SinkSpec
 from logstash_spark.sources.tableio import (
     IcebergTable,
@@ -110,9 +116,6 @@ class RunResult:
     run_id: str
     sink_counts: dict[str, int] = field(default_factory=dict)
     skipped_sinks: list[str] = field(default_factory=list)
-    aggregates: DataFrame | None = None
-    metrics: DataFrame | None = None
-    lineage: DataFrame | None = None
     # virtual `pipeline:` sinks: address → frame handed to downstream
     # pipelines (plans.graph) instead of being written to a table
     address_frames: dict[str, DataFrame] = field(default_factory=dict)
@@ -259,10 +262,11 @@ def build_plan(
     return add_routes(df, spec.routes, else_sink=spec.else_sink)
 
 
-def _spec_basis(spec: PipelineSpec) -> str:
-    """The spec's filter chain and sink settings as deterministic text:
-    a changed grok pattern or sink codec must change the run_id, or a
-    rerun over the same files would resume against stale sinks. Keys are
+def _spec_basis(spec: PipelineSpec, drop_before_write: tuple[str, ...] = ()) -> str:
+    """The spec's filter chain and sink settings, and the columns every
+    sink drops, as deterministic text: a changed grok pattern, sink codec
+    or dropped column must change the run_id, or a rerun over the same
+    files would resume against stale sinks. Keys are
     sorted; values JSON cannot hold become their `repr` (sets sorted,
     memory addresses stripped, so the text is the same in every
     process)."""
@@ -277,16 +281,20 @@ def _spec_basis(spec: PipelineSpec) -> str:
                 {"op": f.op, "conf": f.conf, "when": f.when} for f in spec.filters
             ],
             "sinks": [asdict(s) for s in spec.sinks],
+            "drop_before_write": sorted(drop_before_write),
         },
         sort_keys=True,
         default=stable,
     )
 
 
-def _input_fingerprint(df: DataFrame, spec: PipelineSpec) -> str:
+def _input_fingerprint(
+    df: DataFrame, spec: PipelineSpec, drop_before_write: tuple[str, ...] = ()
+) -> str:
     """Deterministic run id from the input's files/plan + spec (routes,
-    filter chain, sink settings), so a restarted identical job maps to
-    the same run (resume key).
+    filter chain, sink settings) + the columns dropped before every
+    write, so a restarted identical job maps to the same run (resume
+    key).
 
     File-less inputs (generator / in-memory frames) have no inputFiles,
     which would make the id content-free — a changed `generator count`
@@ -333,7 +341,7 @@ def _input_fingerprint(df: DataFrame, spec: PipelineSpec) -> str:
     basis = (
         "|".join(files) + "||" + plan_part + "||"
         + df.schema.simpleString() + "||" + str(spec.routes)
-        + "||" + _spec_basis(spec)
+        + "||" + _spec_basis(spec, drop_before_write)
     )
     if local_rows:
         basis += "||" + ",".join(local_rows)
@@ -386,7 +394,7 @@ def run_pipeline(
     `fail_after_sink` names a table (a sink, `_sink_lineage`,
     `_aggregates`, `_metrics` or `_lineage`); the run raises right after
     that table commits, as a crash at that point would stop it."""
-    run_id = _input_fingerprint(input_df, spec)
+    run_id = _input_fingerprint(input_df, spec, drop_before_write)
     if table_format == "auto":
         # one classpath probe per run, not one per table
         table_format = "iceberg" if iceberg_available(spark) else "snapshot"
@@ -418,50 +426,79 @@ def run_pipeline(
         # One job writes the (sink, partition, rows) table; the K per-sink
         # totals ride along as observed metrics of that same job. Never
         # O(K*P) driver rows — at 10^6 input partitions x 6 sinks the
-        # detail stays in the table. It runs alone and first: it
-        # materializes `routed`, and the stage below needs its totals.
-        sink_lineage_df = (
+        # detail stays in the table.
+        obs = Observation()
+        per_sink = []
+        for i, s in enumerate(sink_names):
+            hit = F.col("sink") == s
+            per_sink += [
+                F.sum(F.when(hit, F.col("rows"))).alias(f"rows_{i}"),
+                F.count(F.when(hit, True)).alias(f"parts_{i}"),
+            ]
+        sink_lineage = (
             routed.select(F.explode(ROUTES).alias("sink"), "_in_part")
             .groupBy("sink", "_in_part")
             .agg(F.count("*").alias("rows"))
             .withColumnRenamed("_in_part", "partition_id")
             .withColumn("run_id", F.lit(run_id))
         )
-        sl_table = _mk("_sink_lineage")
-        if not _committed(sl_table):
-            obs = Observation()
-            per_sink = []
-            for i, s in enumerate(sink_names):
-                hit = F.col("sink") == s
-                per_sink += [
-                    F.sum(F.when(hit, F.col("rows"))).alias(f"rows_{i}"),
-                    F.count(F.when(hit, True)).alias(f"parts_{i}"),
-                ]
-            sl_table.append(
-                sink_lineage_df.observe(obs, *per_sink) if per_sink else sink_lineage_df,
-                lineage={"run_id": run_id},
+        if per_sink:
+            sink_lineage = sink_lineage.observe(obs, *per_sink)
+
+        # ---- side tables ----
+        # aggregates: ONE shuffle for all sinks via explode(routes)
+        dims = [d for d in spec.aggregate_dims if d in routed.columns]
+        exploded = routed.select(
+            F.explode(ROUTES).alias("sink"), *dims,
+            *( [spec.aggregate_sum] if spec.aggregate_sum and spec.aggregate_sum in routed.columns else [] ),
+            *( ["doc_id"] if "doc_id" in routed.columns else [] ),
+        )
+        aggs = [F.count("*").alias("cnt")]
+        if spec.aggregate_sum and spec.aggregate_sum in routed.columns:
+            aggs.append(F.sum(spec.aggregate_sum).alias(f"sum_{spec.aggregate_sum}"))
+        if "doc_id" in routed.columns:
+            aggs.append(F.approx_count_distinct("doc_id").alias("approx_docs"))
+        side = [("_aggregates", exploded.rollup("sink", *dims).agg(*aggs))]
+        if spec.metrics_ts and spec.metrics_ts in routed.columns:
+            from logstash_spark.operators.aggregate import metrics as metrics_op
+
+            side.append(("_metrics", metrics_op(
+                routed, spec.metrics_ts, dims, window_duration=spec.metrics_window
+            )))
+        # lineage: one row per input partition
+        side.append(("_lineage", (
+            routed.groupBy("_in_part")
+            .agg(
+                F.count("*").alias("input_rows"),
+                F.sum(F.size(ROUTES)).alias("routed_rows"),
             )
-            _crash_point("_sink_lineage")
-            m = obs.get if per_sink else {}
-            totals = {
-                s: (int(m[f"rows_{i}"]), int(m[f"parts_{i}"]))
-                for i, s in enumerate(sink_names)
-                if m[f"parts_{i}"]
-            }
-        else:
-            # resume: the lineage write is skipped, so read its totals back
-            totals = {
-                r["sink"]: (int(r["rows"]), int(r["n_parts"]))
-                for r in sl_table.read(spark)
-                .where(F.col("run_id") == run_id)
-                .dropDuplicates(["sink", "partition_id"])  # replays write identical rows
-                .groupBy("sink")
-                .agg(F.sum("rows").alias("rows"), F.count("*").alias("n_parts"))
-                .collect()  # K rows (one per sink) — bounded
-            }
+            .withColumnRenamed("_in_part", "partition_id")
+            .withColumn("run_id", F.lit(run_id))
+        )))
+
+        # ---- which tables to write (idempotent via run_id in lineage) ---
+        virtual = spec.virtual_sends()
+        sink_specs = {s.name: s for s in spec.sinks}
+        pending: list[tuple[str, SnapshotTable | IcebergTable, SinkSpec | None]] = []
+        for sink in sink_names:
+            if sink in virtual:
+                continue
+            table = _mk(sink)
+            if _committed(table):
+                result.skipped_sinks.append(sink)
+            else:
+                pending.append((sink, table, sink_specs.get(sink)))
+        sl_table = _mk("_sink_lineage")
+        sl_todo = not _committed(sl_table)
+        side_todo = [(n, t, f) for n, f in side if not _committed(t := _mk(n))]
+        # a crashed run with this run_id may have left its staging dir
+        staging = os.path.join(sinks_root, STAGING_DIR, run_id)
+        _clear_staging(staging)
+        if not (sl_todo or pending or side_todo or virtual):
+            return result  # a rerun of a finished run: nothing to write
 
         def sink_frame(sink: str, sspec: SinkSpec | None) -> DataFrame:
-            """The rows one table receives, shaped for that table."""
+            """The rows one sink writing on its own receives, shaped for it."""
             out = route_filter(routed, sink).drop(ROUTES, "_in_part", *drop_before_write)
             if sink != spec.dlq_sink:
                 # [@metadata] is pipeline-scratch, never serialized
@@ -483,12 +520,9 @@ def run_pipeline(
                 out = out.withColumn("_dlq_reason", F.concat_ws(",", F.col("tags")))
             return out
 
-        # ---- stage: every remaining write, planned here, run at once ---
-        # Each write job lands in its own directory under the run's
-        # staging dir; the tables commit from there afterwards. Cleared
-        # first: a crashed run with this run_id may have left it.
-        staging = os.path.join(sinks_root, STAGING_DIR, run_id)
-        shutil.rmtree(staging, ignore_errors=True)
+        # ---- stage: every write, planned here, into its own directory
+        # under the run's staging dir; the tables commit from there
+        # afterwards.
         jobs: list[tuple[DataFrame, str, list[str] | None]] = []
 
         def stage(frame: DataFrame, partition_by: list[str] | None = None) -> str:
@@ -510,134 +544,98 @@ def run_pipeline(
                 return stage(frame, partition_by)
             return frame
 
-        # ---- which sinks to write (idempotent via run_id in lineage) ---
-        virtual = spec.virtual_sends()
-        sink_specs = {s.name: s for s in spec.sinks}
-        pending: list[tuple[str, SnapshotTable | IcebergTable, SinkSpec | None]] = []
-        for sink in sink_names:
-            if sink in virtual:
-                # pipeline-to-pipeline send: no table, just the frame;
-                # counts still come from the shared explode(routes)
-                # lineage job
-                result.address_frames[virtual[sink]] = route_filter(
-                    routed, sink
-                ).drop(ROUTES, "_in_part")
-                result.sink_counts[sink] = totals.get(sink, (0, 0))[0]
-                continue
-            table = _mk(sink)
-            if _committed(table):
-                result.skipped_sinks.append(sink)
-                continue
-            pending.append((sink, table, sink_specs.get(sink)))
-
-        # ---- ONE partitioned write for every plain-schema sink ---------
-        # Sinks on the default SinkSpec share one explode(routes) and one
-        # write job, partitioned by the sink's integer index; each
-        # partition dir is then renamed into its table. The DLQ
-        # (_dlq_reason, keeps [@metadata]), codec / partition_by /
-        # drop_columns sinks and Iceberg tables write on their own, and
-        # so does a sink that routed no rows: it gets no partition dir,
-        # and its own (empty) write still commits a file carrying the
-        # schema.
-        shared = [
-            sink for sink, table, sspec in pending
-            if sink != spec.dlq_sink
-            and isinstance(table, SnapshotTable)
-            and not (sspec and (sspec.codec or sspec.partition_by or sspec.drop_columns))
-            and totals.get(sink, (0, 0))[0] > 0
-        ]
-        staged: dict[str, str] = {}
-        if shared:
-            taken = {c.lower() for c in routed.columns}
-            part_col = FANOUT_COL
-            while part_col in taken:  # never collide with a user column
-                part_col = "_" + part_col
-            idx = F.array_position(F.array(*[F.lit(s) for s in shared]), F.col(part_col))
-            out = stage(
-                routed.select("*", F.explode(ROUTES).alias(part_col))
-                .withColumn(part_col, idx)  # 1-based; 0 = not a shared sink
-                .where(F.col(part_col) > 0)
-                .drop(ROUTES, "_in_part", *drop_before_write, METADATA)
-                .hint("rebalance", F.col(part_col)),
-                [part_col],
-            )
-            staged = {
-                s: os.path.join(out, f"{part_col}={i}")
-                for i, s in enumerate(shared, start=1)
-            }
-
         # (table name, table, what it commits, lineage, meta, partition_by)
         commits: list[tuple] = []
-        for sink, table, sspec in pending:
-            rows, n_parts = totals.get(sink, (0, 0))
-            lineage = {
-                "run_id": run_id,
-                "rows": rows,
-                "n_partitions": n_parts,
-                # per-partition detail lives in the _sink_lineage table,
-                # keyed by (run_id, sink) — unbounded detail never enters
-                # the driver-side manifest
-                "detail_table": "_sink_lineage",
+        lineage_dir = stage(sink_lineage)
+        if sl_todo:
+            commits.append(
+                ("_sink_lineage", sl_table, lineage_dir, {"run_id": run_id}, None, None)
+            )
+        try:
+            # The lineage write runs first and alone: it fills `routed`'s
+            # cache for every later write, and its observed totals pick
+            # the shared write's sinks (started with the others, every
+            # write filled the cache in its own job). It runs even when
+            # its table is committed: the totals come only from it.
+            write_parquet(*jobs[0])
+            m = obs.get if per_sink else {}
+            totals = {
+                s: (int(m[f"rows_{i}"]), int(m[f"parts_{i}"]))
+                for i, s in enumerate(sink_names)
+                if m[f"parts_{i}"]
             }
-            partition_by = (sspec.partition_by or None) if sspec else None
-            data = staged.get(sink) or source(
-                table, sink_frame(sink, sspec), partition_by, rebalance=True
-            )
-            meta = {"pipeline": spec.name, "sink": sink}
-            commits.append((sink, table, data, lineage, meta, partition_by))
-            result.sink_counts[sink] = rows
+            for sink, address in virtual.items():
+                # pipeline-to-pipeline send: no table, just the frame
+                frame = route_filter(routed, sink).drop(ROUTES, "_in_part")
+                result.address_frames[address] = frame
+                result.sink_counts[sink] = totals.get(sink, (0, 0))[0]
 
-        # ---- aggregates: ONE shuffle for all sinks via explode(routes) -
-        dims = [d for d in spec.aggregate_dims if d in routed.columns]
-        exploded = routed.select(
-            F.explode(ROUTES).alias("sink"), *dims,
-            *( [spec.aggregate_sum] if spec.aggregate_sum and spec.aggregate_sum in routed.columns else [] ),
-            *( ["doc_id"] if "doc_id" in routed.columns else [] ),
-        )
-        aggs = [F.count("*").alias("cnt")]
-        if spec.aggregate_sum and spec.aggregate_sum in routed.columns:
-            aggs.append(F.sum(spec.aggregate_sum).alias(f"sum_{spec.aggregate_sum}"))
-        if "doc_id" in routed.columns:
-            aggs.append(F.approx_count_distinct("doc_id").alias("approx_docs"))
-        result.aggregates = exploded.rollup("sink", *dims).agg(*aggs)
-        side = [("_aggregates", result.aggregates)]
+            # ---- ONE partitioned write for every plain-schema sink -----
+            # Sinks on the default SinkSpec share one explode(routes) and
+            # one write job, partitioned by the sink's integer index; each
+            # partition dir is then renamed into its table. The DLQ
+            # (_dlq_reason, keeps [@metadata]), codec / partition_by /
+            # drop_columns sinks and Iceberg tables write on their own,
+            # and so does a sink that routed no rows: it gets no
+            # partition dir, and its own (empty) write still commits a
+            # file carrying the schema.
+            shared = [
+                sink for sink, table, sspec in pending
+                if sink != spec.dlq_sink
+                and isinstance(table, SnapshotTable)
+                and not (sspec and (sspec.codec or sspec.partition_by or sspec.drop_columns))
+                and totals.get(sink, (0, 0))[0] > 0
+            ]
+            staged: dict[str, str] = {}
+            if shared:
+                taken = {c.lower() for c in routed.columns}
+                part_col = FANOUT_COL
+                while part_col in taken:  # never collide with a user column
+                    part_col = "_" + part_col
+                idx = F.array_position(F.array(*map(F.lit, shared)), F.col(part_col))
+                out = stage(
+                    fanout_rows(routed, shared, part_col, drop_before_write)
+                    .withColumn(part_col, idx)  # 1-based index among `shared`
+                    .hint("rebalance", F.col(part_col)),
+                    [part_col],
+                )
+                staged = {
+                    s: os.path.join(out, f"{part_col}={i}")
+                    for i, s in enumerate(shared, start=1)
+                }
 
-        # ---- metrics side table ----
-        if spec.metrics_ts and spec.metrics_ts in routed.columns:
-            from logstash_spark.operators.aggregate import metrics as metrics_op
-
-            result.metrics = metrics_op(
-                routed, spec.metrics_ts, dims, window_duration=spec.metrics_window
-            )
-            side.append(("_metrics", result.metrics))
-
-        # ---- lineage side table: one row per input partition ----
-        result.lineage = (
-            routed.groupBy("_in_part")
-            .agg(
-                F.count("*").alias("input_rows"),
-                F.sum(F.size(ROUTES)).alias("routed_rows"),
-            )
-            .withColumnRenamed("_in_part", "partition_id")
-            .withColumn("run_id", F.lit(run_id))
-        )
-        side.append(("_lineage", result.lineage))
-        for name, frame in side:
-            table = _mk(name)
-            if not _committed(table):
+            for sink, table, sspec in pending:
+                rows, n_parts = totals.get(sink, (0, 0))
+                lineage = {
+                    "run_id": run_id,
+                    "rows": rows,
+                    "n_partitions": n_parts,
+                    # per-partition detail lives in the _sink_lineage
+                    # table, keyed by (run_id, sink) — unbounded detail
+                    # never enters the driver-side manifest
+                    "detail_table": "_sink_lineage",
+                }
+                partition_by = (sspec.partition_by or None) if sspec else None
+                data = staged.get(sink) or source(
+                    table, sink_frame(sink, sspec), partition_by, rebalance=True
+                )
+                meta = {"pipeline": spec.name, "sink": sink}
+                commits.append((sink, table, data, lineage, meta, partition_by))
+                result.sink_counts[sink] = rows
+            for name, table, frame in side_todo:
                 commits.append(
                     (name, table, source(table, frame), {"run_id": run_id}, None, None)
                 )
 
-        # ---- run every staged write at once; a failure commits nothing
-        try:
-            _write_at_once(spark, jobs)
+            # ---- run every other staged write at once; a failure
+            # commits nothing
+            _write_at_once(spark, jobs[1:])
         except BaseException:
             _clear_staging(staging)
             raise
 
-        # ---- commit every table one by one: sinks in spec order, then
-        # the side tables --------------------------------------------------
+        # ---- commit every table one by one: _sink_lineage, the sinks in
+        # spec order, then the side tables -------------------------------
         for name, table, data, lineage, meta, partition_by in commits:
             table.append(data, lineage=lineage, meta=meta, partition_by=partition_by)
             _crash_point(name)
@@ -653,3 +651,4 @@ def run_pipeline(
             routed.unpersist()
             for p in persisted:
                 p.unpersist()
+

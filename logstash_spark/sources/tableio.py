@@ -383,12 +383,17 @@ class IcebergTable:
 
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | str,
         *,
         lineage: dict[str, Any] | None = None,
         meta: dict[str, Any] | None = None,
         partition_by: list[str] | None = None,
     ) -> Snapshot:
+        """Append `df` as one Iceberg snapshot. As in `SnapshotTable.append`,
+        `df` may instead be the path of a staged parquet directory: its
+        rows are read back and appended."""
+        if isinstance(df, str):
+            df = self.spark.read.parquet(df)
         prev = self.latest()
         merged_lineage = dict(prev.lineage) if prev else {}
         merged_lineage.update(lineage or {})

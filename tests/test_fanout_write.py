@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from logstash_spark.operators.common import METADATA
@@ -55,21 +56,46 @@ def _data_files(root, sink):
     ]
 
 
-def test_flagship_run_job_count_is_pinned(spark, tmp_path):
+def _jobs(spark, group: str, run) -> tuple[list[int], object]:
+    """The Spark jobs `run()` started, run in job group `group`, and its
+    result."""
     sc = spark.sparkContext
-    df = input_sequences(spark, 2000)
-    group = "test_flagship_run_job_count"
     sc.setJobGroup(group, "flagship run_pipeline")
     try:
-        res = run_flagship(spark, df, str(tmp_path))
+        res = run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return sc.statusTracker().getJobIdsForGroup(group), res
+
+
+def test_flagship_run_job_count_is_pinned(spark, tmp_path):
+    df = input_sequences(spark, 2000)
+    jobs, res = _jobs(spark, "test_flagship_run_job_count",
+                      lambda: run_flagship(spark, df, str(tmp_path)))
     assert len(jobs) == FLAGSHIP_JOBS, sorted(jobs)
     assert sum(res.sink_counts.values()) > 2000
     # the staging area of the shared write is gone once all committed
     assert STAGING_DIR not in os.listdir(tmp_path)
+
+
+def test_rerun_job_counts_are_pinned(spark, tmp_path):
+    """A rerun after a crash right after `_sink_lineage` committed runs
+    the fresh run's jobs: the lineage write runs again for its observed
+    totals (nothing is read back), and every other table is written. A
+    rerun of the finished run starts no Spark job."""
+    df = input_sequences(spark, 2000)
+    root = str(tmp_path)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_flagship(spark, df, root, fail_after_sink="_sink_lineage")
+    jobs, res = _jobs(spark, "test_rerun_after_crash",
+                      lambda: run_flagship(spark, df, root))
+    assert len(jobs) == FLAGSHIP_JOBS, sorted(jobs)
+    assert res.skipped_sinks == []
+    jobs, res = _jobs(spark, "test_rerun_finished",
+                      lambda: run_flagship(spark, df, root))
+    assert jobs == []
+    assert sorted(res.skipped_sinks) == sorted([*SHARED_SINKS, "dlq"])
 
 
 def test_flagship_sinks_hold_one_file_each(spark, tmp_path):
@@ -122,10 +148,11 @@ def test_partition_by_sink_holds_one_file_per_value(spark, tmp_path):
 
 
 def test_staged_writes_run_at_once_in_the_callers_job_group(spark, tmp_path, monkeypatch):
-    """Every write after `_sink_lineage` (the shared sink write, the
-    DLQ and the three side tables) is in flight at the same time: each
-    waits at a barrier only all five together can pass. Each runs in
-    the caller's job group, and the tables still commit in spec order."""
+    """The `_sink_lineage` write runs first and alone; every write after
+    it (the shared sink write, the DLQ and the three side tables) is in
+    flight at the same time: each waits at a barrier only all five
+    together can pass. Each runs in the caller's job group, and the
+    tables commit in one loop, `_sink_lineage` first, then spec order."""
     import threading
 
     import logstash_spark.plans.runner as runner
@@ -137,7 +164,8 @@ def test_staged_writes_run_at_once_in_the_callers_job_group(spark, tmp_path, mon
 
     def gated(frame, path, partition_by=None):
         groups.append(sc.getLocalProperty("spark.jobGroup.id"))
-        barrier.wait()
+        if len(groups) > 1:  # not the lineage write, which runs alone
+            barrier.wait()
         write(frame, path, partition_by)
 
     commits = []
@@ -155,7 +183,7 @@ def test_staged_writes_run_at_once_in_the_callers_job_group(spark, tmp_path, mon
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert groups == ["test_staged_writes"] * 5
+    assert groups == ["test_staged_writes"] * 6
     assert commits == [
         "_sink_lineage", "sink_errors", "sink_edge", "sink_service", "sink_rest",
         "dlq", "_aggregates", "_metrics", "_lineage",

@@ -71,9 +71,20 @@ def test_condition_with_brace_in_string():
     assert ast.filters[0].cases[0][0] == '[msg] == "has { brace"'
 
 
-def test_gate_composition_negates_prior_cases():
-    spec, _ = compile_conf(
-        """
+def _filtered(spark, conf: str, schema: str, rows: list[tuple]) -> list[dict]:
+    """The rows after the conf's filter chain, by `id` order, without
+    `id`: no scratch column of the chain is left in them."""
+    from logstash_spark.plans.runner import apply_filters
+
+    spec, _ = compile_conf(conf)
+    out = apply_filters(spark.createDataFrame(rows, schema), spec)
+    return [r.asDict() for r in out.orderBy("id").drop("id").collect()]
+
+
+def test_gate_composition_negates_prior_cases(spark):
+    """`if / else if / else` with a nested `if`: each event runs the
+    body of the first case that holds, and only that one."""
+    conf = """
         filter {
           if [a] == 1 {
             mutate { add_tag => ["t1"] }
@@ -84,14 +95,55 @@ def test_gate_composition_negates_prior_cases():
             mutate { add_tag => ["t4"] }
           }
         }
-        """
-    )
-    whens = [f.when for f in spec.filters]
-    assert whens == [
-        "([a] == 1)",
-        "([a] == 1) and ([b] == 2)",
-        "!([a] == 1) and ([a] == 2)",
-        "!([a] == 1) and !([a] == 2)",
+    """
+    rows = [(0, 1, 2), (1, 1, 5), (2, 2, 2), (3, 3, 2)]
+    got = _filtered(spark, conf, "id int, a int, b int", rows)
+    assert [r["tags"] for r in got] == [["t1", "t2"], ["t1"], ["t3"], ["t4"]]
+    assert sorted(got[0]) == ["a", "b", "tags"]
+
+
+def test_chain_case_decided_before_its_body_rewrites_the_field(spark):
+    """Logstash's SplitDataset decides an `if / else` once per event: a
+    body op that rewrites the tested field neither stops the body's
+    later ops nor sends the event into the `else` body."""
+    conf = """
+        filter {
+          if [type] == "apache" {
+            mutate { replace => { "type" => "web" } }
+            mutate { add_tag => ["seen"] }
+          } else {
+            mutate { add_tag => ["other"] }
+          }
+        }
+    """
+    got = _filtered(spark, conf, "id int, type string", [(0, "apache"), (1, "syslog")])
+    assert got == [
+        {"type": "web", "tags": ["seen"]},
+        {"type": "syslog", "tags": ["other"]},
+    ]
+
+
+def test_else_if_body_rewriting_the_field_keeps_its_case(spark):
+    """The `else if` body turns `type` into the FIRST case's value; its
+    later ops still run, and neither the first case's nor the `else`
+    body does."""
+    conf = """
+        filter {
+          if [type] == "a" {
+            mutate { add_tag => ["A"] }
+          } else if [type] == "b" {
+            mutate { replace => { "type" => "a" } }
+            mutate { add_tag => ["B"] }
+          } else {
+            mutate { add_tag => ["C"] }
+          }
+        }
+    """
+    got = _filtered(spark, conf, "id int, type string", [(0, "a"), (1, "b"), (2, "c")])
+    assert got == [
+        {"type": "a", "tags": ["A"]},
+        {"type": "a", "tags": ["B"]},
+        {"type": "c", "tags": ["C"]},
     ]
 
 

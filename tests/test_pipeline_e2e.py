@@ -245,8 +245,8 @@ def test_crash_at_every_commit_point_resumes_exactly_once(spark, tmp_path, crash
 def test_failed_staged_write_commits_nothing(spark, tmp_path, monkeypatch):
     """One staged write fails while it runs (a UDF raises in the DLQ's
     frame): the error surfaces only after the other staged writes have
-    finished, no table behind the stage commits, and a clean rerun
-    commits every table once."""
+    finished, no table commits, `_sink_lineage` included, and a clean
+    rerun commits every table once."""
     import logstash_spark.plans.runner as runner
 
     root = str(tmp_path)
@@ -275,14 +275,13 @@ def test_failed_staged_write_commits_nothing(spark, tmp_path, monkeypatch):
             run_flagship(spark, df, root)
         finally:
             done_at_raise = list(finished)
-    # shared sinks, DLQ and the three side tables: all ran to their end
-    assert len(started) == 5
+    # the lineage write, then the shared sinks, DLQ and the three side
+    # tables: all ran to their end
+    assert len(started) == 6
     assert sorted(done_at_raise) == sorted(started)
     assert runner.STAGING_DIR not in os.listdir(root)
-    # only the lineage table, written before the stage, committed
     for name in _commit_order():
-        want = 1 if name == "_sink_lineage" else 0
-        assert len(SnapshotTable(os.path.join(root, name)).snapshots()) == want, name
+        assert SnapshotTable(os.path.join(root, name)).snapshots() == [], name
     monkeypatch.undo()
 
     run_flagship(spark, df, root)
@@ -312,6 +311,26 @@ def test_changed_filter_chain_gets_new_run_id(spark, tmp_path):
     res = run_pipeline(spark, df, changed, root)
     assert res.run_id != first.run_id
     assert res.skipped_sinks == []
+
+
+def test_changed_drop_before_write_gets_new_run_id(spark, tmp_path):
+    """The run_id keys on `drop_before_write` too: the same files with
+    another dropped column are a different run, so resume skips no sink
+    and the new snapshot carries the column the first run dropped."""
+    from logstash_spark.plans.runner import run_pipeline
+    from logstash_spark.plans.spec import PipelineSpec
+
+    src = str(tmp_path / "in")
+    input_sequences(spark, 100).write.parquet(src)
+    spec = PipelineSpec(name="drops", filters=[], routes={"all": "true"})
+    root = str(tmp_path / "sinks")
+    first = run_pipeline(spark, spark.read.parquet(src), spec, root, drop_before_write=("raw",))
+    res = run_pipeline(spark, spark.read.parquet(src), spec, root, drop_before_write=("tokens",))
+    assert res.run_id != first.run_id
+    assert res.skipped_sinks == []
+    table = SnapshotTable(os.path.join(root, "all"))
+    new = spark.read.parquet(os.path.join(table.root, table.latest().files[-1]))
+    assert "raw" in new.columns and "tokens" not in new.columns
 
 
 def test_dlq_replay_loop_closes(spark, run):

@@ -4,11 +4,15 @@ equality of streaming vs batch results on the same input."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from logstash_spark.plans.flagship import build_flagship
+from logstash_spark.operators.common import METADATA
+from logstash_spark.plans.flagship import build_flagship, run_flagship
 from logstash_spark.sources.gen import input_sequences
+from logstash_spark.sources.tableio import SnapshotTable
 from logstash_spark.streaming.pipeline import (
     file_stream_source,
     run_streaming_fanout,
@@ -66,24 +70,45 @@ def _sink_counts(spark, sinks_root):
     return {sink: counts.get(sink, 0) for sink in SINKS}
 
 
+def _sorted_rows(df):
+    """`df`'s rows as text, columns by name, rows sorted."""
+    return sorted(repr(r) for r in df.select(*sorted(df.columns)).collect())
+
+
 def test_streaming_fanout_matches_batch(spark, landing, tmp_path):
+    """Every flagship sink holds the same rows in streaming as in
+    `run_flagship` on identical input. The one documented difference is
+    the DLQ: streaming writes it like a plain sink, without batch's
+    `_dlq_reason` and `[@metadata]`."""
     path, schema = landing
     sinks_root = str(tmp_path / "sinks")
     _drain_fanout(spark, path, schema, sinks_root, str(tmp_path / "ckpt"))
-
-    # batch reference on identical input
     got = _sink_counts(spark, sinks_root)
-    expected = _batch_counts(spark, path, schema)
-    assert got == expected, f"streaming {got} != batch {expected}"
+    assert got == _batch_counts(spark, path, schema)
 
-    # token arrays survive byte-identical: anti-join on (doc_id, tokens)
-    src = spark.read.schema(schema).parquet(path).select("doc_id", "tokens")
-    edge = (
-        spark.read.parquet(sinks_root)
-        .where(F.col("sink") == "sink_edge")
-        .select("doc_id", "tokens")
+    batch_root = str(tmp_path / "batch")
+    run_flagship(spark, spark.read.schema(schema).parquet(path), batch_root)
+    streamed = spark.read.parquet(sinks_root)
+    for sink in SINKS:
+        want = SnapshotTable(os.path.join(batch_root, sink)).read(spark)
+        if sink == "dlq":
+            assert "_dlq_reason" in want.columns
+            want = want.drop("_dlq_reason", METADATA)
+        rows = streamed.where(F.col("sink") == sink).drop("sink", "_batch_id")
+        assert _sorted_rows(rows) == _sorted_rows(want), sink
+        assert len(rows.columns) == len(want.columns), sink
+
+
+def test_streamed_field_named_sink_fails_clearly(spark, landing, tmp_path):
+    """An event field named like the stream's fan-out column fails the
+    micro-batch with `fanout_rows`' error, not an ambiguous reference."""
+    path, schema = landing
+    stream = file_stream_source(spark, path, schema).withColumn("sink", F.lit("x"))
+    q = run_streaming_fanout(
+        stream, build_flagship, SINKS, str(tmp_path / "sinks"), str(tmp_path / "ckpt")
     )
-    assert edge.join(src, ["doc_id", "tokens"], "left_anti").count() == 0
+    with pytest.raises(Exception, match="'sink' is already an event field"):
+        q.awaitTermination(120)
 
 
 def test_streaming_fanout_replay_is_exactly_once(spark, landing, tmp_path):
@@ -105,8 +130,6 @@ def test_streaming_fanout_unified_layout(spark, landing, tmp_path):
     micro-batch: the root holds only `sink={name}` partitions, each
     split by `_batch_id`, and each sink reads back on its own from
     `{root}/sink={name}` with the batch plan's row count."""
-    import os
-
     path, schema = landing
     sinks_root = tmp_path / "sinks"
     _drain_fanout(spark, path, schema, str(sinks_root), str(tmp_path / "ckpt"))
@@ -192,7 +215,6 @@ def test_streaming_dict_refresh_between_batches(spark, tmp_path):
     dictionary_path is reloaded and re-broadcast between micro-batches —
     rows in a later batch of the SAME logical stream see the new mapping."""
     import json
-    import os
 
     from logstash_spark.streaming.pipeline import refreshing_translate
 
@@ -379,7 +401,6 @@ class TestStreamingIntervalJoin:
 def test_drain_removes_its_checkpoint(spark, tmp_path):
     """A drain leaves no `drain_ckpt_*` directory behind in the temp dir."""
     import glob
-    import os
     import tempfile
 
     from logstash_spark.streaming.pipeline import drain_available_now
