@@ -54,7 +54,16 @@ needs a human decision):
     rebalanced write, the same one Iceberg's
     `write.distribution-mode=hash` pays; Iceberg tables keep their own
     write distribution, and the side tables, small post-aggregate
-    frames, are left alone;
+    frames, are left alone: a rebalance would add one shuffle job per
+    side table, and on the flagship each is one file already;
+  * one Parquet codec for every table, named once in
+    `sources/tableio.py` (`TABLE_CODEC`, applied by
+    `tableio.write_table` to every staged write, `SnapshotTable`
+    frame append, Iceberg append and streaming micro-batch). The
+    `tokens` payload is ~90 % of the flagship's bytes, and the session
+    default (snappy) saves under 1 % on it. The session default
+    itself is left alone, so staged input and `write_bucketed` keep
+    it;
   * per-sink aggregates computed from ONE `explode(routes)` frame so all
     sinks share a single shuffle instead of K groupBy jobs;
   * lineage rows derived via `spark_partition_id()` at read time;

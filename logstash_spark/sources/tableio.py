@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from typing import Any
 
 from pyspark import SparkContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 MANIFEST_DIR = "_snapshots"
 
@@ -67,6 +67,24 @@ class Snapshot:
     meta: dict[str, Any]
 
 
+#: Parquet codec of every table the pipeline writes: batch sinks, side
+#: tables, Iceberg appends and streaming micro-batches. zstd at
+#: parquet-mr's default level (3), Iceberg's own default since 1.4. On
+#: the `tokens` payload snappy saves under 1 %; zstd cuts the
+#: flagship's sink bytes by ~60 %. The session default (snappy) stays
+#: for every other write, such as `write_bucketed` and staged input.
+TABLE_CODEC = "zstd"
+
+
+def write_table(w: DataFrameWriter, path: str, fmt: str = "parquet") -> None:
+    """Save the configured writer `w` as a `fmt` table at `path`,
+    compressed with `TABLE_CODEC`: Spark's `compression` option for
+    parquet, Iceberg's `compression-codec` write option (which overrides
+    the table's `write.parquet.compression-codec` property) for Iceberg."""
+    key = "compression-codec" if fmt == "iceberg" else "compression"
+    w.format(fmt).option(key, TABLE_CODEC).save(path)
+
+
 def write_parquet(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
@@ -74,7 +92,7 @@ def write_parquet(
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    write_table(w, path)
 
 
 class SnapshotTable:
@@ -398,8 +416,7 @@ class IcebergTable:
         merged_lineage = dict(prev.lineage) if prev else {}
         merged_lineage.update(lineage or {})
         w = (
-            df.write.format("iceberg")
-            .mode("append")
+            df.write.mode("append")
             .option("snapshot-property.lineage", json.dumps(merged_lineage))
             .option("snapshot-property.app-meta", json.dumps(meta or {}))
         )
@@ -407,7 +424,7 @@ class IcebergTable:
             # first write creates the table; Iceberg partition spec is
             # fixed at creation (evolution via ALTER on real clusters)
             w = w.partitionBy(*partition_by)
-        w.save(self.root)
+        write_table(w, self.root, "iceberg")
         snap = self.latest()
         assert snap is not None  # the append just committed one
         return snap

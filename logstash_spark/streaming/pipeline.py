@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from logstash_spark.operators.route import fanout_rows
+from logstash_spark.sources.tableio import write_table
 
 
 def file_stream_source(
@@ -176,17 +177,18 @@ def run_streaming_fanout(
     Exactly-once: the write uses DYNAMIC partition overwrite, so a batch
     replayed after a crash mid-write overwrites its own `_batch_id`
     partitions instead of appending duplicates (foreachBatch alone is
-    only at-least-once).
+    only at-least-once). Files are compressed like every batch table
+    (`sources.tableio.write_table`).
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        write_table(
             fanout_rows(transform(batch_df), sinks, "sink", drop_before_write)
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("sink", "_batch_id")
-            .parquet(sinks_root)
+            .partitionBy("sink", "_batch_id"),
+            sinks_root,
         )
 
     writer = (

@@ -32,6 +32,8 @@ from logstash_spark.sources.tableio import SnapshotTable
 # took 19; the writes without a rebalance took 12.
 FLAGSHIP_JOBS = 14
 SHARED_SINKS = ["sink_errors", "sink_edge", "sink_service", "sink_rest"]
+# the flagship's tables besides the shared sinks
+TABLES = ["dlq", "_sink_lineage", "_aggregates", "_metrics", "_lineage"]
 ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
 
@@ -98,16 +100,33 @@ def test_rerun_job_counts_are_pinned(spark, tmp_path):
     assert sorted(res.skipped_sinks) == sorted([*SHARED_SINKS, "dlq"])
 
 
-def test_flagship_sinks_hold_one_file_each(spark, tmp_path):
+def test_flagship_sinks_hold_one_file_each(spark, tmp_path, parquet_codecs):
     """The rebalanced writes size files per sink, not per input task:
     the 8-partition input lands as one file in every shared sink and
-    one in the DLQ."""
+    one in the DLQ. Every column chunk of every table's files is
+    zstd-compressed (`tableio.TABLE_CODEC`)."""
     df = input_sequences(spark, 2000, partitions=8)
     root = str(tmp_path)
     res = run_flagship(spark, df, root)
     for sink in [*SHARED_SINKS, "dlq"]:
         assert res.sink_counts[sink] > 0, sink
         assert _data_files(root, sink) == [""], sink
+    codecs = parquet_codecs(root)
+    assert {f.split(os.sep, 1)[0] for f in codecs} == {*SHARED_SINKS, *TABLES}
+    assert all(c == {"ZSTD"} for c in codecs.values()), codecs
+
+
+def test_plain_session_write_keeps_the_session_codec(spark, tmp_path, parquet_codecs):
+    """The table codec is set per table write, not on the session: any
+    other parquet write (staged input, `write_bucketed`) keeps Spark's
+    session default."""
+    default = spark.conf.get("spark.sql.parquet.compression.codec").upper()
+    assert default != "ZSTD"
+    spark.range(100).selectExpr("id", "cast(id as string) s").write.parquet(
+        str(tmp_path / "plain")
+    )
+    codecs = parquet_codecs(tmp_path / "plain")
+    assert codecs and all(c == {default} for c in codecs.values()), codecs
 
 
 def test_small_advisory_size_splits_the_biggest_sink(spark, tmp_path):

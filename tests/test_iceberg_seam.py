@@ -14,6 +14,7 @@ from logstash_spark.sources.tableio import (
     SnapshotTable,
     iceberg_available,
     open_table,
+    write_table,
 )
 
 
@@ -34,23 +35,23 @@ def test_explicit_iceberg_guard_without_jar(spark, tmp_path):
 
 def test_iceberg_write_surface_reachable(spark, tmp_path):
     """The exact DataFrameWriter call chain IcebergTable.append issues
-    must still be constructible and fail ONLY on the missing data source
-    (jar absent), proving the branch's API usage is current for the
-    Spark version — the failure class names the iceberg format, not a
-    syntax/arg error."""
+    (snapshot properties, then `write_table`'s iceberg format and
+    `compression-codec` option) must still be constructible and fail
+    ONLY on the missing data source (jar absent), proving the branch's
+    API usage is current for the Spark version — the failure class
+    names the iceberg format, not a syntax/arg error."""
     df = spark.createDataFrame([(1, "a")], ["id", "v"])
     w = (
-        df.write.format("iceberg")
-        .mode("append")
+        df.write.mode("append")
         .option("snapshot-property.lineage", "{}")
         .option("snapshot-property.app-meta", "{}")
     )
     if iceberg_available(spark):
-        w.save(str(tmp_path / "t"))
+        write_table(w, str(tmp_path / "t"), "iceberg")
         assert spark.read.format("iceberg").load(str(tmp_path / "t")).count() == 1
     else:
         with pytest.raises(Exception) as ei:
-            w.save(str(tmp_path / "t"))
+            write_table(w, str(tmp_path / "t"), "iceberg")
         assert "iceberg" in str(ei.value).lower()
 
 

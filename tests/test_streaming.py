@@ -125,11 +125,12 @@ def test_streaming_fanout_replay_is_exactly_once(spark, landing, tmp_path):
         assert got == expected, f"after {ckpt}: replay {got} != batch {expected}"
 
 
-def test_streaming_fanout_unified_layout(spark, landing, tmp_path):
+def test_streaming_fanout_unified_layout(spark, landing, tmp_path, parquet_codecs):
     """One explode + one (sink,_batch_id)-partitioned write per
     micro-batch: the root holds only `sink={name}` partitions, each
     split by `_batch_id`, and each sink reads back on its own from
-    `{root}/sink={name}` with the batch plan's row count."""
+    `{root}/sink={name}` with the batch plan's row count. Every column
+    chunk of every file is zstd-compressed, as in the batch tables."""
     path, schema = landing
     sinks_root = tmp_path / "sinks"
     _drain_fanout(spark, path, schema, str(sinks_root), str(tmp_path / "ckpt"))
@@ -146,6 +147,46 @@ def test_streaming_fanout_unified_layout(spark, landing, tmp_path):
         assert {int(p.split("=", 1)[1]) for p in parts} <= set(range(n_batches))
         got = spark.read.parquet(str(sinks_root / top)).count()
         assert got == expected[sink], f"{sink}: {got} != {expected[sink]}"
+    codecs = parquet_codecs(sinks_root)
+    assert {f.split(os.sep, 1)[0] for f in codecs} == tops
+    assert all(c == {"ZSTD"} for c in codecs.values()), codecs
+
+
+def test_streaming_crash_before_batch_commit_resumes_exactly_once(
+    spark, landing, tmp_path, monkeypatch
+):
+    """A crash right after micro-batch 1's files land, before Spark
+    commits the batch: the query restarted on the same checkpoint
+    replays batch 1 into its own `_batch_id=1` partitions (dynamic
+    partition overwrite), so every sink holds the batch plan's rows
+    exactly once and one copy of batch 1."""
+    from logstash_spark.streaming import pipeline
+
+    path, schema = landing
+    sinks_root, ckpt = tmp_path / "sinks", tmp_path / "ckpt"
+    real, writes = pipeline.write_table, []
+
+    def crash_after_batch_1(w, out, *args):
+        real(w, out, *args)
+        writes.append(out)
+        if len(writes) == 2:  # batch ids count from 0
+            raise RuntimeError("injected crash after batch 1's files")
+
+    monkeypatch.setattr(pipeline, "write_table", crash_after_batch_1)
+    with pytest.raises(Exception, match="injected crash"):
+        _drain_fanout(spark, path, schema, str(sinks_root), str(ckpt))
+    committed = [f for f in os.listdir(ckpt / "commits") if not f.startswith(".")]
+    assert committed == ["0"]
+
+    def batch_1():
+        return spark.read.parquet(str(sinks_root)).where("_batch_id = 1")
+
+    landed = dict(batch_1().groupBy("sink").count().collect())
+    assert landed  # the crashed batch's files are there
+    _drain_fanout(spark, path, schema, str(sinks_root), str(ckpt))
+    assert len(writes) > 2
+    assert _sink_counts(spark, str(sinks_root)) == _batch_counts(spark, path, schema)
+    assert dict(batch_1().groupBy("sink").count().collect()) == landed
 
 
 def test_streaming_metrics_incremental(spark, landing, tmp_path):
